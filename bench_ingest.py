@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Ingest-throughput benchmark: drive a synthetic chain through the full
 EP1 lifecycle (source → reward/event/fee/balance/total pipeline → idempotent
-partitioned sink) in 50-block micro-batches and report blocks/second.
+LogStore sink) in 50-block micro-batches and report blocks/second.
 
 The reference's implied throughput floor is head-following Ethereum mainnet:
 ~1 block / 13 s (BASELINE.md). This measures the same end-to-end unit —
@@ -10,7 +10,8 @@ block accepted, all derived tables committed — on local[$SPARK_GRAFT_CPUS].
 Prints ONE JSON line:
   {"metric": "ingest_blocks_per_sec", "value": N, "blocks": B, ...}
 
-Not part of the driver's bench.py contract — run manually:
+Not the performance gate (that is ``python3 perfbench/run.py``) — run
+manually:
   python bench_ingest.py [n_blocks]
 """
 
@@ -56,21 +57,12 @@ _ap.add_argument(
     "otherwise never yields",
 )
 _ap.add_argument(
-    "--backend", choices=("parquet", "log"), default="parquet",
-    help="store backend under test: 'parquet' = rename-protocol "
-    "ParquetStore (bucket dirs + version pointer), 'log' = MVCC commit-log "
-    "LogStore — the decade protocol must qualify BOTH (r8 verdict #1: the "
-    "backend that closes the semantic deltas was correctness-proven but "
-    "never timed)",
-)
-_ap.add_argument(
     "--maintain-every", type=int, default=0,
     help="every N timed batches, run the LogStore maintenance cadence "
     "(optimize the ingest tables + vacuum) INSIDE the loop — a deployment "
     "compacts micro-batch residue continuously, so its cost belongs in the "
     "measured blocks/s, not in a separate idealized run. Timed separately "
-    "in maintain_secs; ignored on --backend parquet (bucket dirs don't "
-    "accumulate commit-log residue)",
+    "in maintain_secs (0 = never)",
 )
 _ap.add_argument(
     "--gc-log", default="",
@@ -78,8 +70,8 @@ _ap.add_argument(
     "correlate major-GC timestamps against the batch_secs trace to "
     "attribute the bounded within-session transients (r8 open item)",
 )
-# parse the REAL argv only when run as a script: importers (ab_ingest_order,
-# bench_store_queries reuse build_chain) have their own argv and flags
+# parse the REAL argv only when run as a script: an importer of build_chain
+# has its own argv and flags
 _args = _ap.parse_args() if __name__ == "__main__" else _ap.parse_args([])
 
 N_BLOCKS = _args.n_blocks
@@ -87,7 +79,6 @@ BATCH = _args.batch
 PRESEED = _args.preseed
 PRESEED_BATCH = _args.preseed_batch
 SETTLE_EVERY = _args.settle_every
-BACKEND = _args.backend
 MAINTAIN_EVERY = _args.maintain_every
 GC_LOG = _args.gc_log
 N_ADDRS = 200          # address universe
@@ -96,10 +87,7 @@ TXS_PER_BLOCK = 4
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 # the tables the ingest loop writes every batch — the ones whose
-# micro-batch file residue the maintenance cadence compacts. Single source
-# of truth: scripts/ab_ingest_order.py and scripts/bench_store_queries.py
-# import these, so adding an ingest table cannot silently leave one bench
-# maintaining (and therefore measuring) a different table set.
+# micro-batch file residue the maintenance cadence compacts.
 MAINTAIN_TABLES = (
     "block_headers",
     "transactions",
@@ -111,8 +99,8 @@ MAINTAIN_TABLES = (
 
 
 def maintain_store(store) -> float:
-    """One optimize+vacuum maintenance cadence over the ingest tables
-    (LogStore backend); returns elapsed seconds."""
+    """One optimize+vacuum maintenance cadence over the ingest tables;
+    returns elapsed seconds."""
     tm = time.perf_counter()
     for t in MAINTAIN_TABLES:
         if store.exists(t):
@@ -185,7 +173,6 @@ def main() -> None:
     from eth_indexer_spark.schema import RAW_SCHEMAS
     from eth_indexer_spark.session import get_spark
     from eth_indexer_spark.sinks.logstore import LogStore
-    from eth_indexer_spark.sinks.store import ParquetStore
     from eth_indexer_spark.sources.blocks import PandasBlockSource
     from eth_indexer_spark.streaming.ingest import BlockIngestor
 
@@ -198,8 +185,7 @@ def main() -> None:
     hdrs, txs, rec, logs, subs, erc20 = build_chain(PRESEED + N_BLOCKS)
     workdir = tempfile.mkdtemp(prefix="bench_ingest_")
     try:
-        backend_cls = LogStore if BACKEND == "log" else ParquetStore
-        store = backend_cls(spark, os.path.join(workdir, "store"), bucket_size=1000)
+        store = LogStore(spark, os.path.join(workdir, "store"))
         source = PandasBlockSource(spark, hdrs, txs, rec, logs)
         ing = BlockIngestor(
             spark,
@@ -227,7 +213,7 @@ def main() -> None:
             return maintain_store(store)
 
         preseed_maintain_sec = 0.0
-        if PRESEED and MAINTAIN_EVERY and BACKEND == "log":
+        if PRESEED and MAINTAIN_EVERY:
             # maintain once after the preseed, UNTIMED: a deployment that
             # runs the cadence from day one never faces an unmaintained
             # backlog, so the timed loop should not pay the one-off
@@ -249,12 +235,7 @@ def main() -> None:
         for bi, i in enumerate(range(0, len(timed), BATCH)):
             if SETTLE_EVERY and bi and bi % SETTLE_EVERY == 0:
                 spark.sparkContext._jvm.System.gc()
-            if (
-                MAINTAIN_EVERY
-                and BACKEND == "log"
-                and bi
-                and bi % MAINTAIN_EVERY == 0
-            ):
+            if MAINTAIN_EVERY and bi and bi % MAINTAIN_EVERY == 0:
                 maintain_secs.append(maintain())
             batch_starts.append(time.time())
             tb = time.perf_counter()
@@ -294,7 +275,6 @@ def main() -> None:
                     "rows": n_rows,
                     "preseed_blocks": PRESEED,
                     "settle_every": SETTLE_EVERY,
-                    "backend": BACKEND,
                     "maintain_every": MAINTAIN_EVERY,
                     "maintain_secs": [round(s, 2) for s in maintain_secs],
                     "preseed_maintain_sec": round(preseed_maintain_sec, 2),

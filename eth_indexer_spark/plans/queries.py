@@ -169,50 +169,50 @@ def find_total_balance(total_balances: DataFrame, block_number: int, token: str,
 
 
 class StoreQueries:
-    """EP3 point/as-of reads that ride the store's partition layout.
+    """EP3 point/as-of reads that ride the store's per-file block stats.
 
     The module-level functions above take caller-supplied DataFrames and
-    filter logically; over a ``ParquetStore`` that prunes on ``token`` (a
-    physical partition column) but NOT on ``block_bucket`` (dropped by
-    ``store.read``). This wrapper derives the bucket predicate from each
-    block-number filter before delegating — an equality lookup lists exactly
-    one partition directory and an as-of lookup lists only buckets ≤ N,
-    regardless of table size. The reference gets the same economics from the
-    UNIQUE index every point SELECT rides (store/account/account.go:63-64,
+    filter logically. This wrapper routes each block-number filter through
+    the store's ``read_eq``/``read_range`` first, which pick candidate files
+    from the log's per-file min/max of the block column — an equality lookup
+    opens only the files that can hold that block and an as-of lookup only
+    the files starting at or below N, regardless of table size. The
+    reference gets the same economics from the UNIQUE index every point
+    SELECT rides (store/account/account.go:63-64,
     store/block_header/block_header.go:46-48); with 100 TB of history the
-    difference is a one-directory listing vs a full-table scan.
+    difference is a few-file scan vs a full-table scan.
     """
 
     def __init__(self, store) -> None:
         self.store = store
 
     def snapshot(self) -> "StoreQueries":
-        """Pin all subsequent reads at the store's committed batch boundary
-        (sinks/store.py StoreSnapshot): a multi-table read sequence — e.g.
+        """Pin all subsequent reads at one log version of the store
+        (sinks/logstore.py LogSnapshot): a multi-table read sequence — e.g.
         latest header + the balances that block implies — observes ONE
-        batch, even while `write_blocks` lands the next one. This is the
-        reference's per-request DB-transaction read scope
-        (store/store.go:115-173) on the parquet layout.
+        batch, even while `write_blocks` lands the next one or a reorg
+        retracts blocks. This is the reference's per-request
+        DB-transaction read scope (store/store.go:115-173).
 
-        Rewind detection is DEFAULT-ON here: every frame the snapshot form
-        returns is a :class:`~eth_indexer_spark.sinks.store.
+        The snapshot's guard is DEFAULT-ON here: every frame the snapshot
+        form returns is a :class:`~eth_indexer_spark.sinks.store.
         GuardedDataFrame`, so a plain ``.collect()``/``.toPandas()``/
         ``.count()`` by a caller that has never heard of ``guard()``
-        raises :class:`~eth_indexer_spark.sinks.store.
-        SnapshotRetractedError` when a reorg rewind overlaps the action,
-        instead of silently returning retracted rows. Frames DERIVED from
-        the returned one through the common transformations (``.filter``/
-        ``.select``/``.withColumn``/joins/``limit``/``orderBy``/...) stay
-        guarded — composition re-wraps. Only compositions that leave the
-        DataFrame type (``groupBy().agg``, SQL over a temp view) need an
-        explicit ``snapshot.guard()`` bracket."""
+        raises :class:`~eth_indexer_spark.sinks.logstore.
+        SnapshotExpiredError` when a ``vacuum`` past the retention window
+        deleted files the pin reads, instead of a raw Spark error or a
+        silently partial answer. Frames DERIVED from the returned one stay
+        guarded: every DataFrame-returning method re-wraps, and
+        ``groupBy().agg``, ``df.na``/``df.stat`` and joins across snapshots
+        do too. Only SQL over a temp view leaves the guard — use
+        :func:`~eth_indexer_spark.sinks.store.sql_over_snapshots` for it."""
         return StoreQueries(self.store.snapshot())
 
     def _finish(self, df: DataFrame) -> DataFrame:
-        """Wrap a finished answer so its terminal actions self-detect a
-        reorg rewind when this instance reads through a pinned snapshot
+        """Wrap a finished answer so its terminal actions run under the
+        pin's guard when this instance reads through a pinned snapshot
         (live-store instances return the frame untouched — there is no pin
-        to invalidate)."""
+        to expire)."""
         if hasattr(self.store, "guard"):
             from eth_indexer_spark.sinks.store import GuardedDataFrame
 
@@ -227,16 +227,12 @@ class StoreQueries:
     def headers_in_range(
         self, lo: int | None = None, hi: int | None = None
     ) -> DataFrame:
-        """P2 range scan through the pinned view — bucket-pruned on the
-        parquet layout, log-stats-pruned on the commit-log backend."""
+        """P2 range scan through the pinned view, pruned by log stats."""
         return self._finish(self.store.read_range("block_headers", lo=lo, hi=hi))
 
     def latest_header(self) -> DataFrame:
-        """T1 in O(top bucket): max_block bounds the answer (itself an
-        O(bucket) top-down walk), so only the head block's rows are read —
-        expressed through the StoreBackend contract alone (max_block +
-        read_range), so a lakehouse backend serves it without the parquet
-        layout's bucket-directory introspection."""
+        """T1 in O(head files): max_block answers from log stats alone (no
+        Spark job), so only the files holding the head block are read."""
         top = self.store.max_block("block_headers")
         if top is None:
             return self._finish(self.store.read("block_headers").limit(0))

@@ -106,7 +106,7 @@ RECEIPT_LOGS = T.StructType([
     # 153-164) because MySQL rows are naturally distinct; a columnar store
     # needs the explicit discriminator so two otherwise-identical logs (two
     # ERC721 Transfers in one tx differing only by tokenId) stay distinct.
-    # NULL is rejected by the sink (ParquetStore._require_non_null) — a null
+    # NULL is rejected by the sink (LogStore._prep) — a null
     # would make the dedup key collapse all of a transaction's logs.
     _s("log_index", LONG),
 ])

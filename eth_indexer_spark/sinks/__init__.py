@@ -1,3 +1,3 @@
-from eth_indexer_spark.sinks.store import ParquetStore
+from eth_indexer_spark.sinks.logstore import LogStore
 
-__all__ = ["ParquetStore"]
+__all__ = ["LogStore"]

@@ -1,17 +1,23 @@
-"""MVCC commit-log store — the lakehouse :class:`StoreBackend` (SURVEY §2.7).
+"""MVCC commit-log store — the engine's one store, the sink layer (SURVEY
+§2.7, §7 step 4).
 
-The :class:`~eth_indexer_spark.sinks.store.ParquetStore` gives the engine
-O(batch) mutations and a version-pointer snapshot, but two semantic deltas
-vs the reference's MySQL remain (SURVEY "known deviations"): a reader
-pinned before a reorg rewind can race the retraction of its files
-(detected via the rewind epoch, not prevented), and the store is
-single-writer (flock). Both are properties of mutating files in place.
+Replaces the reference's MySQL write surface behind its single
+``store.Manager`` (store/store.go:30-113):
 
-:class:`LogStore` removes the mutation. It is a from-scratch, dependency-
-free implementation of the lakehouse transaction-log design published in
-the Delta Lake paper (Armbrust et al., "Delta Lake: High-Performance ACID
-Table Storage over Cloud Object Stores", VLDB 2020) — the same public
-design Iceberg/Hudi share:
+- S6 multi-table transactional insert (store/store.go:115-173,215-316): one
+  DB transaction covering headers+txs+receipts+logs+balances+transfers+
+  total_balances for ≤50 blocks, rollback on error.
+- M1/M2 range delete by block for reorg retraction (store/store.go:175-212).
+- M3/M4 small-dimension updates (store/subscription/subscription.go,
+  store/account/account.go).
+- M5 duplicate-key tolerance between concurrent indexers
+  (common/errors.go:26-57, service/indexer/indexer.go:152-158).
+
+:class:`LogStore` never mutates a file in place. It is a from-scratch,
+dependency-free implementation of the lakehouse transaction-log design
+published in the Delta Lake paper (Armbrust et al., "Delta Lake:
+High-Performance ACID Table Storage over Cloud Object Stores", VLDB 2020) —
+the same public design Iceberg/Hudi share:
 
 - **Data files are immutable.** Every write lands NEW parquet files under
   ``data/<table>/``; nothing ever rewrites or renames a live file.
@@ -25,19 +31,18 @@ design Iceberg/Hudi share:
   keeps listing and reading the old files, which stay on disk until
   ``vacuum``. The reorg-rewind reader race is PREVENTED (the reader can
   never observe retracted state mid-read), not merely detected:
-  ``LogSnapshot.check()`` never raises. This is the isolation the
-  reference gets from MySQL transactions (store/store.go:115-173).
+  ``LogSnapshot.check()`` never raises on a reorg. This is the isolation
+  the reference gets from MySQL transactions (store/store.go:115-173).
 - **Multi-writer optimistic concurrency**: committing version V+1 is an
   atomic put-if-absent (``os.link`` — fails with EEXIST if a concurrent
   writer won). The loser re-reads the log, re-validates its transaction
   against the new state (all files it removes still live, its delta names
-  still unused), re-plans if not, and retries. This replaces both the
-  flock and the reference's swallowed-duplicate-key coordination between
-  concurrent indexers (common/errors.go:26-57).
+  still unused), re-plans if not, and retries. This replaces the
+  reference's swallowed-duplicate-key coordination between concurrent
+  indexers (common/errors.go:26-57).
 - **Multi-TABLE atomicity is exact, not staged**: one commit carries every
   table of a batch, so readers can never observe table A post-batch beside
-  table B pre-batch — strictly stronger than the ParquetStore's
-  marker-ordered per-table commits under one version pointer.
+  table B pre-batch — the reference's one DB transaction, exactly.
 
 100 TB shape
 ------------
@@ -46,8 +51,7 @@ column, captured from parquet footers at commit time — the paper's
 "data skipping"): ``read_eq``/``read_range`` select candidate files
 driver-side in O(live files of the table) dict scans and hand Spark an
 explicit file list, so a point read opens O(batch-sized) files no matter
-how large history grows — the same economics the ParquetStore gets from
-bucket directories, without requiring a physical layout. ``max_block``
+how large history grows, without requiring a physical layout. ``max_block``
 answers from stats alone (zero Spark jobs, zero file opens). Small-file
 accumulation from micro-batches is handled by :meth:`optimize`
 (rewrite-and-swap in one commit, snapshot-safe — the paper's OPTIMIZE),
@@ -76,7 +80,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from eth_indexer_spark.sinks.backend import StoreBackend
 from eth_indexer_spark.sinks.store import (
     BLOCK_COLUMN,
     EXTRA_PARTITIONS,
@@ -164,7 +167,6 @@ class _State:
 
     version: int = 0  # log version (commit count), NOT the block boundary
     boundary: int | None = None  # committed batch boundary (read_version)
-    epoch: int = 0  # published-boundary rewind count (API parity)
     files: dict[str, dict[str, _FileMeta]] = field(default_factory=dict)
     schemas: dict[str, dict] = field(default_factory=dict)  # StructType json
     deltas: dict[str, list[str]] = field(default_factory=dict)
@@ -173,7 +175,6 @@ class _State:
         return _State(
             self.version,
             self.boundary,
-            self.epoch,
             {t: dict(fs) for t, fs in self.files.items()},
             dict(self.schemas),
             {t: list(v) for t, v in self.deltas.items()},
@@ -182,7 +183,6 @@ class _State:
     def apply(self, commit: dict) -> None:
         self.version = commit["v"]
         self.boundary = commit["boundary"]
-        self.epoch = commit["epoch"]
         for table, ops in commit.get("tables", {}).items():
             fs = self.files.setdefault(table, {})
             for p in ops.get("rm", []):
@@ -202,7 +202,6 @@ class _State:
         return {
             "v": self.version,
             "boundary": self.boundary,
-            "epoch": self.epoch,
             "files": {
                 t: [fm.to_json() for fm in fs.values()]
                 for t, fs in self.files.items()
@@ -213,7 +212,7 @@ class _State:
 
     @staticmethod
     def from_checkpoint(d: dict) -> "_State":
-        st = _State(d["v"], d["boundary"], d["epoch"])
+        st = _State(d["v"], d["boundary"])
         st.files = {
             t: {fm["p"]: _FileMeta.from_json(fm) for fm in fs}
             for t, fs in d["files"].items()
@@ -249,15 +248,12 @@ def _file_stats(abs_path: str, block_col: str | None, token_col: str | None):
     return rows, lo, hi, tlo, thi
 
 
-class LogStore(StoreBackend):
-    """Commit-log MVCC backend over a local directory (module docstring)."""
+class LogStore:
+    """Commit-log MVCC store over a local directory (module docstring)."""
 
-    def __init__(self, spark: SparkSession, root: str, bucket_size: int = 1000):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # kept for constructor parity with ParquetStore; the log prunes by
-        # per-file stats, so no physical bucketing exists to size
-        self.bucket_size = bucket_size
         self._mutex = threading.RLock()  # in-process commit/state cache lock
         self._hold_depth = 0
         self._hold_ops: list[dict] = []  # buffered commits during a hold
@@ -377,45 +373,35 @@ class LogStore(StoreBackend):
 
     @staticmethod
     def _apply_buffered(state: _State, op: dict) -> None:
-        """Fold ONE buffered hold op into ``state``, re-deriving boundary
-        and epoch RELATIVE to the state being folded into (the op's
+        """Fold ONE buffered hold op into ``state``, re-deriving the
+        boundary RELATIVE to the state being folded into (the op's
         ``bound`` intent) rather than applying its buffer-time absolutes
         verbatim. The absolutes are stale the moment an EXTERNAL writer
         advances the boundary on a table the hold never touched (which the
         ``expect`` file-set check deliberately does not constrain):
         replaying them would silently rewind the published head — a lost
-        update with no epoch bump. Intents:
+        update. Intents:
 
         - ``write``: a markered batch advances the boundary to
-          ``max(hi, pre)`` and bumps the epoch iff its low edge overwrites
-          already-published blocks (``lo <= pre``) — evaluated against the
-          FOLD-TIME boundary, exactly as ``write_blocks`` evaluates it
-          against commit state in the direct path;
-        - ``retract``: rewinds to ``lo - 1`` (with an epoch bump) iff the
-          fold-time boundary reaches ``lo``;
-        - absent / ``keep``: boundary and epoch pass through unchanged
+          ``max(hi, pre)`` — evaluated against the FOLD-TIME boundary,
+          exactly as ``write_blocks`` evaluates it against commit state in
+          the direct path;
+        - ``retract``: rewinds to ``lo - 1`` iff the fold-time boundary
+          reaches ``lo``;
+        - absent / ``keep``: the boundary passes through unchanged
           (dimension swaps, delta appends, optimize)."""
         bound = op.get("bound") or {"kind": "keep"}
-        pre, epoch = state.boundary, state.epoch
+        pre = state.boundary
         kind = bound["kind"]
-        if kind == "write":
-            rewound = pre is not None and bound["lo"] <= pre
-            if bound["marker"]:
-                boundary = bound["hi"] if pre is None else max(bound["hi"], pre)
-            else:
-                boundary = pre  # marker-less writes only restore, never lead
-            if rewound:
-                epoch += 1
-        elif kind == "retract":
-            rewind = pre is not None and pre >= bound["lo"]
-            boundary = (bound["lo"] - 1) if rewind else pre
-            if rewind:
-                epoch += 1
-        else:
+        if kind == "write" and bound["marker"]:
+            boundary = bound["hi"] if pre is None else max(bound["hi"], pre)
+        elif kind == "retract" and pre is not None and pre >= bound["lo"]:
+            boundary = bound["lo"] - 1
+        else:  # keep; marker-less writes only restore, never lead
             boundary = pre
         # buffered ops carry no log version yet (they publish as ONE commit
         # at hold exit); fold at the current one with the re-derived head
-        state.apply({**op, "v": state.version, "boundary": boundary, "epoch": epoch})
+        state.apply({**op, "v": state.version, "boundary": boundary})
 
     # -- commit protocol ---------------------------------------------------------
 
@@ -461,7 +447,7 @@ class LogStore(StoreBackend):
             # "expect" (the touched tables' read sets) and "bound" (the
             # boundary-intent record) only matter for HOLD-buffered ops at
             # publish; a direct commit re-plans against fresh state on every
-            # OCC retry, so its absolute boundary/epoch are already derived
+            # OCC retry, so its absolute boundary is already derived
             # from the state it extends and the log stays free of the noise
             ops.pop("expect", None)
             ops.pop("bound", None)
@@ -618,20 +604,13 @@ class LogStore(StoreBackend):
 
     def read_deltas(self, table: str) -> DataFrame:
         """Delta-appended dimension WITH its ``ingest_delta`` column — a
-        DATA column here (written at append time), not a partition dir, so
-        one plain multi-file read serves any number of deltas."""
+        DATA column (written at append time), so one plain multi-file read
+        serves any number of deltas."""
         st = self._visible_state()
         return self._read_files(table, self._live(st, table), st)
 
     def read_version(self) -> int | None:
         return self._visible_state().boundary
-
-    def read_rewind_epoch(self) -> int:
-        """API parity with the version-pointer backend: counts published-
-        boundary rewinds. LogStore snapshots never NEED it — their view is
-        an immutable file set — but the counter keeps cross-backend
-        observability identical."""
-        return self._visible_state().epoch
 
     def snapshot(self) -> "LogSnapshot":
         """A read view pinned to the current log version — an immutable
@@ -698,7 +677,6 @@ class LogStore(StoreBackend):
             expect = {
                 t: sorted(st.files.get(t, {})) for t in staged
             }  # read set: validated at hold publish (stale rm = lost rows)
-            rewound = False
             for table, (metas, lo, hi) in staged.items():
                 col = BLOCK_COLUMN[table]
                 overlapped = [
@@ -716,8 +694,6 @@ class LogStore(StoreBackend):
                     "add": [m.to_json() for m in adds],
                     "rm": [m.path for m in overlapped],
                 }
-                if pre is not None and lo <= pre:
-                    rewound = True  # below-head overwrite of published blocks
             hi_all = max(hi for _, _, hi in staged.values())
             lo_all = min(lo for _, lo, _ in staged.values())
             if has_marker:
@@ -726,7 +702,6 @@ class LogStore(StoreBackend):
                 boundary = pre  # marker-less writes only restore, never lead
             return {
                 "boundary": boundary,
-                "epoch": st.epoch + (1 if rewound else 0),
                 "tables": t_ops,
                 "schemas": schemas,
                 "expect": expect,
@@ -747,8 +722,8 @@ class LogStore(StoreBackend):
         store/store.go:319-378, with exact atomicity). Files fully inside
         [lo, hi] are removed with zero data read; overlapping boundary
         files are rewritten to their survivors. Pinned snapshots keep
-        reading the removed files until vacuum — the race the ParquetStore
-        can only detect does not exist here."""
+        reading the removed files until vacuum, so a reorg can never race
+        a pinned reader."""
         names = tuple(tables) if tables is not None else tuple(BLOCK_COLUMN)
 
         def build(st: _State) -> dict | None:
@@ -783,7 +758,6 @@ class LogStore(StoreBackend):
             rewind = st.boundary is not None and st.boundary >= lo
             return {
                 "boundary": (lo - 1) if rewind else st.boundary,
-                "epoch": st.epoch + (1 if rewind else 0),
                 "tables": t_ops,
                 "expect": {t: sorted(st.files.get(t, {})) for t in t_ops},
                 "bound": {"kind": "retract", "lo": lo},
@@ -797,9 +771,7 @@ class LogStore(StoreBackend):
         self.update_dimensions({table: df})
 
     def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
-        """Several dimensions in ONE commit — atomic across dims, which the
-        rename-protocol backend can only approximate (its dims commit one
-        swap at a time)."""
+        """Several dimensions in ONE commit — atomic across dims."""
         staged = {
             t: self._stage_files(t, self._prep(t, df)) for t, df in tables.items()
         }
@@ -808,7 +780,6 @@ class LogStore(StoreBackend):
         def build(st: _State) -> dict | None:
             return {
                 "boundary": st.boundary,
-                "epoch": st.epoch,
                 "tables": {
                     t: {
                         "add": [m.to_json() for m in metas],
@@ -852,7 +823,6 @@ class LogStore(StoreBackend):
                     raise _RetryConflict
                 return {
                     "boundary": st.boundary,
-                    "epoch": st.epoch,
                     "tables": {
                         table: {
                             "add": [m.to_json() for m in staged],
@@ -885,7 +855,7 @@ class LogStore(StoreBackend):
         tagged = df.withColumn("ingest_delta", F.lit(delta))
         metas = self._stage_files(table, tagged)
         if not metas:
-            return  # empty delta: nothing to land (parity with ParquetStore)
+            return  # empty delta: nothing to land
         schema = tagged.schema.jsonValue()
 
         def build(st2: _State) -> dict | None:
@@ -893,7 +863,6 @@ class LogStore(StoreBackend):
                 return None  # lost a race to the same delta: exactly-once
             return {
                 "boundary": st2.boundary,
-                "epoch": st2.epoch,
                 "tables": {table: {"add": [m.to_json() for m in metas], "rm": []}},
                 "schemas": {table: schema},
                 "deltas": {table: [delta]},
@@ -904,11 +873,10 @@ class LogStore(StoreBackend):
     @contextmanager
     def version_hold(self):
         """Group several mutations into ONE commit — and therefore one
-        atomic visibility transition, which is STRONGER than the
-        version-pointer form: nothing inside the hold (not even its
+        atomic visibility transition: nothing inside the hold (not even its
         rewinds) is visible to other readers until the clean exit, and a
-        crash mid-hold publishes nothing (no write-ahead floor file
-        needed; the orphaned staged files are vacuumable). The owning
+        crash mid-hold publishes nothing (nothing to repair; the orphaned
+        staged files are vacuumable). The owning
         store reads its own buffered writes (the backfill flow's
         write-then-read works unchanged)."""
         with self._mutex:
@@ -974,14 +942,13 @@ class LogStore(StoreBackend):
                         schemas[t] = sch
                     for t, names in commit.get("deltas", {}).items():
                         deltas.setdefault(t, []).extend(names)
-                    # boundary/epoch are re-derived from PUBLISH-time state
+                    # the boundary is re-derived from PUBLISH-time state
                     # via each op's intent ("bound"), never taken verbatim
                     # from buffer time — an external writer advancing the
                     # head on an untouched table must not be rewound
                     self._apply_buffered(merged, commit)
                 return {
                     "boundary": merged.boundary,
-                    "epoch": merged.epoch,
                     "tables": tables,
                     **({"schemas": schemas} if schemas else {}),
                     **({"deltas": deltas} if deltas else {}),
@@ -989,7 +956,7 @@ class LogStore(StoreBackend):
 
             self._commit(build)
 
-    # -- maintenance (log-layout extras, outside the StoreBackend contract) ----
+    # -- maintenance ---------------------------------------------------------
 
     def optimize(
         self,
@@ -1051,7 +1018,6 @@ class LogStore(StoreBackend):
                 return None  # a concurrent mutation rewrote some input: skip
             return {
                 "boundary": st2.boundary,
-                "epoch": st2.epoch,
                 "tables": {
                     table: {
                         "add": [m.to_json() for m in new_metas],
@@ -1231,10 +1197,11 @@ class LogSnapshot:
     PINNED file set; concurrent commits (including reorg retractions) are
     invisible by construction — rewind detection can never fire. Prevention
     of the reorg-rewind reader race (the reference's MySQL isolation,
-    store/store.go:115-173), where the ParquetStore detects it. The
+    store/store.go:115-173). Block-keyed reads are clamped to the pinned
+    batch boundary (``block <= version``), so rows a marker-less write
+    committed above it stay invisible until their headers commit. The
     check/guard surface instead enforces the RETENTION contract (see the
-    comment block below): it raises :class:`SnapshotExpiredError`, never
-    the rewind error.
+    comment block below): it raises :class:`SnapshotExpiredError`.
 
     Boundary of the guarantee: isolation holds within the VACUUM RETENTION
     window. A snapshot pinned longer than ``retain_versions`` commits
@@ -1246,8 +1213,7 @@ class LogSnapshot:
         self.store = store
         self._st = state
         self.spark = store.spark
-        self.version = state.boundary  # parity with StoreSnapshot.version
-        self.epoch = state.epoch
+        self.version = state.boundary  # pinned committed batch boundary
         # tables this snapshot has actually served reads for: the
         # silent-partial re-verification (check) sweeps ONLY these — a
         # vacuumed file of a table this pin never scanned cannot have
@@ -1316,6 +1282,7 @@ class LogSnapshot:
                     "PATH_NOT_FOUND",
                     "FILE_NOT_FOUND",
                     "FILE_NOT_EXIST",
+                    "NoSuchFileException",
                 )
             ):
                 missing = self._missing_files()
@@ -1343,10 +1310,19 @@ class LogSnapshot:
         return bool(self._st.files.get(table)) or table in self._st.schemas
 
     def read(self, table: str) -> DataFrame:
+        if self._clamped(table):
+            return self.read_range(table)
         df = self._read(table, self._live(table))
         if table in self._st.deltas and "ingest_delta" in df.columns:
             df = df.drop("ingest_delta")
         return df
+
+    def _clamped(self, table: str) -> bool:
+        """Block-keyed reads stop at the pinned batch boundary: a
+        marker-less write (new-token backfill, single-table repair) may
+        commit rows above it, and a snapshot must never show rows of blocks
+        whose headers were not committed."""
+        return self.version is not None and table in BLOCK_COLUMN
 
     def _live(self, table: str) -> list[_FileMeta]:
         return list(self._st.files.get(table, {}).values())
@@ -1384,6 +1360,8 @@ class LogSnapshot:
         self, table: str, lo: int | None = None, hi: int | None = None
     ) -> DataFrame:
         col = BLOCK_COLUMN[table]
+        if self._clamped(table):
+            hi = self.version if hi is None else min(hi, self.version)
         metas = [
             m
             for m in self._live(table)
@@ -1399,26 +1377,39 @@ class LogSnapshot:
 
     def read_eq(self, table: str, number: int) -> DataFrame:
         col = BLOCK_COLUMN[table]
+        beyond = self._clamped(table) and number > self.version
         metas = [
             m
             for m in self._live(table)
-            if (m.lo is None or m.lo <= number) and (m.hi is None or m.hi >= number)
+            if not beyond
+            and (m.lo is None or m.lo <= number)
+            and (m.hi is None or m.hi >= number)
         ]
         return self._read(table, metas).filter(F.col(col) == number)
 
     def max_block(self, table: str) -> int | None:
+        """Highest visible block from log stats; only files with no stats or
+        straddling the pinned boundary are read (with the clamp applied)."""
         metas = self._live(table)
         if not metas:
             return None
-        vals = [m.hi for m in metas if m.hi is not None]
-        unstats = [m for m in metas if m.hi is None]
-        if unstats:
+        clamp = self.version if self._clamped(table) else None
+        vals = [
+            m.hi for m in metas
+            if m.hi is not None and (clamp is None or m.hi <= clamp)
+        ]
+        unsure = [
+            m for m in metas
+            if m.hi is None
+            or (clamp is not None and m.hi > clamp and (m.lo is None or m.lo <= clamp))
+        ]
+        if unsure:
             col = BLOCK_COLUMN[table]
-            row = (
-                self._read(table, unstats)
-                .agg(F.max(col).alias("m"))
-                .collect()[0]
-            )
+            df = self._read(table, unsure)
+            if clamp is not None:
+                df = df.filter(F.col(col) <= clamp)
+            with self.guard():
+                row = df.agg(F.max(col).alias("m")).collect()[0]
             if row["m"] is not None:
                 vals.append(row["m"])
         return max(vals) if vals else None
@@ -1428,6 +1419,3 @@ class LogSnapshot:
 
     def read_version(self) -> int | None:
         return self.version
-
-    def read_rewind_epoch(self) -> int:
-        return self.epoch

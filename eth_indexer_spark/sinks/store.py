@@ -1,87 +1,31 @@
-"""Idempotent partitioned-parquet store — the sink layer (SURVEY §2.7, §7.4).
+"""Table-key policy and snapshot-guarded frames, shared by the store and
+every layer that reads it (SURVEY §2.7, §7 step 4).
 
-Replaces the reference's MySQL write surface:
+The engine's one store is :class:`~eth_indexer_spark.sinks.logstore.LogStore`,
+a commit log over immutable parquet files. This module holds the two things
+the layers above it share with that store:
 
-- S6 multi-table transactional insert (store/store.go:115-173,215-316): one
-  DB transaction covering headers+txs+receipts+logs+balances+transfers+
-  total_balances for ≤50 blocks, rollback on error.
-- M1/M2 range delete by block for reorg retraction, chunked 20 blocks/stmt
-  newest→oldest (store/store.go:175-212, store/block_header/block_header.go:44).
-- M3/M4 small-dimension updates (store/subscription/subscription.go:50,62-63,
-  96-102,131-146; store/account/account.go:57,161-168).
-- M5 duplicate-key tolerance: MySQL unique keys + swallowed err 1062 used as
-  idempotency between concurrent indexers (common/errors.go:26-57,
-  service/indexer/indexer.go:152-158).
-
-Spark-first design
-------------------
-Every block-keyed table is laid out as parquet partitioned by
-``block_bucket = block_number // bucket_size``. That single choice buys the
-whole mutation surface without a transaction log:
-
-- **Insert = staged bucket replacement** of exactly the buckets the batch
-  touches: the batch (plus in-range survivors) is written to a ``__tmp``
-  dir and committed bucket-by-bucket via the manifest + rename protocol.
-  Re-running a failed batch rewrites the same buckets with the same rows —
-  idempotent, the M5 semantic — and untouched history is never rewritten,
-  so a 50-block micro-batch costs O(batch), not O(table), at 100 TB.
-- **Range delete = partition rewrite** of only the buckets intersecting
-  [from, to]; interior buckets (fully covered by the range) are dropped
-  whole with no data read, only the ≤2 boundary buckets are read+filtered.
-  The reference's 20-block delete chunking exists to bound MySQL lock time;
-  a partition swap is already bounded by bucket size, so the knob disappears.
-- **Point/range reads prune**: ``WHERE block_number BETWEEN a AND b`` prunes
-  to ⌈(b−a)/bucket⌉ partitions because the bucket is a pure function of
-  ``block_number`` and the store injects the derived bucket predicate.
-
-Token-keyed tables (transfers, balances) add a leading ``token`` partition —
-the reference's per-token tables (store/account/account.go:55-56) as dynamic
-partition pruning instead of DDL.
-
-Small dimensions (subscriptions, erc20, reorgs) are rewritten whole on
-update — they are KBs; the reference's batch UPDATE ... IN is row-level only
-because MySQL offers nothing cheaper.
-
-Reader isolation: every mutation — insert, retraction, compaction,
-dimension swap — materializes off to the side and lands via whole-directory
-renames (`_apply_manifest`), so a concurrent reader only ever observes a
-partition directory that is complete (old or new version), never one whose
-files are mid-write or mid-delete — the practical analog of the reference's
-MySQL statement isolation for readers (store/store.go:129-139).
-
-Cross-TABLE consistency comes from a store-level ``VERSION.json`` pointer —
-the committed batch boundary (highest block every table has fully landed).
-``write_blocks`` advances it only AFTER every table including the
-``block_headers`` commit marker has committed; retraction/overwrite of
-blocks at-or-below the pointer rewinds it first. A reader that pins the
-pointer (:meth:`ParquetStore.snapshot`) and clamps every block-keyed read
-to ``block <= version`` therefore sees ONE batch boundary across all eight
-tables — the reference's single multi-table DB transaction
-(store/store.go:115-173) re-expressed as a monotone watermark instead of a
-transaction log. Rows at-or-below the pointer are immutable while it
-stands, so the clamp needs no file pinning. Residual gap (documented, not
-hidden): a reader pinned BEFORE a reorg rewind races the retraction of its
-upper blocks, bounded by reorg depth; dimension tables version per-swap,
-outside the block domain — both match the reference, whose dims also
-update in separate transactions. Full MVCC over file sets is the
-Delta/Iceberg seam: the same layout maps 1:1 onto Delta Lake
-(``replaceWhere`` / ``DELETE WHERE`` / MERGE); plain parquet keeps this
-repo dependency-free while preserving the partition economics.
+- **Table-key policy** — the reference's MySQL unique indexes
+  (``UNIQUE_KEYS``, dedup-on-key before write: the M5 duplicate-key
+  tolerance of common/errors.go:26-57), the block column each block-keyed
+  table is overwritten, retracted and pruned by (``BLOCK_COLUMN``), the
+  per-token column of the reference's per-token tables
+  (``EXTRA_PARTITIONS``, store/account/account.go:55-56) and the columns
+  that must never be NULL (``REQUIRED_NON_NULL``).
+- **Guarded frames** — :class:`GuardedDataFrame` and its delegates bracket
+  every action on a frame read through a pinned snapshot with that
+  snapshot's ``guard()``, so EP3 reads (plans/queries.py StoreQueries) get
+  the snapshot's safety check without calling it;
+  :func:`sql_over_snapshots` keeps the check across SQL.
 """
 
 from __future__ import annotations
 
 import functools
-import json
-import os
-import shutil
 from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.group import GroupedData
-from pyspark.sql import functions as F
-
-from eth_indexer_spark.sinks.backend import StoreBackend
 
 # Unique keys per table — mirrors the reference DDL's UNIQUE indexes exactly
 # (migration/db/migrate/*.rb, SURVEY §1.4); dedup-on-key before write (M5).
@@ -109,7 +53,8 @@ UNIQUE_KEYS: dict[str, list[str]] = {
     "latest_totals": ["token", "group"],
 }
 
-# Column the block bucket derives from, per block-keyed table.
+# Block column per block-keyed table: the range a batch overwrites, a reorg
+# retracts and the log's per-file min/max stats prune reads on.
 BLOCK_COLUMN: dict[str, str] = {
     "block_headers": "number",
     "transactions": "block_number",
@@ -121,36 +66,12 @@ BLOCK_COLUMN: dict[str, str] = {
     "total_balances": "block_number",
 }
 
-# Extra leading partition columns (per-token sharding, SURVEY §1.1).
+# Per-token column of the token-keyed tables (per-token sharding, SURVEY
+# §1.1); the log records its per-file min/max beside the block column's.
 EXTRA_PARTITIONS: dict[str, list[str]] = {
     "transfers": ["token"],
     "balances": ["token"],
 }
-
-DIMENSION_TABLES = ("erc20", "subscriptions", "reorgs")
-
-# Store-level committed batch boundary (see module docstring): the highest
-# block number for which EVERY table of the batch has committed. Written
-# atomically (tmp + fsync + os.replace), advanced strictly after the
-# block_headers commit marker, rewound before any mutation of blocks
-# at-or-below it.
-_VERSION_FILE = "VERSION.json"
-# Write-ahead record of an in-progress version_hold group: holds the floor
-# (lowest rewound boundary) the group has exposed. While it exists —
-# including after a crash or an aborted group — _advance_version clamps to
-# the floor, so a later unrelated batch cannot re-publish a boundary over
-# the group's half-applied blocks; the group's replay (same hold, clean
-# exit) clears it.
-_HOLD_FILE = "VERSION_HOLD.json"
-# VERSION.json also carries a monotone "epoch" counter bumped every time
-# the PUBLISHED boundary is actually rewound (a reorg retraction) — never
-# on ordinary forward mutation. A StoreSnapshot pins it alongside the
-# version; re-checking it after a read action detects the one race the
-# version pointer alone cannot: a rewind below the pin followed by a
-# re-advance back past it while the read executes (version looks
-# unchanged; the epoch does not). Keeping both in ONE file makes every
-# (version, epoch) transition a single atomic replace — no crash or read
-# can ever split the pair.
 
 # Columns that must never be NULL on write: dropDuplicates treats NULLs as
 # equal, so a null in a dedup-key column would silently collapse distinct
@@ -159,1200 +80,6 @@ _HOLD_FILE = "VERSION_HOLD.json"
 REQUIRED_NON_NULL: dict[str, list[str]] = {
     "receipt_logs": ["log_index"],
 }
-
-_BUCKET = "block_bucket"
-
-
-def _locked(fn):
-    """Run a ParquetStore mutation under the exclusive writer flock."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self._writer_lock():
-            self._settle_pending()
-            return fn(self, *args, **kwargs)
-
-    return wrapper
-
-
-def _bucket_of(rel_dir: str) -> int:
-    """Bucket number from a partition dir rel path ('block_bucket=7' or
-    'token=ab/block_bucket=7')."""
-    return int(rel_dir.rsplit(f"{_BUCKET}=", 1)[1])
-
-
-def _move_aside_into(trash: str, live_dir: str, rel: str) -> None:
-    """Reader-isolation primitive: retire a live partition dir with ONE
-    atomic rename into ``trash`` (readers see the dir whole or absent,
-    never mid-deletion). ``trash`` must be a ``__tmp_``-prefixed path so a
-    crash leaves it for ``_recover`` to garbage-collect."""
-    aside = os.path.join(trash, rel)
-    os.makedirs(os.path.dirname(aside), exist_ok=True)
-    shutil.rmtree(aside, ignore_errors=True)  # stale replay leftover
-    os.rename(live_dir, aside)
-
-
-def _partition_rel_dirs(root: str, extra_partitions: list[str]) -> list[str]:
-    """Partition dirs under a partitioned-parquet root, as rel paths."""
-    prefixes = [""]
-    if extra_partitions:
-        prefixes = [
-            d + os.sep
-            for d in os.listdir(root)
-            if d.startswith(tuple(f"{c}=" for c in extra_partitions))
-        ]
-    out = []
-    for p in prefixes:
-        base = os.path.join(root, p) if p else root
-        if not os.path.isdir(base):
-            continue
-        for name in os.listdir(base):
-            if name.startswith(f"{_BUCKET}="):
-                out.append(p + name)
-    return out
-
-
-class SnapshotRetractedError(RuntimeError):
-    """A reorg rewound the committed boundary below (or across) a pinned
-    StoreSnapshot while it was in use: the snapshot's view may include
-    retracted rows, so the read fails loudly instead of returning them.
-    Retry on a fresh ``store.snapshot()``."""
-
-
-class ParquetStore(StoreBackend):
-    """One directory per table under ``root``; block-keyed tables partitioned
-    by (token?,) block_bucket. The local-FS :class:`StoreBackend`
-    implementation; ``bucket_values``/``path``/``compact``/
-    ``delete_block_range``/``append_blocks`` are parquet-layout extras
-    outside the backend contract (sinks/backend.py)."""
-
-    def __init__(self, spark: SparkSession, root: str, bucket_size: int = 1000):
-        import threading
-
-        self.spark = spark
-        self.root = root
-        self.bucket_size = bucket_size
-        self._lock_held = False
-        # serializes VERSION.json read-modify-writes from the write_blocks
-        # thread pool (the flock guards cross-process, not cross-thread)
-        self._version_mutex = threading.Lock()
-        self._version_hold_depth = 0
-        self._version_pending_hi: int | None = None
-        with self._writer_lock():
-            self._recover()
-
-    # -- committed-version pointer (cross-table read snapshot) ---------------
-
-    def _read_version_state(self) -> tuple[int | None, int]:
-        """One atomic read of (committed boundary, rewind epoch) — both live
-        in VERSION.json so a reader can never observe a rewound boundary
-        paired with the pre-rewind epoch (two files would reopen that race
-        through a crash between the writes). A missing/legacy file (no
-        epoch key) reads as epoch 0.
-
-        A MISSING file is a legitimate state (a store that never completed
-        a versioned batch → live reads); a PRESENT-but-corrupt file is not —
-        the pointer is only ever written by atomic replace, so corruption
-        means external damage, and silently degrading to (None, 0) would
-        turn snapshot clamps into live reads AND reset the rewind-epoch
-        baseline that guard()/check() compare against. Fail loudly instead."""
-        path = os.path.join(self.root, _VERSION_FILE)
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except FileNotFoundError:
-            return None, 0
-        except ValueError as e:  # non-JSON bytes in an existing pointer file
-            raise RuntimeError(
-                f"corrupt store version pointer {path}: not JSON ({e}); "
-                "refusing to degrade to live reads — repair or remove the "
-                "file explicitly"
-            ) from e
-        try:
-            return int(d["block"]), int(d.get("epoch", 0))
-        except (TypeError, ValueError, KeyError) as e:
-            raise RuntimeError(
-                f"corrupt store version pointer {path}: {d!r} (expected "
-                "integer 'block' and optional integer 'epoch'); refusing to "
-                "degrade to live reads — repair or remove the file explicitly"
-            ) from e
-
-    def read_version(self) -> int | None:
-        """The committed batch boundary, or None for a store that has never
-        completed a versioned batch (readers then fall back to live reads)."""
-        return self._read_version_state()[0]
-
-    def read_rewind_epoch(self) -> int:
-        """Count of published-boundary rewinds this store has ever performed
-        (0 for a store that never reorged). Monotone; carried in
-        VERSION.json so (version, epoch) updates are a single atomic file
-        replace."""
-        return self._read_version_state()[1]
-
-    def _set_version(self, block: int, bump_epoch: bool = False) -> None:
-        epoch = self.read_rewind_epoch() + (1 if bump_epoch else 0)
-        path = os.path.join(self.root, _VERSION_FILE)
-        staging = path + ".writing"
-        with open(staging, "w") as f:
-            json.dump({"block": int(block), "epoch": epoch}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(staging, path)
-
-    def _hold_floor(self) -> int | None:
-        """Floor recorded by an in-progress (or crashed/aborted) hold, or
-        None when no hold record exists."""
-        try:
-            with open(os.path.join(self.root, _HOLD_FILE)) as f:
-                floor = json.load(f)["floor"]
-                return None if floor is None else int(floor)
-        except (FileNotFoundError, ValueError, KeyError):
-            return None
-
-    def _write_hold_floor(self, floor: int | None) -> None:
-        path = os.path.join(self.root, _HOLD_FILE)
-        staging = path + ".writing"
-        with open(staging, "w") as f:
-            json.dump({"floor": floor}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(staging, path)
-
-    def _rewind_version_below(self, lo: int) -> None:
-        """Blocks ≥ ``lo`` are about to be mutated: pull the committed
-        boundary under them FIRST, so a reader pinning the pointer after
-        this instant cannot span the mutation. Crash-safe by direction — a
-        crash after the rewind leaves the boundary conservatively low, and
-        the replayed batch re-advances it."""
-        with self._version_mutex:
-            v = self.read_version()
-            if v is not None and v >= lo:
-                # ONE atomic write moves the boundary down AND bumps the
-                # epoch — a reader can never see the rewound version with
-                # the old epoch (or vice versa), and a crash cannot land
-                # between them
-                self._set_version(lo - 1, bump_epoch=True)
-            # a deferred advance captured BEFORE this rewind must not
-            # resurrect a boundary over blocks this mutation removes; a
-            # LATER advance inside the hold may raise it again (its own
-            # blocks are committed by its own op)
-            if self._version_pending_hi is not None and self._version_pending_hi >= lo:
-                self._version_pending_hi = lo - 1
-            # the persistent hold record tracks the group's lowest exposure,
-            # so even after a crash mid-hold later batches stay clamped
-            if self._version_hold_depth > 0:
-                floor = self._hold_floor()
-                if floor is None or floor >= lo:
-                    self._write_hold_floor(lo - 1)
-
-    def _advance_version(self, hi: int) -> None:
-        """All tables of a batch through block ``hi`` have committed
-        (marker included): publish the new boundary. Monotone except
-        through an explicit rewind. Inside :meth:`version_hold` the advance
-        is deferred to the hold's clean exit; while a CRASHED/ABORTED
-        hold's record exists, advances clamp to its floor so no later
-        batch publishes a boundary spanning the group's half-applied
-        blocks (the group's replay clears the record)."""
-        with self._version_mutex:
-            if self._version_hold_depth > 0:
-                self._version_pending_hi = (
-                    hi
-                    if self._version_pending_hi is None
-                    else max(self._version_pending_hi, hi)
-                )
-                return
-            if os.path.exists(os.path.join(self.root, _HOLD_FILE)):
-                floor = self._hold_floor()
-                if floor is not None:
-                    hi = min(hi, floor)
-            v = self.read_version()
-            if v is None or hi > v:
-                self._set_version(hi)
-
-    @contextmanager
-    def version_hold(self):
-        """Group several mutations into ONE snapshot transition: rewinds
-        inside the hold apply immediately (they shrink the visible set —
-        always safe), but advances are deferred and published once, at clean
-        exit. The new-token backfill uses this: its balances and
-        total_balances land in separate `write_blocks` calls at the same
-        block, and without the hold a snapshot taken between them would see
-        the new balances beside the old totals.
-
-        Abort/crash contract: entering the hold writes a persistent record
-        (``VERSION_HOLD.json``) whose floor follows the group's rewinds;
-        on exception the pending advance is DROPPED and the record is LEFT
-        — subsequent batches can commit but the published boundary stays
-        clamped below the half-applied group until the group is replayed
-        through a clean hold (idempotent overwrite repairs the tables; the
-        clean exit clears the record and republishes). The record is
-        store-global, so replay the aborted group before starting an
-        UNRELATED hold — an unrelated clean exit would clear it without
-        repairing (the single-writer ingest sequence does this naturally:
-        a failed registration halts the loop and is retried first)."""
-        with self._version_mutex:
-            self._version_hold_depth += 1
-            if self._version_hold_depth == 1:
-                # write-ahead: merge with a leftover record (this IS the
-                # replay of a crashed group) instead of raising its floor
-                leftover = (
-                    self._hold_floor()
-                    if os.path.exists(os.path.join(self.root, _HOLD_FILE))
-                    else None
-                )
-                self._write_hold_floor(leftover)
-        try:
-            yield
-        except BaseException:
-            with self._version_mutex:
-                self._version_hold_depth -= 1
-                if self._version_hold_depth == 0:
-                    self._version_pending_hi = None
-            raise
-        with self._version_mutex:
-            self._version_hold_depth -= 1
-            pending, done = self._version_pending_hi, self._version_hold_depth == 0
-            if done:
-                self._version_pending_hi = None
-                # the group is whole again: clear the record BEFORE
-                # publishing so the publish is not clamped by its own floor
-                try:
-                    os.remove(os.path.join(self.root, _HOLD_FILE))
-                except FileNotFoundError:
-                    pass
-            if done and pending is not None:
-                v = self.read_version()
-                if v is None or pending > v:
-                    self._set_version(pending)
-
-    def snapshot(self) -> "StoreSnapshot":
-        """Pin the current committed boundary: every block-keyed read
-        through the returned object is clamped to ``block <= version``, so
-        a multi-table read sees one batch boundary (EP3 consistency —
-        store/store.go:115-173's transaction scope).
-
-        Rewind DETECTION scope: a plain ``.collect()`` on a frame returned
-        by ``snapshot().read(...)`` does NOT check for a reorg rewind —
-        route terminal actions through ``snap.collect(df)`` / ``guard()``
-        (or use :class:`~eth_indexer_spark.plans.queries.StoreQueries`,
-        whose snapshot frames self-bracket by default) to get
-        :class:`SnapshotRetractedError` instead of silently reading
-        retracted rows. Prevention — readers that never observe the rewind
-        at all — is the MVCC :class:`~eth_indexer_spark.sinks.logstore.
-        LogStore` backend."""
-        version, epoch = self._read_version_state()  # one atomic pair read
-        return StoreSnapshot(self, version, epoch)
-
-    # -- crash-safe mutation protocol ----------------------------------------
-    #
-    # Every destructive operation (retraction, compaction, dimension swap)
-    # follows write-ahead form: (1) materialize the new state under a
-    # deterministic ``__tmp_*`` dir, (2) atomically write a
-    # ``<tmp>.manifest.json`` — the COMMIT POINT, (3) apply by per-directory
-    # renames/drops, (4) remove manifest + tmp. ``_recover()`` (run on store
-    # open) re-applies any committed-but-unfinished manifest and aborts any
-    # uncommitted tmp, so a crash at ANY point either never happened or
-    # completes — the reference's DB-transaction guarantee for the reorg path
-    # (store/store.go:129-139) without a transaction log. Apply/recover use
-    # no Spark jobs: pure directory renames, idempotent under replay.
-    #
-    # The store is SINGLE-WRITER by construction (one ingestor owns the
-    # directory tree; the reference's multi-writer dup-key tolerance,
-    # common/errors.go:47-57, has no analog here — concurrent writers would
-    # race the manifest protocol). Readers are unaffected: Delta/Iceberg
-    # would supply snapshot isolation on a production deployment.
-    #
-    # ASSERTED, not just documented: every mutation runs under an exclusive
-    # ``flock`` on ``<root>/.writer.lock`` (non-blocking — a concurrent
-    # mutation fails loudly instead of corrupting the manifest protocol).
-    # The lock is held per-mutation, not per-store-lifetime, so a restarted
-    # job takes over a crashed writer's store without stale-lock cleanup
-    # (flock dies with the process). Local-FS deployments only; on object
-    # storage the Delta/Iceberg commit protocol replaces this.
-
-    @contextmanager
-    def _writer_lock(self):
-        if self._lock_held:  # reentrant within the owning store
-            yield
-            return
-        import fcntl
-
-        os.makedirs(self.root, exist_ok=True)
-        fd = os.open(os.path.join(self.root, ".writer.lock"), os.O_CREAT | os.O_RDWR)
-        try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                raise RuntimeError(
-                    f"concurrent writer on {self.root}: the store is "
-                    "single-writer by construction (see module docstring); "
-                    "another ParquetStore mutation holds the writer lock"
-                )
-            self._lock_held = True
-            yield
-        finally:
-            self._lock_held = False
-            os.close(fd)  # releases the flock
-
-    def _manifest_path(self, tmp_name: str) -> str:
-        return os.path.join(self.root, tmp_name + ".manifest.json")
-
-    def _write_manifest(self, manifest: dict) -> None:
-        path = self._manifest_path(manifest["tmp"])
-        staging = path + ".writing"
-        with open(staging, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(staging, path)
-
-    def _recover(self) -> None:
-        if not os.path.isdir(self.root):
-            return
-        names = sorted(os.listdir(self.root))
-        for n in names:  # half-written manifests / version files: abort
-            if n.endswith(".manifest.json.writing") or n in (
-                _VERSION_FILE + ".writing",
-                _HOLD_FILE + ".writing",
-            ):
-                os.remove(os.path.join(self.root, n))
-        self._settle_pending()  # committed ops: finish them
-        for n in sorted(os.listdir(self.root)):  # uncommitted tmps: abort
-            if n.startswith("__tmp_"):
-                shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
-
-    def _settle_pending(self) -> None:
-        """Finish EVERY committed-but-unapplied manifest, whatever its op or
-        table. Runs at the start of each locked mutation: an apply that died
-        mid-way (I/O error caught and retried in-process, no store reopen to
-        trigger ``_recover``) must not leave its manifest pending while a
-        DIFFERENT mutation — a ``write_blocks`` after a failed retraction —
-        plans against the half-applied state and commits; recovery would
-        later replay the stale manifest OVER the newer mutation's output.
-        ``_settle_tmp`` alone cannot catch this: it settles only its own
-        tmp name. Apply is idempotent, so settling is a no-op in the normal
-        (nothing-pending) case beyond one directory listing."""
-        for n in sorted(os.listdir(self.root)):
-            if n.endswith(".manifest.json"):
-                p = os.path.join(self.root, n)
-                if os.path.exists(p):
-                    with open(p) as f:
-                        self._apply_manifest(json.load(f))
-
-    def _settle_tmp(self, tmp_name: str) -> None:
-        """Prepare ``tmp_name`` for reuse by a new mutation: if a previous
-        attempt COMMITTED its manifest but its apply did not finish (e.g. an
-        I/O error mid-apply, caught and retried in-process without a store
-        reopen), finish it first — then clear the tmp dir. Removing the tmp
-        of a committed-but-unapplied manifest without applying it would
-        strand the manifest pointing at nothing; a crash before the new
-        manifest replaces it would then make recovery retire in-range dirs
-        whose replacements were deleted with the tmp. Apply is idempotent,
-        so settling an already-applied leftover is a no-op."""
-        mpath = self._manifest_path(tmp_name)
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                self._apply_manifest(json.load(f))
-        shutil.rmtree(os.path.join(self.root, tmp_name), ignore_errors=True)
-
-    def _apply_manifest(self, m: dict) -> None:
-        """Finish a committed mutation. Idempotent: every step checks state
-        before acting, so replaying after a crash mid-apply converges.
-
-        Reader isolation: live directories are never rmtree'd in place —
-        each replaced/retired dir is first moved ASIDE with a single
-        ``os.rename`` into the trash dir, then the new dir renamed in. A
-        concurrent reader therefore only ever observes a partition dir
-        that is whole (old version or new version), or — for the one
-        rename-pair instant — absent; it can never list a dir whose files
-        are mid-deletion or mid-copy. The trash (``<tmp>.trash``, itself a
-        ``__tmp_``-prefixed name so `_recover` garbage-collects it after a
-        crash) is bulk-deleted only after every swap completed."""
-        tmp = os.path.join(self.root, m["tmp"])
-        final = self.path(m["table"])
-        trash = tmp + ".trash"
-
-        def _move_aside(live_dir: str, rel: str) -> None:
-            _move_aside_into(trash, live_dir, rel)
-
-        if m["op"] == "swap":
-            # whole-directory replacement (compact / dimension update)
-            if os.path.isdir(tmp):
-                if os.path.isdir(final):
-                    _move_aside(final, m["table"])
-                os.rename(tmp, final)
-        elif m["op"] == "retract":
-            survivors = set(m["survivor_dirs"])
-            # 1. survivor partition dirs still in tmp move into place
-            for rel in sorted(survivors):
-                src = os.path.join(tmp, rel)
-                if os.path.isdir(src):
-                    dst = os.path.join(final, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if os.path.isdir(dst):
-                        _move_aside(dst, rel)
-                    os.rename(src, dst)
-            # 2. in-range dirs that are NOT survivors hold only retracted rows
-            for rel in self._bucket_rel_dirs(m["table"]):
-                if m["lo_b"] <= _bucket_of(rel) <= m["hi_b"] and rel not in survivors:
-                    _move_aside(os.path.join(final, rel), rel)
-        os.remove(self._manifest_path(m["tmp"]))
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
-
-    # -- paths ---------------------------------------------------------------
-
-    def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def exists(self, table: str) -> bool:
-        p = self.path(table)
-        # a partitioned dir with zero partitions left is still "exists"
-        return os.path.isdir(p) and any(
-            not n.startswith((".", "_")) for n in os.listdir(p)
-        )
-
-    # -- reads ---------------------------------------------------------------
-
-    def read(self, table: str) -> DataFrame:
-        """Scan one table. Physical partition columns come back dropped —
-        ``block_bucket`` on block-keyed tables, ``ingest_delta`` on
-        delta-appended dimensions — so callers see the logical schema;
-        range predicates still prune because `read_range` injects the
-        bucket predicate."""
-        df = self.spark.read.parquet(self.path(table))
-        if self._is_delta_table(table):
-            df = df.drop("ingest_delta")
-        return df.drop(_BUCKET) if table in BLOCK_COLUMN else df
-
-    def max_block(self, table: str) -> int | None:
-        """Highest stored block, found without scanning the table: the
-        bucket partition directories bound the answer, so only the top
-        bucket's rows are aggregated — O(bucket) per call where a naive
-        ``agg(max)`` is O(table). This is what keeps per-micro-batch head
-        lookups flat as history grows."""
-        if not self.exists(table):
-            return None
-        top = max(self.bucket_values(table), default=None)
-        if top is None:
-            return None
-        col = BLOCK_COLUMN[table]
-        row = (
-            self.spark.read.parquet(self.path(table))
-            .filter(F.col(_BUCKET) == top)
-            .agg(F.max(col).alias("m"))
-            .collect()[0]
-        )
-        return row["m"]
-
-    def _bucket_rel_dirs(self, table: str) -> list[str]:
-        """Existing partition dirs of a block-keyed table, as rel paths
-        ('block_bucket=N' or 'token=V/block_bucket=N')."""
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return []
-        return _partition_rel_dirs(root, EXTRA_PARTITIONS.get(table, []))
-
-    def bucket_values(self, table: str) -> list[int]:
-        """Bucket numbers with live partition dirs — the public probe layer
-        queries (plans/queries.py StoreQueries) use to bound point/top-k
-        reads to O(bucket) without scanning the table."""
-        return [_bucket_of(rel) for rel in self._bucket_rel_dirs(table)]
-
-    def read_range(self, table: str, lo: int | None = None, hi: int | None = None) -> DataFrame:
-        """Range scan with explicit partition pruning: the bucket predicate
-        is derived from [lo, hi] so the parquet source lists only
-        ⌈(hi−lo)/bucket⌉ partitions regardless of table size."""
-        col = BLOCK_COLUMN[table]
-        df = self.spark.read.parquet(self.path(table))
-        if lo is not None:
-            df = df.filter((F.col(_BUCKET) >= lo // self.bucket_size) & (F.col(col) >= lo))
-        if hi is not None:
-            df = df.filter((F.col(_BUCKET) <= hi // self.bucket_size) & (F.col(col) <= hi))
-        return df.drop(_BUCKET)
-
-    def read_eq(self, table: str, number: int) -> DataFrame:
-        """EP3 point read: equality on the block column prunes to exactly ONE
-        bucket partition (the bucket is a pure function of the block number),
-        so a point SELECT lists one directory regardless of table size — the
-        partition-layout analog of the reference riding its UNIQUE index on
-        every point read (store/block_header/block_header.go:46,
-        store/account/account.go:63-64)."""
-        col = BLOCK_COLUMN[table]
-        return (
-            self.spark.read.parquet(self.path(table))
-            .filter(
-                (F.col(_BUCKET) == number // self.bucket_size)
-                & (F.col(col) == number)
-            )
-            .drop(_BUCKET)
-        )
-
-    # -- writes --------------------------------------------------------------
-
-    def _require_non_null(self, table: str, df: DataFrame) -> None:
-        cols = REQUIRED_NON_NULL.get(table)
-        if not cols:
-            return
-        cond = None
-        for c in cols:
-            n = F.col(c).isNull()
-            cond = n if cond is None else (cond | n)
-        if df.filter(cond).limit(1).count() > 0:
-            raise ValueError(
-                f"{table}: NULL in required column(s) {cols} — a null dedup "
-                "key would silently collapse distinct rows; fix the fetcher"
-            )
-
-    def _with_bucket(self, table: str, df: DataFrame) -> DataFrame:
-        col = BLOCK_COLUMN[table]
-        return df.withColumn(_BUCKET, (F.col(col) / self.bucket_size).cast("long"))
-
-    @_locked
-    def write_blocks(
-        self, tables: dict[str, DataFrame], block_range: tuple[int, int] | None = None
-    ) -> None:
-        """S6: the multi-table batch insert, with **overwrite-by-block-range**
-        semantics: for each table, all stored rows with block ∈ range are
-        replaced by the batch's rows; rows outside the range are untouched.
-
-        Physically: the batch's rows are unioned with the *surviving*
-        out-of-range rows of the touched buckets, that union is staged to a
-        tmp dir, and the touched buckets swap in by directory rename through
-        the crash-safe manifest protocol — readers never observe a
-        partially-written bucket, and a crash either never happened or
-        completes on `_recover`. One distributed pass per table,
-        O(batch + bucket_size) — never O(table). Re-running the same batch
-        converges to the same state (the M5 idempotency semantic; the
-        reference gets it from unique keys + swallowed duplicate-key errors,
-        service/indexer/indexer.go:152-158). The reference's all-or-nothing
-        DB transaction becomes repair-by-replay; Delta's ``replaceWhere``
-        would restore multi-table atomicity on a production deployment.
-
-        ``block_range``: inclusive block span this batch covers. Defaults to
-        each table's own min/max block (one tiny agg job per table).
-
-        Tables are independent directories, so every table EXCEPT the commit
-        marker writes from a thread pool (concurrent Spark job submission —
-        local[32] and any real cluster schedule them in parallel; 8 serial
-        write jobs were the micro-batch latency floor). ``block_headers``,
-        when present, is written strictly AFTER all others complete: it is
-        the crash-recovery commit marker (streaming/ingest.py), and any
-        failed table write must withhold it so a replay repairs the batch.
-        """
-        items = [(t, d) for t, d in tables.items() if t != "block_headers"]
-        marker = [(t, d) for t, d in tables.items() if t == "block_headers"]
-        # pre-batch boundary: a below-head overwrite (new-token backfill)
-        # rewinds during the write, but once every table has committed the
-        # untouched blocks above the range are consistent again — restore
-        # through max(pre, hi)
-        pre_v = self.read_version()
-        spans: list[tuple[int, int]] = []
-        if len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # 4 measured faster than 8 on local[32]: table writes contend on
-            # the scheduler and local FS; 4 overlaps the per-write fixed cost
-            # without saturating either
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as ex:
-                futures = [
-                    ex.submit(self._write_one_table, t, d, block_range)
-                    for t, d in items
-                ]
-                for f in futures:
-                    span = f.result()  # re-raise any failure BEFORE the marker
-                    if span is not None:
-                        spans.append(span)
-        else:
-            for t, d in items:
-                span = self._write_one_table(t, d, block_range)
-                if span is not None:
-                    spans.append(span)
-        for t, d in marker:
-            span = self._write_one_table(t, d, block_range)
-            if span is not None:
-                spans.append(span)
-        if spans:
-            # Publish the boundary so snapshot readers cross into the batch
-            # atomically. Advancing PAST the pre-batch boundary requires the
-            # block_headers commit marker in the batch: a marker-less write
-            # (new-token backfill, single-table repair) may only RESTORE the
-            # pre-batch boundary — otherwise balances could become visible
-            # at blocks whose headers were never committed, the exact
-            # headers-vs-balances skew the pointer exists to prevent.
-            hi = max(hi for _, hi in spans)
-            if marker:
-                target = hi if pre_v is None else max(hi, pre_v)
-            else:
-                target = pre_v  # restore only; never lead the marker
-            if target is not None:
-                self._advance_version(target)
-
-    def _write_one_table(
-        self, table: str, df: DataFrame, block_range: tuple[int, int] | None
-    ) -> tuple[int, int] | None:
-        """Stage + commit one table's buckets; returns the (lo, hi) block
-        span actually written (None for an empty batch) so `write_blocks`
-        can advance the version pointer once every table has landed."""
-        self._require_non_null(table, df)
-        key = UNIQUE_KEYS.get(table)
-        if key:
-            df = df.dropDuplicates(key)
-        col = BLOCK_COLUMN[table]
-        if block_range is not None:
-            lo, hi = block_range
-        else:
-            row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-            lo, hi = row["lo"], row["hi"]
-        if lo is None:
-            return None  # empty batch for this table
-
-        # overwriting at-or-below the committed boundary (new-token backfill,
-        # reorg replay): pull the boundary under the mutation first so no
-        # NEW snapshot can span it; write_blocks re-advances after commit
-        self._rewind_version_below(int(lo))
-        lo_b, hi_b = lo // self.bucket_size, hi // self.bucket_size
-        tmp_name = f"__tmp_{table}_write"
-        tmp = os.path.join(self.root, tmp_name)
-        # settle BEFORE planning the survivors scan: finishing a stale
-        # attempt renames live dirs, which would invalidate an
-        # already-resolved file listing
-        self._settle_tmp(tmp_name)
-        if self.exists(table):
-            # In-range stored rows OUTSIDE [lo, hi] survive the overwrite;
-            # their lineage reads the live files, which stay untouched until
-            # the post-write rename — no materialization needed.
-            survivors = (
-                self.spark.read.parquet(self.path(table))
-                .filter((F.col(_BUCKET) >= lo_b) & (F.col(_BUCKET) <= hi_b))
-                .filter((F.col(col) < lo) | (F.col(col) > hi))
-                .drop(_BUCKET)
-            )
-            df = df.unionByName(survivors)
-
-        # Stage the replacement buckets under tmp, then commit through the
-        # same manifest + rename protocol as retraction: readers never see a
-        # partially-written bucket (the write happens entirely off to the
-        # side; each bucket dir appears/changes via one rename pair), and a
-        # crash either aborts cleanly (pre-manifest) or completes on
-        # `_recover`. The tmp listing doubles as the covered-partition set:
-        # an in-range live bucket NOT present in tmp has zero batch rows and
-        # zero survivors, so the retract apply retires it — the
-        # overwrite-by-range contract with no extra probe job.
-        out = self._with_bucket(table, df)
-        parts = EXTRA_PARTITIONS.get(table, []) + [_BUCKET]
-        out.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-        manifest = {
-            "op": "retract",
-            "table": table,
-            "tmp": tmp_name,
-            "lo_b": lo_b,
-            "hi_b": hi_b,
-            "survivor_dirs": _partition_rel_dirs(tmp, EXTRA_PARTITIONS.get(table, [])),
-        }
-        self._write_manifest(manifest)  # COMMIT POINT
-        self._apply_manifest(manifest)
-        return (int(lo), int(hi))
-
-    @_locked
-    def append_blocks(
-        self,
-        tables: dict[str, DataFrame],
-        block_range: tuple[int, int] | None = None,
-    ) -> None:
-        """Append variant for batches known to touch new buckets only —
-        skips the overwrite listing. Dedup-on-key still applies within the
-        batch; cross-batch idempotency needs `write_blocks`.
-
-        ``block_range``: the batch's inclusive block span, if the caller
-        knows it (appenders usually do) — passing it skips the per-table
-        min/max job that would otherwise re-execute each table's lineage
-        just to drive the version pointer. As in :meth:`write_blocks`,
-        the pointer only advances past its pre-batch value when the batch
-        carries the ``block_headers`` commit marker."""
-        pre_v = self.read_version()
-        hi_all = None
-        for table, df in tables.items():
-            self._require_non_null(table, df)
-            key = UNIQUE_KEYS.get(table)
-            if key:
-                df = df.dropDuplicates(key)
-            if block_range is not None:
-                lo, hi = block_range
-            else:
-                col = BLOCK_COLUMN[table]
-                row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-                lo, hi = row["lo"], row["hi"]
-                if lo is None:
-                    continue
-            self._rewind_version_below(int(lo))
-            hi_all = int(hi) if hi_all is None else max(hi_all, int(hi))
-            out = self._with_bucket(table, df)
-            parts = EXTRA_PARTITIONS.get(table, []) + [_BUCKET]
-            out.write.mode("append").partitionBy(*parts).parquet(self.path(table))
-        if hi_all is not None:
-            if "block_headers" in tables:
-                target = hi_all if pre_v is None else max(hi_all, pre_v)
-            else:
-                target = pre_v
-            if target is not None:
-                self._advance_version(target)
-
-    # -- mutations -----------------------------------------------------------
-
-    @_locked
-    def delete_block_range(self, table: str, lo: int, hi: int) -> None:
-        """M1/M2: retract all rows with block ∈ [lo, hi] — CRASH-SAFE.
-
-        Physical plan: buckets strictly inside the range are deleted whole
-        (pure metadata, no data read); the ≤2 boundary buckets are read,
-        filtered, and their survivors written to tmp IN THE FINAL PARTITION
-        LAYOUT. The manifest commit then makes the swap replayable: a crash
-        before the manifest aborts cleanly (live data untouched), a crash
-        after it is completed by `_recover()` on the next store open. Cost
-        is O(bucket_size), independent of table size — the property the
-        reference's chunked DELETE approximates, with the reference's
-        transactionality (store/store.go:129-139) restored.
-        """
-        if not self.exists(table):
-            return
-        # retraction mutates blocks ≥ lo: rewind the committed boundary
-        # first so fresh snapshots cannot span the in-flight deletion
-        self._rewind_version_below(lo)
-        col = BLOCK_COLUMN[table]
-        lo_b, hi_b = lo // self.bucket_size, hi // self.bucket_size
-        root = self.path(table)
-        tmp_name = f"__tmp_{table}_retract"
-        tmp = os.path.join(self.root, tmp_name)
-        # settle BEFORE planning the survivors scan: finishing a stale
-        # attempt renames live dirs, which would invalidate an
-        # already-resolved file listing
-        self._settle_tmp(tmp_name)
-
-        survivors = (
-            self.spark.read.parquet(root)
-            .filter((F.col(_BUCKET) >= lo_b) & (F.col(_BUCKET) <= hi_b))
-            .filter((F.col(col) < lo) | (F.col(col) > hi))
-        )
-        if survivors.limit(1).count() == 0:
-            # pure drop: idempotent, safe to crash mid-way and re-run
-            self._drop_bucket_dirs(table, lo_b, hi_b)
-            return
-
-        parts = EXTRA_PARTITIONS.get(table, []) + [_BUCKET]
-        survivors.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-
-        # survivor partition dirs, rel to the table root (they mirror the
-        # live layout because tmp was written with the same partitionBy)
-        survivor_rels = _partition_rel_dirs(tmp, EXTRA_PARTITIONS.get(table, []))
-
-        manifest = {
-            "op": "retract",
-            "table": table,
-            "tmp": tmp_name,
-            "lo_b": lo_b,
-            "hi_b": hi_b,
-            "survivor_dirs": survivor_rels,
-        }
-        self._write_manifest(manifest)  # COMMIT POINT
-        self._apply_manifest(manifest)
-
-    def _drop_bucket_dirs(self, table: str, lo_b: int, hi_b: int) -> None:
-        """Whole-bucket drop honoring the reader-isolation invariant: each
-        live dir is moved ASIDE with one atomic rename before deletion, so a
-        concurrent reader sees the bucket whole or absent — never a dir
-        whose files are mid-rmtree. The trash is ``__tmp_``-prefixed, so a
-        crash mid-way leaves it for ``_recover`` to garbage-collect (the
-        renamed dirs were logically deleted the moment the drop began; the
-        caller's delete is idempotent for the not-yet-renamed rest)."""
-        root = self.path(table)
-        trash = os.path.join(self.root, f"__tmp_{table}_drop.trash")
-        for rel in self._bucket_rel_dirs(table):
-            if lo_b <= _bucket_of(rel) <= hi_b:
-                _move_aside_into(trash, os.path.join(root, rel), rel)
-        # unconditional: a retried drop whose previous attempt crashed after
-        # renaming everything aside (nothing left to drop now) must still
-        # clear the populated trash
-        shutil.rmtree(trash, ignore_errors=True)
-
-    @_locked
-    def retract_blocks(self, lo: int, hi: int, tables: tuple[str, ...] | None = None) -> None:
-        """The full reorg retraction (store/store.go:319-378): range-delete
-        every derived table. Per-token tables need no enumeration — the token
-        partition column covers all tokens in one pass."""
-        for t in tables or tuple(BLOCK_COLUMN):
-            self.delete_block_range(t, lo, hi)
-
-    def buckets_needing_compaction(self, table: str, max_files: int = 8) -> list[str]:
-        """Scheduling guidance for :meth:`compact`: partition dirs whose
-        parquet file count exceeds ``max_files``. Every micro-batch write
-        adds ~1 file per touched bucket, so the active head bucket crosses
-        the threshold after ~``max_files`` batches — run ``compact(table)``
-        when this returns non-empty (per N batches, or from a maintenance
-        schedule). Pure directory listing; no data is read and nothing is
-        mutated (so no writer lock — it must not block, or be blocked by,
-        an in-flight batch), making the check safe to run every batch even
-        on a 100 TB table (it lists only partition dirs, whose count is
-        bounded by history/bucket_size)."""
-        try:
-            rels = self._bucket_rel_dirs(table)
-        except FileNotFoundError:
-            return []  # a concurrent swap moved the table dir for an instant
-        out = []
-        for rel in rels:
-            d = os.path.join(self.path(table), rel)
-            try:
-                n = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-            except FileNotFoundError:
-                continue  # a concurrent mutation renamed the bucket away
-            if n > max_files:
-                out.append(rel)
-        return out
-
-    @_locked
-    def compact(self, table: str) -> None:
-        """Maintenance: rewrite a block-keyed table so each partition holds
-        one file. Every micro-batch write adds a file per touched bucket, so
-        a long-running ingest accumulates small files that degrade scan
-        listing and parquet footer overhead — the standard lakehouse
-        compaction concern (Delta OPTIMIZE). Repartitioning by the partition
-        columns routes each partition's rows to a single task → single file,
-        and rows are SORTED by the block column within each file so parquet
-        row-group min/max statistics become tight block ranges — a point or
-        narrow-range read inside a compacted bucket then skips every
-        non-matching row group instead of decoding the whole bucket (the
-        within-partition analog of the bucket pruning the layout already
-        provides; at 100 TB bucket files hold many row groups, so this is
-        the difference between reading ~one row group and ~one bucket).
-        The rewrite lands in tmp and swaps in through the crash-safe
-        manifest protocol (a crash mid-swap is completed on recovery).
-        Destructive (tmp rewrite + whole-directory swap), so it runs under
-        the exclusive writer flock like every other mutation — a
-        maintenance-scheduled compact racing a live ingest fails loudly
-        instead of corrupting the manifest protocol."""
-        parts = EXTRA_PARTITIONS.get(table, []) + [_BUCKET]
-        df = (
-            self.spark.read.parquet(self.path(table))
-            .repartition(*[F.col(c) for c in parts])
-            .sortWithinPartitions(*parts, BLOCK_COLUMN[table])
-        )
-        tmp_name = f"__tmp_{table}_compact"
-        tmp = os.path.join(self.root, tmp_name)
-        self._settle_tmp(tmp_name)  # finish + clear any stale attempt
-        df.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-        manifest = {"op": "swap", "table": table, "tmp": tmp_name}
-        self._write_manifest(manifest)  # COMMIT POINT
-        self._apply_manifest(manifest)
-
-    @_locked
-    def update_dimension(self, table: str, df: DataFrame) -> None:
-        """M3/M4: replace a small dimension wholesale (subscriptions / erc20
-        / reorgs audit log). Write-tmp + manifest + swap: a crash mid-write
-        aborts (old dimension intact), a crash mid-swap completes on
-        recovery — never a half dimension."""
-        self._stage_dimension(table, df)
-        self._commit_dimension(table)
-
-    def _stage_dimension(self, table: str, df: DataFrame) -> None:
-        """Phase 1: dedup + write the replacement to the dim's tmp dir (the
-        expensive Spark job). No manifest yet — a crash here aborts cleanly
-        with the live dimension untouched."""
-        key = UNIQUE_KEYS.get(table)
-        if key:
-            df = df.dropDuplicates(key)
-        tmp = os.path.join(self.root, f"__tmp_{table}")
-        self._settle_tmp(f"__tmp_{table}")  # finish + clear any stale attempt
-        df.write.mode("overwrite").parquet(tmp)
-
-    def _commit_dimension(self, table: str) -> None:
-        """Phase 2: manifest + swap (fs metadata only). Crash after the
-        manifest is completed by `_recover()` on next open."""
-        manifest = {"op": "swap", "table": table, "tmp": f"__tmp_{table}"}
-        self._write_manifest(manifest)  # COMMIT POINT
-        self._apply_manifest(manifest)
-
-    @_locked
-    def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
-        """Update several dimensions under ONE lock acquisition, with the
-        expensive tmp writes overlapped from a thread pool (independent
-        dirs) and the manifest+swap commits applied serially afterwards.
-        Crash semantics are unchanged versus sequential
-        :meth:`update_dimension` calls: a crash during staging aborts every
-        dim cleanly; a crash between commits leaves each dim individually
-        consistent (committed dims swapped, the rest on their prior
-        version) — exactly the states the serial form can produce. Shaves a
-        full write-job latency per extra dim off the ingest hot path (the
-        two latest-state dims update every micro-batch)."""
-        items = list(tables.items())
-        if len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(4, len(items))) as ex:
-                futures = [
-                    ex.submit(self._stage_dimension, t, d) for t, d in items
-                ]
-                for f in futures:
-                    f.result()  # any staging failure aborts before ANY commit
-        else:
-            for t, d in items:
-                self._stage_dimension(t, d)
-        for t, _ in items:
-            self._commit_dimension(t)
-
-    @_locked
-    def append_dimension(self, table: str, df: DataFrame) -> None:
-        """Append rows to a dimension (reorgs audit rows), dedup on key.
-        The read-merge-swap runs under ONE lock acquisition (the flock is
-        reentrant within the owning store), so the live rows read here
-        cannot be swapped out between the read and the commit.
-
-        Read-merge-swap is O(history) per call — right for small audit
-        dims, wrong for per-batch state that only grows (index tables in a
-        crawl loop): use :meth:`append_dimension_delta` there."""
-        if self.exists(table):
-            merged = self.read(table).unionByName(df)
-        else:
-            merged = df
-        self.update_dimension(table, merged)
-
-    @_locked
-    def append_dimension_delta(self, table: str, df: DataFrame, delta: str) -> None:
-        """O(batch) append: land ``df`` as one immutable delta partition of
-        ``table`` (directory ``ingest_delta=<delta>``), atomically — the rows are
-        staged to a tmp dir and made visible by ONE directory rename, so a
-        concurrent reader sees the whole delta or none of it.
-
-        **Replay-idempotent by construction**: re-appending an existing
-        ``delta`` name is a no-op, so a ``foreachBatch`` caller that names
-        deltas by batch id gets exactly-once appends across restarts AND
-        mid-batch crash replays — stronger than a progress marker, which
-        only covers fully-applied batches. An empty ``df`` is skipped
-        entirely (a part-less delta dir would poison the table scan).
-
-        A delta table must be delta-only: mixing root-level files written
-        by :meth:`update_dimension` with ``ingest_delta=`` partition dirs breaks
-        Spark's partition discovery — enforced here (fail at the append,
-        not at some later read far from the misuse). :meth:`read` strips
-        the ``ingest_delta`` column, so consumers see the logical schema.
-        Crash before the rename leaves only a tmp dir that the next
-        attempt of the SAME (table, delta) clears; a permanently abandoned
-        attempt leaves one orphan ``__tmp_delta_*`` dir (never visible to
-        readers).
-
-        ``delta`` is restricted to ``[A-Za-z0-9_.-]``: Spark URL-escapes
-        partition values, so a name containing ``%``/``/``/``=`` would
-        read back as a DIFFERENT ``ingest_delta`` value than was written
-        and silently break the replay-idempotence filter."""
-        if not delta or not all(
-            c.isalnum() or c in "_.-" for c in delta
-        ):
-            raise ValueError(
-                f"delta name {delta!r} must be non-empty [A-Za-z0-9_.-]: "
-                "Spark escapes other chars in partition values, breaking "
-                "replay idempotence"
-            )
-        root = self.path(table)
-        if os.path.isdir(root) and any(
-            n.startswith("part-") for n in os.listdir(root)
-        ):
-            raise ValueError(
-                f"table {table!r} holds root-level files written by "
-                "update_dimension/append_dimension; a delta-appended table "
-                "must be delta-only (mixed layouts break partition discovery)"
-            )
-        dest = os.path.join(root, f"ingest_delta={delta}")
-        if os.path.isdir(dest):
-            return
-        tmp = os.path.join(self.root, f"__tmp_delta_{table}_{delta}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        if not any(f.startswith("part-") for f in os.listdir(tmp)):
-            shutil.rmtree(tmp, ignore_errors=True)  # empty delta: nothing to land
-            return
-        os.makedirs(root, exist_ok=True)
-        os.rename(tmp, dest)
-
-    def _is_delta_table(self, table: str) -> bool:
-        """True when ``table`` is laid out as delta partitions (has at least
-        one ``ingest_delta=`` dir) — gates the ``ingest_delta`` column drop
-        in :meth:`read` so the name is not silently reserved on plain
-        dimensions whose DATA may legitimately contain such a column."""
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            n.startswith("ingest_delta=") for n in os.listdir(p)
-        )
-
-    def read_deltas(self, table: str) -> DataFrame:
-        """Scan a delta-appended dimension WITH its ``ingest_delta`` partition
-        column. The replay-correctness primitive: a replayed batch must
-        read its PRIOR state — every delta EXCEPT its own — or its own
-        half-landed contribution would masquerade as pre-existing corpus
-        (e.g. the batch's digests would mark its documents as "already
-        deduped" and they would vanish). Filter ``ingest_delta != <own>`` and
-        recompute; appends then converge (existing deltas no-op)."""
-        return self.spark.read.parquet(self.path(table))
-
-
-class StoreSnapshot:
-    """Read view of a :class:`ParquetStore` pinned at one committed batch
-    boundary — the store-level answer to the reference's multi-table DB
-    transaction scope (store/store.go:115-173): a reader spanning
-    ``block_headers`` and ``balances`` mid-`write_blocks` sees either the
-    whole batch or none of it, never table A post-commit beside table B
-    pre-commit.
-
-    Mechanism: every block-keyed read is clamped to ``block <= version``
-    (bucket predicate included, so pruning economics are unchanged). The
-    write protocol guarantees rows at-or-below the pointer are immutable
-    while it stands — `write_blocks` advances it only after the commit
-    marker, and any mutation at-or-below rewinds it first — so the clamp IS
-    a snapshot, with no file pinning or manifest log. Dimension tables
-    delegate to live reads (they version per-swap, outside the block
-    domain, as in the reference's separate dim transactions). A store with
-    no VERSION pointer yet (pre-upgrade layout) degrades to live reads.
-
-    **Reorg-rewind race, detected:** the clamp cannot stop a reorg that
-    rewinds the boundary below the pin *while a read action executes* —
-    parquet files under the pin get rewritten mid-scan (the reference's DB
-    isolation would block this; the full fix is lakehouse-format MVCC).
-    The snapshot therefore pins the store's rewind EPOCH alongside the
-    version; :meth:`check` raises :class:`SnapshotRetractedError` whenever
-    the epoch moved or the boundary dropped below the pin, and
-    :meth:`guard` / :meth:`collect` bracket an action with that check. The
-    rewind protocol lowers the pointer and bumps the epoch in ONE atomic
-    VERSION.json replace, strictly before touching any data file, so a
-    post-action check observes the bump for every rewind that could have
-    overlapped the action — including a rewind-then-re-advance that leaves
-    the version looking untouched — and no crash or concurrent read can
-    split the (version, epoch) pair. Detection, not prevention. At THIS
-    level detection is opt-in at the action: the snapshot hands out lazy
-    DataFrames, so only actions run through :meth:`guard`/:meth:`collect`
-    (or the snapshot's own self-guarding :meth:`max_block`) detect the
-    race — a bare ``.collect()`` on a frame from :meth:`read`/
-    :meth:`read_range` retains the pre-detection exposure (engine code
-    reading here manages its own brackets). The CONSUMER surface is
-    default-on: ``StoreQueries.snapshot()`` (plans/queries.py) wraps every
-    frame it returns in :class:`GuardedDataFrame`, whose terminal actions
-    self-bracket — a naive EP3 caller is protected without knowing
-    ``guard()`` exists. Callers that need the guarantee on composed frames
-    bracket their action and retry on a fresh snapshot when
-    :class:`SnapshotRetractedError` fires (reorgs are rare). Prevention —
-    readers that never observe the rewind at all — is the MVCC
-    :class:`LogStore` backend (sinks/logstore.py), whose snapshots pin
-    immutable file sets.
-    """
-
-    def __init__(
-        self, store: ParquetStore, version: int | None, epoch: int | None = None
-    ):
-        self.store = store
-        self.version = version
-        # direct construction (tests) may omit the epoch: pin it now —
-        # possibly one bump late, which only errs toward raising
-        self.epoch = store.read_rewind_epoch() if epoch is None else epoch
-        self.spark = store.spark
-        self.bucket_size = store.bucket_size
-
-    def check(self) -> None:
-        """Raise :class:`SnapshotRetractedError` if a reorg rewind has (or
-        may have) invalidated this snapshot's pin. Cheap: one small JSON
-        read (the atomic (version, epoch) pair), no Spark job."""
-        v, e = self.store._read_version_state()
-        if e != self.epoch:
-            raise SnapshotRetractedError(
-                f"store rewound (reorg) since this snapshot pinned "
-                f"version {self.version}; retry on a fresh snapshot"
-            )
-        if self.version is not None and (v is None or v < self.version):
-            raise SnapshotRetractedError(
-                f"committed boundary dropped to {v} below the pinned "
-                f"version {self.version}; retry on a fresh snapshot"
-            )
-
-    @contextmanager
-    def guard(self):
-        """Bracket a read ACTION (collect/toPandas/write) with
-        :meth:`check`: the post-action check detects any rewind that
-        overlapped the action, so retracted state observed mid-scan raises
-        instead of being returned."""
-        self.check()
-        yield
-        self.check()
-
-    def collect(self, df: DataFrame) -> list:
-        """``df.collect()`` under :meth:`guard` — the guarded form of the
-        one action the query layer runs driver-side."""
-        with self.guard():
-            return df.collect()
-
-    def read_version(self) -> int | None:
-        """The PINNED boundary (the StoreBackend read-surface contract: a
-        snapshot answers for its own frozen state, not the moving store)."""
-        return self.version
-
-    def read_rewind_epoch(self) -> int:
-        return self.epoch
-
-    def read_deltas(self, table: str) -> DataFrame:
-        # dimension-delta tables version per-append outside the block
-        # domain — live read, like the other dimension delegations
-        return self.store.read_deltas(table)
-
-    def snapshot(self) -> "StoreSnapshot":
-        return self
-
-    def path(self, table: str) -> str:
-        return self.store.path(table)
-
-    def exists(self, table: str) -> bool:
-        return self.store.exists(table)
-
-    def read(self, table: str) -> DataFrame:
-        if self.version is None or table not in BLOCK_COLUMN:
-            return self.store.read(table)
-        return self.store.read_range(table, hi=self.version)
-
-    def read_range(self, table: str, lo: int | None = None, hi: int | None = None) -> DataFrame:
-        if self.version is not None and table in BLOCK_COLUMN:
-            hi = self.version if hi is None else min(hi, self.version)
-        return self.store.read_range(table, lo, hi)
-
-    def read_eq(self, table: str, number: int) -> DataFrame:
-        df = self.store.read_eq(table, number)
-        if self.version is not None and number > self.version:
-            return df.limit(0)  # beyond the snapshot boundary
-        return df
-
-    def bucket_values(self, table: str) -> list[int]:
-        vals = self.store.bucket_values(table)
-        if self.version is None:
-            return vals
-        return [b for b in vals if b <= self.version // self.bucket_size]
-
-    def max_block(self, table: str) -> int | None:
-        """Highest block visible in the snapshot, still O(bucket): walk the
-        ≤-version buckets top-down (the boundary can sit mid-bucket, leaving
-        the top in-range bucket with only beyond-boundary rows)."""
-        if self.version is None:
-            return self.store.max_block(table)
-        if not self.store.exists(table):
-            return None
-        col = BLOCK_COLUMN[table]
-        # self-protecting: this method runs its own actions, so it brackets
-        # itself — a rewind landing mid-walk raises instead of returning a
-        # max computed over retracted files
-        with self.guard():
-            for b in sorted(self.bucket_values(table), reverse=True):
-                row = (
-                    self.spark.read.parquet(self.path(table))
-                    .filter((F.col(_BUCKET) == b) & (F.col(col) <= self.version))
-                    .agg(F.max(col).alias("m"))
-                    .collect()[0]
-                )
-                if row["m"] is not None:
-                    return row["m"]
-        return None
 
 
 # `pyspark.sql.DataFrame` is the dispatching API class in Spark 4 (classic
@@ -1365,16 +92,16 @@ except ImportError:  # pyspark < 4: one concrete DataFrame class
 
 
 class GuardedDataFrame(_ConcreteDataFrame):
-    """A DataFrame whose terminal actions are bracketed by a
-    :class:`StoreSnapshot`'s rewind check — the DEFAULT-ON form of the
-    snapshot race detection, so a naive consumer of the EP3 query surface
-    (plans/queries.py StoreQueries) gets :class:`SnapshotRetractedError`
-    instead of silently reading reorg-retracted rows, without knowing
-    ``guard()`` exists. The reference's MySQL isolation protects its
-    readers unconditionally (store/store.go:115-173); this is the
-    unconditional-detection analog on the parquet layout (prevention —
-    readers that never observe the rewind at all — is the MVCC
-    :class:`LogStore` backend).
+    """A DataFrame whose terminal actions are bracketed by its pinned
+    snapshot's ``guard()`` — the DEFAULT-ON form of the snapshot's safety
+    check, so a naive consumer of the EP3 query surface (plans/queries.py
+    StoreQueries) gets the named
+    :class:`~eth_indexer_spark.sinks.logstore.SnapshotExpiredError`
+    instead of a raw Spark FileNotFound or a silently partial answer when
+    a ``vacuum`` past the retention window deleted files the pin reads,
+    without knowing ``guard()`` exists. (A reorg after the pin needs no
+    check: a :class:`~eth_indexer_spark.sinks.logstore.LogSnapshot` pins
+    an immutable file set.)
 
     Scope: the guarded frame's OWN terminal actions (`collect`, `toPandas`,
     `count`, `first`/`head`/`take`/`tail`, `show`, `isEmpty`, `foreach*`,
@@ -1382,21 +109,19 @@ class GuardedDataFrame(_ConcreteDataFrame):
     method RE-WRAPS — the full `_GUARDED_TRANSFORMS` surface plus the
     eager `_GUARDED_ACTION_TRANSFORMS` (`checkpoint`/`localCheckpoint`,
     which also bracket the job they run), `randomSplit` element-wise —
-    so a caller that composes and then acts keeps the detection (closing
-    the silent-downgrade hole the r8 verdict named). The claim is literal,
-    not aspirational: a completeness sweep in tests/test_queries.py
+    so a caller that composes and then acts keeps the check. The claim is
+    literal, not aspirational: a completeness sweep in tests/test_queries.py
     iterates DataFrame's public methods and fails if a DataFrame-returning
     one is unguarded (so a pyspark upgrade adding methods fails the suite
     instead of silently reopening the hole).
     A join/union of two guarded frames pinned to DIFFERENT snapshots is
     bracketed by BOTH pins (:class:`_CompositeSnapshotGuard`, which nests
-    each member's own guard so backend-specific error translation is
-    kept), so a rewind overlapping EITHER side's read raises —
-    cross-snapshot composition is fully guarded, never silently
-    half-guarded. ``groupBy``/``rollup``/``cube`` return a
-    :class:`GuardedGroupedData` whose ``agg``/``count``/``pivot``/
-    ``applyInPandas`` re-wrap into guarded frames, and the ``df.na``/
-    ``df.stat`` namespaces proxy the same way — every intermediate that
+    each member's own guard so its error translation is kept), so an
+    expired pin on EITHER side raises — cross-snapshot composition is
+    fully guarded, never silently half-guarded. ``groupBy``/``rollup``/
+    ``cube`` return a :class:`GuardedGroupedData` whose ``agg``/``count``/
+    ``pivot``/``applyInPandas`` re-wrap into guarded frames, and the
+    ``df.na``/``df.stat`` namespaces proxy the same way — every intermediate that
     leaves the DataFrame type re-enters guarded. The remaining escape
     hatches all leave the DataFrame API entirely: SQL over a temp view
     (registration erases the Python wrapper — use
@@ -1495,7 +220,7 @@ class GuardedDataFrame(_ConcreteDataFrame):
         "localCheckpoint",
     )
 
-    def __init__(self, df: DataFrame, snapshot: "StoreSnapshot"):
+    def __init__(self, df: DataFrame, snapshot):
         super().__init__(df._jdf, df.sparkSession)
         self._graft_snapshot = snapshot
 
@@ -1515,18 +240,18 @@ class GuardedDataFrame(_ConcreteDataFrame):
             _ConcreteDataFrame.stat.fget(self), self._graft_snapshot
         )
 
-    # rows between mid-iteration rewind checks: the check is one small
-    # driver-side metadata read (~µs), so every 8k rows is noise against
-    # the py4j transfer cost of the rows themselves
+    # rows between mid-iteration checks: the check is one small
+    # driver-side directory listing (~µs), so every 8k rows is noise
+    # against the py4j transfer cost of the rows themselves
     _ITER_CHECK_EVERY = 8192
 
     def toLocalIterator(self, prefetchPartitions: bool = False):
         """Iterator form: checked at creation, every ``_ITER_CHECK_EVERY``
-        rows, and at EXHAUSTION. A rewind landing mid-iteration raises
-        within one check window, so at most ``_ITER_CHECK_EVERY`` rows are
-        yielded under the race (a per-row check would put a file stat in
-        the row hot loop for no practical tightening) — callers needing an
-        exact all-or-nothing bracket should collect() instead."""
+        rows, and at EXHAUSTION. A vacuum expiring the pin mid-iteration
+        raises within one check window, so at most ``_ITER_CHECK_EVERY``
+        rows are yielded under the race (a per-row check would put a file
+        stat in the row hot loop for no practical tightening) — callers
+        needing an exact all-or-nothing bracket should collect() instead."""
         self._graft_snapshot.check()
         inner = _ConcreteDataFrame.toLocalIterator(self, prefetchPartitions)
         every = self._ITER_CHECK_EVERY
@@ -1552,9 +277,8 @@ def _make_guarded_action(name: str):
     action.__name__ = name
     action.__qualname__ = f"GuardedDataFrame.{name}"
     action.__doc__ = (
-        f"``DataFrame.{name}`` bracketed by the snapshot's rewind check "
-        f"(raises SnapshotRetractedError on a reorg rewind overlapping "
-        f"the action)."
+        f"``DataFrame.{name}`` bracketed by the snapshot's guard (raises "
+        f"SnapshotExpiredError when a vacuum deleted files the pin reads)."
     )
     return action
 
@@ -1563,10 +287,10 @@ class _CompositeSnapshotGuard:
     """Guard over SEVERAL snapshots at once — the pin of a plan composed
     from guarded frames pinned to different snapshots (e.g. a join of two
     independently-taken snapshots). ``check``/``guard`` fan out to every
-    member, so a rewind overlapping ANY side's read raises — without this,
-    a cross-snapshot join silently kept only the left pin (the r9 ADVICE
-    silent-downgrade finding). Members are deduplicated by identity;
-    nesting flattens, so chained joins stay a flat member list."""
+    member, so an expired pin on ANY side raises — without this, a
+    cross-snapshot join would silently keep only the left pin. Members are
+    deduplicated by identity; nesting flattens, so chained joins stay a
+    flat member list."""
 
     __slots__ = ("_parts",)
 
@@ -1588,8 +312,8 @@ class _CompositeSnapshotGuard:
     @contextmanager
     def guard(self):
         """NEST every member's own ``guard()`` rather than reimplementing
-        it as check-yield-check: each backend's guard carries backend
-        semantics the composite must not drop — LogSnapshot's translates
+        it as check-yield-check: each member's guard carries semantics
+        the composite must not drop — LogSnapshot's translates
         mid-action FileNotFound-class failures into the named
         :class:`SnapshotExpiredError` (a plain post-check would let the
         raw Java stack propagate on exactly the cross-snapshot composition
@@ -1649,9 +373,8 @@ class GuardedGroupedData(_GuardedDelegate):
     """``GroupedData`` over a guarded frame: ``agg``/``count``/``min``/
     ``max``/``sum``/``avg``/``mean``/``applyInPandas``/``applyInArrow``/…
     re-wrap into guarded frames and ``pivot`` stays guarded-grouped —
-    ``snapshot().read(...).groupBy(...).agg(...)`` keeps the rewind
-    detection end-to-end (previously the one common composition that
-    silently returned a plain frame)."""
+    ``snapshot().read(...).groupBy(...).agg(...)`` keeps the guard
+    end-to-end."""
 
 
 def _make_guarded_grouping(name: str):
@@ -1664,7 +387,7 @@ def _make_guarded_grouping(name: str):
     grouping.__qualname__ = f"GuardedDataFrame.{name}"
     grouping.__doc__ = (
         f"``DataFrame.{name}`` returning :class:`GuardedGroupedData`, so "
-        f"``.{name}(...).agg(...)`` keeps the rewind detection."
+        f"``.{name}(...).agg(...)`` keeps the snapshot guard."
     )
     return grouping
 
@@ -1699,7 +422,7 @@ def _make_guarded_transform(name: str, bracket: bool = False):
     transform.__doc__ = (
         f"``DataFrame.{name}`` returning a guarded frame pinned to the "
         f"receiver's snapshot plus any differently-pinned guarded-frame "
-        f"argument's, so composed plans keep full rewind detection."
+        f"argument's, so composed plans keep the full snapshot guard."
         + (" Eager (runs a job): the call itself is guard-bracketed." if bracket else "")
     )
     return transform
@@ -1718,7 +441,7 @@ del _name
 
 def sql_over_snapshots(spark: SparkSession, query: str, **views) -> DataFrame:
     """Run SQL over temp views of snapshot-pinned frames WITHOUT losing
-    rewind detection — the guarded form of the one remaining escape hatch
+    the snapshot guard — the guarded form of the one remaining escape hatch
     (``createOrReplaceTempView`` + ``spark.sql`` erases the Python
     wrapper, so the result of plain SQL over a pinned view is an
     unguarded frame).
@@ -1734,7 +457,7 @@ def sql_over_snapshots(spark: SparkSession, query: str, **views) -> DataFrame:
             "SELECT number, difficulty FROM h ORDER BY difficulty DESC LIMIT 3",
             h=frame,
         )
-        top.collect()   # raises SnapshotRetractedError after a rewind
+        top.collect()   # raises SnapshotExpiredError once the pin expired
 
     behaves exactly like the equivalent DataFrame composition. Views are
     ``createOrReplaceTempView`` (session-scoped, replaceable): callers

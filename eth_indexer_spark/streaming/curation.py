@@ -10,10 +10,10 @@ of raw documents is
    (:func:`~eth_indexer_spark.operators.dedup.incremental_substring_dedup`
    — combined batch+corpus counts; corpus text never re-read), and
 3. **landed**: the cleaned documents, the batch's new digests, and the
-   batch's gram-count delta each become one immutable
-   ``ingest_delta=b<batch_id>`` partition of their table
-   (:meth:`~eth_indexer_spark.sinks.store.ParquetStore.append_dimension_delta`
-   — O(batch) staged-write + atomic dir rename, never an O(history)
+   batch's gram-count delta each become one immutable delta of their
+   table tagged ``ingest_delta=b<batch_id>``
+   (:meth:`~eth_indexer_spark.sinks.logstore.LogStore.append_dimension_delta`
+   — O(batch) new files plus one log commit, never an O(history)
    rewrite).
 
 Wire it up as ``stream.writeStream.foreachBatch(make_curation_batch_fn(
@@ -23,7 +23,7 @@ driver loop; it is a plain ``(DataFrame, batch_id)`` callable.
 **Exactly-once across replays**: every append is keyed by the batch id,
 re-appending an existing delta is a no-op by construction, and a replay
 reads its PRIOR state (every delta except its own — see
-``ParquetStore.read_deltas``) so it recomputes the identical
+``LogStore.read_deltas``) so it recomputes the identical
 contribution. Both Spark's normal restart-replay of a completed batch and
 the replay of a batch that crashed mid-apply therefore land each table's
 delta exactly once: curated documents are never duplicated or lost,

@@ -14,7 +14,7 @@ Per micro-batch:
    ``maxBlocksToInsert`` 50, indexer.go:39): fetch the raw tables for the
    chunk's block hashes (S2/S3 seam), run the batch transform pipeline
    (pipeline/transform.py) seeded from the store's current state, and commit
-   through the idempotent partition-overwrite sink (sinks/store.py).
+   through the idempotent overwrite-by-block-range sink (sinks/logstore.py).
 
 Scale notes: only the *headers* of a micro-batch are driver-resident (tiny,
 bounded by the trigger); the raw tables, pipeline, and sink writes are all
@@ -41,7 +41,7 @@ from eth_indexer_spark.schema import (
     RAW_SCHEMAS,
     REORGS,
 )
-from eth_indexer_spark.sinks.store import ParquetStore
+from eth_indexer_spark.sinks.logstore import LogStore
 from eth_indexer_spark.streaming.reorg import ReorgDecision, check_reorg
 
 # the reference's maxBlocksToInsert (indexer.go:38-40)
@@ -61,7 +61,7 @@ class BlockIngestor:
     def __init__(
         self,
         spark: SparkSession,
-        store: ParquetStore,
+        store: LogStore,
         source,
         subscriptions: DataFrame,
         erc20: DataFrame,
@@ -214,9 +214,8 @@ class BlockIngestor:
             .filter(F.col("token") != address)
             .localCheckpoint()
         )
-        # one version_hold across both table writes: the snapshot boundary
-        # rewinds below at_block for the duration and advances ONCE after
-        # balances AND total_balances have landed — a snapshot taken midway
+        # one version_hold across both table writes: balances AND
+        # total_balances publish as ONE commit — a snapshot taken midway
         # must not see the new token's balances beside the old totals
         with self.store.version_hold():
             self.store.write_blocks(
@@ -468,7 +467,7 @@ class BlockIngestor:
         of chain length. Self-healing paths:
 
         - dim behind the store (crash between batch commit and dim update):
-          top-up from a bucket-pruned source read of just the gap;
+          top-up from a stats-pruned source read of just the gap;
         - dim ahead of the replay position (a retraction moved the store
           below it — reorg): the dim holds retracted state, rebuild from the
           source as-of ``first_n - 1`` (O(table), reorg-only);
@@ -631,9 +630,9 @@ class BlockIngestor:
         )
         # maintain the latest-state dims AFTER the commit marker: a crash
         # here leaves them one batch behind, which `_latest_state` heals with
-        # a bucket-pruned top-up on the next batch. One locked call, tmp
-        # writes overlapped (store.update_dimensions) — a full write-job
-        # latency off every micro-batch vs two sequential updates
+        # a stats-pruned top-up on the next batch. One commit for both dims
+        # (store.update_dimensions) — a full write-job latency off every
+        # micro-batch vs two sequential updates
         self.store.update_dimensions(
             {
                 "latest_balances": self._merged_latest_dim(

@@ -10,7 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from eth_indexer_spark.sinks.store import ParquetStore
+from eth_indexer_spark.sinks.logstore import LogStore
 from eth_indexer_spark.streaming.curation import make_curation_batch_fn
 
 S = "red gold blue gray"  # the planted duplicated 4-token span
@@ -47,7 +47,7 @@ def test_curation_stream_end_to_end(spark, tmp_path):
     the duplicated span is excised from its 2nd occurrence onward, earlier
     landed docs are not retroactively re-scrubbed, and the stored indexes
     advance to exactly the from-scratch state of the kept raw docs."""
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     fn = make_curation_batch_fn(store, min_len=4)
     for i, b in enumerate(_batches(spark)):
         fn(b, i)
@@ -82,30 +82,37 @@ def test_curation_stream_end_to_end(spark, tmp_path):
 
 
 def test_curation_stream_replay_is_exactly_once(spark, tmp_path):
-    """Full replay of a completed batch is a no-op, and a mid-crash replay
-    (docs delta lost, state deltas landed) reconstructs the identical docs
-    delta — no duplicates, no lost documents."""
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    """A mid-crash replay (docs delta lost, state deltas landed)
+    reconstructs the identical docs delta — no duplicates, no lost
+    documents — and a full replay of a completed batch is a no-op."""
+    store = LogStore(spark, str(tmp_path / "store"))
     fn = make_curation_batch_fn(store, min_len=4)
     batches = _batches(spark)
-    for i, b in enumerate(batches):
-        fn(b, i)
-    before = _curated(store)
+    fn(batches[0], 0)
+
+    # mid-crash replay: batch 1's digest/gram deltas commit, then the
+    # process dies before its docs delta commits; the replay must read
+    # PRIOR state (not its own digests!) and land the identical docs
+    real = store.append_dimension_delta
+
+    def crash_before_docs(table, df, delta):
+        if table == "curated_documents":
+            raise RuntimeError("crash before the docs commit")
+        return real(table, df, delta)
+
+    store.append_dimension_delta = crash_before_docs
+    with pytest.raises(RuntimeError, match="docs commit"):
+        fn(batches[1], 1)
+    store.append_dimension_delta = real
+    assert {5, 6} - set(_curated(store)) == {5, 6}
+    fn(batches[1], 1)
+    fn(batches[2], 2)
+    assert _curated(store) == EXPECT
     n_digest = store.read("digest_index").count()
 
     # full replay of batch 1: every delta exists → pure no-op
     fn(batches[1], 1)
-    assert _curated(store) == before
-    assert store.read("digest_index").count() == n_digest
-
-    # mid-crash replay: batch 1's docs delta vanishes (crash before the
-    # rename), its digest/gram deltas survived; the replay must read PRIOR
-    # state (not its own digests!) and land the identical docs again
-    docs_delta = os.path.join(store.path("curated_documents"), "ingest_delta=b1")
-    shutil.rmtree(docs_delta)
-    assert {5, 6} - set(_curated(store)) == {5, 6}
-    fn(batches[1], 1)
-    assert _curated(store) == before
+    assert _curated(store) == EXPECT
     assert store.read("digest_index").count() == n_digest
 
 
@@ -137,12 +144,12 @@ def test_curation_stream_crash_matrix(spark, tmp_path, crash_after):
     partial-landing state."""
     batches = _batches(spark)
 
-    ref = ParquetStore(spark, str(tmp_path / "ref"))
+    ref = LogStore(spark, str(tmp_path / "ref"))
     ref_fn = make_curation_batch_fn(ref, min_len=4)
     for i, b in enumerate(batches):
         ref_fn(b, i)
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     fn = make_curation_batch_fn(store, min_len=4)
     fn(batches[0], 0)
 
@@ -185,7 +192,7 @@ def test_curation_under_real_structured_streaming(spark, tmp_path):
         shutil.copy(part, dest)
         os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -215,8 +222,8 @@ def test_curation_under_real_structured_streaming(spark, tmp_path):
 def test_append_dimension_delta_idempotent_and_clean_schema(spark, tmp_path):
     """Delta appends: re-appending an existing delta name is a no-op, an
     empty frame adds no rows and poisons nothing, read() hides the
-    ingest_delta partition column while read_deltas() exposes it."""
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    ingest_delta column while read_deltas() exposes it."""
+    store = LogStore(spark, str(tmp_path / "store"))
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     store.append_dimension_delta("t", df, "b0")
     store.append_dimension_delta("t", spark.createDataFrame([(9, "z")], "k long, v string"), "b0")
@@ -233,30 +240,22 @@ def test_append_dimension_delta_idempotent_and_clean_schema(spark, tmp_path):
     assert store.read("t").count() == 2
 
 
-def test_append_dimension_delta_rejects_unsafe_names_and_mixed_layout(spark, tmp_path):
-    """Delta names outside [A-Za-z0-9_.-] would read back URL-unescaped as
-    a DIFFERENT partition value (breaking replay idempotence) — rejected at
-    the append; so is appending a delta to a table holding root-level
-    update_dimension files (mixed layouts break partition discovery at
-    some LATER read, far from the misuse)."""
-    import pytest
-
-    store = ParquetStore(spark, str(tmp_path / "store"))
+def test_append_dimension_delta_rejects_unsafe_names(spark, tmp_path):
+    """Delta names outside [A-Za-z0-9_.-] (empty, path separators, '=',
+    '%', spaces) are rejected at the append, before anything is staged."""
+    store = LogStore(spark, str(tmp_path / "store"))
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     for bad in ("a%20b", "a/b", "a=b", "", "a b"):
         with pytest.raises(ValueError, match="delta name"):
             store.append_dimension_delta("t", df, bad)
-
-    store.update_dimension("dim", df)
-    with pytest.raises(ValueError, match="delta-only"):
-        store.append_dimension_delta("dim", df, "b0")
+    assert not store.exists("t")
 
 
 def test_read_keeps_real_ingest_delta_columns_on_plain_dims(spark, tmp_path):
-    """The ingest_delta drop is gated on the table actually being
-    delta-partitioned: a plain dimension whose DATA has an ingest_delta
+    """The ingest_delta drop is gated on the table actually holding
+    deltas: a plain dimension whose DATA has an ingest_delta
     column round-trips intact."""
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     df = spark.createDataFrame([(1, "b7")], "k long, ingest_delta string")
     store.update_dimension("audit", df)
     got = store.read("audit")

@@ -1482,11 +1482,11 @@ def test_incremental_minhash_store_roundtrip(spark, tmp_path, docs):
     corpus re-indexed. (At 100 TB the index would live as a batch-
     partitioned appended table; the dimension path exercises the same
     read surface.)"""
-    from eth_indexer_spark.sinks.store import ParquetStore
+    from eth_indexer_spark.sinks.logstore import LogStore
 
     corpus = docs.filter("doc_id % 4 != 0")
     batch = docs.filter("doc_id % 4 = 0")
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     store.update_dimension("minhash_index", dedup.minhash_index(corpus, "text", "doc_id"))
 
     stored = store.read("minhash_index")
@@ -1523,12 +1523,12 @@ def test_incremental_substring_store_roundtrip(spark, tmp_path, docs):
     index, then append the batch's delta counts; aggregating the
     append-only rows at read must equal the full corpus re-indexed, and
     the stored-index scrub must match the in-memory path exactly."""
-    from eth_indexer_spark.sinks.store import ParquetStore
+    from eth_indexer_spark.sinks.logstore import LogStore
 
     small = docs.filter("doc_id < 120")
     corpus = small.filter("doc_id % 4 != 0")
     batch = small.filter("doc_id % 4 = 0")
-    store = ParquetStore(spark, str(tmp_path / "store"))
+    store = LogStore(spark, str(tmp_path / "store"))
     store.update_dimension(
         "substr_index", dedup.substring_gram_index(corpus, "text", "doc_id", min_len=5)
     )

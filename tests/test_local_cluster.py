@@ -6,11 +6,10 @@ claims are never actually exercised:
 - the session factory's heartbeat overrides must NOT apply on non-single-JVM
   masters (a dead executor is a real failure mode there — Spark's default
   detection must stay);
-- the store protocols (partitioned-parquet rename/manifest visibility, the
-  LogStore's explicit-file-list reads) must behave when the processes
-  SCANNING the files are different JVMs than the driver that committed
-  them — i.e. real executor-side file reads of freshly renamed/linked
-  paths, plus a registry query end-to-end.
+- the store protocol (the LogStore's explicit-file-list reads) must behave
+  when the processes SCANNING the files are different JVMs than the driver
+  that committed them — i.e. real executor-side file reads of freshly
+  committed paths, plus a registry query end-to-end.
 
 The scenario runs in a SUBPROCESS: a local-cluster SparkSession cannot
 coexist with the suite's session fixture (getOrCreate would return the
@@ -48,9 +47,10 @@ assert spark.conf.get("spark.executor.heartbeatInterval", "UNSET") == "UNSET"
 
 root = os.environ["LC_TMP"]
 
-# 2. ParquetStore: write -> overwrite -> retract with EXECUTOR-side scans
-#    between each mutation — multi-process visibility of the rename protocol
-from eth_indexer_spark.sinks.store import ParquetStore
+# 2. LogStore: write -> overwrite -> retract with EXECUTOR-side scans of
+#    the commit log's explicit file lists between each mutation, and a
+#    snapshot pinned across the retraction (prevention holds cross-process)
+from eth_indexer_spark.sinks.logstore import LogStore
 
 def headers(numbers):
     return spark.createDataFrame(
@@ -58,31 +58,19 @@ def headers(numbers):
         "hash string, parent_hash string, number long, difficulty long",
     )
 
-ps = ParquetStore(spark, os.path.join(root, "ps"), bucket_size=10)
-ps.write_blocks({"block_headers": headers(range(100, 120))})
-assert ps.read("block_headers").count() == 20
-ps.write_blocks({"block_headers": headers([105])}, block_range=(105, 109))
-got = sorted(r["number"] for r in ps.read("block_headers").collect())
-assert got == list(range(100, 106)) + list(range(110, 120)), got
-ps.delete_block_range("block_headers", 110, 114)
-assert ps.read("block_headers").count() == 11
-# the retraction rewound the committed boundary to 109, so a snapshot
-# correctly clamps to blocks <= 109: exactly the 100..105 rows
-snap = ps.snapshot()
-assert len(snap.collect(snap.read("block_headers"))) == 6
-
-# 3. LogStore: commit-log reads (explicit file lists) from executor JVMs,
-#    snapshot pinned across a retraction (prevention holds cross-process)
-from eth_indexer_spark.sinks.logstore import LogStore
-
 ls = LogStore(spark, os.path.join(root, "ls"))
-ls.write_blocks({"block_headers": headers(range(200, 230))})
+ls.write_blocks({"block_headers": headers(range(100, 120))})
+assert ls.read("block_headers").count() == 20
+ls.write_blocks({"block_headers": headers([105])}, block_range=(105, 109))
+got = sorted(r["number"] for r in ls.read("block_headers").collect())
+assert got == list(range(100, 106)) + list(range(110, 120)), got
 pin = ls.snapshot()
-ls.retract_blocks(215, 229, tables=("block_headers",))
-assert ls.read("block_headers").count() == 15
-assert pin.read("block_headers").count() == 30  # immutable pinned file set
+ls.retract_blocks(110, 114, tables=("block_headers",))
+assert ls.read("block_headers").count() == 11
+assert ls.read_version() == 109  # the retraction rewound the boundary
+assert len(pin.collect(pin.read("block_headers"))) == 16  # pinned file set
 
-# 4. one registry query end-to-end at the smoke SF
+# 3. one registry query end-to-end at the smoke SF
 import __spark_entry__ as entrymod
 
 rows = entrymod.queries()["q1_pricing_summary"](spark, os.environ["LC_SF"]).collect()

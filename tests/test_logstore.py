@@ -1,17 +1,18 @@
-"""MVCC commit-log backend tests (sinks/logstore.py).
+"""MVCC commit-log store tests (sinks/logstore.py).
 
-The LogStore closes the two documented deviations the ParquetStore carries
-vs the reference (SURVEY "known deviations"): the reorg-rewind reader race
-becomes PREVENTED (snapshot = immutable file set — the MySQL isolation of
+The LogStore matches the reference's MySQL semantics where a file-based
+store is hardest pressed: the reorg-rewind reader race is PREVENTED
+(snapshot = immutable file set — the MySQL isolation of
 store/store.go:115-173 by construction) and multi-writer coordination is
-optimistic commit-log concurrency instead of an exclusive flock (the
-reference's swallowed-duplicate-key tolerance, common/errors.go:26-57).
+optimistic commit-log concurrency (the reference's swallowed-duplicate-key
+tolerance, common/errors.go:26-57).
 
-Coverage mirrors the ParquetStore matrix where semantics coincide
-(overwrite-by-range, retraction, dimension swaps, delta exactly-once,
-crash/replay convergence, randomized model sweep) and diverges exactly
-where the contract is STRONGER (prevention instead of detection; holds
-publish nothing until clean exit, even rewinds).
+Coverage: overwrite-by-range, retraction, stats pruning, dimension swaps,
+delta exactly-once, holds (nothing published until clean exit, even
+rewinds), crash/replay convergence, OCC between writers and processes,
+optimize/vacuum and the retention contract, and a randomized model sweep.
+The table-key contract cases shared with the engine live in
+tests/test_sink.py.
 """
 
 from __future__ import annotations
@@ -46,19 +47,6 @@ def _numbers(store, table="block_headers", col="number"):
     return sorted(r[col] for r in store.read(table).select(col).collect())
 
 
-def test_implements_backend_seam():
-    from eth_indexer_spark.sinks.backend import StoreBackend
-
-    assert issubclass(LogStore, StoreBackend)
-    missing = {
-        m
-        for m in StoreBackend.__abstractmethods__
-        if getattr(LogStore, m) is getattr(StoreBackend, m)
-    }
-    assert not missing, missing
-    assert not getattr(LogStore, "__abstractmethods__", None)
-
-
 def test_write_idempotent_and_overwrite_by_range(spark, lstore):
     batch = {"block_headers": headers_df(spark, range(100, 106))}
     lstore.write_blocks(batch)
@@ -83,7 +71,6 @@ def test_retraction_boundary_and_interior(spark, lstore):
     lstore.retract_blocks(105, 131, tables=("block_headers",))
     assert _numbers(lstore) == list(range(100, 105)) + list(range(132, 140))
     assert lstore.read_version() == 104  # rewound below the retraction
-    assert lstore.read_rewind_epoch() == 1
 
 
 def test_token_table_stats_prune_and_survive(spark, lstore):
@@ -106,7 +93,7 @@ def test_token_table_stats_prune_and_survive(spark, lstore):
 def test_read_range_prunes_files_by_log_stats(spark, lstore):
     """File pruning is driven by log metadata: a narrow range read must
     hand Spark only the files whose [lo, hi] stats intersect — the
-    data-skipping economics (Delta paper §4.1) replacing bucket dirs."""
+    data-skipping economics (Delta paper §4.1)."""
     for base in (100, 200, 300):
         lstore.write_blocks(
             {"block_headers": headers_df(spark, range(base, base + 50))},
@@ -131,10 +118,9 @@ def test_read_range_prunes_files_by_log_stats(spark, lstore):
 
 def test_snapshot_prevents_reorg_rewind_race(spark, lstore):
     """THE headline: a snapshot pinned before a reorg retraction keeps
-    returning its pin-time rows — no SnapshotRetractedError, no retracted
-    rows, nothing to detect. Prevention by immutable file sets (the
-    reference's DB isolation, store/store.go:115-173), where the
-    ParquetStore can only detect-and-raise."""
+    returning its pin-time rows — no error, no retracted rows, nothing to
+    detect. Prevention by immutable file sets (the reference's DB
+    isolation, store/store.go:115-173)."""
     lstore.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
     snap = lstore.snapshot()
     df = snap.read("block_headers")
@@ -182,11 +168,12 @@ def test_multi_table_batch_is_one_commit(spark, lstore):
 
 def test_occ_two_writers_converge(spark, tmp_path):
     """Multi-writer optimistic concurrency: writer B commits BETWEEN
-    writer A's plan and A's publish (the exact flock-fatal interleaving).
-    A must lose the version race, re-plan against B's state, and land —
-    both batches visible, no lock, no error. This is the coordination the
-    reference gets from swallowed duplicate-key errors between concurrent
-    indexers (common/errors.go:26-57, service/indexer/indexer.go:152-158)."""
+    writer A's plan and A's publish (the interleaving a single-writer lock
+    would forbid). A must lose the version race, re-plan against B's
+    state, and land — both batches visible, no lock, no error. This is the
+    coordination the reference gets from swallowed duplicate-key errors
+    between concurrent indexers (common/errors.go:26-57,
+    service/indexer/indexer.go:152-158)."""
     root = str(tmp_path / "shared")
     a = LogStore(spark, root)
     b = LogStore(spark, root)
@@ -268,10 +255,10 @@ def test_dimension_update_and_append(spark, lstore):
 
 
 def test_version_hold_publishes_nothing_until_clean_exit(spark, tmp_path):
-    """Holds are STRONGER here than on the version-pointer backend: a
-    second reader handle (another process's view) sees no effect — not
-    even rewinds — until the single commit at clean exit; an aborted hold
-    publishes nothing at all (no floor file, no repair protocol)."""
+    """A hold publishes as ONE commit: a second reader handle (another
+    process's view) sees no effect — not even rewinds — until the single
+    commit at clean exit; an aborted hold publishes nothing at all
+    (nothing to repair)."""
     root = str(tmp_path / "hold")
     owner = LogStore(spark, root)
     other = LogStore(spark, root)
@@ -377,30 +364,25 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
 
 class LogStoreModel:
     """Sequential model of the LogStore visibility contract for the
-    randomized sweep: overwrite/delete/boundary semantics shared with the
-    ParquetStore model, hold semantics strictly deferred (nothing —
-    not even rewinds — visible outside until clean exit), snapshots
-    immutable forever."""
+    randomized sweep: overwrite/delete/boundary semantics, hold semantics
+    strictly deferred (nothing — not even rewinds — visible outside until
+    clean exit), snapshots immutable forever."""
 
     def __init__(self):
         self.blocks: set[int] = set()
         self.version: int | None = None
-        self.epoch = 0
         self.hold = False
         self.staged: list[tuple[str, int, int]] = []
 
     def _apply(self, op: str, lo: int, hi: int) -> None:
         if op == "write":
             pre = self.version
-            if pre is not None and lo <= pre:
-                self.epoch += 1
             self.blocks -= set(range(lo, hi + 1))
             self.blocks |= set(range(lo, hi + 1))
             self.version = hi if pre is None else max(hi, pre)
         else:  # delete
             if self.version is not None and self.version >= lo:
                 self.version = lo - 1
-                self.epoch += 1
             self.blocks -= set(range(lo, hi + 1))
 
     def write(self, lo, hi):
@@ -418,7 +400,7 @@ class LogStoreModel:
     def own_view(self) -> "LogStoreModel":
         """What the OWNING store reads mid-hold (committed + staged)."""
         m = LogStoreModel()
-        m.blocks, m.version, m.epoch = set(self.blocks), self.version, self.epoch
+        m.blocks, m.version = set(self.blocks), self.version
         for op, lo, hi in self.staged:
             m._apply(op, lo, hi)
         return m
@@ -438,12 +420,11 @@ class LogStoreModel:
 def test_logstore_protocol_matches_model_under_random_interleavings(
     spark, tmp_path, seed
 ):
-    """The randomized protocol sweep over the MVCC backend (the LogStore
-    analog of test_store_model.py): visible rows via a SECOND handle track
-    the model after every op; a snapshot pinned mid-sequence returns its
-    pin-time rows FOREVER — across any number of later writes, deletes and
-    holds — and never raises (prevention; where the ParquetStore model
-    asserts raise-iff-rewound)."""
+    """The randomized protocol sweep over the commit-log store: visible
+    rows and the published boundary via a SECOND handle track the model
+    after every op; a snapshot pinned mid-sequence returns its pin-time
+    rows FOREVER — across any number of later writes, deletes and holds —
+    and never raises (prevention, not detection)."""
     rng = random.Random(seed)
     root = str(tmp_path / "m")
     owner = LogStore(spark, root)
@@ -491,7 +472,6 @@ def test_logstore_protocol_matches_model_under_random_interleavings(
             f"step {step} external visibility diverged"
         )
         assert reader.read_version() == model.version
-        assert reader.read_rewind_epoch() == model.epoch
         # OWNER view includes its own staged writes mid-hold
         own = model.own_view() if in_hold else model
         assert visible(owner) == own.blocks, f"step {step} owner view diverged"
@@ -580,12 +560,10 @@ def test_version_hold_publish_conflict_detected(spark, tmp_path):
     # unrelated-table concurrency does NOT conflict — and it must not be
     # CLOBBERED either: B advances the published boundary (109 -> 111) on a
     # table the hold never touches, so the hold's publish must re-derive
-    # boundary/epoch against publish-time state (its buffer-time absolutes
-    # say boundary=109; replaying them verbatim would silently rewind the
-    # head to 109 without an epoch bump — a lost update). The buffered write
-    # sits ABOVE both heads (block 115), so no below-head overwrite bump
-    # applies either: boundary and epoch must both pass through untouched.
-    epoch_before = a.read_rewind_epoch()
+    # the boundary against publish-time state (its buffer-time absolute
+    # says boundary=109; replaying it verbatim would silently rewind the
+    # head to 109 — a lost update). The buffered write is marker-less and
+    # sits ABOVE both heads (block 115), so the boundary passes through.
     with a.version_hold():
         a.write_blocks(
             {
@@ -604,9 +582,6 @@ def test_version_hold_publish_conflict_detected(spark, tmp_path):
     assert _numbers(a) == list(range(100, 112))
     assert a.read_version() == 111, "hold publish rewound the external head"
     assert b.read_version() == 111
-    assert a.read_rewind_epoch() == epoch_before, (
-        "above-head marker-less hold publish must not bump the rewind epoch"
-    )
 
 
 def test_hold_delta_replay_skips_externally_landed_delta(spark, tmp_path):

@@ -128,79 +128,96 @@ def test_find_total_balance_asof(spark, raw, headers):
     assert r_future["block_number"] == 104  # A3's last ETH activity (uncle reward)
 
 
-def test_store_point_reads_prune_partitions(spark, tmp_path):
-    """EP3 economics: the store-aware wrapper must push the derived
-    block_bucket predicate into the parquet source (PartitionFilters in the
-    physical plan), so a point lookup lists ONE partition directory and an
-    as-of lookup only buckets <= N — the layout analog of the reference's
-    indexed point SELECTs (store/block_header/block_header.go:46,
-    store/account/account.go:63-64)."""
-    import io
-    from contextlib import redirect_stdout
+# -- store-aware EP3 surface over the LogStore ---------------------------------
 
-    from eth_indexer_spark.sinks.store import ParquetStore
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
+def _batch(spark, numbers):
+    return {
+        "block_headers": spark.createDataFrame(
+            [(f"h{n}", f"h{n-1}", n, 100 + n) for n in numbers],
+            "hash string, parent_hash string, number long, difficulty long",
+        ),
+        "total_balances": spark.createDataFrame(
+            [("0xeth", n, 1, str(n * 10)) for n in numbers],
+            "token string, block_number long, `group` long, balance string",
+        ),
+    }
+
+
+def _headers_store(spark, root, n=20):
+    """A LogStore holding block_headers 0..n-1 in one batch."""
+    from eth_indexer_spark.sinks.logstore import LogStore
+
+    store = LogStore(spark, root)
     store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 40)],
-                "hash string, parent_hash string, number long, difficulty long",
-            ),
-            "total_balances": spark.createDataFrame(
-                [("0xeth", n, 1, str(n * 10)) for n in range(0, 40)],
-                "token string, block_number long, `group` long, balance string",
-            ),
-        }
+        {"block_headers": _batch(spark, range(n))["block_headers"]},
+        block_range=(0, n - 1),
     )
-    sq = q.StoreQueries(store)
+    return store
 
-    def partition_filters(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        assert "PartitionFilters" in plan, plan
-        return plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+
+def _expire_pins(store, lo, hi, tables=("block_headers",)):
+    """Reorg, then maintenance with zero retention: the retraction alone
+    leaves every open pin readable (its files stay on disk), the vacuum
+    deletes the files the pins still read — every pin taken before this
+    call is expired."""
+    store.retract_blocks(lo, hi, tables=tables)
+    store.vacuum(retain_versions=0)
+
+
+def test_store_point_reads_prune_files(spark, tmp_path):
+    """EP3 economics: the store-aware wrapper routes each block-number
+    filter through the log's per-file block stats, so a point lookup scans
+    only the files that can hold that block and an as-of lookup only the
+    files starting at or below N — the analog of the reference's indexed
+    point SELECTs (store/block_header/block_header.go:46,
+    store/account/account.go:63-64)."""
+    from eth_indexer_spark.sinks.logstore import LogStore
+
+    store = LogStore(spark, str(tmp_path / "store"))
+    for lo in range(0, 40, 10):
+        store.write_blocks(_batch(spark, range(lo, lo + 10)), block_range=(lo, lo + 9))
+    sq = q.StoreQueries(store)
+    live = store._state(refresh=True).files
+
+    def files_where(table, keep):
+        return {store._abs(m.path) for m in live[table].values() if keep(m)}
+
+    def scanned(df):
+        return {"/" + f.split("://", 1)[-1].lstrip("/") for f in df.inputFiles()}
 
     point = sq.header_by_number(25)
-    assert "block_bucket" in partition_filters(point)
+    assert scanned(point) and scanned(point) <= files_where(
+        "block_headers", lambda m: m.lo <= 25 <= m.hi
+    )
     assert point.collect()[0]["number"] == 25
 
     latest = sq.latest_header()
-    assert "block_bucket" in partition_filters(latest)
+    assert scanned(latest) and scanned(latest) <= files_where(
+        "block_headers", lambda m: m.hi >= 39
+    )
     assert latest.collect()[0]["number"] == 39
 
     asof = sq.find_total_balance(17, "0xeth", 1)
-    assert "block_bucket" in partition_filters(asof)
+    assert scanned(asof) and scanned(asof) <= files_where(
+        "total_balances", lambda m: m.lo <= 17
+    )
     assert asof.collect()[0]["block_number"] == 17
+    # the later batches' files are never opened
+    assert not scanned(asof) & files_where("total_balances", lambda m: m.lo >= 20)
 
 
 def test_store_queries_snapshot_pins_batch_boundary(spark, tmp_path):
-    """StoreQueries.snapshot() must pin the committed VERSION pointer:
-    reads through the pinned wrapper keep answering from one batch
-    boundary — including latest_header's O(top-bucket) path and the as-of
-    lookup — even after the live store advances, while partition pruning
-    (the EP3 economics) is preserved."""
-    from eth_indexer_spark.sinks.store import ParquetStore
+    """StoreQueries.snapshot() must pin one log version: reads through the
+    pinned wrapper keep answering from one batch boundary — including
+    latest_header's stats-only head lookup and the as-of lookup — even
+    after the live store advances."""
+    from eth_indexer_spark.sinks.logstore import LogStore
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-
-    def batch(numbers):
-        return {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in numbers],
-                "hash string, parent_hash string, number long, difficulty long",
-            ),
-            "total_balances": spark.createDataFrame(
-                [("0xeth", n, 1, str(n * 10)) for n in numbers],
-                "token string, block_number long, `group` long, balance string",
-            ),
-        }
-
-    store.write_blocks(batch(range(0, 20)), block_range=(0, 19))
+    store = LogStore(spark, str(tmp_path / "store"))
+    store.write_blocks(_batch(spark, range(0, 20)), block_range=(0, 19))
     pinned = q.StoreQueries(store).snapshot()
-    store.write_blocks(batch(range(20, 40)), block_range=(20, 39))
+    store.write_blocks(_batch(spark, range(20, 40)), block_range=(20, 39))
 
     # pinned wrapper still answers from the first batch...
     assert pinned.latest_header().collect()[0]["number"] == 19
@@ -214,34 +231,18 @@ def test_store_queries_snapshot_pins_batch_boundary(spark, tmp_path):
     assert live.header_by_number(25).count() == 1
 
 
-def test_store_queries_naive_read_detects_reorg_rewind(spark, tmp_path):
-    """Default-on race detection for the EP3 surface (r7 verdict #2): a
-    NAIVE consumer — takes StoreQueries.snapshot(), runs a plain
-    ``.collect()``/``.count()``/``.toPandas()`` on the returned frame, never
-    heard of guard() — must get SnapshotRetractedError when a reorg rewound
-    the boundary below the pin, not silently-retracted rows. Forward
-    progress without a rewind must NOT trip it."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+def test_store_queries_naive_read_detects_expired_pin(spark, tmp_path):
+    """Default-on guard for the EP3 surface: a NAIVE consumer — takes
+    StoreQueries.snapshot(), runs a plain ``.collect()``/``.count()``/
+    ``.toPandas()`` on the returned frame, never heard of guard() — must
+    get the named SnapshotExpiredError once a vacuum deleted the files its
+    pin reads, not a raw Spark error or a partial answer. Forward progress
+    and a vacuum that deletes nothing the pin reads must NOT trip it."""
+    from eth_indexer_spark.sinks.logstore import LogStore, SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-
-    def batch(numbers):
-        return {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in numbers],
-                "hash string, parent_hash string, number long, difficulty long",
-            ),
-            "total_balances": spark.createDataFrame(
-                [("0xeth", n, 1, str(n * 10)) for n in numbers],
-                "token string, block_number long, `group` long, balance string",
-            ),
-        }
-
-    store.write_blocks(batch(range(0, 20)), block_range=(0, 19))
+    store = LogStore(spark, str(tmp_path / "store"))
+    store.write_blocks(_batch(spark, range(0, 20)), block_range=(0, 19))
     pinned = q.StoreQueries(store).snapshot()
 
     latest = pinned.latest_header()
@@ -254,25 +255,27 @@ def test_store_queries_naive_read_detects_reorg_rewind(spark, tmp_path):
     assert latest.collect()[0]["number"] == 19  # healthy pin: reads pass
     assert point.count() == 1
 
-    # pure forward progress (no rewind) never trips the naive reader
-    store.write_blocks(batch(range(20, 30)), block_range=(20, 29))
+    # forward progress plus a vacuum that leaves the pin's files alone
+    # never trips the naive reader
+    store.write_blocks(_batch(spark, range(20, 30)), block_range=(20, 29))
+    store.vacuum(retain_versions=0)
     assert latest.collect()[0]["number"] == 19
     assert asof.toPandas()["block_number"].iloc[0] == 15
 
-    # reorg: retraction rewinds the published boundary below the pin —
-    # every naive terminal action on the already-returned frames raises
-    store.retract_blocks(10, 29, tables=("block_headers", "total_balances"))
-    with pytest.raises(SnapshotRetractedError):
+    # reorg + zero-retention vacuum deletes the pinned files — every naive
+    # terminal action on the already-returned frames raises
+    _expire_pins(store, 10, 29, tables=("block_headers", "total_balances"))
+    with pytest.raises(SnapshotExpiredError):
         latest.collect()
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         asof.toPandas()
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         point.count()
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         list(point.toLocalIterator())
-    # the detection also covers frames REQUESTED after the rewind from the
-    # same stale pin (the pin itself is invalid, not just its old frames)
-    with pytest.raises(SnapshotRetractedError):
+    # frames REQUESTED after the expiry from the same pin raise too (the
+    # pin itself is invalid, not just its old frames)
+    with pytest.raises(SnapshotExpiredError):
         pinned.latest_header().collect()
 
     # recovery path: a fresh snapshot reads cleanly
@@ -280,34 +283,22 @@ def test_store_queries_naive_read_detects_reorg_rewind(spark, tmp_path):
     assert fresh.latest_header().collect()[0]["number"] == 9
 
     # live (unpinned) StoreQueries stays unguarded — there is no pin to
-    # invalidate, and its reads track the moving store by design
+    # expire, and its reads track the moving store by design
     live_frame = q.StoreQueries(store).latest_header()
     assert not isinstance(live_frame, GuardedDataFrame)
     assert live_frame.collect()[0]["number"] == 9
 
 
 def test_guarded_frame_transformations_propagate_guard(spark, tmp_path):
-    """Guard propagation through composition (r8 verdict #3/#4): a caller
-    that takes a snapshot frame, composes further (`filter`/`select`/
-    `withColumn`/`join`/`limit`/`orderBy`/...), and THEN acts must still get
-    SnapshotRetractedError after a rewind — transformations re-wrap instead
-    of silently downgrading to plain DataFrames."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+    """Guard propagation through composition: a caller that takes a
+    snapshot frame, composes further (`filter`/`select`/`withColumn`/
+    `join`/`limit`/`orderBy`/...), and THEN acts must still get
+    SnapshotExpiredError once the pin expired — transformations re-wrap
+    instead of silently downgrading to plain DataFrames."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 20)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 19),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"))
     pinned = q.StoreQueries(store).snapshot()
     base = pinned.headers_in_range(0, 19)
 
@@ -330,41 +321,25 @@ def test_guarded_frame_transformations_propagate_guard(spark, tmp_path):
     top = composed.collect()[0]
     assert top["number"] == 19 and top["gas"] == 2 * 119
 
-    # reorg rewind below the pin: every DERIVED frame's action raises
-    store.retract_blocks(10, 19, tables=("block_headers",))
+    # expired pin: every DERIVED frame's action raises
+    _expire_pins(store, 10, 19)
     for frame in (composed, joined, dedup):
-        with pytest.raises(SnapshotRetractedError):
+        with pytest.raises(SnapshotExpiredError):
             frame.collect()
-    with pytest.raises(SnapshotRetractedError):
-        composed.where(F.col("gas") > 0).count()  # compose-after-rewind too
+    with pytest.raises(SnapshotExpiredError):
+        composed.where(F.col("gas") > 0).count()  # compose-after-expiry too
 
 
 def test_store_queries_over_logstore_prevents_reorg_rewind_race(spark, tmp_path):
-    """The EP3 query surface is backend-agnostic through the StoreBackend
-    seam (sinks/backend.py): the SAME StoreQueries code over the MVCC
-    LogStore gets PREVENTION instead of detection — a snapshot pins an
-    immutable file set, so a reorg retraction landing mid-read changes
-    nothing the pinned reader can observe, and naive terminal actions keep
-    returning the pinned state with no error. This is the reference's MySQL
-    read-transaction guarantee (store/store.go:115-173) supplied by the
-    backend rather than by guard brackets."""
+    """A snapshot pins an immutable file set, so a reorg retraction landing
+    mid-read changes nothing the pinned reader can observe, and naive
+    terminal actions keep returning the pinned state with no error. This
+    is the reference's MySQL read-transaction guarantee
+    (store/store.go:115-173)."""
     from eth_indexer_spark.sinks.logstore import LogStore
 
     store = LogStore(spark, str(tmp_path / "logstore"))
-
-    def batch(numbers):
-        return {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in numbers],
-                "hash string, parent_hash string, number long, difficulty long",
-            ),
-            "total_balances": spark.createDataFrame(
-                [("0xeth", n, 1, str(n * 10)) for n in numbers],
-                "token string, block_number long, `group` long, balance string",
-            ),
-        }
-
-    store.write_blocks(batch(range(0, 20)), block_range=(0, 19))
+    store.write_blocks(_batch(spark, range(0, 20)), block_range=(0, 19))
     pinned = q.StoreQueries(store).snapshot()
 
     latest = pinned.latest_header()
@@ -375,7 +350,7 @@ def test_store_queries_over_logstore_prevents_reorg_rewind_race(spark, tmp_path)
 
     # reorg rewind lands while the pin is open: retraction + replacement
     store.retract_blocks(10, 19, tables=("block_headers", "total_balances"))
-    store.write_blocks(batch(range(10, 16)), block_range=(10, 15))
+    store.write_blocks(_batch(spark, range(10, 16)), block_range=(10, 15))
 
     # the pinned reader never observes it — same answers, no error, both on
     # already-returned frames and on frames requested after the rewind
@@ -390,29 +365,15 @@ def test_store_queries_over_logstore_prevents_reorg_rewind_race(spark, tmp_path)
     assert fresh.header_by_number(18).count() == 0
 
 
-def test_guarded_groupby_agg_raises_on_rewind(spark, tmp_path):
-    """r9 verdict #3: `groupBy(...).agg(...)` was the last COMMON
-    composition that silently dropped the guard (GroupedData leaves the
-    DataFrame type). GuardedGroupedData closes it: aggregates, counts and
-    pivots derived from a pinned frame raise SnapshotRetractedError when a
-    reorg rewind lands under the pin."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        GuardedGroupedData,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+def test_guarded_groupby_agg_raises_on_expired_pin(spark, tmp_path):
+    """`groupBy(...).agg(...)` leaves the DataFrame type (GroupedData);
+    GuardedGroupedData keeps the guard: aggregates, counts, rollups and
+    pivots derived from a pinned frame raise SnapshotExpiredError once the
+    pin expired."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame, GuardedGroupedData
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 20)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 19),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"))
     pinned = q.StoreQueries(store).snapshot()
     base = pinned.headers_in_range(0, 19)
 
@@ -437,41 +398,25 @@ def test_guarded_groupby_agg_raises_on_rewind(spark, tmp_path):
     assert counted.count() == 3
     assert rolled.count() == 21  # 20 groups + grand total
 
-    # reorg rewind below the pin: every grouped derivation raises
-    store.retract_blocks(10, 19, tables=("block_headers",))
+    # expired pin: every grouped derivation raises
+    _expire_pins(store, 10, 19)
     for frame in (agged, counted, rolled, pivoted):
-        with pytest.raises(SnapshotRetractedError):
+        with pytest.raises(SnapshotExpiredError):
             frame.collect()
-    # compose-after-rewind through the grouped seam raises too
-    with pytest.raises(SnapshotRetractedError):
+    # compose-after-expiry through the grouped seam raises too
+    with pytest.raises(SnapshotExpiredError):
         base.groupBy("number").agg(F.count("*").alias("c")).count()
 
 
 def test_cross_snapshot_join_guards_both_pins(spark, tmp_path):
-    """r9 ADVICE (low): a join/union of frames pinned to DIFFERENT
-    snapshots used to keep only the LEFT guard — a rewind invalidating the
-    right pin passed silently. The composite guard brackets actions with
-    BOTH pins, so a rewind on EITHER store raises."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+    """A join/union of frames pinned to DIFFERENT snapshots must be
+    bracketed by BOTH pins (the composite guard) — keeping only the left
+    guard would let an expired right pin pass silently."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    def mkstore(name, n):
-        st = ParquetStore(spark, str(tmp_path / name), bucket_size=10)
-        st.write_blocks(
-            {
-                "block_headers": spark.createDataFrame(
-                    [(f"{name}{i}", f"{name}{i-1}", i, 100 + i) for i in range(n)],
-                    "hash string, parent_hash string, number long, difficulty long",
-                )
-            },
-            block_range=(0, n - 1),
-        )
-        return st
-
-    left_store, right_store = mkstore("l", 20), mkstore("r", 20)
+    left_store = _headers_store(spark, str(tmp_path / "l"))
+    right_store = _headers_store(spark, str(tmp_path / "r"))
     left = q.StoreQueries(left_store).snapshot().headers_in_range(0, 19)
     right = q.StoreQueries(right_store).snapshot().headers_in_range(0, 19)
 
@@ -482,40 +427,27 @@ def test_cross_snapshot_join_guards_both_pins(spark, tmp_path):
     assert isinstance(joined, GuardedDataFrame)
     assert joined.count() == 20 and unioned.count() == 40  # both pins healthy
 
-    # rewind the RIGHT store only: the left pin is untouched, so the old
-    # left-guard-only behavior would return silently — both must raise
-    right_store.retract_blocks(10, 19, tables=("block_headers",))
+    # expire the RIGHT pin only: the left pin is untouched, so a
+    # left-guard-only composition would return silently — both must raise
+    _expire_pins(right_store, 10, 19)
     left.collect()  # left pin alone is still healthy
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         joined.collect()
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         unioned.count()
     # further composition off the cross-pinned frame keeps BOTH pins
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         joined.filter(F.col("number") > 0).count()
 
 
 def test_guarded_na_and_stat_namespaces_propagate_guard(spark, tmp_path):
-    """The df.na / df.stat namespaces were the last intermediates that left
-    the DataFrame type unguarded: fill/drop/replace/crosstab now re-enter
-    guarded frames, so the only remaining escape hatch is SQL over a temp
-    view (documented)."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+    """The df.na / df.stat namespaces leave the DataFrame type: fill/drop/
+    replace/crosstab re-enter guarded frames, so the only remaining escape
+    hatch is SQL over a temp view (sql_over_snapshots)."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 20)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 19),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"))
     base = q.StoreQueries(store).snapshot().headers_in_range(0, 19)
 
     filled = base.na.fill({"difficulty": 0})
@@ -530,10 +462,11 @@ def test_guarded_na_and_stat_namespaces_propagate_guard(spark, tmp_path):
     # scalar stat results pass through (no frame to guard)
     assert isinstance(base.stat.corr("number", "difficulty"), float)
 
-    store.retract_blocks(10, 19, tables=("block_headers",))
+    _expire_pins(store, 10, 19)
     for frame in (filled, dropped, crossed):
-        with pytest.raises(SnapshotRetractedError):
+        with pytest.raises(SnapshotExpiredError):
             frame.collect()
+
 
 def test_guard_surface_is_complete_over_dataframe_api():
     """The GuardedDataFrame docstring claims EVERY public DataFrame-
@@ -574,25 +507,13 @@ def test_guard_surface_is_complete_over_dataframe_api():
 
 
 def test_extended_transforms_and_random_split_rewrap(spark, tmp_path):
-    """The long tail of DataFrame-returning methods added to the guard
-    surface (replace/describe/toDF/transform/randomSplit/...) re-wraps and
-    raises after a rewind — not just the common composition set."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+    """The long tail of DataFrame-returning methods on the guard surface
+    (replace/describe/toDF/transform/randomSplit/...) re-wraps and raises
+    once the pin expired — not just the common composition set."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 20)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 19),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"))
     pinned = q.StoreQueries(store).snapshot()
     base = pinned.headers_in_range(0, 19)
 
@@ -614,12 +535,12 @@ def test_extended_transforms_and_random_split_rewrap(spark, tmp_path):
         assert isinstance(frame, GuardedDataFrame), type(frame)
     assert derived[4].count() == 17  # healthy pin: transforms still work
 
-    store.retract_blocks(10, 19, tables=("block_headers",))
+    _expire_pins(store, 10, 19)
     for frame in derived:
-        with pytest.raises(SnapshotRetractedError):
+        with pytest.raises(SnapshotExpiredError):
             frame.collect()
     # eager action-transforms bracket the job they run
-    with pytest.raises(SnapshotRetractedError):
+    with pytest.raises(SnapshotExpiredError):
         base.localCheckpoint()
 
 
@@ -659,27 +580,15 @@ def test_composite_guard_nests_member_guards(spark, tmp_path):
             raise RuntimeError("FAILED_READ_FILE.FILE_NOT_EXIST: gone.parquet")
 
 
-def test_local_iterator_mid_iteration_rewind_raises(spark, tmp_path):
-    """toLocalIterator checks the pin every _ITER_CHECK_EVERY rows: a
-    rewind landing mid-iteration raises within one check window instead of
-    only at exhaustion (r9 verdict 'What's wrong #3' — rows already
-    yielded were produced under the race with no later signal)."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-    )
+def test_local_iterator_mid_iteration_expiry_raises(spark, tmp_path):
+    """toLocalIterator checks the pin every _ITER_CHECK_EVERY rows: an
+    expiry landing mid-iteration raises within one check window instead of
+    only at exhaustion (rows already yielded were produced under the race
+    with no later signal)."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 30)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 29),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"), n=30)
     pinned = q.StoreQueries(store).snapshot()
     frame = pinned.headers_in_range(0, 29).orderBy("number")
     old = GuardedDataFrame._ITER_CHECK_EVERY
@@ -688,36 +597,24 @@ def test_local_iterator_mid_iteration_rewind_raises(spark, tmp_path):
         it = frame.toLocalIterator()
         seen = [next(it)["number"] for _ in range(3)]
         assert seen == [0, 1, 2]
-        store.retract_blocks(20, 29, tables=("block_headers",))
-        with pytest.raises(SnapshotRetractedError):
+        _expire_pins(store, 20, 29)
+        with pytest.raises(SnapshotExpiredError):
             for _ in range(10):
                 next(it)
     finally:
         GuardedDataFrame._ITER_CHECK_EVERY = old
 
-def test_sql_over_snapshots_keeps_rewind_detection(spark, tmp_path):
+
+def test_sql_over_snapshots_keeps_the_guard(spark, tmp_path):
     """The guarded form of the SQL-over-temp-view escape hatch:
     sql_over_snapshots registers the pinned frames as views, runs the
     query, and re-wraps under the composite pin of every guarded input —
     plain SQL over the same views would return an unguarded frame that
-    silently serves retracted rows."""
-    from eth_indexer_spark.sinks.store import (
-        GuardedDataFrame,
-        ParquetStore,
-        SnapshotRetractedError,
-        sql_over_snapshots,
-    )
+    surfaces an expired pin as a raw Spark error or a partial answer."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+    from eth_indexer_spark.sinks.store import GuardedDataFrame, sql_over_snapshots
 
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 20)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 19),
-    )
+    store = _headers_store(spark, str(tmp_path / "store"))
     pinned = q.StoreQueries(store).snapshot()
     frame = pinned.headers_in_range(0, 19)
 
@@ -748,8 +645,8 @@ def test_sql_over_snapshots_keeps_rewind_detection(spark, tmp_path):
     )
     assert not isinstance(plain, GuardedDataFrame)
 
-    # rewind below the pins: both SQL-derived frames raise on action
-    store.retract_blocks(10, 19, tables=("block_headers",))
+    # expired pins: both SQL-derived frames raise on action
+    _expire_pins(store, 10, 19)
     for f in (top, joined):
-        with pytest.raises(SnapshotRetractedError):
+        with pytest.raises(SnapshotExpiredError):
             f.collect()

@@ -1,17 +1,21 @@
-"""Sink-layer tests (SURVEY §2.7): idempotent batch insert (S6/M5), range
-delete (M1/M2), dimension update (M3/M4), pruned range reads."""
+"""Sink-layer contract tests (SURVEY §2.7): unique-key dedup and the
+non-unique tables (S6/M5), NULL-key rejection, overwrite-by-block-range
+(stale in-range rows dropped), multi-table retraction (M1/M2), dimension
+replace and append (M3/M4), the commit-marker rule for the published
+boundary, cross-table snapshot consistency, and the engine's call surface.
+The commit-log mechanics (OCC, holds, optimize/vacuum, retention) live in
+tests/test_logstore.py."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from eth_indexer_spark.sinks.store import ParquetStore
+from eth_indexer_spark.sinks.logstore import LogStore
 
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
+    return LogStore(spark, str(tmp_path / "store"))
 
 
 def headers_df(spark, numbers):
@@ -30,15 +34,11 @@ def transfers_df(spark, rows):
     )
 
 
-def test_write_blocks_idempotent(spark, store):
-    """Re-running the same batch (crash-before-commit replay) converges:
-    no duplicate rows — the M5 unique-key semantic."""
-    batch = {"block_headers": headers_df(spark, range(100, 106))}
-    store.write_blocks(batch)
-    store.write_blocks(batch)
-    got = store.read("block_headers")
-    assert got.count() == 6
-    assert got.select("number").distinct().count() == 6
+def balances_df(spark, numbers, token="AAAA"):
+    return spark.createDataFrame(
+        [(token, n, "addr", str(n)) for n in numbers],
+        "token string, block_number long, address string, balance string",
+    )
 
 
 def test_write_blocks_dedups_within_batch(spark, store):
@@ -48,11 +48,10 @@ def test_write_blocks_dedups_within_batch(spark, store):
 
 
 def test_overwrite_by_block_range(spark, store):
-    """Overwrite granularity is the BLOCK RANGE, not the partition: a later
-    batch sharing a bucket with an earlier one must not clobber it, and
-    re-writing a sub-range replaces only that sub-range."""
+    """Overwrite granularity is the BLOCK RANGE: a later batch adjacent to
+    an earlier one must not clobber it, and re-writing a sub-range
+    replaces only that sub-range."""
     store.write_blocks({"block_headers": headers_df(spark, range(100, 105))})
-    # second batch lands in the same bucket (bucket_size=10)
     store.write_blocks({"block_headers": headers_df(spark, range(105, 120))})
     assert store.read("block_headers").count() == 20
     # replaying an interior range replaces exactly that range
@@ -63,28 +62,6 @@ def test_overwrite_by_block_range(spark, store):
     store.write_blocks({"block_headers": headers_df(spark, [115])}, block_range=(115, 119))
     nums = {r["number"] for r in store.read("block_headers").select("number").collect()}
     assert nums == set(range(100, 116))
-
-
-def test_delete_block_range_boundary_and_interior(spark, store):
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 140))})
-    # [105, 131]: buckets 10 and 13 are boundary (partial), 11-12 interior
-    store.delete_block_range("block_headers", 105, 131)
-    nums = sorted(r["number"] for r in store.read("block_headers").collect())
-    assert nums == list(range(100, 105)) + list(range(132, 140))
-
-
-def test_delete_range_in_token_partitioned_table(spark, store):
-    rows = [
-        (tok, n, f"t{tok}{n}", "a", "b", "1")
-        for tok in ("AAAA", "BBBB")
-        for n in range(100, 120)
-    ]
-    store.write_blocks({"transfers": transfers_df(spark, rows)})
-    store.delete_block_range("transfers", 103, 111)
-    got = store.read("transfers")
-    assert got.count() == 2 * (20 - 9)
-    per_tok = {r["token"]: r["n"] for r in got.groupBy("token").agg(F.count("*").alias("n")).collect()}
-    assert per_tok == {"AAAA": 11, "BBBB": 11}
 
 
 def test_retract_blocks_spans_all_tables(spark, store):
@@ -99,56 +76,6 @@ def test_retract_blocks_spans_all_tables(spark, store):
     store.retract_blocks(104, 109)
     assert store.read("block_headers").count() == 4
     assert store.read("transfers").count() == 4
-
-
-def test_read_range_prunes_and_filters(spark, store):
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 140))})
-    got = store.read_range("block_headers", 117, 123)
-    nums = sorted(r["number"] for r in got.collect())
-    assert nums == list(range(117, 124))
-    # the bucket predicate must appear in the plan (partition pruning)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "block_bucket" in plan
-
-
-def test_compact_merges_small_files(spark, store):
-    import glob
-
-    for lo in (100, 103, 106):  # three batches into the same bucket
-        store.write_blocks(
-            {"block_headers": headers_df(spark, range(lo, lo + 3))},
-            block_range=(lo, lo + 2),
-        )
-    before = sorted(r["number"] for r in store.read("block_headers").collect())
-    bucket_dir = store.path("block_headers") + "/block_bucket=10"
-    assert len(glob.glob(bucket_dir + "/*.parquet")) >= 2
-
-    store.compact("block_headers")
-
-    assert len(glob.glob(bucket_dir + "/*.parquet")) == 1
-    after = sorted(r["number"] for r in store.read("block_headers").collect())
-    assert after == before
-
-
-def test_buckets_needing_compaction_schedule(spark, store):
-    """The scheduling helper: reports exactly the buckets whose file count
-    exceeds the threshold, and reports nothing after compact() — the
-    run-compaction-when-non-empty maintenance loop."""
-    for lo in (100, 103, 106):  # three files into bucket 10
-        store.write_blocks(
-            {"block_headers": headers_df(spark, range(lo, lo + 3))},
-            block_range=(lo, lo + 2),
-        )
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(200, 203))},
-        block_range=(200, 202),
-    )  # bucket 20: one file
-    assert store.buckets_needing_compaction("block_headers", max_files=2) == [
-        "block_bucket=10"
-    ]
-    assert store.buckets_needing_compaction("block_headers", max_files=8) == []
-    store.compact("block_headers")
-    assert store.buckets_needing_compaction("block_headers", max_files=2) == []
 
 
 def test_dimension_update_and_append(spark, store):
@@ -210,128 +137,13 @@ def test_null_log_index_rejected(spark, store):
         store.write_blocks({"receipt_logs": logs}, block_range=(100, 100))
 
 
-# ---------------------------------------------------------------------------
-# Crash-safety: the manifest protocol (write tmp → commit manifest → apply)
-# must make every destructive op either never-happened or completed.
-# ---------------------------------------------------------------------------
-
-import json
-import os
-import shutil
-
-
-def _crash_before_apply(monkeypatch):
-    """Simulate dying between the manifest commit point and the apply."""
-    monkeypatch.setattr(ParquetStore, "_apply_manifest", lambda self, m: None)
-
-
-def test_retraction_recovers_after_crash(spark, tmp_path, monkeypatch):
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
+def test_write_blocks_drops_stale_in_range_rows(spark, store):
+    """Overwrite-by-range contract: stored rows inside the batch's range
+    that the batch no longer produces must be dropped, not silently kept —
+    even where the batch has zero rows and nothing survives."""
     store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-
-    _crash_before_apply(monkeypatch)
-    store.delete_block_range("block_headers", 105, 114)
-    monkeypatch.undo()
-
-    # pre-fork rows must NOT be lost: reopening completes the retraction
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    nums = sorted(r["number"] for r in store2.read("block_headers").collect())
-    assert nums == list(range(100, 105)) + list(range(115, 120))
-    assert not os.path.isdir(os.path.join(root, "__tmp_block_headers_retract"))
-
-
-def test_retraction_recovery_idempotent_after_partial_apply(spark, tmp_path, monkeypatch):
-    """Crash mid-apply: one survivor dir already moved, the rest pending.
-    Recovery must finish without destroying the already-moved survivors."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-
-    _crash_before_apply(monkeypatch)
-    store.delete_block_range("block_headers", 105, 114)
-    monkeypatch.undo()
-
-    mpath = os.path.join(root, "__tmp_block_headers_retract.manifest.json")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    rel = sorted(manifest["survivor_dirs"])[0]
-    src = os.path.join(root, "__tmp_block_headers_retract", rel)
-    dst = os.path.join(root, "block_headers", rel)
-    shutil.rmtree(dst, ignore_errors=True)
-    os.rename(src, dst)  # the partial apply that "crashed"
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    nums = sorted(r["number"] for r in store2.read("block_headers").collect())
-    assert nums == list(range(100, 105)) + list(range(115, 120))
-
-
-def test_uncommitted_tmp_aborted_on_recovery(spark, tmp_path):
-    """A tmp dir without a manifest is a pre-commit crash: recovery removes
-    it and the live table is untouched."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
-    junk = os.path.join(root, "__tmp_block_headers_retract")
-    os.makedirs(junk)
-    with open(os.path.join(junk, "part-junk"), "w") as f:
-        f.write("x")
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    assert not os.path.isdir(junk)
-    assert store2.read("block_headers").count() == 10
-
-
-def test_compact_recovers_after_crash(spark, tmp_path, monkeypatch):
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    for lo in (100, 103, 106):
-        store.write_blocks(
-            {"block_headers": headers_df(spark, range(lo, lo + 3))},
-            block_range=(lo, lo + 2),
-        )
-    before = sorted(r["number"] for r in store.read("block_headers").collect())
-
-    _crash_before_apply(monkeypatch)
-    store.compact("block_headers")
-    monkeypatch.undo()
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    after = sorted(r["number"] for r in store2.read("block_headers").collect())
-    assert after == before
-    import glob
-    assert len(glob.glob(os.path.join(root, "block_headers", "block_bucket=10", "*.parquet"))) == 1
-
-
-def test_dimension_swap_recovers_after_crash(spark, tmp_path, monkeypatch):
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    subs = spark.createDataFrame(
-        [(1, 0, 1, "aa")], "id long, block_number long, group long, address string"
-    )
-    store.update_dimension("subscriptions", subs)
-
-    _crash_before_apply(monkeypatch)
-    store.update_dimension(
-        "subscriptions",
-        spark.createDataFrame(
-            [(1, 7, 1, "aa"), (2, 0, 2, "bb")],
-            "id long, block_number long, group long, address string",
-        ),
-    )
-    monkeypatch.undo()
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    got = {r["address"]: r["block_number"] for r in store2.read("subscriptions").collect()}
-    assert got == {"aa": 7, "bb": 0}
-
-
-def test_write_blocks_drops_stale_uncovered_buckets(spark, store):
-    """Overwrite-by-range contract: an in-range bucket with stale rows but
-    zero batch rows and zero survivors must be dropped, not silently kept."""
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-    # replace the whole range with a batch that only covers 100-105: bucket 11
-    # (110-119) ends up with no rows at all and must disappear
+    # replace the whole range with a batch that only covers 100-105: the
+    # stored 106-119 rows have no replacement and must disappear
     store.write_blocks(
         {"block_headers": headers_df(spark, range(100, 106))}, block_range=(100, 119)
     )
@@ -339,9 +151,9 @@ def test_write_blocks_drops_stale_uncovered_buckets(spark, store):
     assert nums == list(range(100, 106))
 
 
-def test_write_blocks_drops_stale_uncovered_token_buckets(spark, store):
-    """Token-partitioned variant: only the token with no replacement rows
-    loses its in-range bucket dir; the other token's new rows land."""
+def test_write_blocks_drops_stale_in_range_token_rows(spark, store):
+    """Token-keyed variant: the token with no replacement rows loses its
+    in-range rows; the other token's new rows land."""
     store.write_blocks(
         {
             "transfers": transfers_df(
@@ -357,338 +169,6 @@ def test_write_blocks_drops_stale_uncovered_token_buckets(spark, store):
     )
     rows = {(r["token"], r["tx_hash"]) for r in store.read("transfers").collect()}
     assert rows == {("ta", "t3")}
-
-
-def test_single_writer_lock(spark, tmp_path):
-    """Mutations hold an exclusive flock: a concurrent mutation on the same
-    root fails loudly; a sequential second store (restart takeover) works."""
-    import fcntl
-    import os
-
-    root = str(tmp_path / "locked")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, [1])})
-
-    # simulate a concurrent writer holding the lock
-    fd = os.open(os.path.join(root, ".writer.lock"), os.O_CREAT | os.O_RDWR)
-    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    try:
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            store.write_blocks({"block_headers": headers_df(spark, [2])})
-    finally:
-        os.close(fd)
-
-    # released → mutations proceed; a second store instance (restart) too
-    store.write_blocks({"block_headers": headers_df(spark, [2])})
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    store2.write_blocks({"block_headers": headers_df(spark, [3])})
-    assert store2.max_block("block_headers") == 3
-
-
-def test_compact_requires_writer_lock(spark, tmp_path):
-    """compact() is a destructive mutation (tmp rewrite + directory swap):
-    with a concurrent writer holding the flock it must fail loudly, while
-    buckets_needing_compaction — a pure listing — must keep working (the
-    maintenance loop polls it every batch, concurrently with ingest)."""
-    import fcntl
-    import os
-
-    root = str(tmp_path / "locked_compact")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 103))})
-
-    fd = os.open(os.path.join(root, ".writer.lock"), os.O_CREAT | os.O_RDWR)
-    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    try:
-        with pytest.raises(RuntimeError, match="concurrent writer"):
-            store.compact("block_headers")
-        # the read-only scheduler probe is NOT serialized behind the lock
-        assert store.buckets_needing_compaction("block_headers", max_files=0) == [
-            "block_bucket=10"
-        ]
-    finally:
-        os.close(fd)
-
-    store.compact("block_headers")  # released → proceeds
-    assert store.read("block_headers").count() == 3
-
-
-def test_update_dimensions_crash_between_commits(spark, tmp_path, monkeypatch):
-    """Multi-dim update: a crash after the first dim's commit but before the
-    second's must leave each dim individually consistent — the first on its
-    new version, the second on its old one (staged tmp aborted on recovery)
-    — and a replay converges both."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    subs_v1 = spark.createDataFrame([("a1", 1)], "address string, `group` long")
-    erc_v1 = spark.createDataFrame([("t1", "TOK")], "address string, name string")
-    store.update_dimension("subscriptions", subs_v1)
-    store.update_dimension("erc20", erc_v1)
-
-    subs_v2 = spark.createDataFrame([("a2", 2)], "address string, `group` long")
-    erc_v2 = spark.createDataFrame([("t2", "TOK2")], "address string, name string")
-
-    calls = []
-    orig = ParquetStore._commit_dimension
-
-    def failing(self, table):
-        calls.append(table)
-        if len(calls) == 2:
-            raise RuntimeError("injected crash before second commit")
-        return orig(self, table)
-
-    monkeypatch.setattr(ParquetStore, "_commit_dimension", failing)
-    with pytest.raises(RuntimeError, match="injected"):
-        store.update_dimensions({"subscriptions": subs_v2, "erc20": erc_v2})
-    monkeypatch.undo()
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    assert [r["address"] for r in store2.read("subscriptions").collect()] == ["a2"]
-    assert [r["address"] for r in store2.read("erc20").collect()] == ["t1"]
-    import os as _os
-
-    assert not _os.path.isdir(_os.path.join(root, "__tmp_erc20"))  # aborted
-
-    store2.update_dimensions({"subscriptions": subs_v2, "erc20": erc_v2})
-    assert [r["address"] for r in store2.read("erc20").collect()] == ["t2"]
-
-
-def test_concurrent_reader_never_sees_partial_bucket(spark, tmp_path):
-    """Reader snapshot-at-directory-level: while a write_blocks loop
-    repeatedly overwrites the same block range, a concurrent non-Spark
-    reader polling individual bucket dirs must only ever observe a WHOLE
-    bucket — every row carrying the same batch tag and the full row count —
-    or (for the one rename-pair instant) no dir / vanished files, never a
-    mix of two batches or a partial file set. This is the guarantee the
-    staged-write + rename protocol exists to provide (the reference gets it
-    from MySQL statement isolation, store/store.go:129-139)."""
-    import threading
-
-    import pyarrow.parquet as pq
-
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-
-    def tagged_headers(tag):
-        # hash column doubles as the batch tag: h<tag> for every row
-        return spark.createDataFrame(
-            [(f"h{tag}", "p", n, 100 + n) for n in range(100, 120)],
-            "hash string, parent_hash string, number long, difficulty long",
-        )
-
-    store.write_blocks({"block_headers": tagged_headers(0)}, block_range=(100, 119))
-    stop = threading.Event()
-    errors = []
-
-    def writer():
-        try:
-            for i in range(1, 9):
-                store.write_blocks(
-                    {"block_headers": tagged_headers(i)}, block_range=(100, 119)
-                )
-        except Exception as e:  # surfaced in the main thread
-            errors.append(e)
-        finally:
-            stop.set()
-
-    t = threading.Thread(target=writer)
-    t.start()
-    table_dir = os.path.join(root, "block_headers")
-    checks = 0
-    try:
-        while not stop.is_set():
-            for name in os.listdir(table_dir):
-                if not name.startswith("block_bucket="):
-                    continue
-                try:
-                    tbl = pq.read_table(os.path.join(table_dir, name))
-                except (FileNotFoundError, OSError):
-                    continue  # dir retired mid-read: whole-dir rename, fine
-                if "hash" not in tbl.schema.names:
-                    # zero fragments: pyarrow discovery swallowed the dir
-                    # vanishing during the rename instant — same absent-dir
-                    # case as FileNotFoundError, not a partial bucket (a
-                    # torn bucket would have SOME files → a real schema)
-                    continue
-                tags = set(tbl.column("hash").to_pylist())
-                # a torn bucket shows up as mixed tags or a short row count
-                assert len(tags) == 1, f"mixed batches in one bucket: {tags}"
-                assert tbl.num_rows == 10, f"partial bucket: {tbl.num_rows} rows"
-                checks += 1
-    finally:
-        t.join()
-    assert not errors, errors
-    assert checks > 10  # the reader actually raced the writer
-
-
-def test_trash_dirs_cleaned_on_recovery(spark, tmp_path, monkeypatch):
-    """The rename-aside trash of a crashed apply is garbage, not data: a
-    crash after the commit point may leave `<tmp>.trash` dirs behind;
-    reopening must both complete the retraction and remove the trash."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-
-    _crash_before_apply(monkeypatch)
-    store.delete_block_range("block_headers", 105, 114)
-    monkeypatch.undo()
-    # a partially-applied crash can also leave moved-aside dirs in trash
-    trash = os.path.join(root, "__tmp_block_headers_retract.trash")
-    os.makedirs(os.path.join(trash, "block_bucket=99"))
-    with open(os.path.join(trash, "block_bucket=99", "junk"), "w") as f:
-        f.write("x")
-
-    store2 = ParquetStore(spark, root, bucket_size=10)
-    nums = sorted(r["number"] for r in store2.read("block_headers").collect())
-    assert nums == list(range(100, 105)) + list(range(115, 120))
-    assert not os.path.isdir(trash)
-
-
-def test_new_mutation_settles_predecessor_manifest(spark, tmp_path, monkeypatch):
-    """An apply that died mid-way (manifest committed, tmp still present)
-    is finished by the NEXT mutation in the same process — not only by a
-    store reopen — so a committed retraction's staged survivors are never
-    deleted unapplied when their tmp name is reused."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-
-    _crash_before_apply(monkeypatch)
-    store.delete_block_range("block_headers", 105, 114)
-    monkeypatch.undo()
-
-    # same process, no reopen: the next retract reuses the tmp name and
-    # must settle the committed retraction first
-    store.delete_block_range("block_headers", 118, 119)
-    nums = sorted(r["number"] for r in store.read("block_headers").collect())
-    assert nums == list(range(100, 105)) + [115, 116, 117]
-
-
-def test_new_mutation_settles_cross_op_manifest(spark, tmp_path, monkeypatch):
-    """A committed-but-unapplied manifest from a DIFFERENT op must be
-    finished before any new mutation plans against the table: a retraction
-    that died mid-apply followed by an in-process write_blocks (different
-    tmp name — _settle_tmp alone would not see it) must not leave a stale
-    manifest for recovery to replay OVER the write's output."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 120))})
-
-    _crash_before_apply(monkeypatch)
-    store.delete_block_range("block_headers", 105, 114)
-    monkeypatch.undo()
-
-    # overlaps the pending retraction's range; without cross-op settling
-    # this would plan against un-retracted rows and recovery would later
-    # replay the stale retract manifest over this write's buckets
-    store.write_blocks({"block_headers": headers_df(spark, range(105, 110))})
-    want = list(range(100, 110)) + list(range(115, 120))
-    nums = sorted(r["number"] for r in store.read("block_headers").collect())
-    assert nums == want
-
-    store2 = ParquetStore(spark, root, bucket_size=10)  # recovery replays nothing stale
-    nums2 = sorted(r["number"] for r in store2.read("block_headers").collect())
-    assert nums2 == want
-
-
-def test_whole_bucket_drop_leaves_no_debris(spark, tmp_path):
-    """The zero-survivor delete path (whole-bucket drop) must remove the
-    buckets through the rename-aside protocol and leave neither trash nor
-    tmp dirs behind."""
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    store.write_blocks({"block_headers": headers_df(spark, range(0, 30))})
-    store.delete_block_range("block_headers", 10, 19)
-    nums = sorted(r["number"] for r in store.read("block_headers").collect())
-    assert nums == list(range(0, 10)) + list(range(20, 30))
-    assert not [n for n in os.listdir(root) if n.startswith("__tmp_")]
-
-
-# -- store-level read snapshot (VERSION pointer) ------------------------------
-
-
-def balances_df(spark, numbers, token="AAAA"):
-    return spark.createDataFrame(
-        [(token, n, "addr", str(n)) for n in numbers],
-        "token string, block_number long, address string, balance string",
-    )
-
-
-def test_version_pointer_semantics(spark, store):
-    """The committed boundary advances after the marker, survives a
-    below-head overwrite (rewind + restore), shrinks on retraction, and a
-    pinned snapshot keeps its boundary as the store moves on."""
-    assert store.read_version() is None
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
-    assert store.read_version() == 109
-
-    # below-head overwrite restores max(pre, hi) once fully committed
-    store.write_blocks(
-        {"block_headers": headers_df(spark, [105])}, block_range=(105, 105)
-    )
-    assert store.read_version() == 109
-
-    # retraction genuinely shrinks the visible set
-    store.delete_block_range("block_headers", 107, 109)
-    assert store.read_version() == 106
-
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(107, 115))}, block_range=(107, 114)
-    )
-    snap = store.snapshot()
-    assert snap.version == 114
-    assert snap.max_block("block_headers") == 114
-
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(115, 125))}, block_range=(115, 124)
-    )
-    assert {r["number"] for r in snap.read("block_headers").collect()} == set(
-        range(100, 115)
-    )
-    assert snap.read_eq("block_headers", 120).count() == 0
-    assert snap.read_eq("block_headers", 112).count() == 1
-    assert store.snapshot().max_block("block_headers") == 124
-
-
-def test_version_hold_defers_advance(spark, store):
-    """version_hold groups several write_blocks into one snapshot
-    transition: rewound for the duration, restored at clean exit, and the
-    pending advance is dropped on exception (replay re-advances)."""
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
-    with store.version_hold():
-        store.write_blocks(
-            {"block_headers": headers_df(spark, [105])}, block_range=(105, 105)
-        )
-        assert store.read_version() == 104  # rewound while the group runs
-    assert store.read_version() == 109  # restored once the group committed
-
-    with pytest.raises(RuntimeError, match="boom"):
-        with store.version_hold():
-            store.write_blocks(
-                {"block_headers": headers_df(spark, [107])}, block_range=(107, 107)
-            )
-            raise RuntimeError("boom")
-    assert store.read_version() == 106  # conservative: advance dropped
-
-    # later batches COMMIT, but the published boundary stays clamped below
-    # the aborted group's half-applied block until the group replays — a
-    # snapshot must never span blocks the group left inconsistent
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(110, 112))}, block_range=(110, 111)
-    )
-    assert store.read_version() == 106
-
-    # replay the group (idempotent overwrite) through a clean hold: the
-    # persistent record clears and the boundary moves again
-    with store.version_hold():
-        store.write_blocks(
-            {"block_headers": headers_df(spark, [107])}, block_range=(107, 107)
-        )
-    assert store.read_version() == 107
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(112, 114))}, block_range=(112, 113)
-    )
-    assert store.read_version() == 113
 
 
 def test_marker_less_write_never_leads_headers(spark, store):
@@ -716,24 +196,33 @@ def test_marker_less_write_never_leads_headers(spark, store):
     assert {r["block_number"] for r in snap.read("balances").collect()} == set(
         range(100, 110)
     )
+    assert snap.read_range("balances", 105).count() == 5
+    assert snap.read_eq("balances", 115).count() == 0
+    assert snap.max_block("balances") == 109
+    # compaction merges both sides of the boundary into one file; the
+    # clamp still holds on the straddling file
+    store.optimize("balances")
+    snap = store.snapshot()
+    assert len(snap._live("balances")) == 1
+    assert snap.read("balances").count() == 10
+    assert snap.max_block("balances") == 109
     # the marker batch for those blocks publishes them
     store.write_blocks(
         {"block_headers": headers_df(spark, range(110, 120))}, block_range=(110, 119)
     )
     assert store.read_version() == 119
+    assert store.snapshot().read("balances").count() == 20
 
 
 def test_snapshot_reader_never_spans_a_batch_boundary(spark, tmp_path):
-    """The multi-table consistency gap closed this round: while write_blocks
-    lands batches of block_headers + balances (balances commits FIRST —
-    headers is the commit marker), a concurrent reader pinning
-    store.snapshot() must see exactly the same block set in BOTH tables —
-    never balances of batch N+1 beside headers of batch N. The reference
-    gets this from its single DB transaction (store/store.go:115-173)."""
+    """While write_blocks lands batches of block_headers + balances, a
+    concurrent reader pinning store.snapshot() must see exactly the same
+    block set in BOTH tables — never balances of batch N+1 beside headers
+    of batch N. The reference gets this from its single DB transaction
+    (store/store.go:115-173)."""
     import threading
 
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
+    store = LogStore(spark, str(tmp_path / "store"))
 
     def batch(lo):
         nums = range(lo, lo + 10)
@@ -774,59 +263,18 @@ def test_snapshot_reader_never_spans_a_batch_boundary(spark, tmp_path):
     assert checks >= 3  # the reader actually raced the writer
 
 
-def test_version_file_carries_epoch_and_tolerates_legacy(spark, store):
-    """(version, epoch) live in ONE file so every rewind transition is a
-    single atomic replace — and a legacy VERSION.json without the epoch
-    key (pre-upgrade store) reads as epoch 0 instead of failing."""
-    import json
-
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 105))})
-    assert store.read_rewind_epoch() == 0
-    store.delete_block_range("block_headers", 103, 104)  # genuine rewind
-    assert store.read_rewind_epoch() == 1
-    with open(os.path.join(store.root, "VERSION.json")) as f:
-        d = json.load(f)
-    assert d == {"block": 102, "epoch": 1}
-    # legacy file: no epoch key
-    with open(os.path.join(store.root, "VERSION.json"), "w") as f:
-        json.dump({"block": 102}, f)
-    assert store.read_version() == 102
-    assert store.read_rewind_epoch() == 0
-    # and the next rewind re-materializes the pair atomically
-    store.delete_block_range("block_headers", 102, 102)
-    assert (store.read_version(), store.read_rewind_epoch()) == (101, 1)
-
-
-def test_parquet_store_implements_backend_seam():
-    """ParquetStore is the StoreBackend implementation: every abstract
-    method is overridden (abc would refuse instantiation otherwise — every
-    store fixture in this suite proves it — but assert the set explicitly
-    so a renamed method fails here, not in an unrelated fixture)."""
-    from eth_indexer_spark.sinks.backend import StoreBackend
-
-    assert issubclass(ParquetStore, StoreBackend)
-    missing = {
-        m for m in StoreBackend.__abstractmethods__
-        if getattr(ParquetStore, m) is getattr(StoreBackend, m)
-    }
-    assert not missing, missing
-    assert not getattr(ParquetStore, "__abstractmethods__", None)
-
-
 def test_engine_calls_stay_inside_backend_contract():
-    """The seam is real only if the engine never reaches around it: every
-    `store.<method>(` call outside sinks/ must name a StoreBackend contract
-    method (snapshot views add check/guard/collect). Parquet-layout extras
-    (bucket_values, path, compact, delete_block_range, append_blocks) are
-    implementation-private — a Delta/Iceberg backend must be able to swap
-    in without touching operators, plans, pipeline, or streaming."""
+    """Every `store.<method>(` call outside sinks/ must name a public
+    LogStore method (snapshot views add check/guard/collect): the engine
+    never reaches into the store's private commit-log internals
+    (``_state``, ``_commit``, ``_stage_files``, ...), so those stay free to
+    change without touching operators, plans, pipeline, or streaming."""
     import pathlib
     import re
 
     import eth_indexer_spark
-    from eth_indexer_spark.sinks.backend import StoreBackend
 
-    contract = {m for m in dir(StoreBackend) if not m.startswith("_")}
+    contract = {m for m in dir(LogStore) if not m.startswith("_")}
     allowed = contract | {"check", "guard", "collect"}
     pkg = pathlib.Path(eth_indexer_spark.__file__).parent
     bad = []
@@ -837,105 +285,3 @@ def test_engine_calls_stay_inside_backend_contract():
             if m.group(1) not in allowed:
                 bad.append((p.name, m.group(1)))
     assert not bad, f"non-contract store calls in engine code: {bad}"
-
-
-def test_snapshot_guard_detects_reorg_rewind(spark, store):
-    """The one residual race the VERSION clamp alone cannot close: a reorg
-    rewinding the boundary below a pinned snapshot WHILE its read action
-    executes. The snapshot pins the store's rewind epoch; guard/collect
-    bracket the action and raise SnapshotRetractedError instead of silently
-    returning retracted rows — including the rewind-then-re-advance case
-    where the version pointer alone looks untouched."""
-    from eth_indexer_spark.sinks.store import SnapshotRetractedError
-
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
-    snap = store.snapshot()
-    assert snap.version == 109
-    df = snap.read("block_headers")
-    assert len(snap.collect(df)) == 10  # healthy pin: guarded read passes
-
-    # retraction below the pin between plan construction and the action —
-    # the deterministic simulation of "rewind lands mid-read"
-    store.delete_block_range("block_headers", 105, 109)
-    with pytest.raises(SnapshotRetractedError):
-        snap.collect(df)
-    with pytest.raises(SnapshotRetractedError):
-        snap.max_block("block_headers")
-
-    # rewind-then-re-advance: the boundary comes back PAST the pin, so the
-    # version check alone would miss it — the epoch does not
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(105, 112))}, block_range=(105, 111)
-    )
-    assert store.read_version() == 111 >= snap.version
-    with pytest.raises(SnapshotRetractedError):
-        snap.collect(snap.read("block_headers"))
-
-    # a fresh snapshot reads cleanly after the reorg settles
-    fresh = store.snapshot()
-    assert len(fresh.collect(fresh.read("block_headers"))) == 12
-
-    # pure forward progress (no rewind) never trips a pinned guard
-    snap2 = store.snapshot()
-    store.write_blocks(
-        {"block_headers": headers_df(spark, range(112, 115))}, block_range=(112, 114)
-    )
-    assert len(snap2.collect(snap2.read("block_headers"))) == 12
-
-
-def test_compact_sorts_rows_within_bucket_files(spark, tmp_path):
-    """Compaction must write each bucket file block-sorted so parquet
-    row-group min/max statistics carry tight block ranges (row-group skip
-    on point reads inside a bucket — the within-file analog of bucket
-    pruning)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    # three disjoint-range writes into one bucket, each with shuffled rows,
-    # so the pre-compaction file set carries no global order
-    for nums in ([12, 10, 11], [15, 13, 14], [19, 16, 18, 17]):
-        store.write_blocks(
-            {"block_headers": headers_df(spark, nums)},
-            block_range=(min(nums), max(nums)),
-        )
-    store.compact("block_headers")
-    files = glob.glob(os.path.join(root, "block_headers", "block_bucket=1", "*.parquet"))
-    assert len(files) == 1  # compacted to one file
-    nums = pq.read_table(files[0]).column("number").to_pylist()
-    assert nums == sorted(nums) == list(range(10, 20))
-
-
-def test_corrupt_version_pointer_fails_loudly(spark, tmp_path):
-    """A PRESENT-but-corrupt VERSION.json must raise, not silently degrade
-    to live reads (r8 ADVICE #3): the pointer is only written by atomic
-    replace, so corruption means external damage — degrading would both
-    unclamp snapshots and reset the rewind-epoch baseline guard() compares
-    against. A MISSING file stays a legitimate pre-version state."""
-    import os
-
-    root = str(tmp_path / "store")
-    store = ParquetStore(spark, root, bucket_size=10)
-    assert store.read_version() is None  # missing: fine
-    store.write_blocks({"block_headers": headers_df(spark, range(100, 105))})
-    assert store.read_version() == 104
-
-    vpath = os.path.join(root, "VERSION.json")
-    with open(vpath, "w") as f:
-        f.write("{not json")
-    with pytest.raises(RuntimeError, match="corrupt store version pointer"):
-        store.read_version()
-    with open(vpath, "w") as f:
-        f.write('{"block": "abc", "epoch": 0}')
-    with pytest.raises(RuntimeError, match="corrupt store version pointer"):
-        store.snapshot()
-    with open(vpath, "w") as f:
-        f.write('{"epoch": 3}')
-    with pytest.raises(RuntimeError, match="corrupt store version pointer"):
-        store.read_rewind_epoch()
-    # repair restores normal operation
-    with open(vpath, "w") as f:
-        f.write('{"block": 104, "epoch": 0}')
-    assert store.read_version() == 104

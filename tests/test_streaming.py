@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from eth_indexer_spark.sinks.store import ParquetStore
+from eth_indexer_spark.sinks.logstore import LogStore
 from eth_indexer_spark.sources.blocks import PandasBlockSource
 from eth_indexer_spark.streaming.ingest import BlockIngestor, start_stream
 from eth_indexer_spark.streaming.reorg import check_reorg
@@ -31,21 +31,12 @@ FORK_BLOCKS = [
 ]
 
 
-def _mk(spark, tmp_path, raw_pdfs, balancer="truth", backend="parquet"):
+def _mk(spark, tmp_path, raw_pdfs, balancer="truth"):
     """Build an ingestor over fixture raw tables. The BALANCER path is the
     default — opening balances come from the chain-truth lookup, matching
     the reference's deploy shape (client/balancer.go:43-116); pass
-    ``balancer=None`` to exercise the explicit ledger-derived fallback.
-    ``backend`` swaps the sink behind the StoreBackend seam: the lifecycle
-    scenarios parametrized over BOTH backends are the proof the seam is
-    real — the ingestor, pipeline and reorg logic run unchanged over the
-    MVCC LogStore (sinks/logstore.py)."""
-    if backend == "parquet":
-        store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
-    else:
-        from eth_indexer_spark.sinks.logstore import LogStore
-
-        store = LogStore(spark, str(tmp_path / "store"))
+    ``balancer=None`` to exercise the explicit ledger-derived fallback."""
+    store = LogStore(spark, str(tmp_path / "store"))
     source = PandasBlockSource(
         spark,
         raw_pdfs["block_headers_raw"],
@@ -93,10 +84,9 @@ def assert_state_matches(store, model, n_blocks_from=100):
     assert td == {n: v for n, _h, v in model["td"]}
 
 
-@pytest.mark.parametrize("backend", ["parquet", "log"])
-def test_sequential_batches_match_golden(spark, tmp_path, backend):
+def test_sequential_batches_match_golden(spark, tmp_path):
     raw = build_raw()
-    store, _src, ing = _mk(spark, tmp_path, raw, backend=backend)
+    store, _src, ing = _mk(spark, tmp_path, raw)
 
     assert ing.process_headers(headers_of(raw, [100, 101, 102])) == "bootstrap"
     assert ing.process_headers(headers_of(raw, [103, 104, 105])) == "append"
@@ -128,10 +118,9 @@ def test_gap_backfill(spark, tmp_path):
     assert_state_matches(store, expected_model())
 
 
-@pytest.mark.parametrize("backend", ["parquet", "log"])
-def test_reorg_winning_fork(spark, tmp_path, backend):
+def test_reorg_winning_fork(spark, tmp_path):
     raw = build_raw()
-    store, source, ing = _mk(spark, tmp_path, raw, backend=backend)
+    store, source, ing = _mk(spark, tmp_path, raw)
     ing.process_headers(headers_of(raw, [100, 101, 102, 103, 104, 105]))
 
     # heavier fork branching off block 103
@@ -264,7 +253,7 @@ def test_crash_replay_converges(spark, tmp_path):
     ing.process_headers(headers_of(raw, [103, 104, 105]))
 
     # crash just before the commit marker of batch 2
-    store.delete_block_range("block_headers", 103, 105)
+    store.retract_blocks(103, 105, tables=("block_headers",))
     assert store.max_block("block_headers") == 102
 
     # resend: must append (not ignore_duplicate) and converge to golden
@@ -279,7 +268,7 @@ def test_ingest_without_state_diff_falls_back_to_tx_value(spark, tmp_path):
     still ingests — ether events derive from tx.value, so internal transfers
     are invisible (the documented fallback semantic)."""
     raw = build_raw()
-    store = ParquetStore(spark, str(tmp_path / "store"), bucket_size=10)
+    store = LogStore(spark, str(tmp_path / "store"))
     source = PandasBlockSource(
         spark,
         raw["block_headers_raw"],
@@ -301,15 +290,14 @@ def test_ingest_without_state_diff_falls_back_to_tx_value(spark, tmp_path):
     assert_state_matches(store, expected_model(blocks=no_internals))
 
 
-@pytest.mark.parametrize("backend", ["parquet", "log"])
-def test_register_token_backfill(spark, tmp_path, backend):
+def test_register_token_backfill(spark, tmp_path):
     """EP2: registering a token upserts the registry and backfills per-group
     totals from stored balances as-of the registration block, preserving
     other tokens' totals at that block."""
     from tests.fixtures import T1, ETH
 
     raw = build_raw()
-    store, _src, ing = _mk(spark, tmp_path, raw, backend=backend)
+    store, _src, ing = _mk(spark, tmp_path, raw)
     # pre-existing ETH total at the registration block must survive
     store.write_blocks(
         {
