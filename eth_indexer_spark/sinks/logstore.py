@@ -42,7 +42,11 @@ the same public design Iceberg/Hudi share:
   indexers (common/errors.go:26-57).
 - **Multi-TABLE atomicity is exact, not staged**: one commit carries every
   table of a batch, so readers can never observe table A post-batch beside
-  table B pre-batch — the reference's one DB transaction, exactly.
+  table B pre-batch — the reference's one DB transaction, exactly. The
+  tables' files are STAGED concurrently (one thread per table, so a batch's
+  small write jobs share the cores instead of queueing) and still PUBLISH
+  once: every table finishes staging before the single commit, and a
+  failure in any table publishes nothing.
 
 100 TB shape
 ------------
@@ -73,12 +77,14 @@ import os
 import shutil
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from eth_indexer_spark.sinks.store import (
     BLOCK_COLUMN,
@@ -507,6 +513,26 @@ class LogStore:
         shutil.rmtree(os.path.join(self.root, _STAGING_DIR, txid), ignore_errors=True)
         return metas
 
+    def _stage_tables(self, frames: dict[str, DataFrame]) -> dict[str, list[_FileMeta]]:
+        """:meth:`_stage_files` for every ``{table: frame}`` at once, one
+        thread per table: a commit's small write jobs run side by side
+        instead of one after another. Each thread carries the caller's job
+        group, local properties and session tags (its own copy), so job
+        attribution and ``cancelJobGroup`` still reach the staging jobs.
+        Every thread has finished when this returns or raises; an error in
+        any table propagates, nothing is published, and whatever the other
+        tables staged is left as vacuumable orphans."""
+        if len(frames) <= 1:
+            return {t: self._stage_files(t, df) for t, df in frames.items()}
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            futures = {
+                t: pool.submit(
+                    inheritable_thread_target(self.spark)(self._stage_files), t, df
+                )
+                for t, df in frames.items()
+            }
+        return {t: f.result() for t, f in futures.items()}
+
     def _abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
 
@@ -651,7 +677,8 @@ class LogStore:
         Replaying a failed batch recomputes the same remove-set against
         whatever committed and converges (M5). O(batch + overlapped files),
         never O(table)."""
-        staged: dict[str, tuple[list[_FileMeta], int, int]] = {}
+        frames: dict[str, DataFrame] = {}
+        ranges: dict[str, tuple[int, int]] = {}
         for table, df in tables.items():
             df = self._prep(table, df)
             col = BLOCK_COLUMN[table]
@@ -662,38 +689,44 @@ class LogStore:
                 lo, hi = row["lo"], row["hi"]
             if lo is None:
                 continue
-            # batch files stage once and are reused across OCC retries —
-            # only the survivor set depends on the concurrent state
-            metas = self._stage_files(table, df)
-            staged[table] = (metas, int(lo), int(hi))
-        if not staged:
+            frames[table] = df
+            ranges[table] = (int(lo), int(hi))
+        if not frames:
             return
+        # batch files stage once and are reused across OCC retries —
+        # only the survivor set depends on the concurrent state
+        staged = {
+            t: (metas, *ranges[t]) for t, metas in self._stage_tables(frames).items()
+        }
         schemas = {t: tables[t].schema.jsonValue() for t in staged}
         has_marker = "block_headers" in staged
 
         def build(st: _State) -> dict | None:
             pre = st.boundary
-            t_ops: dict[str, dict] = {}
             expect = {
                 t: sorted(st.files.get(t, {})) for t in staged
             }  # read set: validated at hold publish (stale rm = lost rows)
-            for table, (metas, lo, hi) in staged.items():
+            removed: dict[str, list[_FileMeta]] = {}
+            survivors: dict[str, DataFrame] = {}
+            for table, (_metas, lo, hi) in staged.items():
                 col = BLOCK_COLUMN[table]
-                overlapped = [
+                removed[table] = [
                     m
                     for m in self._live(st, table)
                     if (m.hi is None or m.hi >= lo) and (m.lo is None or m.lo <= hi)
                 ]
-                adds = list(metas)
-                if overlapped:
-                    survivors = self._read_files(table, overlapped, st).filter(
-                        (F.col(col) < lo) | (F.col(col) > hi)
-                    )
-                    adds += self._stage_files(table, survivors)
-                t_ops[table] = {
-                    "add": [m.to_json() for m in adds],
-                    "rm": [m.path for m in overlapped],
+                if removed[table]:
+                    survivors[table] = self._read_files(
+                        table, removed[table], st
+                    ).filter((F.col(col) < lo) | (F.col(col) > hi))
+            rewritten = self._stage_tables(survivors)
+            t_ops = {
+                table: {
+                    "add": [m.to_json() for m in metas + rewritten.get(table, [])],
+                    "rm": [m.path for m in removed[table]],
                 }
+                for table, (metas, _lo, _hi) in staged.items()
+            }
             hi_all = max(hi for _, _, hi in staged.values())
             lo_all = min(lo for _, lo, _ in staged.values())
             if has_marker:
@@ -727,7 +760,8 @@ class LogStore:
         names = tuple(tables) if tables is not None else tuple(BLOCK_COLUMN)
 
         def build(st: _State) -> dict | None:
-            t_ops: dict[str, dict] = {}
+            removed: dict[str, list[_FileMeta]] = {}
+            survivors: dict[str, DataFrame] = {}
             for table in names:
                 col = BLOCK_COLUMN[table]
                 overlapped = [
@@ -737,22 +771,25 @@ class LogStore:
                 ]
                 if not overlapped:
                     continue
+                removed[table] = overlapped
                 # boundary files (rows on both sides) rewrite to survivors
                 partial = [
                     m
                     for m in overlapped
                     if m.lo is None or m.hi is None or m.lo < lo or m.hi > hi
                 ]
-                adds: list[_FileMeta] = []
                 if partial:
-                    survivors = self._read_files(table, partial, st).filter(
+                    survivors[table] = self._read_files(table, partial, st).filter(
                         (F.col(col) < lo) | (F.col(col) > hi)
                     )
-                    adds = self._stage_files(table, survivors)
-                t_ops[table] = {
-                    "add": [m.to_json() for m in adds],
-                    "rm": [m.path for m in overlapped],
+            rewritten = self._stage_tables(survivors)
+            t_ops = {
+                table: {
+                    "add": [m.to_json() for m in rewritten.get(table, [])],
+                    "rm": [m.path for m in files],
                 }
+                for table, files in removed.items()
+            }
             if not t_ops and (st.boundary is None or st.boundary < lo):
                 return None  # nothing stored in range and no boundary move
             rewind = st.boundary is not None and st.boundary >= lo
@@ -772,9 +809,9 @@ class LogStore:
 
     def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
         """Several dimensions in ONE commit — atomic across dims."""
-        staged = {
-            t: self._stage_files(t, self._prep(t, df)) for t, df in tables.items()
-        }
+        staged = self._stage_tables(
+            {t: self._prep(t, df) for t, df in tables.items()}
+        )
         schemas = {t: df.schema.jsonValue() for t, df in tables.items()}
 
         def build(st: _State) -> dict | None:

@@ -18,8 +18,12 @@ Per micro-batch:
 
 Scale notes: only the *headers* of a micro-batch are driver-resident (tiny,
 bounded by the trigger); the raw tables, pipeline, and sink writes are all
-distributed. The strictly-sequential constraint the reference enforces with
-a single consumer thread (indexer.go:137-139) is needed only for the
+distributed. The batch's ``headers``, ``events`` and ``fees`` (and the
+``deltas``, ``snapshots`` and ``totals`` derived from them) are materialized
+once with ``localCheckpoint``, so the header-reward join and the ABI decode
+run once per batch, not once per action that reads them. The
+strictly-sequential constraint the reference enforces with a single
+consumer thread (indexer.go:137-139) is needed only for the
 carry-forward aggregates, which the pipeline expresses as per-key windowed
 prefix sums *within* the batch and seeds *across* batches from the store —
 batches commit in order because foreachBatch is serial per query.
@@ -538,7 +542,13 @@ class BlockIngestor:
             raw["transaction_receipts"],
             raw["receipt_logs"],
         )
-        headers = X.compute_header_rewards(raw["block_headers_raw"], txs, receipts)
+        # headers, events and fees each feed several actions (the deltas
+        # probe and checkpoint, the totals rollup, the table writes) —
+        # materialize each once (micro-batch sized) so the reward join and
+        # the ABI decode UDF are not recomputed per consumer
+        headers = X.compute_header_rewards(
+            raw["block_headers_raw"], txs, receipts
+        ).localCheckpoint()
 
         # ether events: the node's state-diff transfer logs are authoritative
         # (they see ether moved INSIDE contract execution, indexer.go:443-467);
@@ -552,11 +562,11 @@ class BlockIngestor:
             eth_events
             .unionByName(X.extract_erc20_transfers(logs, self.erc20))
             .unionByName(X.reward_events(headers))
-        )
-        fees = X.tx_fees(txs, receipts)
+        ).localCheckpoint()
+        fees = X.tx_fees(txs, receipts).localCheckpoint()
         # deltas feed both the snapshot and rollup branches — materialize
-        # once (micro-batch sized) instead of recomputing the event→delta
-        # lineage (and its fast-path probe) per consumer
+        # once instead of re-running the event→delta aggregation (and its
+        # fast-path probe) per consumer
         deltas = X.ledger_deltas(events, fees).localCheckpoint()
 
         last_n = int(branch[-1]["number"])
@@ -608,13 +618,14 @@ class BlockIngestor:
         ).localCheckpoint()
         td = X.total_difficulty(headers, seed_td=str(self._td_at(first_n - 1)))
 
-        # WRITE ORDER IS THE CRASH-RECOVERY PROTOCOL: block_headers goes
-        # LAST as the commit marker. The stored head (max block_headers
-        # number) decides whether a resent batch is a duplicate — so a crash
-        # anywhere before the header write leaves the head unadvanced, the
-        # resend takes the append path, and overwrite-by-range repairs every
-        # partially-written table idempotently. Headers-first would instead
-        # classify the resend as a duplicate and leave holes.
+        # CRASH PROTOCOL: all eight tables publish in ONE commit (their
+        # files stage concurrently, but none is visible until the single
+        # log entry lands), so a crash leaves the whole batch or none of it.
+        # block_headers is the boundary marker (``has_marker``): it advances
+        # the stored head, which decides whether a resent batch is a
+        # duplicate. A crash before the commit leaves the head unadvanced,
+        # the resend takes the append path and commits the batch afresh, and
+        # the crashed attempt's staged files are orphans vacuum deletes.
         self.store.write_blocks(
             block_range=(int(first_n), int(branch[-1]["number"])),
             tables={

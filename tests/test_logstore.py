@@ -20,12 +20,14 @@ from __future__ import annotations
 import json
 import os
 import random
+import threading
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
 from eth_indexer_spark.sinks.logstore import LogStore, _LOG_DIR
-from tests.test_sink import headers_df, transfers_df
+from tests.test_sink import balances_df, headers_df, transfers_df
 
 
 @pytest.fixture()
@@ -321,6 +323,150 @@ def test_crash_before_publish_is_invisible_and_replay_converges(
     removed = reopened.vacuum(retain_versions=0)
     assert removed >= 1  # the crash's orphaned files are collectable
     assert _numbers(reopened) == list(range(100, 110))
+
+
+_BLOCK_COLS = (
+    ("block_headers", "number"),
+    ("transfers", "block_number"),
+    ("balances", "block_number"),
+)
+
+
+def _three_tables(spark, numbers):
+    return {
+        "block_headers": headers_df(spark, numbers),
+        "transfers": transfers_df(
+            spark, [("AAAA", n, f"t{n}", "a", "b", "1") for n in numbers]
+        ),
+        "balances": balances_df(spark, numbers),
+    }
+
+
+def _orphans(store: LogStore) -> set[str]:
+    """Data files on disk that no committed version references."""
+    live = {p for fs in store._state(refresh=True).files.values() for p in fs}
+    data = os.path.join(store.root, "data")
+    return {
+        os.path.join("data", t, n)
+        for t in os.listdir(data)
+        for n in os.listdir(os.path.join(data, t))
+    } - live
+
+
+def _fail_one_table_while_all_stage(monkeypatch, tables, failing):
+    """Patch ``_stage_files`` so every table in ``tables`` must be staging
+    at the same time (a barrier — sequential staging times out on it), then
+    ``failing`` raises while the others go on to write their files."""
+    barrier = threading.Barrier(len(tables), timeout=60)
+    real = LogStore._stage_files
+
+    def stage(self, table, df):
+        barrier.wait()
+        if table == failing:
+            raise OSError(f"simulated staging failure in {table}")
+        return real(self, table, df)
+
+    monkeypatch.setattr(LogStore, "_stage_files", stage)
+
+
+def test_concurrent_staging_failure_publishes_nothing(spark, tmp_path, monkeypatch):
+    """One table of a 3-table batch fails while the other two stage: the
+    commit never happens, a restart sees the pre-crash state, replaying the
+    batch converges, and the other tables' staged files are orphans vacuum
+    removes."""
+    root = str(tmp_path / "stagefail")
+    store = LogStore(spark, root)
+    store.write_blocks(_three_tables(spark, range(100, 105)))
+
+    tables = _three_tables(spark, range(105, 110))
+    _fail_one_table_while_all_stage(monkeypatch, tables, "transfers")
+    with pytest.raises(OSError, match="simulated staging failure in transfers"):
+        store.write_blocks(tables, block_range=(105, 109))
+    monkeypatch.undo()
+
+    reopened = LogStore(spark, root)
+    for t, col in _BLOCK_COLS:
+        assert _numbers(reopened, t, col) == list(range(100, 105))
+    assert reopened.read_version() == 104
+    orphans = _orphans(reopened)
+    assert {p.split(os.sep)[1] for p in orphans} == {"block_headers", "balances"}
+
+    reopened.write_blocks(tables, block_range=(105, 109))
+    for t, col in _BLOCK_COLS:
+        assert _numbers(reopened, t, col) == list(range(100, 110))
+    assert reopened.read_version() == 109
+    reopened.vacuum(retain_versions=0)
+    assert _orphans(reopened) == set()
+    assert not any(os.path.exists(os.path.join(root, p)) for p in orphans)
+    assert _numbers(reopened) == list(range(100, 110))
+
+
+def test_concurrent_boundary_rewrite_failure_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The same for a retraction whose boundary files in two tables are
+    rewritten concurrently: one rewrite fails, nothing is retracted, the
+    replayed retraction converges, and vacuum removes the orphan."""
+    root = str(tmp_path / "retractfail")
+    store = LogStore(spark, root)
+    # one file per table spanning 100-109: retracting 105-107 leaves rows
+    # on both sides, so both tables rewrite a boundary file
+    tables = {
+        t: df.coalesce(1)
+        for t, df in _three_tables(spark, range(100, 110)).items()
+        if t != "balances"
+    }
+    store.write_blocks(tables)
+    st = store._state(refresh=True)
+    for t in tables:
+        assert any(
+            m.lo <= 107 and m.hi >= 105 and (m.lo < 105 or m.hi > 107)
+            for m in st.files[t].values()
+        )
+
+    _fail_one_table_while_all_stage(monkeypatch, tables, "transfers")
+    with pytest.raises(OSError, match="simulated staging failure in transfers"):
+        store.retract_blocks(105, 107)
+    monkeypatch.undo()
+
+    reopened = LogStore(spark, root)
+    assert _numbers(reopened) == list(range(100, 110))
+    assert _numbers(reopened, "transfers", "block_number") == list(range(100, 110))
+    assert reopened.read_version() == 109
+    orphans = _orphans(reopened)
+    assert {p.split(os.sep)[1] for p in orphans} == {"block_headers"}
+
+    reopened.retract_blocks(105, 107)
+    kept = list(range(100, 105)) + [108, 109]
+    assert _numbers(reopened) == kept
+    assert _numbers(reopened, "transfers", "block_number") == kept
+    assert reopened.read_version() == 104
+    reopened.vacuum(retain_versions=0)
+    assert _orphans(reopened) == set()
+    assert not any(os.path.exists(os.path.join(root, p)) for p in orphans)
+    assert _numbers(reopened) == kept
+
+
+def test_concurrent_staging_keeps_callers_job_group(spark, lstore):
+    """Staging threads inherit the caller's job group (per-layer job
+    attribution and ``cancelJobGroup`` reach them) without the UserWarning
+    the callable-only ``inheritable_thread_target`` form emits."""
+    sc = spark.sparkContext
+    group = "logstore-staging-job-group"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        sc.setJobGroup(group, "3-table write_blocks")
+        try:
+            # explicit range: no range-probe job runs in the caller thread,
+            # so every job of the call is a staging thread's write
+            lstore.write_blocks(
+                _three_tables(spark, range(100, 105)), block_range=(100, 104)
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
 
 
 def test_optimize_compacts_and_vacuum_respects_retention(spark, lstore):

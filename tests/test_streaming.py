@@ -242,11 +242,11 @@ def test_reorg_walk_traces_below_batch(spark):
 
 
 def test_crash_replay_converges(spark, tmp_path):
-    """Crash-recovery protocol: block_headers is written LAST, so a crash
-    mid-batch (some derived tables written, headers not) leaves the head
-    unadvanced; resending the same batch takes the append path and
+    """Crash-recovery protocol: block_headers is the boundary marker, so a
+    store whose derived tables hold a batch its headers lack has an
+    unadvanced head; resending the same batch takes the append path and
     overwrite-by-range repairs every table. Simulated by retracting the
-    header rows of batch 2 — the state just before its commit marker."""
+    header rows of batch 2."""
     raw = build_raw()
     store, _src, ing = _mk(spark, tmp_path, raw)
     ing.process_headers(headers_of(raw, [100, 101, 102]))
@@ -593,3 +593,29 @@ def test_register_token_fetches_metadata_via_seam(spark, tmp_path):
     ing.register_token(t2, at_block=100)
     row = store.read("erc20").filter(F.col("address") == t2).collect()[0]
     assert row["name"].startswith("TOKEN-") and row["decimals"] == 18
+
+
+def test_batch_decodes_each_erc20_transfer_once(spark, tmp_path, monkeypatch):
+    """A batch materializes its event lineage once: the ABI decode UDF runs
+    over each registered-token transfer log once, not once per action that
+    reads the events (the deltas probe and checkpoint, the totals rollup,
+    the transfers write)."""
+    from eth_indexer_spark.functions.hexutils import abi_uint256
+    from eth_indexer_spark.pipeline import transform
+
+    decoded = spark.sparkContext.accumulator(0)
+    real = abi_uint256.func
+
+    @F.pandas_udf("string")
+    def counting_abi_uint256(data: pd.Series) -> pd.Series:
+        decoded.add(len(data))
+        return real(data)
+
+    monkeypatch.setattr(transform, "abi_uint256", counting_abi_uint256)
+    raw = build_raw()
+    store, _src, ing = _mk(spark, tmp_path, raw)
+    ing.process_headers(headers_of(raw, [100, 101, 102]))
+
+    stored = store.read("transfers").filter(F.col("token") != ETH).count()
+    assert stored >= 1
+    assert decoded.value == stored
