@@ -8,6 +8,13 @@ One place to encode the execution-model decisions that matter at 100 TB:
 - UTC session timezone so timestamps compare bit-exactly against the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
 - Arrow enabled for every pandas/Pandas-UDF boundary.
+- Driver heap sized to the host (see ``_default_driver_memory``): in local
+  mode every task runs inside the driver JVM, and a heap ceiling above
+  physical memory lets the JVM grow until the kernel kills it.
+- Top-K sort falls back to a spilling global sort above
+  ``TOPK_SORT_FALLBACK_ROWS``: ``TakeOrderedAndProject`` allocates a
+  2·limit-slot buffer per task up front, so ``limit(10**9)`` (an "all rows,
+  ordered" top-k) would zero gigabytes of heap in every task.
 - Broadcast threshold left at default (10 MB) — dimension tables in this
   engine (erc20 registry, subscriptions, region/nation) are far below it; we
   still hint ``F.broadcast`` explicitly at every intentional broadcast join so
@@ -21,6 +28,21 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+DRIVER_MEMORY_CEILING_MB = 24 * 1024
+# share of physical memory the driver heap may claim; the rest is left to
+# off-heap buffers, the Python workers and the OS page cache
+DRIVER_MEMORY_HOST_FRACTION = 0.4
+TOPK_SORT_FALLBACK_ROWS = 1_000_000
+
+
+def _default_driver_memory() -> str:
+    """24g, or ``DRIVER_MEMORY_HOST_FRACTION`` of physical memory when that
+    is smaller. ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return f"{DRIVER_MEMORY_CEILING_MB}m"
+    return f"{max(1024, min(DRIVER_MEMORY_CEILING_MB, int(host_mb * DRIVER_MEMORY_HOST_FRACTION)))}m"
 
 
 def get_spark(
@@ -45,7 +67,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
+        .config(
+            "spark.sql.execution.topKSortFallbackThreshold",
+            str(TOPK_SORT_FALLBACK_ROWS),
+        )
     )
     env_master = os.environ.get("MASTER") or os.environ.get("SPARK_MASTER")
     if not env_master:
