@@ -3,16 +3,14 @@
 Reference equivalents: common/utils.go:42-75 (hex ↔ bytes, 0x-strip,
 lowercase), common/utils.go:161-193 (topic unpacking), store/event_erc20.go:
 44-46 + contracts/utils.go:53-72 (ABI uint256 decode). All pure Column
-expressions except the exact uint256 decode, which needs Python int because
-``conv()`` is 64-bit and DECIMAL(38,0) < 2^256.
+expressions; the exact uint256 decode runs in the JVM through
+``scala.math.BigInt`` because ``conv()`` is 64-bit and DECIMAL(38,0) < 2^256.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _c(col) -> Column:
@@ -30,29 +28,14 @@ def topic_to_address(col) -> Column:
     return F.substring(normalize_hex(col), 25, 40)
 
 
-def bytes_to_hex(col) -> Column:
-    return F.lower(F.hex(_c(col)))
-
-
-def hex_to_bytes(col) -> Column:
-    return F.unhex(_c(col))
-
-
-@F.pandas_udf(T.StringType())
-def abi_uint256(data: pd.Series) -> pd.Series:
-    """Exact decode of 32-byte big-endian ABI data → uint256 decimal string
-    (event_erc20.go:44-46). Arrow-batched; full 2^256 range."""
-    return data.map(
-        lambda b: None if b is None else str(int.from_bytes(bytes(b), "big")),
-        na_action="ignore",
+def abi_uint256(col) -> Column:
+    """Exact decode of big-endian ABI data → uint256 decimal string
+    (event_erc20.go:44-46): the whole blob's value, full 2^256 range and
+    beyond, as ``int.from_bytes(b, "big")``. NULL stays NULL, empty data is
+    "0". ``BigInt(hex, 16)`` runs in the JVM, so the decode needs no
+    Python worker."""
+    h = F.hex(_c(col))
+    return F.when(h == "", F.lit("0")).when(
+        h.isNotNull(),
+        F.reflect(F.lit("scala.math.BigInt"), F.lit("apply"), h, F.lit(16)),
     )
-
-
-def abi_uint256_fast(col) -> Column:
-    """JVM-only decode valid for values < 1e38: splits the 32-byte word into
-    two 64-bit limbs recombined in DECIMAL(38,0). Use when the pipeline
-    guarantees bounded magnitudes; otherwise :func:`abi_uint256`."""
-    h = F.lpad(bytes_to_hex(_c(col)), 64, "0")
-    hi = F.conv(F.substring(h, 33, 16), 16, 10).cast("decimal(38,0)")
-    lo = F.conv(F.substring(h, 49, 16), 16, 10).cast("decimal(38,0)")
-    return (hi * F.lit(18446744073709551616).cast("decimal(38,0)") + lo).cast("string")

@@ -20,9 +20,12 @@ deliberate departures:
    - column arithmetic uses ``CAST(x AS DECIMAL(38,0))`` — the fast JVM path,
      valid while values < 1e38 (all realistic wei totals: total ETH supply
      ≈ 1.2e26 wei);
-   - when a pipeline stage may exceed 1e38 (adversarial ERC20 supplies),
-     exact arithmetic runs in an Arrow-batched pandas UDF over Python int —
-     opt-in per stage via ``exact=True``.
+   - the ABI decode of ERC20 values is exact in the JVM at any width
+     (``hexutils.abi_uint256``), so decoding never needs Python;
+   - only arithmetic on values above 30 digits (adversarial ERC20
+     supplies) takes the exact path, an Arrow-batched pandas UDF over
+     Python int — chosen per batch by a probe, or forced per stage via
+     ``exact=True``.
 
 3. **One table per entity, never per token.** The reference creates
    ``erc20_balance_<addr>`` / ``erc20_transfer_<addr>`` tables at runtime

@@ -21,10 +21,13 @@ bounded by the trigger); the raw tables, pipeline, and sink writes are all
 distributed. The batch's ``headers``, ``events`` and ``fees`` (and the
 ``deltas``, ``snapshots`` and ``totals`` derived from them) are materialized
 once with ``localCheckpoint``, so the header-reward join and the ABI decode
-run once per batch, not once per action that reads them. The
+run once per batch, not once per action that reads them. The batch stays in
+the JVM: the ABI decode is a JVM expression and driver-built frames cross
+as Arrow, so a batch whose amounts fit the 30-digit fast path starts no
+Python worker (a plugged-in ``balancer`` seam is a ``mapInPandas``). The
 strictly-sequential constraint the reference enforces with a single
-consumer thread (indexer.go:137-139) is needed only for the
-carry-forward aggregates, which the pipeline expresses as per-key windowed
+consumer thread (indexer.go:137-139) is needed only for the carry-forward
+aggregates, which the pipeline expresses as per-key windowed
 prefix sums *within* the batch and seeds *across* batches from the store —
 batches commit in order because foreachBatch is serial per query.
 """
@@ -33,6 +36,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -302,8 +306,10 @@ class BlockIngestor:
                     )
                 )
             row = dict(d.reorg_row, created_at=datetime.now(timezone.utc).replace(tzinfo=None))
+            # pandas, not a list: a list ships as a PythonRDD and starts workers
             self.store.append_dimension(
-                "reorgs", self.spark.createDataFrame([row], REORGS)
+                "reorgs",
+                self.spark.createDataFrame(pd.DataFrame([row], columns=REORGS.names), REORGS),
             )
         for i in range(0, len(replay), MAX_BLOCKS_PER_BATCH):
             self._ingest(replay[i : i + MAX_BLOCKS_PER_BATCH])
@@ -362,9 +368,13 @@ class BlockIngestor:
         tokens = [ETH_TOKEN] + [
             r["address"] for r in self.erc20.select("address").distinct().collect()
         ]
-        addr_df = self.spark.createDataFrame([(a,) for a in addrs], "address string")
+        # pandas, not lists: a list ships as a PythonRDD and starts workers
+        addr_df = self.spark.createDataFrame(pd.DataFrame({"address": addrs}), "address string")
         reqs = self.spark.createDataFrame(
-            [(t, a, last_n) for t in tokens for a in addrs],
+            pd.DataFrame(
+                [(t, a, last_n) for t in tokens for a in addrs],
+                columns=["token", "address", "block_number"],
+            ),
             "token string, address string, block_number long",
         )
         if self.balancer is not None:
@@ -396,8 +406,6 @@ class BlockIngestor:
                     F.sum(F.col("delta").cast("decimal(38,0)")).cast("string").alias("balance")
                 )
             else:
-                import pandas as pd
-
                 def _sum_exact(pdf: pd.DataFrame) -> pd.DataFrame:
                     head = pdf.iloc[0]
                     return pd.DataFrame(
@@ -545,7 +553,7 @@ class BlockIngestor:
         # headers, events and fees each feed several actions (the deltas
         # probe and checkpoint, the totals rollup, the table writes) —
         # materialize each once (micro-batch sized) so the reward join and
-        # the ABI decode UDF are not recomputed per consumer
+        # the ABI decode are not recomputed per consumer
         headers = X.compute_header_rewards(
             raw["block_headers_raw"], txs, receipts
         ).localCheckpoint()

@@ -596,20 +596,18 @@ def test_register_token_fetches_metadata_via_seam(spark, tmp_path):
 
 
 def test_batch_decodes_each_erc20_transfer_once(spark, tmp_path, monkeypatch):
-    """A batch materializes its event lineage once: the ABI decode UDF runs
+    """A batch materializes its event lineage once: the ABI decode runs
     over each registered-token transfer log once, not once per action that
     reads the events (the deltas probe and checkpoint, the totals rollup,
-    the transfers write)."""
-    from eth_indexer_spark.functions.hexutils import abi_uint256
+    the transfers write). A counting pandas UDF stands in for the decode."""
     from eth_indexer_spark.pipeline import transform
 
     decoded = spark.sparkContext.accumulator(0)
-    real = abi_uint256.func
 
     @F.pandas_udf("string")
     def counting_abi_uint256(data: pd.Series) -> pd.Series:
         decoded.add(len(data))
-        return real(data)
+        return data.map(lambda b: str(int.from_bytes(bytes(b), "big")), na_action="ignore")
 
     monkeypatch.setattr(transform, "abi_uint256", counting_abi_uint256)
     raw = build_raw()
