@@ -12,13 +12,16 @@ parallel.
 
 Arithmetic follows the uint256 policy (schema.py): DECIMAL(38,0) column math
 by default, exact Python-int pandas paths where a stage may exceed 1e38
-(``exact=True``).
+(``exact=True``). A forced fast path (``exact=False``) is guarded: a value
+over 30 digits fails the job with :data:`FAST_PATH_OVERFLOW`, and the
+caller recomputes on the exact path — so a batch pays no probe job.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -32,10 +35,33 @@ from eth_indexer_spark.schema import (
     ERC20_TRANSFER_SIG,
     ETH_TOKEN,
     MINER_REWARD_FROM,
+    TOTAL_DIFFICULTY,
     UNCLE_REWARD_FROM,
 )
 
 _D = "decimal(38,0)"
+# named in the job failure a guarded fast path raises (see _fits)
+FAST_PATH_OVERFLOW = "uint256-fast-path-overflow"
+
+
+def raised_message(e: Exception) -> str | None:
+    """The message a ``raise_error`` put into a failed Spark job, or None
+    when ``e`` is any other failure."""
+    if isinstance(e, SparkRuntimeException) and e.getCondition() == "USER_RAISED_EXCEPTION":
+        return (e.getMessageParameters() or {}).get("errorMessage")
+    return None
+
+
+def _fits(col: str) -> Column:
+    """``col`` unchanged while it has at most 30 digits; a longer value
+    fails the job with :data:`FAST_PATH_OVERFLOW` — the probe of
+    :func:`_any_over_30_digits`, evaluated inside the fast path's own job.
+    It guards a column the fast path computes from, so column pruning
+    cannot drop it."""
+    digits = F.length(F.regexp_replace(col, "-", ""))
+    return F.when(
+        digits > 30, F.raise_error(F.lit(f"{FAST_PATH_OVERFLOW}: a value exceeds 30 digits"))
+    ).otherwise(F.col(col))
 
 
 # ---------------------------------------------------------------------------
@@ -243,7 +269,8 @@ def ledger_deltas(
     - **exact path**: any larger value routes the whole batch through the
       Arrow-batched grouped pandas aggregation on Python ints.
 
-    ``exact``: force a path (tests); None = detect (one cheap scan probe).
+    ``exact``: force a path (False = the guarded fast path, see
+    :func:`_fits`); None = detect (one cheap scan probe).
     """
     credit = events.select(
         "token", "block_number", F.col("to").alias("address"), F.col("value").alias("signed")
@@ -274,7 +301,7 @@ def ledger_deltas(
     if not exact:
         return (
             parts.groupBy("token", "block_number", "address")
-            .agg(F.sum(F.col("signed").cast(_D)).cast("string").alias("delta"))
+            .agg(F.sum(_fits("signed").cast(_D)).cast("string").alias("delta"))
         )
 
     def _sum_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -307,6 +334,7 @@ def balance_snapshots(
     subs: DataFrame,
     seed_balances: DataFrame | None = None,
     exact: bool | None = None,
+    require_seed: bool = False,
 ) -> DataFrame:
     """Sparse per-(token, address, block) balance snapshots for SUBSCRIBED
     addresses: seed (latest stored balance before the batch) + running sum of
@@ -317,8 +345,13 @@ def balance_snapshots(
     uint256 policy: when every delta and seed fits 30 digits (the
     overwhelmingly common case) the running sum is a JVM window prefix sum
     over DECIMAL(38,0) — whole-stage codegen, no Python; otherwise the exact
-    grouped-pandas path on Python ints. ``exact``: force a path (tests);
-    None = probe."""
+    grouped-pandas path on Python ints. ``exact``: force a path (False =
+    the guarded fast path); None = probe.
+
+    ``require_seed``: a subscribed (token, address) with activity this
+    batch but no seed row fails the job with ``missing-prev-balance``
+    (ErrMissingPrevBalance, transfer_processor.go:303-310) — its opening
+    row was never written (new-sub path or token backfill)."""
     subs_b = F.broadcast(subs.select("address", "group"))
     d = deltas.join(subs_b, "address")  # inner: only subscribed addresses
 
@@ -334,6 +367,21 @@ def balance_snapshots(
         d = d.join(seed, ["token", "address"], "left")
     else:
         d = d.withColumn("__seed", F.lit(None).cast("string"))
+    if require_seed:
+        missing = F.concat(
+            F.lit("missing-prev-balance: old subscription (token="),
+            F.col("token"),
+            F.lit(", address="),
+            F.col("address"),
+            F.lit(
+                ") has activity but no prior balance row (reference "
+                "ErrMissingPrevBalance, store/transfer_processor.go:303-310)"
+            ),
+        )
+        d = d.withColumn(
+            "__seed",
+            F.when(F.col("__seed").isNull(), F.raise_error(missing)).otherwise(F.col("__seed")),
+        )
 
     if exact is None:
         exact = _any_over_30_digits(deltas, "delta") or (
@@ -349,8 +397,8 @@ def balance_snapshots(
             "block_number",
             "address",
             (
-                F.coalesce(F.col("__seed").cast(_D), F.lit(0).cast(_D))
-                + F.sum(F.col("delta").cast(_D)).over(cum)
+                F.coalesce(_fits("__seed").cast(_D), F.lit(0).cast(_D))
+                + F.sum(_fits("delta").cast(_D)).over(cum)
             ).cast("string").alias("balance"),
             "group",
         )
@@ -404,7 +452,7 @@ def total_balance_rollup(
     uint256 policy: the group-delta aggregation and the carry-forward prefix
     sum run as JVM DECIMAL(38,0) (map-side partial agg + window sum) unless
     a delta or seed exceeds 30 digits — then the exact pandas path.
-    ``exact``: force a path (tests); None = probe.
+    ``exact``: force a path (False = the guarded fast path); None = probe.
     """
     subs_b = F.broadcast(subs.select("address", "group"))
 
@@ -416,7 +464,7 @@ def total_balance_rollup(
     if not exact:
         gdelta = (
             snapshots_deltas.groupBy("token", "group", "block_number")
-            .agg(F.sum(F.col("delta").cast(_D)).cast("string").alias("gdelta"))
+            .agg(F.sum(_fits("delta").cast(_D)).cast("string").alias("gdelta"))
         )
     else:
         gdelta = (
@@ -467,7 +515,7 @@ def total_balance_rollup(
             "block_number",
             "group",
             (
-                F.coalesce(F.col("__seed").cast(_D), F.lit(0).cast(_D))
+                F.coalesce(_fits("__seed").cast(_D), F.lit(0).cast(_D))
                 + F.sum(F.col("gdelta").cast(_D)).over(cum)
             ).cast("string").alias("balance"),
         )
@@ -552,16 +600,17 @@ def new_token_backfill(
     )
 
 
-def total_difficulty(headers: DataFrame, seed_td: str = "0") -> DataFrame:
+def total_difficulty(spark, headers: list[dict], seed_td: int = 0) -> DataFrame:
     """A10 (service/indexer/indexer.go:249-274): td(n) = td(parent) +
-    difficulty, seeded by the stored td of the batch's parent. Within a
-    linear batch this is a prefix sum over block number; difficulty sums fit
-    DECIMAL(38,0) (mainnet total difficulty peaked ≈ 5.9e22)."""
-    w = W.orderBy("number").rowsBetween(W.unboundedPreceding, W.currentRow)
-    return headers.select(
-        F.col("number").alias("block"),
-        "hash",
-        (F.sum(F.col("difficulty").cast(_D)).over(w) + F.lit(seed_td).cast(_D))
-        .cast("string")
-        .alias("td"),
+    difficulty, seeded by the stored td of the batch's parent. A batch's
+    headers are already driver-side dicts, so the prefix sum runs there on
+    exact Python ints and the rows cross to the JVM as Arrow — no
+    unpartitioned window, no single-task stage."""
+    rows = sorted(headers, key=lambda h: h["number"])
+    td, out = int(seed_td), []
+    for h in rows:
+        td += int(h["difficulty"])
+        out.append((int(h["number"]), h["hash"], str(td)))
+    return spark.createDataFrame(
+        pd.DataFrame(out, columns=["block", "hash", "td"]), TOTAL_DIFFICULTY
     )

@@ -42,11 +42,14 @@ the same public design Iceberg/Hudi share:
   indexers (common/errors.go:26-57).
 - **Multi-TABLE atomicity is exact, not staged**: one commit carries every
   table of a batch, so readers can never observe table A post-batch beside
-  table B pre-batch — the reference's one DB transaction, exactly. The
-  tables' files are STAGED concurrently (one thread per table, so a batch's
-  small write jobs share the cores instead of queueing) and still PUBLISH
-  once: every table finishes staging before the single commit, and a
-  failure in any table publishes nothing.
+  table B pre-batch — the reference's one DB transaction, exactly. That
+  includes the batch's dimension replacements and, for a winning fork, the
+  retraction of the losing branch (``write_blocks(through=...)``): a reader
+  sees the old branch or the new one, never the head stepped back to the
+  fork point. The files are STAGED concurrently (one thread per frame, so
+  a batch's small write jobs share the cores instead of queueing) and still
+  PUBLISH once: every frame finishes staging before the single commit, and
+  a failure in any of them publishes nothing.
 
 100 TB shape
 ------------
@@ -81,6 +84,7 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -100,10 +104,8 @@ _STAGING_DIR = "_staging"
 # any data-file deletion — snapshots pinned at-or-below it re-verify their
 # file set after every action (see LogSnapshot.check). The DIRECTORY holds
 # one immutable empty file per published horizon (monotone max by
-# construction); the single-file JSON name is the legacy location, still
-# read for roots written by older code.
+# construction).
 _VACUUM_MARKER_DIR = "_vacuum_horizon"
-_VACUUM_MARKER = "_vacuum_horizon.json"
 CHECKPOINT_EVERY = 10
 # log-read retry cap: FileNotFoundError during a fold is normally a benign
 # race with another process's vacuum (retry converges via the covering
@@ -111,17 +113,6 @@ CHECKPOINT_EVERY = 10
 # reader raises a diagnostic instead of spinning forever
 _LOG_READ_RETRIES = 50
 _COMMIT_WIDTH = 20  # zero-padded version in file names → lexicographic order
-
-
-class ConcurrentWriteConflict(RuntimeError):
-    """A ``version_hold`` transaction could not publish: between buffering
-    an operation and the hold's single commit, ANOTHER writer changed a
-    table this transaction read or overwrites (the buffered remove/merge
-    sets are stale). Publishing anyway would silently drop or duplicate the
-    other writer's rows, so the publish fails LOUDLY instead — the Delta
-    paper's §3.3 conflict check (ConcurrentAppend/ConcurrentDelete). The
-    engine's recovery is its standard one: replay the batch (every mutation
-    is idempotent), which re-reads current state and converges."""
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -254,6 +245,14 @@ def _file_stats(abs_path: str, block_col: str | None, token_col: str | None):
     return rows, lo, hi, tlo, thi
 
 
+def _overlaps(m: _FileMeta, lo: int | None, hi: int | None) -> bool:
+    """Whether a file may hold blocks in ``[lo, hi]`` (None = unbounded). A
+    file without stats always may: pruning must never change results."""
+    return (lo is None or m.hi is None or m.hi >= lo) and (
+        hi is None or m.lo is None or m.lo <= hi
+    )
+
+
 class LogStore:
     """Commit-log MVCC store over a local directory (module docstring)."""
 
@@ -261,9 +260,6 @@ class LogStore:
         self.spark = spark
         self.root = root
         self._mutex = threading.RLock()  # in-process commit/state cache lock
-        self._hold_depth = 0
-        self._hold_ops: list[dict] = []  # buffered commits during a hold
-        self._hold_base: _State | None = None
         self._cache: _State | None = None
         os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, _DATA_DIR), exist_ok=True)
@@ -363,52 +359,6 @@ class LogStore:
                             self._cache = self._load_state()
             return self._cache
 
-    def _visible_state(self) -> _State:
-        """State the OWNING store reads through: committed state, plus the
-        buffered ops of an open ``version_hold`` (read-your-own-writes —
-        the backfill flow writes balances then reads them back inside one
-        hold). Other readers see nothing until the hold's single commit."""
-        with self._mutex:
-            st = self._state(refresh=True)
-            if self._hold_depth == 0 or not self._hold_ops:
-                return st
-            pending = st.copy()
-            for commit in self._hold_ops:
-                self._apply_buffered(pending, commit)
-            return pending
-
-    @staticmethod
-    def _apply_buffered(state: _State, op: dict) -> None:
-        """Fold ONE buffered hold op into ``state``, re-deriving the
-        boundary RELATIVE to the state being folded into (the op's
-        ``bound`` intent) rather than applying its buffer-time absolutes
-        verbatim. The absolutes are stale the moment an EXTERNAL writer
-        advances the boundary on a table the hold never touched (which the
-        ``expect`` file-set check deliberately does not constrain):
-        replaying them would silently rewind the published head — a lost
-        update. Intents:
-
-        - ``write``: a markered batch advances the boundary to
-          ``max(hi, pre)`` — evaluated against the FOLD-TIME boundary,
-          exactly as ``write_blocks`` evaluates it against commit state in
-          the direct path;
-        - ``retract``: rewinds to ``lo - 1`` iff the fold-time boundary
-          reaches ``lo``;
-        - absent / ``keep``: the boundary passes through unchanged
-          (dimension swaps, delta appends, optimize)."""
-        bound = op.get("bound") or {"kind": "keep"}
-        pre = state.boundary
-        kind = bound["kind"]
-        if kind == "write" and bound["marker"]:
-            boundary = bound["hi"] if pre is None else max(bound["hi"], pre)
-        elif kind == "retract" and pre is not None and pre >= bound["lo"]:
-            boundary = bound["lo"] - 1
-        else:  # keep; marker-less writes only restore, never lead
-            boundary = pre
-        # buffered ops carry no log version yet (they publish as ONE commit
-        # at hold exit); fold at the current one with the re-derived head
-        state.apply({**op, "v": state.version, "boundary": boundary})
-
     # -- commit protocol ---------------------------------------------------------
 
     def _try_publish(self, version: int, commit: dict) -> bool:
@@ -436,27 +386,12 @@ class LogStore:
         commit, with optimistic retry: on losing the version race the state
         is re-folded and ``build`` re-planned against it (survivor file
         sets may differ). ``build`` returning None means no-op (e.g. a
-        delta replay). Inside a ``version_hold`` the ops are buffered and
-        published as ONE commit at clean exit."""
-        with self._mutex:
-            if self._hold_depth > 0:
-                base = self._visible_state()
-                ops = build(base)
-                if ops is not None:
-                    self._hold_ops.append(ops)
-                return
+        delta replay)."""
         while True:
             st = self._state(refresh=True)
             ops = build(st)
             if ops is None:
                 return
-            # "expect" (the touched tables' read sets) and "bound" (the
-            # boundary-intent record) only matter for HOLD-buffered ops at
-            # publish; a direct commit re-plans against fresh state on every
-            # OCC retry, so its absolute boundary is already derived
-            # from the state it extends and the log stays free of the noise
-            ops.pop("expect", None)
-            ops.pop("bound", None)
             commit = {"v": st.version + 1, "writer": f"{os.getpid()}", **ops}
             if self._try_publish(st.version + 1, commit):
                 with self._mutex:
@@ -513,25 +448,25 @@ class LogStore:
         shutil.rmtree(os.path.join(self.root, _STAGING_DIR, txid), ignore_errors=True)
         return metas
 
-    def _stage_tables(self, frames: dict[str, DataFrame]) -> dict[str, list[_FileMeta]]:
-        """:meth:`_stage_files` for every ``{table: frame}`` at once, one
-        thread per table: a commit's small write jobs run side by side
+    def _stage_tables(self, frames: dict) -> dict:
+        """:meth:`_stage_files` for every ``{key: (table, frame)}`` at once,
+        one thread per frame: a commit's small write jobs run side by side
         instead of one after another. Each thread carries the caller's job
         group, local properties and session tags (its own copy), so job
         attribution and ``cancelJobGroup`` still reach the staging jobs.
-        Every thread has finished when this returns or raises; an error in
-        any table propagates, nothing is published, and whatever the other
-        tables staged is left as vacuumable orphans."""
+        Every thread has finished when this returns ``{key: metas}`` or
+        raises; an error in any frame propagates, nothing is published, and
+        whatever the other frames staged is left as vacuumable orphans."""
         if len(frames) <= 1:
-            return {t: self._stage_files(t, df) for t, df in frames.items()}
+            return {k: self._stage_files(t, df) for k, (t, df) in frames.items()}
         with ThreadPoolExecutor(max_workers=len(frames)) as pool:
             futures = {
-                t: pool.submit(
+                k: pool.submit(
                     inheritable_thread_target(self.spark)(self._stage_files), t, df
                 )
-                for t, df in frames.items()
+                for k, (t, df) in frames.items()
             }
-        return {t: f.result() for t, f in futures.items()}
+        return {k: f.result() for k, f in futures.items()}
 
     def _abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
@@ -553,7 +488,14 @@ class LogStore:
         if not metas:
             if sch is None:
                 raise FileNotFoundError(f"unknown table {table!r} (never committed)")
-            return self.spark.createDataFrame([], StructType.fromJson(sch))
+            # an empty relation planned in the JVM: createDataFrame(list)
+            # would ship a PythonRDD and start Python workers
+            return self.spark.range(0).select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in StructType.fromJson(sch).fields
+                ]
+            )
         reader = self.spark.read
         if sch is not None:
             reader = reader.schema(StructType.fromJson(sch))
@@ -562,12 +504,43 @@ class LogStore:
     def _live(self, st: _State, table: str) -> list[_FileMeta]:
         return list(st.files.get(table, {}).values())
 
+    def lookup(
+        self,
+        table: str,
+        lo: int | None = None,
+        hi: int | None = None,
+        columns: list[str] | None = None,
+    ) -> pd.DataFrame:
+        """A small store-resident lookup answered on the driver: the live
+        files of ``table`` (stats-pruned to blocks ``[lo, hi]`` for a
+        block-keyed table) are read eagerly through pyarrow, no Spark job.
+        For what the writer itself needs between commits — stored headers,
+        total difficulty, a dimension's size — where a job's scheduling
+        cost dwarfs the bytes read. A table never written reads as empty."""
+        import pyarrow.dataset as pads
+
+        st = self._state(refresh=True)
+        metas = self._live(st, table)
+        col = BLOCK_COLUMN.get(table)
+        if col is not None:
+            metas = [m for m in metas if _overlaps(m, lo, hi)]
+        if not metas:
+            return pd.DataFrame(columns=columns or [])
+        cond = None
+        if col is not None and lo is not None:
+            cond = pads.field(col) >= lo
+        if col is not None and hi is not None:
+            c = pads.field(col) <= hi
+            cond = c if cond is None else cond & c
+        data = pads.dataset([self._abs(m.path) for m in metas], format="parquet")
+        return data.to_table(columns=columns, filter=cond).to_pandas()
+
     def exists(self, table: str) -> bool:
-        st = self._visible_state()
+        st = self._state(refresh=True)
         return bool(st.files.get(table)) or table in st.schemas
 
     def read(self, table: str) -> DataFrame:
-        st = self._visible_state()
+        st = self._state(refresh=True)
         df = self._read_files(table, self._live(st, table), st)
         if table in st.deltas and "ingest_delta" in df.columns:
             df = df.drop("ingest_delta")
@@ -581,14 +554,9 @@ class LogStore:
         scan, no listing, no footer reads — then the row predicate applies
         on top. Files with no stats (freak all-null column) stay candidates
         (pruning must never change results)."""
-        st = self._visible_state()
+        st = self._state(refresh=True)
         col = BLOCK_COLUMN[table]
-        metas = [
-            m
-            for m in self._live(st, table)
-            if (lo is None or m.hi is None or m.hi >= lo)
-            and (hi is None or m.lo is None or m.lo <= hi)
-        ]
+        metas = [m for m in self._live(st, table) if _overlaps(m, lo, hi)]
         df = self._read_files(table, metas, st)
         if lo is not None:
             df = df.filter(F.col(col) >= lo)
@@ -597,7 +565,7 @@ class LogStore:
         return df
 
     def read_eq(self, table: str, number: int) -> DataFrame:
-        st = self._visible_state()
+        st = self._state(refresh=True)
         col = BLOCK_COLUMN[table]
         metas = [
             m
@@ -611,7 +579,7 @@ class LogStore:
         opens. The stats are exact footer min/max, so this equals
         ``agg(max(col))`` whenever stats exist; the (pathological) no-stats
         file falls back to reading just that file."""
-        st = self._visible_state()
+        st = self._state(refresh=True)
         metas = self._live(st, table)
         if not metas:
             return None
@@ -632,11 +600,11 @@ class LogStore:
         """Delta-appended dimension WITH its ``ingest_delta`` column — a
         DATA column (written at append time), so one plain multi-file read
         serves any number of deltas."""
-        st = self._visible_state()
+        st = self._state(refresh=True)
         return self._read_files(table, self._live(st, table), st)
 
     def read_version(self) -> int | None:
-        return self._visible_state().boundary
+        return self._state(refresh=True).boundary
 
     def snapshot(self) -> "LogSnapshot":
         """A read view pinned to the current log version — an immutable
@@ -667,6 +635,9 @@ class LogStore:
         self,
         tables: dict[str, DataFrame],
         block_range: tuple[int, int] | None = None,
+        through: int | None = None,
+        dimensions: dict[str, DataFrame] | None = None,
+        appends: dict[str, DataFrame] | None = None,
     ) -> None:
         """S6 multi-table batch insert with overwrite-by-block-range
         semantics, in ONE atomic commit across every table: new files carry
@@ -676,78 +647,168 @@ class LogStore:
         transaction, store/store.go:115-173 — exact here, not staged).
         Replaying a failed batch recomputes the same remove-set against
         whatever committed and converges (M5). O(batch + overlapped files),
-        never O(table)."""
-        frames: dict[str, DataFrame] = {}
-        ranges: dict[str, tuple[int, int]] = {}
+        never O(table).
+
+        The same commit can carry more of the batch:
+
+        - ``through``: also retract every block-keyed table over
+          ``[lo, through]``, a range that may reach above the batch top — a
+          winning fork's first chunk removes the losing branch
+          ``[fork+1, old_head]`` and lands the new one at once. The head
+          then becomes the chunk's top, not ``max(top, old head)``, so no
+          reader sees it step back to the fork point. Needs ``block_range``.
+        - ``dimensions``: ``{table: frame}`` wholesale replacements of small
+          dimensions (M3/M4).
+        - ``appends``: ``{table: rows}`` appended to a dimension with
+          dedup-on-key. That merge reads the dimension, so the commit checks
+          the dimension's file set is still the one it read; if a
+          concurrent writer changed it, the read-merge-stage loop reruns
+          (the Delta paper's §3.3 check) — landing a stale merge would
+          drop the winner's rows (lost update).
+
+        Every frame stages concurrently before the single commit. Only a
+        batch carrying ``block_headers`` (the boundary marker) moves the
+        head up; a marker-less write only restores, never leads."""
+        batch: dict[str, DataFrame] = {}
+        cut: dict[str, tuple[int, int]] = {}  # table -> removed block range
         for table, df in tables.items():
             df = self._prep(table, df)
-            col = BLOCK_COLUMN[table]
             if block_range is not None:
                 lo, hi = block_range
             else:
+                col = BLOCK_COLUMN[table]
                 row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
                 lo, hi = row["lo"], row["hi"]
             if lo is None:
                 continue
-            frames[table] = df
-            ranges[table] = (int(lo), int(hi))
-        if not frames:
-            return
-        # batch files stage once and are reused across OCC retries —
-        # only the survivor set depends on the concurrent state
-        staged = {
-            t: (metas, *ranges[t]) for t, metas in self._stage_tables(frames).items()
-        }
-        schemas = {t: tables[t].schema.jsonValue() for t in staged}
-        has_marker = "block_headers" in staged
+            batch[table] = df
+            cut[table] = (int(lo), int(hi))
+        marker = max(hi for _, hi in cut.values()) if "block_headers" in batch else None
+        rewind = None
+        if through is not None:
+            if block_range is None:
+                raise ValueError("write_blocks(through=...) needs block_range")
+            rewind = int(block_range[0])
+            for table in BLOCK_COLUMN:
+                hi = max(int(through), cut.get(table, (rewind, rewind))[1])
+                cut[table] = (rewind, hi)
+        self._write(
+            batch=batch,
+            cut=cut,
+            dimensions=dimensions,
+            appends=appends,
+            marker=marker,
+            rewind=rewind,
+        )
 
-        def build(st: _State) -> dict | None:
-            pre = st.boundary
-            expect = {
-                t: sorted(st.files.get(t, {})) for t in staged
-            }  # read set: validated at hold publish (stale rm = lost rows)
-            removed: dict[str, list[_FileMeta]] = {}
-            survivors: dict[str, DataFrame] = {}
-            for table, (_metas, lo, hi) in staged.items():
-                col = BLOCK_COLUMN[table]
-                removed[table] = [
-                    m
+    def _write(
+        self, *, batch=None, cut=None, dimensions=None, appends=None, marker=None, rewind=None
+    ):
+        """Stage and publish one commit (see :meth:`write_blocks`):
+        ``batch`` frames add files, ``cut`` maps a table to the block range
+        whose stored rows go, ``dimensions``/``appends`` replace or merge
+        small dimensions. The head moves to ``rewind - 1`` if it had
+        reached ``rewind``, then up to ``marker`` (a batch carrying
+        headers). Survivor rewrites for the boundary files of ``cut`` stage
+        in the same round as the batch, planned from the state at staging
+        time; an OCC retry that finds other boundary files stages those."""
+        batch, cut = batch or {}, cut or {}
+        dimensions, appends = dimensions or {}, appends or {}
+        schemas = {t: df.schema.jsonValue() for t, df in batch.items()}
+        staged: dict = {}
+
+        def boundary_files(st: _State) -> dict[str, tuple[str, ...]]:
+            """Per table, the live files overlapping its cut that also hold
+            rows outside it (their survivors are rewritten)."""
+            out = {}
+            for table, (lo, hi) in cut.items():
+                partial = tuple(
+                    m.path
                     for m in self._live(st, table)
-                    if (m.hi is None or m.hi >= lo) and (m.lo is None or m.lo <= hi)
-                ]
-                if removed[table]:
-                    survivors[table] = self._read_files(
-                        table, removed[table], st
-                    ).filter((F.col(col) < lo) | (F.col(col) > hi))
-            rewritten = self._stage_tables(survivors)
-            t_ops = {
-                table: {
-                    "add": [m.to_json() for m in metas + rewritten.get(table, [])],
-                    "rm": [m.path for m in removed[table]],
-                }
-                for table, (metas, _lo, _hi) in staged.items()
-            }
-            hi_all = max(hi for _, _, hi in staged.values())
-            lo_all = min(lo for _, lo, _ in staged.values())
-            if has_marker:
-                boundary = hi_all if pre is None else max(hi_all, pre)
-            else:
-                boundary = pre  # marker-less writes only restore, never lead
-            return {
-                "boundary": boundary,
-                "tables": t_ops,
-                "schemas": schemas,
-                "expect": expect,
-                # boundary intent for hold-publish refold (_apply_buffered)
-                "bound": {
-                    "kind": "write",
-                    "hi": hi_all,
-                    "lo": lo_all,
-                    "marker": has_marker,
-                },
-            }
+                    if _overlaps(m, lo, hi)
+                    and (m.lo is None or m.hi is None or m.lo < lo or m.hi > hi)
+                )
+                if partial:
+                    out[table] = partial
+            return out
 
-        self._commit(build)
+        def survivor_frames(st: _State) -> dict:
+            frames = {}
+            for table, paths in boundary_files(st).items():
+                if ("keep", table, paths) in staged:
+                    continue
+                lo, hi = cut[table]
+                col = BLOCK_COLUMN[table]
+                metas = [st.files[table][p] for p in paths]
+                frames[("keep", table, paths)] = (
+                    table,
+                    self._read_files(table, metas, st).filter(
+                        (F.col(col) < lo) | (F.col(col) > hi)
+                    ),
+                )
+            return frames
+
+        while True:
+            st0 = self._state(refresh=True)
+            read_set = {t: set(st0.files.get(t, {})) for t in appends}
+            frames = {
+                ("batch", t): (t, df)
+                for t, df in batch.items()
+                if ("batch", t) not in staged
+            }
+            frames.update(
+                {
+                    ("dim", t): (t, self._prep(t, df))
+                    for t, df in dimensions.items()
+                    if ("dim", t) not in staged
+                }
+            )
+            dim_schemas = {t: df.schema.jsonValue() for t, df in dimensions.items()}
+            for t, df in appends.items():
+                if t in st0.files or t in st0.schemas:
+                    df = self._read_files(t, self._live(st0, t), st0).unionByName(df)
+                frames[("dim", t)] = (t, self._prep(t, df))
+                dim_schemas[t] = df.schema.jsonValue()
+            frames.update(survivor_frames(st0))
+            staged.update(self._stage_tables(frames))
+
+            def build(st: _State) -> dict | None:
+                if any(set(st.files.get(t, {})) != seen for t, seen in read_set.items()):
+                    raise _RetryConflict
+                staged.update(self._stage_tables(survivor_frames(st)))
+                keep = boundary_files(st)
+                t_ops: dict[str, dict] = {}
+                for table, (lo, hi) in cut.items():
+                    removed = [m.path for m in self._live(st, table) if _overlaps(m, lo, hi)]
+                    added = staged.get(("batch", table), [])
+                    if table in keep:
+                        added = added + staged[("keep", table, keep[table])]
+                    if removed or added:
+                        t_ops[table] = {"add": [m.to_json() for m in added], "rm": removed}
+                for table in dim_schemas:
+                    t_ops[table] = {
+                        "add": [m.to_json() for m in staged[("dim", table)]],
+                        "rm": sorted(st.files.get(table, {})),
+                    }
+                pre = st.boundary
+                head = pre
+                if rewind is not None and pre is not None and pre >= rewind:
+                    head = rewind - 1
+                if marker is not None:
+                    head = marker if head is None else max(marker, head)
+                if not t_ops and head == pre:
+                    return None  # nothing stored in range and no head move
+                return {
+                    "boundary": head,
+                    "tables": t_ops,
+                    "schemas": {**schemas, **dim_schemas},
+                }
+
+            try:
+                self._commit(build)
+                return
+            except _RetryConflict:
+                continue  # stale staged merges are vacuumable orphans
 
     def retract_blocks(self, lo: int, hi: int, tables=None) -> None:
         """M1/M2/M4 reorg retraction — ONE commit across every derived
@@ -756,51 +817,10 @@ class LogStore:
         [lo, hi] are removed with zero data read; overlapping boundary
         files are rewritten to their survivors. Pinned snapshots keep
         reading the removed files until vacuum, so a reorg can never race
-        a pinned reader."""
+        a pinned reader. A winning fork retracts in its first replay
+        commit instead (``write_blocks(through=...)``)."""
         names = tuple(tables) if tables is not None else tuple(BLOCK_COLUMN)
-
-        def build(st: _State) -> dict | None:
-            removed: dict[str, list[_FileMeta]] = {}
-            survivors: dict[str, DataFrame] = {}
-            for table in names:
-                col = BLOCK_COLUMN[table]
-                overlapped = [
-                    m
-                    for m in self._live(st, table)
-                    if (m.hi is None or m.hi >= lo) and (m.lo is None or m.lo <= hi)
-                ]
-                if not overlapped:
-                    continue
-                removed[table] = overlapped
-                # boundary files (rows on both sides) rewrite to survivors
-                partial = [
-                    m
-                    for m in overlapped
-                    if m.lo is None or m.hi is None or m.lo < lo or m.hi > hi
-                ]
-                if partial:
-                    survivors[table] = self._read_files(table, partial, st).filter(
-                        (F.col(col) < lo) | (F.col(col) > hi)
-                    )
-            rewritten = self._stage_tables(survivors)
-            t_ops = {
-                table: {
-                    "add": [m.to_json() for m in rewritten.get(table, [])],
-                    "rm": [m.path for m in files],
-                }
-                for table, files in removed.items()
-            }
-            if not t_ops and (st.boundary is None or st.boundary < lo):
-                return None  # nothing stored in range and no boundary move
-            rewind = st.boundary is not None and st.boundary >= lo
-            return {
-                "boundary": (lo - 1) if rewind else st.boundary,
-                "tables": t_ops,
-                "expect": {t: sorted(st.files.get(t, {})) for t in t_ops},
-                "bound": {"kind": "retract", "lo": lo},
-            }
-
-        self._commit(build)
+        self._write(cut={t: (lo, hi) for t in names}, rewind=lo)
 
     def update_dimension(self, table: str, df: DataFrame) -> None:
         """M3/M4: replace a small dimension wholesale — remove every live
@@ -809,72 +829,14 @@ class LogStore:
 
     def update_dimensions(self, tables: dict[str, DataFrame]) -> None:
         """Several dimensions in ONE commit — atomic across dims."""
-        staged = self._stage_tables(
-            {t: self._prep(t, df) for t, df in tables.items()}
-        )
-        schemas = {t: df.schema.jsonValue() for t, df in tables.items()}
-
-        def build(st: _State) -> dict | None:
-            return {
-                "boundary": st.boundary,
-                "tables": {
-                    t: {
-                        "add": [m.to_json() for m in metas],
-                        "rm": [m.path for m in self._live(st, t)],
-                    }
-                    for t, metas in staged.items()
-                },
-                "schemas": schemas,
-                "expect": {t: sorted(st.files.get(t, {})) for t in staged},
-            }
-
-        self._commit(build)
+        self._write(dimensions=tables)
 
     def append_dimension(self, table: str, df: DataFrame) -> None:
         """Append + dedup-on-key (reorgs audit rows): read-merge-replace,
         O(dimension) — right for small audit dims; per-batch growing state
-        uses :meth:`append_dimension_delta`.
-
-        Read-modify-write under OCC: the merged DATA is computed from the
-        read-time file set, so unlike the pure re-plan commits, losing a
-        race to a concurrent writer of the SAME table cannot be fixed by
-        re-planning removes alone — the merge itself is stale and landing
-        it would drop the winner's rows (lost update). The build validates
-        the read set and the whole read-merge-stage loop reruns on
-        conflict (the Delta paper's §3.3 check, retried here because the
-        merge function is still in hand — a hold publish, where it isn't,
-        raises :class:`ConcurrentWriteConflict` instead)."""
-        while True:
-            st0 = self._visible_state()
-            expected = set(st0.files.get(table, {}))
-            if expected or table in st0.schemas:
-                base = self._read_files(table, self._live(st0, table), st0)
-                merged = base.unionByName(df)
-            else:
-                merged = df
-            staged = self._stage_files(table, self._prep(table, merged))
-            schema = merged.schema.jsonValue()
-
-            def build(st: _State) -> dict | None:
-                if set(st.files.get(table, {})) != expected:
-                    raise _RetryConflict
-                return {
-                    "boundary": st.boundary,
-                    "tables": {
-                        table: {
-                            "add": [m.to_json() for m in staged],
-                            "rm": sorted(expected),
-                        }
-                    },
-                    "schemas": {table: schema},
-                    "expect": {table: sorted(expected)},
-                }
-
-            try:
-                self._commit(build)
-                return
-            except _RetryConflict:
-                continue  # stale staged files are vacuumable orphans
+        uses :meth:`append_dimension_delta`. The merge reruns if a
+        concurrent writer changed the dimension (``write_blocks(appends=)``)."""
+        self._write(appends={table: df})
 
     def append_dimension_delta(self, table: str, df: DataFrame, delta: str) -> None:
         """O(batch) exactly-once append: the delta name is recorded IN the
@@ -886,7 +848,7 @@ class LogStore:
             raise ValueError(
                 f"delta name {delta!r} must be non-empty [A-Za-z0-9_.-]"
             )
-        st = self._visible_state()
+        st = self._state(refresh=True)
         if delta in st.deltas.get(table, []):
             return
         tagged = df.withColumn("ingest_delta", F.lit(delta))
@@ -906,92 +868,6 @@ class LogStore:
             }
 
         self._commit(build)
-
-    @contextmanager
-    def version_hold(self):
-        """Group several mutations into ONE commit — and therefore one
-        atomic visibility transition: nothing inside the hold (not even its
-        rewinds) is visible to other readers until the clean exit, and a
-        crash mid-hold publishes nothing (nothing to repair; the orphaned
-        staged files are vacuumable). The owning
-        store reads its own buffered writes (the backfill flow's
-        write-then-read works unchanged)."""
-        with self._mutex:
-            self._hold_depth += 1
-        try:
-            yield
-        except BaseException:
-            with self._mutex:
-                self._hold_depth -= 1
-                if self._hold_depth == 0:
-                    self._hold_ops = []  # abort: publish nothing
-            raise
-        publish: list[dict] | None = None
-        with self._mutex:
-            self._hold_depth -= 1
-            if self._hold_depth == 0:
-                publish, self._hold_ops = self._hold_ops, []
-        if publish:
-
-            def build(st: _State) -> dict | None:
-                merged = st.copy()
-                tables: dict[str, dict] = {}
-                schemas: dict[str, dict] = {}
-                deltas: dict[str, list[str]] = {}
-                for commit in publish:
-                    # exactly-once deltas: if an external writer landed the
-                    # same delta name since buffering, this op is a replay
-                    # of an already-committed batch — skip it whole (the
-                    # non-hold build's None), never double-append
-                    if any(
-                        n in merged.deltas.get(t, [])
-                        for t, names in commit.get("deltas", {}).items()
-                        for n in names
-                    ):
-                        continue
-                    # §3.3 conflict check: each buffered op recorded the
-                    # full live file set of every table it read/overwrites
-                    # ("expect"). The fold replays ops in order, so expect
-                    # matches unless ANOTHER writer touched the table since
-                    # buffering — then the op's remove/merge sets are stale
-                    # and publishing would lose or duplicate rows. Fail
-                    # loudly; replaying the batch converges.
-                    for t, paths in commit.get("expect", {}).items():
-                        if set(paths) != set(merged.files.get(t, {})):
-                            raise ConcurrentWriteConflict(
-                                f"version_hold publish: table {t!r} was "
-                                "modified by a concurrent writer after this "
-                                "transaction buffered its write — replay "
-                                "the batch against current state"
-                            )
-                    for t, ops in commit.get("tables", {}).items():
-                        out = tables.setdefault(t, {"add": [], "rm": []})
-                        live_before = set(merged.files.get(t, {}))
-                        for p in ops.get("rm", []):
-                            if p in live_before:
-                                out["rm"].append(p)
-                            else:
-                                # removing a file an EARLIER buffered op
-                                # added: cancel the add instead
-                                out["add"] = [a for a in out["add"] if a["p"] != p]
-                        out["add"] += ops.get("add", [])
-                    for t, sch in commit.get("schemas", {}).items():
-                        schemas[t] = sch
-                    for t, names in commit.get("deltas", {}).items():
-                        deltas.setdefault(t, []).extend(names)
-                    # the boundary is re-derived from PUBLISH-time state
-                    # via each op's intent ("bound"), never taken verbatim
-                    # from buffer time — an external writer advancing the
-                    # head on an untouched table must not be rewound
-                    self._apply_buffered(merged, commit)
-                return {
-                    "boundary": merged.boundary,
-                    "tables": tables,
-                    **({"schemas": schemas} if schemas else {}),
-                    **({"deltas": deltas} if deltas else {}),
-                }
-
-            self._commit(build)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -1104,12 +980,6 @@ class LogStore:
                 except ValueError:
                     continue
         except FileNotFoundError:
-            pass
-        # legacy single-file marker (pre-directory roots): fold it in
-        try:
-            with open(os.path.join(self.root, _VACUUM_MARKER)) as f:
-                horizon = max(horizon, int(json.load(f).get("horizon", -1)))
-        except (FileNotFoundError, json.JSONDecodeError, ValueError):
             pass
         return horizon
 
@@ -1399,12 +1269,7 @@ class LogSnapshot:
         col = BLOCK_COLUMN[table]
         if self._clamped(table):
             hi = self.version if hi is None else min(hi, self.version)
-        metas = [
-            m
-            for m in self._live(table)
-            if (lo is None or m.hi is None or m.hi >= lo)
-            and (hi is None or m.lo is None or m.lo <= hi)
-        ]
+        metas = [m for m in self._live(table) if _overlaps(m, lo, hi)]
         df = self._read(table, metas)
         if lo is not None:
             df = df.filter(F.col(col) >= lo)

@@ -14,17 +14,27 @@ Per micro-batch:
    ``maxBlocksToInsert`` 50, indexer.go:39): fetch the raw tables for the
    chunk's block hashes (S2/S3 seam), run the batch transform pipeline
    (pipeline/transform.py) seeded from the store's current state, and commit
-   through the idempotent overwrite-by-block-range sink (sinks/logstore.py).
+   through the idempotent overwrite-by-block-range sink (sinks/logstore.py)
+   — ONE commit per chunk, carrying the latest-state dimensions and any
+   subscription stamps. A winning fork's first chunk also carries the
+   retraction of the losing branch and the ``reorgs`` row, so a reader sees
+   the old branch or the new one, never the head stepped back to the fork
+   point; later chunks of a deep replay commit one each.
 
 Scale notes: only the *headers* of a micro-batch are driver-resident (tiny,
 bounded by the trigger); the raw tables, pipeline, and sink writes are all
 distributed. The batch's ``headers``, ``events`` and ``fees`` (and the
 ``deltas``, ``snapshots`` and ``totals`` derived from them) are materialized
 once with ``localCheckpoint``, so the header-reward join and the ABI decode
-run once per batch, not once per action that reads them. The batch stays in
-the JVM: the ABI decode is a JVM expression and driver-built frames cross
-as Arrow, so a batch whose amounts fit the 30-digit fast path starts no
-Python worker (a plugged-in ``balancer`` seam is a ``mapInPandas``). The
+run once per batch, not once per action that reads them. What the batch
+asks the store — recent headers, total difficulty, a dimension's newest
+block — is read on the driver from the log's pruned file list, and the
+uint256 fast path and the subscription guards fail the checkpoint jobs by
+name instead of running probe jobs first, so a batch runs no Spark job
+that only answers a question. The batch stays in the JVM: the ABI decode
+is a JVM expression and driver-built frames cross as Arrow, so a batch
+whose amounts fit the 30-digit fast path starts no Python worker (a
+plugged-in ``balancer`` seam is a ``mapInPandas``). The
 strictly-sequential constraint the reference enforces with a single
 consumer thread (indexer.go:137-139) is needed only for the carry-forward
 aggregates, which the pipeline expresses as per-key windowed
@@ -37,6 +47,7 @@ from __future__ import annotations
 from datetime import datetime, timezone
 
 import pandas as pd
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -94,24 +105,43 @@ class BlockIngestor:
         # the reference reads them from the contract (client/client.go:112-148)
         self.metadata_fn = metadata_fn
 
-    # -- stored-chain state ---------------------------------------------------
+    @property
+    def subscriptions(self) -> DataFrame:
+        return self._subs
+
+    @subscriptions.setter
+    def subscriptions(self, df: DataFrame) -> None:
+        self._subs = df
+        self._subs_rows: pd.DataFrame | None = None
+
+    def _subscription_rows(self) -> pd.DataFrame:
+        """Driver-side mirror of :attr:`subscriptions` (a dimension of
+        addresses, not of blocks): a batch reads stamps from it without a
+        Spark job. Collected on first use after the frame is set, then kept
+        current by every commit that stamps or resets subscriptions."""
+        if self._subs_rows is None:
+            self._subs_rows = self._subs.toPandas()
+        return self._subs_rows
+
+    # -- stored-chain state (read on the driver: no Spark job) -----------------
 
     def _stored_recent(self) -> dict[int, dict]:
         head = self.store.max_block("block_headers")
         if head is None:
             return {}
-        rows = (
-            self.store.read_range("block_headers", head - REORG_WINDOW, head)
-            .select("number", "hash", "parent_hash")
-            .collect()
+        rows = self.store.lookup(
+            "block_headers", head - REORG_WINDOW, head, ["number", "hash", "parent_hash"]
         )
-        return {r["number"]: r.asDict() for r in rows}
+        return {
+            int(n): {"number": int(n), "hash": h, "parent_hash": p}
+            for n, h, p in zip(rows["number"], rows["hash"], rows["parent_hash"])
+        }
 
     def _td_at(self, n: int) -> int:
-        if n < 0 or not self.store.exists("total_difficulty"):
+        if n < 0:
             return 0
-        row = self.store.read_range("total_difficulty", n, n).collect()
-        return int(row[0]["td"]) if row else 0
+        rows = self.store.lookup("total_difficulty", n, n, ["td"])
+        return int(rows["td"].iloc[0]) if len(rows) else 0
 
     # -- entry points ----------------------------------------------------------
 
@@ -150,6 +180,11 @@ class BlockIngestor:
         per-token tables; the token partition column makes that a no-op here
         (SURVEY §1.1).
 
+        Every frame is built from the pre-registration state and the
+        registry row, the per-address openings, the group totals and both
+        latest-state dimensions publish as ONE commit: a snapshot never sees
+        the new token's balances beside the old totals.
+
         Metadata fields left as None are read from the contract through the
         ``metadata_fn`` seam (client/client.go:112-148 — name/totalSupply/
         decimals eth_calls; deterministic fake when no node is plugged in)."""
@@ -171,93 +206,68 @@ class BlockIngestor:
             "decimals": decimals,
             "name": name,
         }
-        new = self.spark.createDataFrame([row], ERC20)
+        # pandas, not a list: a list ships as a PythonRDD and starts workers
+        new = self.spark.createDataFrame(pd.DataFrame([row], columns=ERC20.names), ERC20)
+        erc20 = new
         if self.store.exists("erc20"):
-            merged = (
-                self.store.read("erc20")
-                .filter(F.col("address") != address)
+            erc20 = self.store.read("erc20").filter(F.col("address") != address).unionByName(new)
+        tables: dict[str, DataFrame] = {}
+        dims = {"erc20": erc20}
+        if self.store.exists("balances"):
+            balances = self.store.read("balances")
+            backfill = X.new_token_backfill(
+                balances, self.subscriptions, address, at_block
+            ).localCheckpoint()
+            # per-address opening rows for the token — the reference's
+            # new_erc20.go inserts a balance row for every subscription page
+            # (new_erc20.go:41-175, balancer-fetched); ledger-derived here:
+            # latest stored token balance as-of the registration block, 0 for
+            # non-holders. Keeps the old-sub missing-prev guard satisfiable
+            # for post-registration activity.
+            w = W.partitionBy("address").orderBy(F.desc("block_number"))
+            latest_tok = (
+                balances.filter(
+                    (F.col("token") == address) & (F.col("block_number") <= at_block)
+                )
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .select("address", F.col("balance").alias("__b"))
+            )
+            init_bal = (
+                self.subscriptions.filter(F.col("block_number") > 0)
+                .select("address", "group")
+                .join(latest_tok, "address", "left")
+                .select(
+                    F.lit(address).alias("token"),
+                    F.lit(at_block).cast("long").alias("block_number"),
+                    "address",
+                    F.coalesce(F.col("__b"), F.lit("0")).alias("balance"),
+                    "group",
+                )
                 .localCheckpoint()
-                .unionByName(new)
             )
-        else:
-            merged = new
-        self.store.update_dimension("erc20", merged)
-        self.erc20 = self.store.read("erc20")
-
-        if not self.store.exists("balances"):
-            return
-        backfill = X.new_token_backfill(
-            self.store.read("balances"), self.subscriptions, address, at_block
-        ).localCheckpoint()
-
-        # per-address opening rows for the token — the reference's
-        # new_erc20.go inserts a balance row for every subscription page
-        # (new_erc20.go:41-175, balancer-fetched); ledger-derived here:
-        # latest stored token balance as-of the registration block, 0 for
-        # non-holders. Keeps the old-sub missing-prev guard satisfiable for
-        # post-registration activity.
-        w = W.partitionBy("address").orderBy(F.desc("block_number"))
-        latest_tok = (
-            self.store.read("balances")
-            .filter((F.col("token") == address) & (F.col("block_number") <= at_block))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("address", F.col("balance").alias("__b"))
-        )
-        init_bal = (
-            self.subscriptions.filter(F.col("block_number") > 0)
-            .select("address", "group")
-            .join(latest_tok, "address", "left")
-            .select(
-                F.lit(address).alias("token"),
-                F.lit(at_block).cast("long").alias("block_number"),
-                "address",
-                F.coalesce(F.col("__b"), F.lit("0")).alias("balance"),
-                "group",
-            )
-            .localCheckpoint()
-        )
-        others_bal = (
-            self.store.read_range("balances", at_block, at_block)
-            .filter(F.col("token") != address)
-            .localCheckpoint()
-        )
-        # one version_hold across both table writes: balances AND
-        # total_balances publish as ONE commit — a snapshot taken midway
-        # must not see the new token's balances beside the old totals
-        with self.store.version_hold():
-            self.store.write_blocks(
-                {"balances": init_bal.unionByName(others_bal)},
-                block_range=(at_block, at_block),
-            )
-            if self.store.exists("latest_balances"):
-                dim = self.store.read("latest_balances")
-                self.store.update_dimension(
-                    "latest_balances",
-                    dim.filter(F.col("token") != address).unionByName(init_bal),
+            # the overwrite unit is the whole block, so other tokens' rows
+            # already stored at it are written back beside the new token's
+            tables["balances"] = init_bal.unionByName(
+                self.store.read_range("balances", at_block, at_block).filter(
+                    F.col("token") != address
                 )
-            # preserve other tokens' totals already written at this block:
-            # the sink's overwrite unit is the whole block range, so fold
-            # them in
-            to_write = backfill
+            )
+            tables["total_balances"] = backfill
             if self.store.exists("total_balances"):
-                others = (
-                    self.store.read_range("total_balances", at_block, at_block)
-                    .filter(F.col("token") != address)
-                    .localCheckpoint()
+                tables["total_balances"] = backfill.unionByName(
+                    self.store.read_range("total_balances", at_block, at_block).filter(
+                        F.col("token") != address
+                    )
                 )
-                to_write = backfill.unionByName(others)
-            self.store.write_blocks(
-                {"total_balances": to_write}, block_range=(at_block, at_block)
-            )
-        # keep the latest-state dim consistent: the new token's backfill rows
-        # are its only totals, so they are by definition its latest
-        if self.store.exists("latest_totals"):
-            dim = self.store.read("latest_totals")
-            self.store.update_dimension(
-                "latest_totals",
-                dim.filter(F.col("token") != address).unionByName(backfill),
-            )
+            # the new token's rows are by definition its latest state
+            for dim, rows in (("latest_balances", init_bal), ("latest_totals", backfill)):
+                if self.store.exists(dim):
+                    dims[dim] = (
+                        self.store.read(dim).filter(F.col("token") != address).unionByName(rows)
+                    )
+        self.store.write_blocks(tables, block_range=(at_block, at_block), dimensions=dims)
+        self.erc20 = self.store.read("erc20")
 
     # -- decision application ---------------------------------------------------
 
@@ -283,52 +293,30 @@ class BlockIngestor:
             )
             self._apply(d2, _gap_retry=True)
             return
-        replay = d.replay
-        if d.action == "reorg":
-            self.store.retract_blocks(d.retract_from, d.retract_to)
-            # reset subscriptions stamped on the retracted range back to
-            # "new" so the replay re-initializes them on the winning branch;
-            # their totals were deleted by the retraction
-            # (store/subscription/subscription.go:62-63,131-146)
-            stamped_in_range = self.subscriptions.filter(
-                (F.col("block_number") >= d.retract_from)
-                & (F.col("block_number") <= d.retract_to)
-            )
-            if stamped_in_range.limit(1).count() > 0:
-                self._persist_subscriptions(
-                    self.subscriptions.withColumn(
-                        "block_number",
-                        F.when(
-                            (F.col("block_number") >= d.retract_from)
-                            & (F.col("block_number") <= d.retract_to),
-                            F.lit(0).cast("long"),
-                        ).otherwise(F.col("block_number")),
-                    )
-                )
-            row = dict(d.reorg_row, created_at=datetime.now(timezone.utc).replace(tzinfo=None))
-            # pandas, not a list: a list ships as a PythonRDD and starts workers
-            self.store.append_dimension(
-                "reorgs",
-                self.spark.createDataFrame(pd.DataFrame([row], columns=REORGS.names), REORGS),
-            )
-        for i in range(0, len(replay), MAX_BLOCKS_PER_BATCH):
-            self._ingest(replay[i : i + MAX_BLOCKS_PER_BATCH])
+        # a winning fork's first chunk carries the retraction: one commit
+        # swaps the losing branch for the winning one
+        fork = d if d.action == "reorg" else None
+        chunks = [
+            d.replay[i : i + MAX_BLOCKS_PER_BATCH]
+            for i in range(0, len(d.replay), MAX_BLOCKS_PER_BATCH)
+        ]
+        if fork is not None and not chunks:
+            chunks = [[]]  # a fork with no replay still retracts
+        for chunk in chunks:
+            self._ingest(chunk, fork)
+            fork = None
 
     # -- subscription lifecycle (store/subscription/subscription.go:50,96-102;
     # store/transfer_processor.go:258-313) -------------------------------------
 
-    def _persist_subscriptions(self, subs: DataFrame) -> None:
-        subs = subs.localCheckpoint()
-        self.store.update_dimension("subscriptions", subs)
-        self.subscriptions = subs
-
-    def _init_new_subscriptions(self, batch_deltas: DataFrame, last_n: int):
-        """Initialize NEW subscriptions (block_number == 0): write an opening
-        balance row per (token, address) at the batch head, stamp the
-        subscription with that block, and return the opening rows so the
-        caller folds them into snapshots and group totals — the reference's
-        per-block `insertNewSubscriptions` (transfer_processor.go:258-313)
-        at batch granularity.
+    def _init_new_subscriptions(
+        self, new: pd.DataFrame, batch_deltas: DataFrame, first_n: int, last_n: int
+    ) -> DataFrame:
+        """Opening balance rows of the NEW subscriptions ``new``
+        (block_number == 0) at the batch head, which the caller folds into
+        snapshots and group totals and stamps the subscriptions with — the
+        reference's per-block `insertNewSubscriptions`
+        (transfer_processor.go:258-313) at batch granularity.
 
         Opening balance: the balancer seam (chain truth over RPC at the
         batch-head block, client/balancer.go:43-116) is the default path —
@@ -339,32 +327,14 @@ class BlockIngestor:
         this batch's deltas (O(stored history) scan; the documented
         no-node-available fallback).
 
-        Guard: a new subscription must have NO stored balance rows
+        Guard, evaluated inside the checkpointed plan: a new subscription
+        must have NO stored balance rows below the replay point
         (ErrHasPrevBalance, transfer_processor.go:295-301) — its address was
-        never tracked, so rows imply a corrupted lifecycle.
-
-        Returns ``None`` when there are no new subscriptions (the common
-        case; one tiny driver-side check per batch)."""
-        new_rows = self.subscriptions.filter(F.col("block_number") == 0).collect()
-        if not new_rows:
-            return None
-        addrs = [r["address"] for r in new_rows]
-        groups = {r["address"]: r["group"] for r in new_rows}
-
-        if self.store.exists("balances"):
-            prev = (
-                self.store.read("balances")
-                .filter(F.col("address").isin(addrs))
-                .limit(1)
-                .count()
-            )
-            if prev:
-                raise ValueError(
-                    "has-prev-balance: a NEW subscription (block_number=0) "
-                    "already has stored balance rows (reference "
-                    "ErrHasPrevBalance, store/transfer_processor.go:295-301)"
-                )
-
+        never tracked, so rows imply a corrupted lifecycle. Rows at or above
+        ``first_n`` belong to the branch this batch's commit overwrites (a
+        reset subscription's retracted openings)."""
+        addrs = [str(a) for a in new["address"]]
+        groups = {str(a): int(g) for a, g in zip(new["address"], new["group"])}
         tokens = [ETH_TOKEN] + [
             r["address"] for r in self.erc20.select("address").distinct().collect()
         ]
@@ -382,19 +352,21 @@ class BlockIngestor:
 
             opening = fetch_balances(reqs, self.balancer)
         else:
-            # ledger-derived: Σ stored deltas + Σ batch deltas per key
+            # ledger-derived: Σ stored deltas below the replay point (rows
+            # above it are overwritten by this commit) + Σ batch deltas
             parts = batch_deltas.select("token", "address", "delta")
+            below = first_n - 1
             if self.store.exists("transfers"):
                 stored_fees = (
                     X.tx_fees(
-                        self.store.read("transactions"),
-                        self.store.read("transaction_receipts"),
+                        self.store.read_range("transactions", None, below),
+                        self.store.read_range("transaction_receipts", None, below),
                     )
                     if self.store.exists("transactions")
                     else None
                 )
                 stored_d = X.ledger_deltas(
-                    self.store.read("transfers"), stored_fees
+                    self.store.read_range("transfers", None, below), stored_fees
                 ).select("token", "address", "delta")
                 parts = parts.unionByName(stored_d)
             parts = parts.join(F.broadcast(addr_df), "address", "left_semi")
@@ -424,50 +396,35 @@ class BlockIngestor:
                 .withColumn("balance", F.coalesce(F.col("balance"), F.lit("0")))
             )
 
+        balance = F.col("balance")
+        if self.store.exists("balances"):
+            prev = (
+                self.store.read_range("balances", None, first_n - 1)
+                .join(F.broadcast(addr_df), "address", "left_semi")
+                .select("address", F.lit(True).alias("__prev"))
+                .distinct()
+            )
+            opening = opening.join(prev, "address", "left")
+            balance = F.when(
+                F.col("__prev").isNotNull(),
+                F.raise_error(
+                    F.lit(
+                        "has-prev-balance: a NEW subscription (block_number=0) "
+                        "already has stored balance rows (reference "
+                        "ErrHasPrevBalance, store/transfer_processor.go:295-301)"
+                    )
+                ),
+            ).otherwise(balance)
         group_map = F.create_map(
             *[F.lit(x) for kv in groups.items() for x in kv]
         )
-        init = opening.select(
+        return opening.select(
             "token",
             F.lit(last_n).cast("long").alias("block_number"),
             "address",
-            "balance",
+            balance.alias("balance"),
             group_map[F.col("address")].cast("long").alias("group"),
         ).localCheckpoint()
-
-        stamped = self.subscriptions.withColumn(
-            "block_number",
-            F.when(F.col("block_number") == 0, F.lit(last_n).cast("long")).otherwise(
-                F.col("block_number")
-            ),
-        )
-        self._persist_subscriptions(stamped)
-        return init
-
-    def _guard_old_subscriptions(self, deltas: DataFrame, old_subs: DataFrame, seed_bal) -> None:
-        """ErrMissingPrevBalance (transfer_processor.go:303-310): an OLD
-        subscription (block_number > 0) whose (token, address) has activity
-        this batch must have a prior balance row — it was written at
-        initialization (new-sub path) or token backfill (register_token)."""
-        touched = (
-            deltas.select("token", "address")
-            .distinct()
-            .join(F.broadcast(old_subs.select("address")), "address", "left_semi")
-        )
-        if seed_bal is None:
-            missing = touched
-        else:
-            missing = touched.join(
-                seed_bal.select("token", "address"), ["token", "address"], "left_anti"
-            )
-        row = missing.limit(1).collect()
-        if row:
-            raise ValueError(
-                "missing-prev-balance: old subscription "
-                f"(token={row[0]['token']}, address={row[0]['address']}) has "
-                "activity but no prior balance row (reference "
-                "ErrMissingPrevBalance, store/transfer_processor.go:303-310)"
-            )
 
     # -- latest-state dimensions (O(batch) seeding, not O(table)) --------------
 
@@ -475,52 +432,35 @@ class BlockIngestor:
         """Seed frame for the carry-forward aggregates: one row per key with
         the latest value strictly before ``first_n``.
 
-        Steady state reads the maintained dimension — O(#keys), independent
-        of chain length. Self-healing paths:
-
-        - dim behind the store (crash between batch commit and dim update):
-          top-up from a stats-pruned source read of just the gap;
-        - dim ahead of the replay position (a retraction moved the store
-          below it — reorg): the dim holds retracted state, rebuild from the
-          source as-of ``first_n - 1`` (O(table), reorg-only);
-        - no dim yet: same full read (first batch only).
-
-        Result is reduced to latest-per-key and pinned (localCheckpoint) so
-        downstream writes can safely overwrite the files it was read from.
-        """
+        The dimension publishes in the same commit as the batch it reflects,
+        so it is never behind the stored head. Steady state reads it —
+        O(#keys), independent of chain length; its newest block comes from a
+        driver-side read of its ``block_number`` column (no Spark job). A
+        dimension holding rows at or after ``first_n`` (a winning fork, or a
+        resent batch below the head) reflects state this batch overwrites:
+        the seed is rebuilt from the source table as-of ``first_n - 1``
+        (O(table), pinned with ``localCheckpoint``), as it is before the
+        first batch writes the dimension."""
+        if self.store.exists(dim_table):
+            dim_max = self.store.lookup(dim_table, columns=["block_number"])["block_number"].max()
+            if not pd.isna(dim_max) and dim_max <= first_n - 1:
+                return self.store.read(dim_table)
+        if not self.store.exists(source_table):
+            return None
         w = W.partitionBy(*keys).orderBy(F.desc("block_number"))
-
-        def _reduce(df):
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-
-        have_src = self.store.exists(source_table)
-        full = (
-            _reduce(self.store.read_range(source_table, None, first_n - 1))
-            if have_src
-            else None
+        return (
+            self.store.read_range(source_table, None, first_n - 1)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .localCheckpoint()
         )
-        if not self.store.exists(dim_table):
-            return full.localCheckpoint() if full is not None else None
-        dim = self.store.read(dim_table)
-        dim_max = dim.agg(F.max("block_number").alias("m")).collect()[0]["m"]
-        if dim_max is None:
-            return full.localCheckpoint() if full is not None else None
-        if dim_max > first_n - 1:  # retracted state in the dim → rebuild
-            return full.localCheckpoint() if full is not None else None
-        if have_src and dim_max < first_n - 1:  # stale dim → bounded top-up
-            topup = self.store.read_range(source_table, dim_max + 1, first_n - 1)
-            dim = _reduce(dim.unionByName(topup))
-        return dim.localCheckpoint()
 
     def _merged_latest_dim(self, keys: list[str], seed, batch_df) -> DataFrame:
         """Fold a batch's output into the latest-state dimension: batch keys
         take their newest row, untouched keys keep the seed's row. ``seed``
-        is the pinned frame `_latest_state` returned — already consistent
-        as-of the batch start, so the merge is O(#keys + batch)."""
+        is the frame `_latest_state` returned — consistent as-of the batch
+        start, so the merge is O(#keys + batch)."""
         w = W.partitionBy(*keys).orderBy(F.desc("block_number"))
         batch_latest = (
             batch_df.withColumn("__rn", F.row_number().over(w))
@@ -533,17 +473,131 @@ class BlockIngestor:
             ).unionByName(batch_latest)
         return batch_latest
 
-    def _write_latest_dim(self, dim_table: str, keys: list[str], seed, batch_df) -> None:
-        self.store.update_dimension(
-            dim_table, self._merged_latest_dim(keys, seed, batch_df)
-        )
-
     # -- the distributed pipeline for one chunk ---------------------------------
 
-    def _ingest(self, branch: list[dict]) -> None:
-        if not branch:
-            return
-        first_n = branch[0]["number"]
+    def _ledger(self, events, fees, subs, new, seed_bal, seed_tot, first_n, last_n):
+        """Balance snapshots and group totals of one chunk, each pinned.
+        The fast path and the subscription guards fail the checkpoint job
+        with a named ``raise_error`` instead of running probe jobs first:
+        a fast-path overflow recomputes the chunk on the exact path, a
+        guard becomes the ValueError the reference raises."""
+        old_subs = subs.filter(F.col("block_number") > 0)
+        for exact in (False, True):
+            try:
+                # deltas feed the openings, the snapshots and the rollup
+                deltas = X.ledger_deltas(events, fees, exact=exact).localCheckpoint()
+                init_rows = (
+                    self._init_new_subscriptions(new, deltas, first_n, last_n)
+                    if len(new)
+                    else None
+                )
+                # old subs must already be tracked (missing-prev guard); a
+                # new sub's opening balance already prices in this batch
+                snapshots = X.balance_snapshots(
+                    deltas, old_subs, seed_bal, exact=exact, require_seed=True
+                )
+                subs_g = F.broadcast(old_subs.select("address", "group"))
+                snap_deltas = deltas.join(subs_g, "address")
+                if init_rows is not None:
+                    snapshots = snapshots.unionByName(init_rows)
+                    # a new member's opening wealth enters its group's total
+                    # at the stamp block (the reference's
+                    # balance-diff-from-nothing)
+                    snap_deltas = snap_deltas.unionByName(
+                        init_rows.filter(F.col("balance") != "0").select(
+                            "token",
+                            "block_number",
+                            "address",
+                            F.col("balance").alias("delta"),
+                            "group",
+                        )
+                    )
+                prev_totals = (
+                    seed_tot.select("token", "group", "balance")
+                    if seed_tot is not None
+                    else None
+                )
+                totals = X.total_balance_rollup(
+                    snap_deltas, fees, events, subs, prev_totals, exact=exact
+                )
+                return snapshots.localCheckpoint(), totals.localCheckpoint()
+            except SparkRuntimeException as e:
+                msg = X.raised_message(e)
+                if msg is None:
+                    raise
+                if exact or not msg.startswith(X.FAST_PATH_OVERFLOW):
+                    raise ValueError(msg) from e
+
+    def _ingest(self, branch: list[dict], fork: ReorgDecision | None = None) -> None:
+        """Ingest one chunk of at most ``MAX_BLOCKS_PER_BATCH`` headers in
+        ONE store commit. ``fork``: a winning fork whose retraction, reorg
+        audit row and subscription reset ride in this commit (its first
+        chunk; an empty chunk publishes just those)."""
+        subs_rows = self._subscription_rows()
+        changed = False
+        dims: dict[str, DataFrame] = {}
+        appends: dict[str, DataFrame] = {}
+        through = None
+        if fork is not None:
+            through = fork.retract_to
+            row = dict(fork.reorg_row, created_at=datetime.now(timezone.utc).replace(tzinfo=None))
+            # pandas, not a list: a list ships as a PythonRDD and starts workers
+            appends["reorgs"] = self.spark.createDataFrame(
+                pd.DataFrame([row], columns=REORGS.names), REORGS
+            )
+            # subscriptions stamped on the retracted range go back to "new",
+            # so this chunk re-initializes them on the winning branch; their
+            # opening rows go with the retraction
+            # (store/subscription/subscription.go:62-63,131-146)
+            reset = subs_rows["block_number"].between(fork.retract_from, fork.retract_to)
+            if reset.any():
+                subs_rows = subs_rows.assign(block_number=subs_rows["block_number"].mask(reset, 0))
+                changed = True
+        schema = self.subscriptions.schema
+        subs = self.spark.createDataFrame(subs_rows, schema) if changed else self.subscriptions
+        if branch:
+            block_range = (int(branch[0]["number"]), int(branch[-1]["number"]))
+            new = subs_rows["block_number"] == 0
+            tables, latest = self._chunk_tables(branch, subs, subs_rows[new])
+            dims.update(latest)
+            if new.any():
+                subs_rows = subs_rows.assign(
+                    block_number=subs_rows["block_number"].mask(new, block_range[1])
+                )
+                changed = True
+        else:
+            block_range = (fork.retract_from, fork.retract_to)
+            tables = {}
+        if changed:
+            subs = self.spark.createDataFrame(subs_rows, schema)
+            dims["subscriptions"] = subs
+        # CRASH PROTOCOL: the chunk's eight tables, the latest-state
+        # dimensions and, on a winning fork, the retraction of the losing
+        # branch, the reorgs row and the subscription stamps all publish in
+        # ONE commit (their files stage concurrently, but none is visible
+        # until the single log entry lands), so a crash leaves the whole
+        # chunk or none of it. block_headers is the boundary marker: it
+        # moves the stored head, which decides whether a resent batch is a
+        # duplicate. A crash before the commit leaves the old head and the
+        # old branch; the resend takes the same path again (append, or the
+        # same fork) and commits afresh, and the crashed attempt's staged
+        # files are orphans vacuum deletes.
+        self.store.write_blocks(
+            tables,
+            block_range=block_range,
+            through=through,
+            dimensions=dims,
+            appends=appends,
+        )
+        if changed:
+            self._subs, self._subs_rows = subs, subs_rows
+
+    def _chunk_tables(self, branch, subs, new) -> tuple[dict, dict]:
+        """The chunk's eight block-keyed tables and its two latest-state
+        dimensions. ``subs``: the subscriptions as of the chunk start (a
+        fork's reset applied); ``new``: their rows still to initialize."""
+        first_n = int(branch[0]["number"])
+        last_n = int(branch[-1]["number"])
         raw = self.source.raw_tables_for([h["hash"] for h in branch])
         txs, receipts, logs = (
             raw["transactions"],
@@ -551,9 +605,9 @@ class BlockIngestor:
             raw["receipt_logs"],
         )
         # headers, events and fees each feed several actions (the deltas
-        # probe and checkpoint, the totals rollup, the table writes) —
-        # materialize each once (micro-batch sized) so the reward join and
-        # the ABI decode are not recomputed per consumer
+        # checkpoint, the totals rollup, the table writes) — materialize
+        # each once (micro-batch sized) so the reward join and the ABI
+        # decode are not recomputed per consumer
         headers = X.compute_header_rewards(
             raw["block_headers_raw"], txs, receipts
         ).localCheckpoint()
@@ -572,96 +626,34 @@ class BlockIngestor:
             .unionByName(X.reward_events(headers))
         ).localCheckpoint()
         fees = X.tx_fees(txs, receipts).localCheckpoint()
-        # deltas feed both the snapshot and rollup branches — materialize
-        # once instead of re-running the event→delta aggregation (and its
-        # fast-path probe) per consumer
-        deltas = X.ledger_deltas(events, fees).localCheckpoint()
-
-        last_n = int(branch[-1]["number"])
-        # subscription lifecycle: new subs get opening rows + a stamp, old
-        # subs must already be tracked (guards mirror the reference's
-        # has-prev/missing-prev errors); snapshots/rollups run over OLD subs
-        # only — a new sub's opening balance already prices in this batch
-        init_rows = self._init_new_subscriptions(deltas, last_n)
-        old_subs = self.subscriptions.filter(F.col("block_number") > 0)
-        if init_rows is not None:
-            # exclude the just-stamped subs from the old path this batch
-            old_subs = old_subs.join(
-                init_rows.select("address").distinct(), "address", "left_anti"
-            ).localCheckpoint()
 
         seed_bal = self._latest_state(
             "latest_balances", "balances", ["token", "address"], first_n
         )
-        self._guard_old_subscriptions(deltas, old_subs, seed_bal)
-        # pinned: the dim update after the write re-uses these rows, and the
-        # write invalidates the files their lineage read
-        snapshots = X.balance_snapshots(deltas, old_subs, seed_bal)
-        if init_rows is not None:
-            snapshots = snapshots.unionByName(init_rows)
-        snapshots = snapshots.localCheckpoint()
-
-        subs_g = F.broadcast(old_subs.select("address", "group"))
-        snap_deltas = deltas.join(subs_g, "address")
-        if init_rows is not None:
-            # a new member's opening wealth enters its group's total at the
-            # stamp block (the reference's balance-diff-from-nothing)
-            snap_deltas = snap_deltas.unionByName(
-                init_rows.filter(F.col("balance") != "0").select(
-                    "token",
-                    "block_number",
-                    "address",
-                    F.col("balance").alias("delta"),
-                    "group",
-                )
-            )
         seed_tot = self._latest_state(
             "latest_totals", "total_balances", ["token", "group"], first_n
         )
-        prev_totals = (
-            seed_tot.select("token", "group", "balance") if seed_tot is not None else None
+        snapshots, totals = self._ledger(
+            events, fees, subs, new, seed_bal, seed_tot, first_n, last_n
         )
-        totals = X.total_balance_rollup(
-            snap_deltas, fees, events, self.subscriptions, prev_totals
-        ).localCheckpoint()
-        td = X.total_difficulty(headers, seed_td=str(self._td_at(first_n - 1)))
-
-        # CRASH PROTOCOL: all eight tables publish in ONE commit (their
-        # files stage concurrently, but none is visible until the single
-        # log entry lands), so a crash leaves the whole batch or none of it.
-        # block_headers is the boundary marker (``has_marker``): it advances
-        # the stored head, which decides whether a resent batch is a
-        # duplicate. A crash before the commit leaves the head unadvanced,
-        # the resend takes the append path and commits the batch afresh, and
-        # the crashed attempt's staged files are orphans vacuum deletes.
-        self.store.write_blocks(
-            block_range=(int(first_n), int(branch[-1]["number"])),
-            tables={
-                "transactions": txs,
-                "transaction_receipts": receipts,
-                "receipt_logs": logs,
-                "transfers": events,
-                "balances": snapshots,
-                "total_balances": totals,
-                "total_difficulty": td,
-                "block_headers": headers.select(*_HEADER_COLS),
-            }
-        )
-        # maintain the latest-state dims AFTER the commit marker: a crash
-        # here leaves them one batch behind, which `_latest_state` heals with
-        # a stats-pruned top-up on the next batch. One commit for both dims
-        # (store.update_dimensions) — a full write-job latency off every
-        # micro-batch vs two sequential updates
-        self.store.update_dimensions(
-            {
-                "latest_balances": self._merged_latest_dim(
-                    ["token", "address"], seed_bal, snapshots
-                ),
-                "latest_totals": self._merged_latest_dim(
-                    ["token", "group"], seed_tot, totals
-                ),
-            }
-        )
+        latest = {
+            "latest_balances": self._merged_latest_dim(
+                ["token", "address"], seed_bal, snapshots
+            ),
+            "latest_totals": self._merged_latest_dim(["token", "group"], seed_tot, totals),
+        }
+        return {
+            "transactions": txs,
+            "transaction_receipts": receipts,
+            "receipt_logs": logs,
+            "transfers": events,
+            "balances": snapshots,
+            "total_balances": totals,
+            "total_difficulty": X.total_difficulty(
+                self.spark, branch, self._td_at(first_n - 1)
+            ),
+            "block_headers": headers.select(*_HEADER_COLS),
+        }, latest
 
 
 def start_stream(

@@ -10,10 +10,11 @@ replay the new branch — plus a ``reorgs`` audit row
 
 This is deliberately driver-side logic over point lookups, exactly like the
 reference: the walk touches O(reorg depth) headers (single-digit on real
-chains), while the *retraction* — the data-heavy part — is
-:meth:`~eth_indexer_spark.sinks.logstore.LogStore.retract_blocks`: one log
-commit that drops the files inside the range and rewrites only the boundary
-files' survivors, as a distributed job.
+chains), while the *retraction* — the data-heavy part — rides in the first
+replay chunk's commit
+(:meth:`~eth_indexer_spark.sinks.logstore.LogStore.write_blocks` with
+``through``): it drops the files inside the range and rewrites only the
+boundary files' survivors, as distributed jobs.
 Headers are ~200 bytes; collecting a 50-block micro-batch of them to the
 driver is free at any cluster scale.
 """

@@ -1,5 +1,6 @@
 """The ingest batch runs in the JVM: a bootstrap batch (new subscriptions,
-ledger-derived openings) and a winning fork start no Python worker.
+ledger-derived openings), a winning fork and a read of an empty block range
+start no Python worker, and the fork runs a bounded number of Spark jobs.
 
 A Python worker (``pyspark.daemon``) is a child process of the driver JVM.
 Starting it is a cold import of pandas and pyarrow that every batch would
@@ -7,6 +8,9 @@ pay on a fresh worker, so the batch path keeps every step in the JVM:
 the ABI decode is a JVM expression and driver-built frames cross as
 Arrow. The scenario runs in a SUBPROCESS with its own fresh session: the
 suite's shared session has long since started workers for other tests.
+
+The fork's job count (its own job group) is exact run to run, so a driver
+collect or probe job put back into the batch path fails this test.
 """
 
 from __future__ import annotations
@@ -74,8 +78,15 @@ ing = BlockIngestor(
     spark.createDataFrame(chain.world.erc20(), RAW_SCHEMAS["erc20"]),
     balancer=None,
 )
-actions = [ing.process_headers(s.incoming) for s in steps + [fork]]
+actions = [ing.process_headers(s.incoming) for s in steps]
+sc = spark.sparkContext
+sc.setJobGroup("jvm-batch-fork", "the winning fork")
+actions.append(ing.process_headers(fork.incoming))
+sc.setLocalProperty("spark.jobGroup.id", None)
 assert actions == ["bootstrap", "append", "reorg"], actions
+fork_jobs = len(sc.statusTracker().getJobIdsForGroup("jvm-batch-fork"))
+assert fork_jobs <= MAX_FORK_JOBS, f"the fork ran {fork_jobs} Spark jobs (at most {MAX_FORK_JOBS})"
+assert store.read_range("block_headers", 10**6, 10**6 + 5).collect() == []
 
 check_proc = os.path.isdir(f"/proc/{jvm_pid}/task")
 workers = python_workers() if check_proc else []
@@ -107,13 +118,16 @@ if check_proc:
     spark.range(1).select(F.udf(lambda x: x, "long")("id")).collect()
     assert python_workers(), "no pyspark.daemon found after a Python UDF ran"
 spark.stop()
-print("JB-OK", "proc-checked" if check_proc else "proc-skipped")
+print("JB-OK", "proc-checked" if check_proc else "proc-skipped", "fork-jobs", fork_jobs)
 """
+# Spark jobs of the scenario's winning fork (one chunk: retraction, reorgs
+# row, batch and latest-state dimensions in one commit), as measured
+MAX_FORK_JOBS = 67
 
 
 def test_bootstrap_and_fork_batches_start_no_python_worker(tmp_path):
     script = tmp_path / "jvm_batch_scenario.py"
-    script.write_text(_SCENARIO)
+    script.write_text(f"MAX_FORK_JOBS = {MAX_FORK_JOBS}\n" + _SCENARIO)
     env = dict(os.environ, JB_REPO=REPO, JB_STORE=str(tmp_path / "store"))
     proc = subprocess.run(
         [sys.executable, str(script)],

@@ -8,8 +8,8 @@ optimistic commit-log concurrency (the reference's swallowed-duplicate-key
 tolerance, common/errors.go:26-57).
 
 Coverage: overwrite-by-range, retraction, stats pruning, dimension swaps,
-delta exactly-once, holds (nothing published until clean exit, even
-rewinds), crash/replay convergence, OCC between writers and processes,
+delta exactly-once, a fork's retraction and first chunk in one commit,
+crash/replay convergence, OCC between writers and processes,
 optimize/vacuum and the retention contract, and a randomized model sweep.
 The table-key contract cases shared with the engine live in
 tests/test_sink.py.
@@ -256,37 +256,105 @@ def test_dimension_update_and_append(spark, lstore):
     assert len(_commit_versions(lstore)) == len(before) + 1
 
 
-def test_version_hold_publishes_nothing_until_clean_exit(spark, tmp_path):
-    """A hold publishes as ONE commit: a second reader handle (another
-    process's view) sees no effect — not even rewinds — until the single
-    commit at clean exit; an aborted hold publishes nothing at all
-    (nothing to repair)."""
-    root = str(tmp_path / "hold")
+def test_write_through_publishes_retraction_and_batch_as_one_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A winning fork's first chunk: ``write_blocks(through=...)`` removes
+    the losing branch [lo, through] from every block-keyed table (tables
+    the chunk does not carry too), lands the chunk, replaces a dimension
+    and appends an audit row — ONE log version, with the head moved to the
+    chunk top, below the old head. Until then a second handle and a pinned
+    snapshot read the old branch; a staging failure publishes nothing."""
+    root = str(tmp_path / "fork")
     owner = LogStore(spark, root)
     other = LogStore(spark, root)
-    owner.write_blocks({"block_headers": headers_df(spark, range(100, 110))})
+    owner.write_blocks(_three_tables(spark, range(100, 110)))
+    dim = lambda addr: spark.createDataFrame(  # noqa: E731
+        [(addr, "Tok", 18)], "address string, name string, decimals long"
+    )
+    owner.update_dimension("erc20", dim("0xaa"))
+    pinned = other.snapshot()
+    before = _commit_versions(owner)
 
-    with owner.version_hold():
+    def fork_chunk():
         owner.write_blocks(
-            {"block_headers": headers_df(spark, [105])}, block_range=(105, 109)
+            {
+                "block_headers": headers_df(spark, range(105, 108)),
+                "balances": balances_df(spark, range(105, 108), token="BBBB"),
+            },
+            block_range=(105, 107),
+            through=109,
+            dimensions={"erc20": dim("0xbb")},
+            appends={"reorgs": spark.createDataFrame(
+                [(105, "h105", 109, "h109")],
+                "`from` long, from_hash string, `to` long, to_hash string",
+            )},
         )
-        # read-your-own-writes: the owner sees its buffered overwrite...
-        assert _numbers(owner) == list(range(100, 106))
-        # ...while the outside world still sees the pre-hold state
-        assert _numbers(other) == list(range(100, 110))
-        assert other.read_version() == 109
-    # clean exit: one commit, everything lands at once
-    assert _numbers(other) == list(range(100, 106))
 
-    # aborted hold: nothing published, owner state rolls back to committed
-    with pytest.raises(RuntimeError, match="boom"):
-        with owner.version_hold():
-            owner.write_blocks(
-                {"block_headers": headers_df(spark, [103])}, block_range=(103, 105)
-            )
-            raise RuntimeError("boom")
-    assert _numbers(owner) == list(range(100, 106))
-    assert _numbers(other) == list(range(100, 106))
+    real = LogStore._stage_files
+
+    def fail_balances(self, table, df):
+        if table == "balances":
+            raise OSError("simulated staging failure")
+        return real(self, table, df)
+
+    monkeypatch.setattr(LogStore, "_stage_files", fail_balances)
+    with pytest.raises(OSError, match="simulated staging failure"):
+        fork_chunk()
+    monkeypatch.undo()
+    assert _commit_versions(owner) == before
+    assert _numbers(other) == list(range(100, 110))
+    assert other.read_version() == 109
+
+    fork_chunk()
+    assert len(_commit_versions(owner)) == len(before) + 1
+    assert _numbers(other) == list(range(100, 108))
+    assert other.read_version() == 107  # the chunk top, not max(107, 109)
+    # the retraction reached every table, with or without rows in the chunk
+    assert _numbers(other, "transfers", "block_number") == list(range(100, 105))
+    assert {
+        (r["token"], r["block_number"]) for r in other.read("balances").collect()
+    } == {("AAAA", n) for n in range(100, 105)} | {("BBBB", n) for n in range(105, 108)}
+    assert [r["address"] for r in other.read("erc20").collect()] == ["0xbb"]
+    assert other.read("reorgs").count() == 1
+    # the pinned reader never sees the head step back
+    assert sorted(r["number"] for r in pinned.read("block_headers").collect()) == list(
+        range(100, 110)
+    )
+    assert pinned.read_version() == 109
+
+
+def test_write_blocks_append_reruns_on_concurrent_dimension_change(spark, tmp_path):
+    """The read-modify-write dimension of a batch commit (``appends``)
+    keeps append_dimension's read-set check: a writer that changes the
+    dimension between the merge and the publish forces the merge to rerun,
+    so both rows land and the batch lands once."""
+    root = str(tmp_path / "shared")
+    a = LogStore(spark, root)
+    b = LogStore(spark, root)
+    dim = lambda addr: spark.createDataFrame(  # noqa: E731
+        [(addr, "Tok", 18)], "address string, name string, decimals long"
+    )
+    a.update_dimension("erc20", dim("0xaa"))
+    original = a._try_publish
+    fired = {"n": 0}
+
+    def racing_publish(version, commit):
+        if fired["n"] == 0:
+            fired["n"] += 1
+            b.append_dimension("erc20", dim("0xbb"))
+        return original(version, commit)
+
+    a._try_publish = racing_publish
+    a.write_blocks(
+        {"block_headers": headers_df(spark, range(100, 105))},
+        appends={"erc20": dim("0xcc")},
+    )
+    a._try_publish = original
+    assert fired["n"] == 1
+    for store in (a, b):
+        assert {r["address"] for r in store.read("erc20").collect()} == {"0xaa", "0xbb", "0xcc"}
+        assert _numbers(store) == list(range(100, 105))
 
 
 def test_crash_before_publish_is_invisible_and_replay_converges(
@@ -510,56 +578,27 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
 
 class LogStoreModel:
     """Sequential model of the LogStore visibility contract for the
-    randomized sweep: overwrite/delete/boundary semantics, hold semantics
-    strictly deferred (nothing — not even rewinds — visible outside until
-    clean exit), snapshots immutable forever."""
+    randomized sweep: overwrite/delete/boundary semantics, a fork chunk's
+    retraction and write as one step, snapshots immutable forever."""
 
     def __init__(self):
         self.blocks: set[int] = set()
         self.version: int | None = None
-        self.hold = False
-        self.staged: list[tuple[str, int, int]] = []
 
-    def _apply(self, op: str, lo: int, hi: int) -> None:
-        if op == "write":
-            pre = self.version
-            self.blocks -= set(range(lo, hi + 1))
-            self.blocks |= set(range(lo, hi + 1))
-            self.version = hi if pre is None else max(hi, pre)
-        else:  # delete
-            if self.version is not None and self.version >= lo:
-                self.version = lo - 1
-            self.blocks -= set(range(lo, hi + 1))
-
-    def write(self, lo, hi):
-        if self.hold:
-            self.staged.append(("write", lo, hi))
-        else:
-            self._apply("write", lo, hi)
+    def write(self, lo, hi, through=None):
+        pre = self.version
+        if through is not None:
+            self.blocks -= set(range(lo, max(hi, through) + 1))
+            if pre is not None and pre >= lo:
+                pre = lo - 1
+        self.blocks -= set(range(lo, hi + 1))
+        self.blocks |= set(range(lo, hi + 1))
+        self.version = hi if pre is None else max(hi, pre)
 
     def delete(self, lo, hi):
-        if self.hold:
-            self.staged.append(("delete", lo, hi))
-        else:
-            self._apply("delete", lo, hi)
-
-    def own_view(self) -> "LogStoreModel":
-        """What the OWNING store reads mid-hold (committed + staged)."""
-        m = LogStoreModel()
-        m.blocks, m.version = set(self.blocks), self.version
-        for op, lo, hi in self.staged:
-            m._apply(op, lo, hi)
-        return m
-
-    def hold_enter(self):
-        self.hold = True
-
-    def hold_exit(self, clean: bool):
-        self.hold = False
-        staged, self.staged = self.staged, []
-        if clean:
-            for op, lo, hi in staged:
-                self._apply(op, lo, hi)
+        if self.version is not None and self.version >= lo:
+            self.version = lo - 1
+        self.blocks -= set(range(lo, hi + 1))
 
 
 @pytest.mark.parametrize("seed", [7, 31])
@@ -568,17 +607,16 @@ def test_logstore_protocol_matches_model_under_random_interleavings(
 ):
     """The randomized protocol sweep over the commit-log store: visible
     rows and the published boundary via a SECOND handle track the model
-    after every op; a snapshot pinned mid-sequence returns its pin-time
-    rows FOREVER — across any number of later writes, deletes and holds —
-    and never raises (prevention, not detection)."""
+    after every op (writes, retractions, and fork chunks that retract
+    through a block above their top); a snapshot pinned mid-sequence
+    returns its pin-time rows FOREVER and never raises (prevention, not
+    detection)."""
     rng = random.Random(seed)
     root = str(tmp_path / "m")
     owner = LogStore(spark, root)
     reader = LogStore(spark, root)
     model = LogStoreModel()
     pinned = None  # (snapshot, frozen block set)
-    in_hold = False
-    hold_cm = None
 
     def visible(store):
         if not store.exists("block_headers"):
@@ -586,41 +624,29 @@ def test_logstore_protocol_matches_model_under_random_interleavings(
         return {r["number"] for r in store.read("block_headers").collect()}
 
     for step in range(14):
-        op = rng.choice(["write", "write", "delete", "hold", "snap"])
-        if op == "write":
+        op = rng.choice(["write", "write", "delete", "fork", "snap"])
+        if op in ("write", "fork"):
             lo = rng.randrange(100, 140)
             hi = lo + rng.randrange(0, 8)
+            through = lo + rng.randrange(0, 12) if op == "fork" else None
             owner.write_blocks(
                 {"block_headers": headers_df(spark, range(lo, hi + 1))},
                 block_range=(lo, hi),
+                through=through,
             )
-            model.write(lo, hi)
+            model.write(lo, hi, through)
         elif op == "delete":
             lo = rng.randrange(100, 140)
             hi = lo + rng.randrange(0, 10)
             owner.retract_blocks(lo, hi, tables=("block_headers",))
             model.delete(lo, hi)
-        elif op == "hold" and not in_hold:
-            hold_cm = owner.version_hold()
-            hold_cm.__enter__()
-            model.hold_enter()
-            in_hold = True
-        elif op == "hold" and in_hold:
-            hold_cm.__exit__(None, None, None)
-            model.hold_exit(clean=True)
-            in_hold = False
-        elif op == "snap" and not in_hold and pinned is None:
+        elif op == "snap" and pinned is None:
             snap = owner.snapshot()
             pinned = (snap, set(model.blocks))
 
-        # OUTSIDE view tracks the committed model exactly
-        assert visible(reader) == (model.blocks if not in_hold else model.blocks), (
-            f"step {step} external visibility diverged"
-        )
+        assert visible(reader) == model.blocks, f"step {step} external visibility diverged"
         assert reader.read_version() == model.version
-        # OWNER view includes its own staged writes mid-hold
-        own = model.own_view() if in_hold else model
-        assert visible(owner) == own.blocks, f"step {step} owner view diverged"
+        assert visible(owner) == model.blocks, f"step {step} owner view diverged"
         # the pinned snapshot never moves and never raises
         if pinned is not None:
             snap, frozen = pinned
@@ -631,10 +657,6 @@ def test_logstore_protocol_matches_model_under_random_interleavings(
                 else set()
             )
             assert got == frozen, f"step {step} snapshot drifted"
-    if in_hold:
-        hold_cm.__exit__(None, None, None)
-        model.hold_exit(clean=True)
-        assert visible(reader) == model.blocks
 
 
 def test_append_dimension_concurrent_writer_no_lost_update(spark, tmp_path):
@@ -667,83 +689,6 @@ def test_append_dimension_concurrent_writer_no_lost_update(spark, tmp_path):
     for store in (a, b):
         got = {r["address"] for r in store.read("erc20").collect()}
         assert got == {"0xaa", "0xbb", "0xcc"}, got
-
-
-def test_version_hold_publish_conflict_detected(spark, tmp_path):
-    """A hold's buffered remove/merge sets are computed at buffer time; if
-    ANOTHER writer touches one of the same tables before the hold's single
-    publish, landing them would lose or duplicate the winner's rows. The
-    publish must raise ConcurrentWriteConflict (the Delta paper's §3.3
-    check) — and replaying the batch against current state converges.
-    Writes to UNRELATED tables must NOT trip it."""
-    from eth_indexer_spark.sinks.logstore import ConcurrentWriteConflict
-
-    root = str(tmp_path / "shared")
-    a = LogStore(spark, root)
-    b = LogStore(spark, root)
-    a.write_blocks({"block_headers": headers_df(spark, range(100, 105))})
-
-    with pytest.raises(ConcurrentWriteConflict):
-        with a.version_hold():
-            a.write_blocks(
-                {"block_headers": headers_df(spark, range(105, 110))},
-                block_range=(105, 109),
-            )
-            # B lands an overlapping batch on the SAME table mid-hold
-            b.write_blocks(
-                {"block_headers": headers_df(spark, range(103, 108))},
-                block_range=(103, 107),
-            )
-    # nothing from the failed hold leaked; B's batch is intact
-    assert _numbers(a) == list(range(100, 108))
-    # the engine's standard recovery — replay the batch — converges
-    a.write_blocks(
-        {"block_headers": headers_df(spark, range(105, 110))},
-        block_range=(105, 109),
-    )
-    assert _numbers(a) == list(range(100, 110))
-
-    # unrelated-table concurrency does NOT conflict — and it must not be
-    # CLOBBERED either: B advances the published boundary (109 -> 111) on a
-    # table the hold never touches, so the hold's publish must re-derive
-    # the boundary against publish-time state (its buffer-time absolute
-    # says boundary=109; replaying it verbatim would silently rewind the
-    # head to 109 — a lost update). The buffered write is marker-less and
-    # sits ABOVE both heads (block 115), so the boundary passes through.
-    with a.version_hold():
-        a.write_blocks(
-            {
-                "transfers": transfers_df(
-                    spark, [("0xt", 115, "0xh1", "0xf", "0xto", "1")]
-                )
-            },
-            block_range=(115, 115),
-        )
-        b.write_blocks(
-            {"block_headers": headers_df(spark, range(110, 112))},
-            block_range=(110, 111),
-        )
-        assert b.read_version() == 111
-    assert a.read("transfers").count() == 1
-    assert _numbers(a) == list(range(100, 112))
-    assert a.read_version() == 111, "hold publish rewound the external head"
-    assert b.read_version() == 111
-
-
-def test_hold_delta_replay_skips_externally_landed_delta(spark, tmp_path):
-    """Exactly-once for delta appends ACROSS writers and holds: if the same
-    delta name lands externally between buffering and the hold's publish,
-    the buffered op is a replay of an already-committed batch — it must
-    no-op, never double-append."""
-    root = str(tmp_path / "shared")
-    a = LogStore(spark, root)
-    b = LogStore(spark, root)
-    df = spark.createDataFrame([("d1", "x")], "id string, v string")
-    with a.version_hold():
-        a.append_dimension_delta("doc_index", df, "batch-1")
-        b.append_dimension_delta("doc_index", df, "batch-1")
-    assert a.read("doc_index").count() == 1
-    assert b.read("doc_index").count() == 1
 
 
 def test_vacuum_retires_log_and_stale_cache_refolds(spark, tmp_path):
@@ -1320,11 +1265,3 @@ def test_vacuum_horizon_publish_cannot_regress_under_any_interleaving(lstore):
     assert lstore._read_vacuum_horizon() == 100
     lstore._publish_vacuum_horizon(101)
     assert lstore._read_vacuum_horizon() == 101
-
-    # legacy single-file marker (roots written by older code) folds into
-    # the max instead of being ignored
-    import json as _json
-
-    with open(os.path.join(lstore.root, "_vacuum_horizon.json"), "w") as f:
-        _json.dump({"horizon": 500}, f)
-    assert lstore._read_vacuum_horizon() == 500

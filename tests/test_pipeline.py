@@ -5,6 +5,7 @@ hand-computable fee/reward/balance math over deterministic blocks)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from eth_indexer_spark.pipeline import transform as tr
@@ -184,6 +185,12 @@ def test_ledger_deltas_fast_path_matches_exact(raw, events):
     assert all(v is not None for v in full_auto.values())
     assert any(abs(v) >= 10**39 for v in full_auto.values())
 
+    # the forced fast path over >30-digit values fails by name instead of
+    # overflowing, so an ingest recomputes that batch on the exact path
+    with pytest.raises(SparkRuntimeException) as err:
+        tr.ledger_deltas(events, fees, exact=False).collect()
+    assert tr.raised_message(err.value).startswith(tr.FAST_PATH_OVERFLOW)
+
 
 def test_balance_snapshots(raw, events, model):
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
@@ -268,8 +275,8 @@ def test_new_token_backfill(raw, spark):
     assert fees == {("0", "0", "0")}
 
 
-def test_total_difficulty(raw, headers, model):
-    td = tr.total_difficulty(headers)
+def test_total_difficulty(spark, headers, model):
+    td = tr.total_difficulty(spark, [r.asDict() for r in headers.collect()])
     got = {(r["block"], r["hash"]): int(r["td"]) for r in td.collect()}
     want = {(n, h): v for n, h, v in model["td"]}
     assert got == want

@@ -36,8 +36,8 @@ def test_latest_header_and_count(headers):
     assert q.header_count(headers).collect()[0]["count"] == 6
 
 
-def test_td_by_hash(headers):
-    td = tr.total_difficulty(headers)
+def test_td_by_hash(spark, headers):
+    td = tr.total_difficulty(spark, [r.asDict() for r in headers.collect()])
     assert int(q.td_by_hash(td, bhash(102)).collect()[0]["td"]) == 100 + 101 + 102
 
 

@@ -490,7 +490,8 @@ def test_resubscribe_after_unsubscribe_hits_has_prev_guard(spark, tmp_path):
             "block_number", F.lit(0).cast("long")
         )
     )
-    ing._persist_subscriptions(resub)
+    store.update_dimension("subscriptions", resub)
+    ing.subscriptions = resub
     with pytest.raises(ValueError, match="has-prev-balance"):
         ing.process_headers(headers_of(raw, [104, 105]))
 
