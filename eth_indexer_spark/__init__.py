@@ -12,7 +12,7 @@ Layout
 - ``session``   SparkSession factory tuned for local[N] and for cluster scale.
 - ``schema``    canonical StructTypes for the reference catalog (SURVEY §1.4).
 - ``catalog``   table loaders for the driver testdata and domain fixtures.
-- ``functions`` scalar column helpers (hex, rewards, text, vectors, uint256).
+- ``functions`` scalar column helpers (hex and uint256 decode, rewards, text).
 - ``operators`` reusable relational operators (as-of join, top-k, dedup, ANN).
 - ``plans``     the read-path query surface (reference EP3 parity) + analytics.
 - ``pipeline``  per-batch transform dataflow (reference EP1 step 5 parity).

@@ -106,13 +106,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     _TABLE_CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TPCH_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,8 +1,6 @@
-"""Scalar column helpers: hex/topic utilities, uint256-exact arithmetic,
-reward-schedule math, text analysis, vector math.
+"""Scalar column helpers: hex/topic utilities (with the exact uint256 ABI
+decode), reward-schedule math and text analysis.
 
-Everything here is built-in Column expressions unless exactness genuinely
-requires Python (uint256 arithmetic beyond DECIMAL(38,0) — Arrow-batched
-pandas UDFs, never row-at-a-time). The uint256 ABI decode is exact in the
-JVM.
+Everything here is a built-in Column expression; the uint256 ABI decode is
+exact in the JVM.
 """

@@ -31,12 +31,6 @@ def char_count(col) -> Column:
     return F.length(_c(col))
 
 
-def punct_ratio(col) -> Column:
-    """Punctuation chars / total chars, rounded to 4."""
-    punct = F.size(F.regexp_extract_all(_c(col), F.lit("[.,;:!?'\"()\\[\\]{}-]"), 0))
-    return F.round(punct / F.length(_c(col)), 4)
-
-
 def alpha_ratio(col) -> Column:
     alpha = F.size(F.regexp_extract_all(_c(col), F.lit("[a-zA-Z]"), 0))
     return F.round(alpha / F.length(_c(col)), 4)

@@ -46,15 +46,6 @@ from eth_indexer_spark.operators.similarity import _vec, cosine
 _ACC = "decimal(38,12)"
 
 
-def _sq_l2(a: Column, b: Column) -> Column:
-    """Squared L2 distance with deterministic left-to-right fold order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _dlit(x: float) -> str:
     """A float as an exact SQL DOUBLE literal (CAST of repr survives
     scientific notation; centroids are finite by construction)."""

@@ -1638,7 +1638,15 @@ def dedup_clusters(
     attributes next to the cluster id (x_cluster_keep_best's quality
     score) otherwise pays a second corpus scan plus a fact-fact join on
     the id to re-attach them — the label side is the small/broadcast
-    side here, so carrying the columns is free."""
+    side here, so carrying the columns is free. A passthrough name equal
+    to ``doc``, ``cluster`` or ``id_col`` would shadow an output column and
+    raises ``ValueError``."""
+    clash = sorted(set(passthrough) & {"doc", "cluster", id_col})
+    if clash:
+        raise ValueError(
+            f"dedup_clusters passthrough {clash} collides with the output "
+            f"columns doc/cluster or the id column {id_col!r}"
+        )
     cc = connected_components(pairs)
     return (
         df.select(F.col(id_col).cast("long").alias("doc"), *[F.col(c) for c in passthrough])

@@ -71,68 +71,6 @@ def decode_media(
     return df.mapInPandas(_decode, schema=out_schema)
 
 
-def resize_media(
-    df: DataFrame, media_col: str = "media", target_bytes: int = 1024
-) -> DataFrame:
-    """Resize plumbing: deterministic stride-subsampling of the payload down
-    to ≤ ``target_bytes`` (the byte-level stand-in for image downscaling —
-    a real implementation swaps the body for PIL.resize while keeping the
-    identical mapInPandas shape). Payloads already small enough pass through
-    untouched. Adds ``media_resized`` + ``resized_len``."""
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["media_resized binary", "resized_len int"]
-    )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for b in pdf[media_col]:
-                payload = bytes(b)
-                if len(payload) <= target_bytes:
-                    outs.append(payload)
-                else:
-                    stride = -(-len(payload) // target_bytes)  # ceil div
-                    outs.append(payload[::stride])
-            pdf["media_resized"] = outs
-            pdf["resized_len"] = [len(o) for o in outs]
-            yield pdf
-
-    return df.mapInPandas(_resize, schema=out_schema)
-
-
-def extract_features(
-    df: DataFrame, media_col: str = "media", n_bins: int = 16
-) -> DataFrame:
-    """Feature extraction plumbing: a normalized byte-value histogram as the
-    feature vector (``array<double>``, length ``n_bins``) — the shape and
-    batch mechanics of a real embedding extractor, computed exactly so tests
-    can pin it. Output vectors feed directly into the similarity operators
-    (operators/similarity.py)."""
-    import numpy as np
-
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + ["features array<double>"]
-    )
-    width = 256 // n_bins
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[media_col]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                if arr.size == 0:
-                    feats.append([0.0] * n_bins)
-                    continue
-                hist = np.bincount(arr // width, minlength=n_bins)[:n_bins]
-                feats.append((hist / arr.size).tolist())
-            pdf["features"] = feats
-            yield pdf
-
-    return df.mapInPandas(_extract, schema=out_schema)
-
-
 def sample_frames(
     df: DataFrame,
     media_col: str = "media",

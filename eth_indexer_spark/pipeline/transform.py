@@ -195,7 +195,7 @@ def compute_header_rewards(headers: DataFrame, txs: DataFrame, receipts: DataFra
 
 
 # ---------------------------------------------------------------------------
-# Fees / changed addresses / subscription joins
+# Fees
 # ---------------------------------------------------------------------------
 
 
@@ -209,39 +209,6 @@ def tx_fees(txs: DataFrame, receipts: DataFrame) -> DataFrame:
         .join(receipts.select(F.col("tx_hash").alias("hash"), "gas_used"), "hash")
         .groupBy("block_number", F.col("from").alias("address"))
         .agg(F.sum(F.col("gas_price").cast(_D) * F.col("gas_used").cast(_D)).alias("fee"))
-    )
-
-
-def changed_addresses(txs: DataFrame, events: DataFrame) -> DataFrame:
-    """A4 (transfer_processor.go:92-119): distinct addresses touched this
-    batch = tx senders ∪ event froms (except reward sentinels) ∪ event tos.
-    One column ``address`` plus ``block_number`` (needed per-block downstream)."""
-    senders = txs.select("block_number", F.col("from").alias("address"))
-    froms = events.filter(
-        ~F.col("from").isin(MINER_REWARD_FROM, UNCLE_REWARD_FROM)
-    ).select("block_number", F.col("from").alias("address"))
-    tos = events.select("block_number", F.col("to").alias("address"))
-    return senders.unionByName(froms).unionByName(tos).distinct()
-
-
-def subscribed_events(events: DataFrame, subs: DataFrame) -> DataFrame:
-    """J5 (transfer_processor.go:163-177): keep events where from OR to is a
-    subscribed address; the subscription set is broadcast (it is the
-    reference's in-memory map probe).
-
-    Single pass, no dedup: two broadcast hash left-joins attach from/to
-    membership markers and one filter keeps the OR. Genuine duplicate events
-    (two identical-value transfers in one tx) survive — a union+distinct
-    would collapse them, and a semi-join with an OR condition would plan as
-    a nested-loop join instead of two hash probes."""
-    addrs = subs.select("address").distinct()
-    sf = F.broadcast(addrs.select(F.col("address").alias("__from_sub")))
-    st = F.broadcast(addrs.select(F.col("address").alias("__to_sub")))
-    return (
-        events.join(sf, events["from"] == F.col("__from_sub"), "left")
-        .join(st, events["to"] == F.col("__to_sub"), "left")
-        .filter(F.col("__from_sub").isNotNull() | F.col("__to_sub").isNotNull())
-        .drop("__from_sub", "__to_sub")
     )
 
 

@@ -14,7 +14,7 @@ deliberate departures:
    decimal strings and does arithmetic in Go ``big.Int``
    (model/types.go:72-81,113-121). Spark's widest exact numeric is
    DECIMAL(38,0) ≈ 1.15e38 « 2^256 ≈ 1.16e77. Canonical policy
-   (:mod:`eth_indexer_spark.functions.uint256`):
+   (applied in :mod:`eth_indexer_spark.pipeline.transform`):
 
    - storage of amount columns is an exact decimal STRING;
    - column arithmetic uses ``CAST(x AS DECIMAL(38,0))`` — the fast JVM path,
@@ -23,9 +23,8 @@ deliberate departures:
    - the ABI decode of ERC20 values is exact in the JVM at any width
      (``hexutils.abi_uint256``), so decoding never needs Python;
    - only arithmetic on values above 30 digits (adversarial ERC20
-     supplies) takes the exact path, an Arrow-batched pandas UDF over
-     Python int — chosen per batch by a probe, or forced per stage via
-     ``exact=True``.
+     supplies) takes the exact path, grouped pandas over Python int —
+     chosen per batch by a probe, or forced per stage via ``exact=True``.
 
 3. **One table per entity, never per token.** The reference creates
    ``erc20_balance_<addr>`` / ``erc20_transfer_<addr>`` tables at runtime

@@ -36,8 +36,8 @@ the same public design Iceberg/Hudi share:
 - **Multi-writer optimistic concurrency**: committing version V+1 is an
   atomic put-if-absent (``os.link`` — fails with EEXIST if a concurrent
   writer won). The loser re-reads the log, re-validates its transaction
-  against the new state (all files it removes still live, its delta names
-  still unused), re-plans if not, and retries. This replaces the
+  against the new state (all files it removes still live, the dimensions
+  it merged unchanged), re-plans if not, and retries. This replaces the
   reference's swallowed-duplicate-key coordination between concurrent
   indexers (common/errors.go:26-57).
 - **Multi-TABLE atomicity is exact, not staged**: one commit carries every
@@ -166,7 +166,6 @@ class _State:
     boundary: int | None = None  # committed batch boundary (read_version)
     files: dict[str, dict[str, _FileMeta]] = field(default_factory=dict)
     schemas: dict[str, dict] = field(default_factory=dict)  # StructType json
-    deltas: dict[str, list[str]] = field(default_factory=dict)
 
     def copy(self) -> "_State":
         return _State(
@@ -174,7 +173,6 @@ class _State:
             self.boundary,
             {t: dict(fs) for t, fs in self.files.items()},
             dict(self.schemas),
-            {t: list(v) for t, v in self.deltas.items()},
         )
 
     def apply(self, commit: dict) -> None:
@@ -189,11 +187,6 @@ class _State:
                 fs[fm.path] = fm
         for table, sch in commit.get("schemas", {}).items():
             self.schemas[table] = sch
-        for table, names in commit.get("deltas", {}).items():
-            have = self.deltas.setdefault(table, [])
-            for n in names:
-                if n not in have:
-                    have.append(n)
 
     def to_checkpoint(self) -> dict:
         return {
@@ -204,7 +197,6 @@ class _State:
                 for t, fs in self.files.items()
             },
             "schemas": self.schemas,
-            "deltas": self.deltas,
         }
 
     @staticmethod
@@ -215,7 +207,6 @@ class _State:
             for t, fs in d["files"].items()
         }
         st.schemas = dict(d.get("schemas", {}))
-        st.deltas = {t: list(v) for t, v in d.get("deltas", {}).items()}
         return st
 
 
@@ -385,8 +376,8 @@ class LogStore:
         """Run ``build(state) -> ops-dict-or-None`` and publish it as one
         commit, with optimistic retry: on losing the version race the state
         is re-folded and ``build`` re-planned against it (survivor file
-        sets may differ). ``build`` returning None means no-op (e.g. a
-        delta replay)."""
+        sets may differ). ``build`` returning None means no-op (nothing to
+        store)."""
         while True:
             st = self._state(refresh=True)
             ops = build(st)
@@ -541,10 +532,7 @@ class LogStore:
 
     def read(self, table: str) -> DataFrame:
         st = self._state(refresh=True)
-        df = self._read_files(table, self._live(st, table), st)
-        if table in st.deltas and "ingest_delta" in df.columns:
-            df = df.drop("ingest_delta")
-        return df
+        return self._read_files(table, self._live(st, table), st)
 
     def read_range(
         self, table: str, lo: int | None = None, hi: int | None = None
@@ -595,13 +583,6 @@ class LogStore:
             if row["m"] is not None:
                 vals.append(row["m"])
         return max(vals) if vals else None
-
-    def read_deltas(self, table: str) -> DataFrame:
-        """Delta-appended dimension WITH its ``ingest_delta`` column — a
-        DATA column (written at append time), so one plain multi-file read
-        serves any number of deltas."""
-        st = self._state(refresh=True)
-        return self._read_files(table, self._live(st, table), st)
 
     def read_version(self) -> int | None:
         return self._state(refresh=True).boundary
@@ -833,41 +814,9 @@ class LogStore:
 
     def append_dimension(self, table: str, df: DataFrame) -> None:
         """Append + dedup-on-key (reorgs audit rows): read-merge-replace,
-        O(dimension) — right for small audit dims; per-batch growing state
-        uses :meth:`append_dimension_delta`. The merge reruns if a
+        O(dimension) — right for small audit dims. The merge reruns if a
         concurrent writer changed the dimension (``write_blocks(appends=)``)."""
         self._write(appends={table: df})
-
-    def append_dimension_delta(self, table: str, df: DataFrame, delta: str) -> None:
-        """O(batch) exactly-once append: the delta name is recorded IN the
-        commit, so replaying an already-committed delta is a no-op decided
-        by log state — no directory probe, and two concurrent writers
-        racing the same delta name resolve through commit validation (the
-        loser sees the name landed and no-ops)."""
-        if not delta or not all(c.isalnum() or c in "_.-" for c in delta):
-            raise ValueError(
-                f"delta name {delta!r} must be non-empty [A-Za-z0-9_.-]"
-            )
-        st = self._state(refresh=True)
-        if delta in st.deltas.get(table, []):
-            return
-        tagged = df.withColumn("ingest_delta", F.lit(delta))
-        metas = self._stage_files(table, tagged)
-        if not metas:
-            return  # empty delta: nothing to land
-        schema = tagged.schema.jsonValue()
-
-        def build(st2: _State) -> dict | None:
-            if delta in st2.deltas.get(table, []):
-                return None  # lost a race to the same delta: exactly-once
-            return {
-                "boundary": st2.boundary,
-                "tables": {table: {"add": [m.to_json() for m in metas], "rm": []}},
-                "schemas": {table: schema},
-                "deltas": {table: [delta]},
-            }
-
-        self._commit(build)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -1219,10 +1168,7 @@ class LogSnapshot:
     def read(self, table: str) -> DataFrame:
         if self._clamped(table):
             return self.read_range(table)
-        df = self._read(table, self._live(table))
-        if table in self._st.deltas and "ingest_delta" in df.columns:
-            df = df.drop("ingest_delta")
-        return df
+        return self._read(table, self._live(table))
 
     def _clamped(self, table: str) -> bool:
         """Block-keyed reads stop at the pinned batch boundary: a
@@ -1315,9 +1261,6 @@ class LogSnapshot:
             if row["m"] is not None:
                 vals.append(row["m"])
         return max(vals) if vals else None
-
-    def read_deltas(self, table: str) -> DataFrame:
-        return self._read(table, self._live(table))
 
     def read_version(self) -> int | None:
         return self.version

@@ -21,6 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 from eth_indexer_spark.schema import RAW_SCHEMAS
 
 
+def _all_na_as(col: pd.Series, dtype) -> pd.Series:
+    """An all-NA column cast to ``dtype``. A NaN cannot cast to a numpy
+    integer dtype, so an integer side gets the NULLABLE ``Int64`` instead:
+    concat with int64 yields Int64 (exact ints + <NA>), where float64 would
+    round values beyond 2^53 and object would break numeric ops."""
+    if dtype.kind in "iu":
+        return pd.Series(pd.NA, index=col.index, dtype="Int64")
+    return col.astype(dtype)
+
+
 class PandasBlockSource:
     """In-memory chain: raw fixture tables, possibly containing multiple
     branches. ``canonical`` numbers resolve via first-wins unless a branch
@@ -50,23 +60,21 @@ class PandasBlockSource:
 
     @staticmethod
     def _concat(base: pd.DataFrame, extra: pd.DataFrame) -> pd.DataFrame:
-        """Concat that pins the incoming frame's all-NA columns (e.g. a fork
-        branch with no uncles) to the base frame's dtypes — pandas otherwise
-        warns that all-NA entries will stop influencing result dtypes."""
-        extra = extra.copy()
-        for c in extra.columns:
-            if c in base.columns and extra[c].isna().all():
-                try:
-                    extra[c] = extra[c].astype(base[c].dtype)
-                except (ValueError, TypeError):
-                    # all-NaN into an integer base dtype is uncastable
-                    # (IntCastingNaNError). Use the NULLABLE integer dtype:
-                    # concat with int64 yields Int64 (exact ints + <NA>),
-                    # keeping the column numeric for downstream consumers —
-                    # float64 would lossily round base values beyond 2^53,
-                    # and object would break vectorized numeric ops
-                    extra[c] = pd.array([None] * len(extra), dtype="Int64")
-        return pd.concat([base, extra], ignore_index=True)
+        """Concat that pins an all-NA column on EITHER side (e.g. a branch
+        with no second uncles: all-None ``object`` beside another side's
+        ``float64``) to the other side's dtype — pandas otherwise warns
+        that all-NA entries will stop being excluded when it works out the
+        result dtypes, which would change the column's dtype."""
+        pins: tuple[dict, dict] = ({}, {})
+        for c in base.columns.intersection(extra.columns):
+            a, b = base[c], extra[c]
+            if a.isna().all() and not b.isna().all():
+                pins[0][c] = _all_na_as(a, b.dtype)
+            elif b.isna().all() and not a.isna().all():
+                pins[1][c] = _all_na_as(b, a.dtype)
+        return pd.concat(
+            [base.assign(**pins[0]), extra.assign(**pins[1])], ignore_index=True
+        )
 
     def extend(
         self, headers=None, transactions=None, receipts=None, logs=None,

@@ -86,33 +86,6 @@ def windowed_event_aggregate(
     )
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: tuple[str, ...],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact-dedup: drop duplicate rows by ``keys`` within the
-    watermark horizon (``dropDuplicatesWithinWatermark``) — the operator
-    that turns an at-least-once upstream (retried fetches, replayed
-    micro-batches) into effectively-once delivery with BOUNDED state: one
-    entry per key lives only until the watermark passes it, unlike plain
-    streaming ``dropDuplicates`` whose state never evicts. On a batch input
-    the same call degrades to ordinary ``dropDuplicates`` (identical
-    semantics once data is complete), which is how tests pin the streaming
-    output to batch ground truth.
-
-    Event-time type policy per catalog.py: NTZ casts to TIMESTAMP at the
-    watermark boundary (lossless, session TZ is UTC)."""
-    if events.isStreaming:
-        if isinstance(events.schema[ts_col].dataType, TimestampNTZType):
-            events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            list(keys)
-        )
-    return events.dropDuplicates(list(keys))
-
-
 def sessionize(
     events: DataFrame,
     gap_minutes: float = 30.0,

@@ -308,37 +308,6 @@ class TestWinnowing:
         assert not any(2 in p for p in pairs)
 
 
-def test_multimodal_resize_and_features(spark):
-    from eth_indexer_spark.operators import multimodal
-
-    payloads = [bytes(range(256)) * 8, b"\x00" * 10, b""]
-    df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(payloads)], "id long, media binary"
-    )
-
-    resized = {r["id"]: r for r in multimodal.resize_media(df, target_bytes=100).collect()}
-    assert resized[0]["resized_len"] <= 100
-    # stride sampling is deterministic: payload[::ceil(len/target)]
-    assert bytes(resized[0]["media_resized"]) == (bytes(range(256)) * 8)[::21]
-    assert bytes(resized[1]["media_resized"]) == b"\x00" * 10  # small passthrough
-    assert resized[2]["resized_len"] == 0
-
-    feats = {r["id"]: r["features"] for r in multimodal.extract_features(df, n_bins=16).collect()}
-    # uniform byte distribution → flat histogram
-    assert all(abs(v - 1 / 16) < 1e-12 for v in feats[0])
-    # all-zero payload → all mass in bin 0
-    assert feats[1][0] == 1.0 and sum(feats[1]) == 1.0
-    assert feats[2] == [0.0] * 16
-    # features feed the similarity operators directly
-    from eth_indexer_spark.operators.similarity import cosine_pairs
-
-    fdf = multimodal.extract_features(df, n_bins=16).select(
-        F.col("id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    pairs = cosine_pairs(fdf, threshold=0.99)
-    assert pairs.count() >= 0  # plan executes end-to-end on the derived vectors
-
-
 # ---------------------------------------------------------------------------
 # Frequency-capped co-pair counting (operators/dedup.py:cap_hot_keys): the
 # adversarial corpus — one shingle in EVERY document — must not generate
@@ -508,6 +477,18 @@ def test_dedup_clusters_assigns_singletons(spark):
         for r in dedup.dedup_clusters(docs, pairs, "doc_id").collect()
     }
     assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4, 5: 1, 6: 6, 7: 7}
+
+
+@pytest.mark.parametrize("name", ["doc", "cluster", "doc_id"])
+def test_dedup_clusters_rejects_passthrough_collision(spark, name):
+    """A passthrough named like an output column (``doc``/``cluster``) or
+    the id column would shadow it: a named error, raised before planning."""
+    docs = spark.createDataFrame(
+        [(0, 1, 2, "t")], "doc_id long, doc long, cluster long, text string"
+    )
+    pairs = spark.createDataFrame([(0, 0)], "i long, j long")
+    with pytest.raises(ValueError, match="collides"):
+        dedup.dedup_clusters(docs, pairs, "doc_id", passthrough=(name,))
 
 
 def test_split_corpus_deterministic_disjoint_exhaustive(spark):

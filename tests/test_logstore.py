@@ -8,7 +8,7 @@ optimistic commit-log concurrency (the reference's swallowed-duplicate-key
 tolerance, common/errors.go:26-57).
 
 Coverage: overwrite-by-range, retraction, stats pruning, dimension swaps,
-delta exactly-once, a fork's retraction and first chunk in one commit,
+a fork's retraction and first chunk in one commit,
 crash/replay convergence, OCC between writers and processes,
 optimize/vacuum and the retention contract, and a randomized model sweep.
 The table-key contract cases shared with the engine live in
@@ -209,22 +209,6 @@ def test_occ_two_writers_converge(spark, tmp_path):
     assert a.read("block_headers").groupBy("number").count().filter(
         F.col("count") > 1
     ).count() == 0
-
-
-def test_delta_append_exactly_once(spark, lstore):
-    df1 = spark.createDataFrame([("d1", "x")], "id string, v string")
-    df2 = spark.createDataFrame([("d2", "y")], "id string, v string")
-    lstore.append_dimension_delta("doc_index", df1, "batch-1")
-    lstore.append_dimension_delta("doc_index", df1, "batch-1")  # replay no-op
-    lstore.append_dimension_delta("doc_index", df2, "batch-2")
-    assert lstore.read("doc_index").count() == 2
-    assert "ingest_delta" not in lstore.read("doc_index").columns
-    deltas = {
-        r["ingest_delta"] for r in lstore.read_deltas("doc_index").collect()
-    }
-    assert deltas == {"batch-1", "batch-2"}
-    with pytest.raises(ValueError, match="must be non-empty"):
-        lstore.append_dimension_delta("doc_index", df1, "bad/name")
 
 
 def test_dimension_update_and_append(spark, lstore):
@@ -771,8 +755,6 @@ def test_pinned_snapshot_outliving_vacuum_raises_loud(spark, tmp_path):
         old_pin.read_range("block_headers", lo=100, hi=104)
     with pytest.raises(SnapshotExpiredError):
         old_pin.read_eq("block_headers", 102)
-    with pytest.raises(SnapshotExpiredError):
-        old_pin.read_deltas("block_headers")
     # stats-only answers never touch files and stay available
     assert old_pin.max_block("block_headers") == 104
     # recovery is as documented: re-pin and read current state
@@ -802,10 +784,12 @@ for i in range(int(os.environ["OCC_BATCHES"])):
         {"block_headers": headers_df(spark, range(lo, lo + 5))},
         block_range=(lo, lo + 4),
     )
-store.append_dimension_delta(
-    "shared_dim",
-    spark.createDataFrame([("d1", "x"), ("d2", "y")], "id string, v string"),
-    "shared-delta",
+store.append_dimension(
+    "reorgs",
+    spark.createDataFrame(
+        [(1, "shared-a", 2, "shared-b"), (2000, "child-a", 2001, "child-b")],
+        "`from` long, from_hash string, `to` long, to_hash string",
+    ),
 )
 spark.stop()
 print("OCC-CHILD-OK")
@@ -818,10 +802,12 @@ def test_two_os_process_occ_convergence(spark, tmp_path):
     claim rests on ``os.link`` put-if-absent, but every prior two-writer
     test raced two LogStore instances in ONE Python process. Here a child
     process (own Spark JVM) and this process race interleaved
-    ``write_blocks`` commits on one store root, plus the SAME delta name —
-    the deployment story: two independent indexer processes on one store.
+    ``write_blocks`` commits on one store root, then each appends to the
+    ``reorgs`` audit dimension (one row both share, one of its own) — the
+    deployment story: two independent indexer processes on one store.
     Assert convergence (all blocks from both writers, exactly once), a
-    contiguous commit history, and delta exactly-once across processes."""
+    contiguous commit history, and no lost dimension update: the later
+    append's merge reruns against the earlier one's rows."""
     import subprocess
     import sys as _sys
     import time
@@ -870,12 +856,12 @@ def test_two_os_process_occ_convergence(spark, tmp_path):
                 {"block_headers": headers_df(spark, range(lo, lo + 5))},
                 block_range=(lo, lo + 4),
             )
-        store.append_dimension_delta(
-            "shared_dim",
+        store.append_dimension(
+            "reorgs",
             spark.createDataFrame(
-                [("d1", "x"), ("d2", "y")], "id string, v string"
+                [(1, "shared-a", 2, "shared-b"), (3000, "parent-a", 3001, "parent-b")],
+                "`from` long, from_hash string, `to` long, to_hash string",
             ),
-            "shared-delta",
         )
         out, err = proc.communicate(timeout=600)
         assert proc.returncode == 0, err[-3000:]
@@ -890,13 +876,19 @@ def test_two_os_process_occ_convergence(spark, tmp_path):
         + [n for i in range(batches) for n in range(3000 + 5 * i, 3005 + 5 * i)]
     )
     assert _numbers(store) == sorted(expected)
-    # delta exactly-once ACROSS processes: one copy, not two
-    assert store.read("shared_dim").count() == 2
+    # no lost update ACROSS processes: both distinct rows survive, and the
+    # shared row is deduplicated on the (from_hash, to_hash) key
+    assert sorted(
+        (r["from_hash"], r["to_hash"]) for r in store.read("reorgs").collect()
+    ) == [
+        ("child-a", "child-b"),
+        ("parent-a", "parent-b"),
+        ("shared-a", "shared-b"),
+    ]
     # commit history is contiguous — every contended version resolved to
     # exactly one winner and every loser re-planned onto the next version;
-    # 1 seed + 6 parent + 6 child batches + ONE delta commit (the losing
-    # process's same-name append no-ops) = versions 1..14 exactly
-    assert _commit_versions(store) == list(range(1, 15))
+    # 1 seed + 6 parent + 6 child batches + 2 appends = versions 1..15
+    assert _commit_versions(store) == list(range(1, 16))
     fresh = LogStore(spark, root)
     assert _numbers(fresh) == sorted(expected)
     assert fresh.read_version() == max(expected)

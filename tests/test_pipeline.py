@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from eth_indexer_spark.pipeline import transform as tr
 from eth_indexer_spark.schema import ETH_TOKEN
-from tests.fixtures import ETH, T1, A1, A2, A3, A9, RAW_SCHEMAS, build_raw, expected_model
+from tests.fixtures import ETH, T1, RAW_SCHEMAS, build_raw, expected_model
 
 
 @pytest.fixture(scope="module")
@@ -106,46 +106,6 @@ def test_tx_fees(raw, model):
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
     got = {(r["block_number"], r["address"]): int(r["fee"]) for r in fees.collect()}
     assert got == {k: v for k, v in model["fees"].items()}
-
-
-def test_changed_addresses(raw, events, model):
-    got = {
-        (r["block_number"], r["address"])
-        for r in tr.changed_addresses(raw["transactions"], events).collect()
-    }
-    want = set()
-    for t, n, _h, f, to, v in model["events"]:
-        if f not in (tr.MINER_REWARD_FROM, tr.UNCLE_REWARD_FROM):
-            want.add((n, f))
-        want.add((n, to))
-    for (n, a) in model["fees"]:
-        want.add((n, a))
-    assert got == want
-
-
-def test_subscribed_events_filter(raw, events):
-    """J5: only events touching a subscribed address are persisted
-    (transfer_processor.go:163-177)."""
-    sub_evts = tr.subscribed_events(events, raw["subscriptions"])
-    subscribed = {A1, A2, A3}
-    rows = sub_evts.collect()
-    assert rows, "no subscribed events"
-    for r in rows:
-        assert r["from"] in subscribed or r["to"] in subscribed
-    # miner reward of block 104 goes to unsubscribed A9 → excluded
-    b104 = [r for r in rows if r["block_number"] == 104 and r["from"] == tr.MINER_REWARD_FROM]
-    assert not b104
-
-
-def test_subscribed_events_keeps_genuine_duplicates(spark, raw):
-    """Two identical-value transfers to a subscribed address in one tx are
-    BOTH kept — the filter must be a membership test, not a dedup."""
-    ev = spark.createDataFrame(
-        [("tok", 100, "tx1", A9, A1, "5"), ("tok", 100, "tx1", A9, A1, "5")],
-        "token string, block_number long, tx_hash string, "
-        "`from` string, `to` string, value string",
-    )
-    assert tr.subscribed_events(ev, raw["subscriptions"]).count() == 2
 
 
 def test_ledger_deltas(raw, events, model):

@@ -262,60 +262,6 @@ def test_sessionize_idle_timeout_flushes_open_sessions(spark, tmp_path):
     assert got == [(2, 2, 20.0), (7, 1, 1.0)]
 
 
-def test_dedup_within_watermark_stream_matches_batch(spark, tmp_path):
-    """At-least-once → effectively-once: a second file REPLAYING half of the
-    first (plus new rows) must emit each key exactly once, matching the
-    batch dropDuplicates ground truth through the same operator."""
-    import glob
-    import os
-    import shutil
-
-    from eth_indexer_spark.streaming.windows import dedup_within_watermark
-
-    first = [(1, 0, 1.0), (1, 10, 2.0), (2, 0, 3.0)]
-    second = [(1, 10, 2.0), (2, 0, 3.0), (3, 5, 4.0)]  # replays two rows
-    d = tmp_path / "dedup_stream"
-    d.mkdir()
-    for i, rows in enumerate([first, second]):
-        stage = str(tmp_path / f"dd_stage{i}")
-        _mk_events(spark, rows).coalesce(1).write.parquet(stage)
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dest = str(d / f"b{i}.parquet")
-        shutil.copy(part, dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    keys = ("user_id", "ts")
-    batch = dedup_within_watermark(
-        spark.read.schema("user_id long, ts timestamp, value double").parquet(str(d)),
-        keys,
-    )
-    assert batch.count() == 4
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        dedup_within_watermark(stream, keys, watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["user_id"], str(r["ts"]), r["value"])
-        for r in spark.table("dedup_stream").collect()
-    )
-    want = sorted(
-        (r["user_id"], str(r["ts"]), r["value"]) for r in batch.collect()
-    )
-    assert got == want
-
-
 def test_sessionize_sorts_across_arrow_chunks(spark, tmp_path):
     """A key whose micro-batch exceeds maxRecordsPerBatch arrives as SEVERAL
     Arrow chunks; sorting each chunk independently ran the gap scan on
