@@ -29,12 +29,6 @@ def _module_file(name: str) -> str | None:
     return path if "." not in name and os.path.isfile(path) else None
 
 
-def _package_of(path: str) -> str:
-    """Package a file's relative imports resolve against (for an
-    ``__init__.py`` that is its own package)."""
-    return ".".join(os.path.relpath(os.path.dirname(path), REPO).split(os.sep))
-
-
 def _imported_names(path: str) -> set[str]:
     """Dotted module names ``path`` may import, with every parent package
     (importing ``a.b.c`` runs ``a`` and ``a.b`` too)."""
@@ -45,12 +39,8 @@ def _imported_names(path: str) -> set[str]:
         if isinstance(node, ast.Import):
             names.update(alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                pkg = _package_of(path).split(".")
-                pkg = pkg[: len(pkg) - (node.level - 1)]
-                base = ".".join(pkg + ([node.module] if node.module else []))
-            else:
-                base = node.module
+            assert not node.level, f"{path}: the scan resolves absolute imports only"
+            base = node.module
             names.add(base)
             # ``from pkg import sub`` imports a submodule when one exists.
             names.update(f"{base}.{alias.name}" for alias in node.names)
