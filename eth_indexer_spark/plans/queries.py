@@ -167,6 +167,98 @@ def find_total_balance(total_balances: DataFrame, block_number: int, token: str,
 
 # -- store-aware EP3 surface --------------------------------------------------
 
+# `pyspark.sql.DataFrame` is the dispatching API class in Spark 4 (classic
+# vs connect); subclass the concrete classic implementation so a guarded
+# answer constructs directly over a JVM DataFrame.
+try:  # pragma: no cover - import shape depends on pyspark version
+    from pyspark.sql.classic.dataframe import DataFrame as _ConcreteDataFrame
+except ImportError:  # pyspark < 4: one concrete DataFrame class
+    _ConcreteDataFrame = DataFrame
+
+
+class GuardedDataFrame(_ConcreteDataFrame):
+    """A pinned EP3 answer whose OWN terminal actions run inside its
+    snapshot's ``guard()``: a caller who has never heard of ``guard()``
+    gets the named
+    :class:`~eth_indexer_spark.sinks.logstore.SnapshotExpiredError`, not a
+    raw Spark error or a silently partial answer, when a ``vacuum`` past
+    the retention window deleted files the pin reads. (A reorg after the
+    pin needs no check: a snapshot pins an immutable file set.)
+
+    Only the answer itself is guarded. Frames derived from it are plain
+    DataFrames, and so are ``.rdd``, ``toJSON``, ``pandas_api()``,
+    ``write`` and SQL over a temp view; a caller who composes brackets the
+    action with ``snapshot.guard()``. The eager ``checkpoint``/
+    ``localCheckpoint`` bracket the job they run and return plain frames.
+    """
+
+    _GUARDED_ACTIONS = (
+        "collect",
+        "toPandas",
+        "toArrow",
+        "count",
+        "first",
+        "head",
+        "take",
+        "tail",
+        "show",
+        "isEmpty",
+        "foreach",
+        "foreachPartition",
+        "checkpoint",
+        "localCheckpoint",
+    )
+
+    # rows between mid-iteration checks: the check is one small
+    # driver-side directory listing (~µs), so every 8k rows is noise
+    # against the py4j transfer cost of the rows themselves
+    _ITER_CHECK_EVERY = 8192
+
+    def __init__(self, df: DataFrame, snapshot):
+        super().__init__(df._jdf, df.sparkSession)
+        self._graft_snapshot = snapshot
+
+    def toLocalIterator(self, prefetchPartitions: bool = False):
+        """Iterator form: checked at creation, every ``_ITER_CHECK_EVERY``
+        rows, and at EXHAUSTION (the guard's own post-check); a later
+        partition's read of a vacuumed file is translated like any action.
+        A vacuum expiring the pin mid-iteration raises within one check
+        window, so at most ``_ITER_CHECK_EVERY`` rows are yielded under the
+        race (a per-row check would put a file stat in the row hot loop for
+        no practical tightening) — callers needing an exact all-or-nothing
+        bracket should collect() instead."""
+        self._graft_snapshot.check()
+        inner = _ConcreteDataFrame.toLocalIterator(self, prefetchPartitions)
+        every = self._ITER_CHECK_EVERY
+        snapshot = self._graft_snapshot
+
+        def gen():
+            with snapshot.guard():
+                for n, row in enumerate(inner, start=1):
+                    yield row
+                    if n % every == 0:
+                        snapshot.check()
+
+        return gen()
+
+
+def _guarded_action(name: str):
+    base = getattr(_ConcreteDataFrame, name)
+
+    def action(self, *args, **kwargs):
+        with self._graft_snapshot.guard():
+            return base(self, *args, **kwargs)
+
+    action.__name__ = name
+    action.__qualname__ = f"GuardedDataFrame.{name}"
+    action.__doc__ = f"``DataFrame.{name}`` inside the snapshot's guard."
+    return action
+
+
+for _name in GuardedDataFrame._GUARDED_ACTIONS:
+    setattr(GuardedDataFrame, _name, _guarded_action(_name))
+del _name
+
 
 class StoreQueries:
     """EP3 point/as-of reads that ride the store's per-file block stats.
@@ -194,28 +286,20 @@ class StoreQueries:
         retracts blocks. This is the reference's per-request
         DB-transaction read scope (store/store.go:115-173).
 
-        The snapshot's guard is DEFAULT-ON here: every frame the snapshot
-        form returns is a :class:`~eth_indexer_spark.sinks.store.
-        GuardedDataFrame`, so a plain ``.collect()``/``.toPandas()``/
-        ``.count()`` by a caller that has never heard of ``guard()``
-        raises :class:`~eth_indexer_spark.sinks.logstore.
-        SnapshotExpiredError` when a ``vacuum`` past the retention window
-        deleted files the pin reads, instead of a raw Spark error or a
-        silently partial answer. Frames DERIVED from the returned one stay
-        guarded: every DataFrame-returning method re-wraps, and
-        ``groupBy().agg``, ``df.na``/``df.stat`` and joins across snapshots
-        do too. Only SQL over a temp view leaves the guard — use
-        :func:`~eth_indexer_spark.sinks.store.sql_over_snapshots` for it."""
+        Each answer the snapshot form returns is a
+        :class:`GuardedDataFrame`: its own ``collect``/``toPandas``/
+        ``toArrow``/``count``/... raise
+        :class:`~eth_indexer_spark.sinks.logstore.SnapshotExpiredError`
+        once a ``vacuum`` past the retention window deleted files the pin
+        reads. Frames derived from an answer are plain DataFrames: bracket
+        their actions with the returned instance's ``store.guard()``."""
         return StoreQueries(self.store.snapshot())
 
     def _finish(self, df: DataFrame) -> DataFrame:
-        """Wrap a finished answer so its terminal actions run under the
-        pin's guard when this instance reads through a pinned snapshot
-        (live-store instances return the frame untouched — there is no pin
-        to expire)."""
+        """Guard the answer's actions when this instance reads through a
+        pinned snapshot (live-store instances return the frame untouched —
+        there is no pin to expire)."""
         if hasattr(self.store, "guard"):
-            from eth_indexer_spark.sinks.store import GuardedDataFrame
-
             return GuardedDataFrame(df, self.store)
         return df
 

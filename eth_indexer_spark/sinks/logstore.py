@@ -90,12 +90,59 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from eth_indexer_spark.sinks.store import (
-    BLOCK_COLUMN,
-    EXTRA_PARTITIONS,
-    REQUIRED_NON_NULL,
-    UNIQUE_KEYS,
-)
+# Unique keys per table — mirrors the reference DDL's UNIQUE indexes exactly
+# (migration/db/migrate/*.rb, SURVEY §1.4); dedup-on-key before write (M5).
+# Tables the reference indexes NON-uniquely (receipt_logs before log_index,
+# eth_transfer/erc20_transfer_<hex>) must NOT be deduped: two legitimate rows
+# may agree on every indexed column (e.g. two identical-value ERC20 transfers
+# in one tx). Idempotency for them comes from overwrite-by-block-range, not
+# from keys. ``receipt_logs`` gains a real unique key only because the engine
+# carries the per-tx log_index the reference model drops.
+UNIQUE_KEYS: dict[str, list[str]] = {
+    "block_headers": ["number"],
+    "transactions": ["hash"],
+    "transaction_receipts": ["tx_hash"],
+    "receipt_logs": ["tx_hash", "log_index"],
+    "total_difficulty": ["hash"],
+    "balances": ["token", "block_number", "address"],
+    "total_balances": ["token", "block_number", "group"],
+    "erc20": ["address"],
+    "subscriptions": ["address"],
+    "reorgs": ["from_hash", "to_hash"],
+    # maintained latest-state dimensions (streaming/ingest.py): one row per
+    # key, updated per batch — the O(batch) replacement for re-scanning full
+    # balance history every micro-batch
+    "latest_balances": ["token", "address"],
+    "latest_totals": ["token", "group"],
+}
+
+# Block column per block-keyed table: the range a batch overwrites, a reorg
+# retracts and the log's per-file min/max stats prune reads on.
+BLOCK_COLUMN: dict[str, str] = {
+    "block_headers": "number",
+    "transactions": "block_number",
+    "transaction_receipts": "block_number",
+    "receipt_logs": "block_number",
+    "total_difficulty": "block",
+    "transfers": "block_number",
+    "balances": "block_number",
+    "total_balances": "block_number",
+}
+
+# Per-token column of the token-keyed tables (per-token sharding, SURVEY
+# §1.1); the log records its per-file min/max beside the block column's.
+EXTRA_PARTITIONS: dict[str, list[str]] = {
+    "transfers": ["token"],
+    "balances": ["token"],
+}
+
+# Columns that must never be NULL on write: dropDuplicates treats NULLs as
+# equal, so a null in a dedup-key column would silently collapse distinct
+# rows (e.g. a fetcher omitting log_index would merge all of a transaction's
+# logs into one). Fail loudly instead.
+REQUIRED_NON_NULL: dict[str, list[str]] = {
+    "receipt_logs": ["log_index"],
+}
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -1077,7 +1124,7 @@ class LogSnapshot:
         # about other tables (nor cost an all-tables exists() sweep)
         self._tables_read: set[str] = set()
 
-    # check/guard/collect: the detection surface. Rewind detection can
+    # check/guard: the detection surface. Rewind detection can
     # never fire here (the pin is an immutable file set), but the RETENTION
     # contract can, in two shapes a vacuum racing a pinned action produces:
     #   (a) LOUD — the job opens a deleted file and fails with a raw
@@ -1095,9 +1142,10 @@ class LogSnapshot:
     #       those can have produced a partial answer) — one small dir
     #       listing in the happy path, the os.path.exists sweep only once
     #       a vacuum has actually passed the pin.
-    # The EP3 surface brackets every action with guard(), so a naive
-    # consumer gets the actionable re-pin error in all failure modes —
-    # never a Java stack, never a silently truncated answer.
+    # The EP3 answers (plans/queries.py GuardedDataFrame) run their own
+    # actions inside guard(), so a naive consumer gets the actionable re-pin
+    # error in both shapes; a caller who composes further brackets its
+    # action with guard() itself.
     def check(self) -> None:
         if self.store._read_vacuum_horizon() >= self._st.version:
             missing = self._missing_files()
@@ -1154,10 +1202,6 @@ class LogSnapshot:
         # the action SUCCEEDED: rule out the silent-partial shape before
         # handing the result to the caller
         self.check()
-
-    def collect(self, df: DataFrame) -> list:
-        with self.guard():
-            return df.collect()
 
     def snapshot(self) -> "LogSnapshot":
         return self

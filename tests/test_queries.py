@@ -238,8 +238,8 @@ def test_store_queries_naive_read_detects_expired_pin(spark, tmp_path):
     get the named SnapshotExpiredError once a vacuum deleted the files its
     pin reads, not a raw Spark error or a partial answer. Forward progress
     and a vacuum that deletes nothing the pin reads must NOT trip it."""
+    from eth_indexer_spark.plans.queries import GuardedDataFrame
     from eth_indexer_spark.sinks.logstore import LogStore, SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
     store = LogStore(spark, str(tmp_path / "store"))
     store.write_blocks(_batch(spark, range(0, 20)), block_range=(0, 19))
@@ -289,47 +289,6 @@ def test_store_queries_naive_read_detects_expired_pin(spark, tmp_path):
     assert live_frame.collect()[0]["number"] == 9
 
 
-def test_guarded_frame_transformations_propagate_guard(spark, tmp_path):
-    """Guard propagation through composition: a caller that takes a
-    snapshot frame, composes further (`filter`/`select`/`withColumn`/
-    `join`/`limit`/`orderBy`/...), and THEN acts must still get
-    SnapshotExpiredError once the pin expired — transformations re-wrap
-    instead of silently downgrading to plain DataFrames."""
-    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
-
-    store = _headers_store(spark, str(tmp_path / "store"))
-    pinned = q.StoreQueries(store).snapshot()
-    base = pinned.headers_in_range(0, 19)
-
-    composed = (
-        base.filter(F.col("number") >= 5)
-        .select("hash", "number", "difficulty")
-        .withColumn("gas", F.col("difficulty") * 2)
-        .orderBy(F.col("number").desc())
-        .limit(5)
-    )
-    joined = base.select("number").join(
-        composed.select("number", "gas"), "number"
-    )
-    dedup = base.select("difficulty").distinct()
-    for frame in (composed, joined, dedup):
-        assert isinstance(frame, GuardedDataFrame), type(frame)
-    # healthy pin: composed reads pass and compute the right answer
-    assert composed.count() == 5
-    assert joined.count() == 5
-    top = composed.collect()[0]
-    assert top["number"] == 19 and top["gas"] == 2 * 119
-
-    # expired pin: every DERIVED frame's action raises
-    _expire_pins(store, 10, 19)
-    for frame in (composed, joined, dedup):
-        with pytest.raises(SnapshotExpiredError):
-            frame.collect()
-    with pytest.raises(SnapshotExpiredError):
-        composed.where(F.col("gas") > 0).count()  # compose-after-expiry too
-
-
 def test_store_queries_over_logstore_prevents_reorg_rewind_race(spark, tmp_path):
     """A snapshot pins an immutable file set, so a reorg retraction landing
     mid-read changes nothing the pinned reader can observe, and naive
@@ -365,219 +324,41 @@ def test_store_queries_over_logstore_prevents_reorg_rewind_race(spark, tmp_path)
     assert fresh.header_by_number(18).count() == 0
 
 
-def test_guarded_groupby_agg_raises_on_expired_pin(spark, tmp_path):
-    """`groupBy(...).agg(...)` leaves the DataFrame type (GroupedData);
-    GuardedGroupedData keeps the guard: aggregates, counts, rollups and
-    pivots derived from a pinned frame raise SnapshotExpiredError once the
-    pin expired."""
-    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame, GuardedGroupedData
+# every bracketed action of a pinned answer, as one call each
+_PINNED_ACTIONS = {
+    "collect": lambda df: df.collect(),
+    "toPandas": lambda df: df.toPandas(),
+    "toArrow": lambda df: df.toArrow(),
+    "count": lambda df: df.count(),
+    "first": lambda df: df.first(),
+    "head": lambda df: df.head(2),
+    "take": lambda df: df.take(2),
+    "tail": lambda df: df.tail(2),
+    "show": lambda df: df.show(),
+    "isEmpty": lambda df: df.isEmpty(),
+    "foreach": lambda df: df.foreach(lambda row: None),
+    "foreachPartition": lambda df: df.foreachPartition(lambda rows: None),
+    "checkpoint": lambda df: df.checkpoint(),
+    "localCheckpoint": lambda df: df.localCheckpoint(),
+    "toLocalIterator": lambda df: list(df.toLocalIterator()),
+}
 
+
+@pytest.mark.parametrize("action", sorted(_PINNED_ACTIONS))
+def test_pinned_answer_actions_raise_on_expired_pin(spark, tmp_path, action):
+    """Every terminal action of a pinned EP3 answer runs inside the pin's
+    guard: once a vacuum deleted files the pin reads, each one raises the
+    named SnapshotExpiredError, not a raw Spark error or a partial
+    answer."""
+    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
+
+    if action == "checkpoint":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "checkpoints"))
     store = _headers_store(spark, str(tmp_path / "store"))
-    pinned = q.StoreQueries(store).snapshot()
-    base = pinned.headers_in_range(0, 19)
-
-    grouped = base.withColumn("bucket", F.col("number") % 2).groupBy("bucket")
-    assert isinstance(grouped, GuardedGroupedData)
-    agged = grouped.agg(F.sum("difficulty").alias("d"))
-    counted = base.groupBy((F.col("number") % 3).alias("m")).count()
-    rolled = base.rollup("number").agg(F.max("difficulty").alias("d"))
-    pivoted = (
-        base.withColumn("par", F.col("number") % 2)
-        .groupBy("par")
-        .pivot("par", [0, 1])
-        .agg(F.count(F.lit(1)))
-    )
-    for frame in (agged, counted, rolled, pivoted):
-        assert isinstance(frame, GuardedDataFrame), type(frame)
-    # healthy pin: the grouped plans compute the right answers
-    assert {r["bucket"]: r["d"] for r in agged.collect()} == {
-        0: sum(100 + n for n in range(0, 20, 2)),
-        1: sum(100 + n for n in range(1, 20, 2)),
-    }
-    assert counted.count() == 3
-    assert rolled.count() == 21  # 20 groups + grand total
-
-    # expired pin: every grouped derivation raises
+    frame = q.StoreQueries(store).snapshot().headers_in_range(0, 19)
     _expire_pins(store, 10, 19)
-    for frame in (agged, counted, rolled, pivoted):
-        with pytest.raises(SnapshotExpiredError):
-            frame.collect()
-    # compose-after-expiry through the grouped seam raises too
     with pytest.raises(SnapshotExpiredError):
-        base.groupBy("number").agg(F.count("*").alias("c")).count()
-
-
-def test_cross_snapshot_join_guards_both_pins(spark, tmp_path):
-    """A join/union of frames pinned to DIFFERENT snapshots must be
-    bracketed by BOTH pins (the composite guard) — keeping only the left
-    guard would let an expired right pin pass silently."""
-    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
-
-    left_store = _headers_store(spark, str(tmp_path / "l"))
-    right_store = _headers_store(spark, str(tmp_path / "r"))
-    left = q.StoreQueries(left_store).snapshot().headers_in_range(0, 19)
-    right = q.StoreQueries(right_store).snapshot().headers_in_range(0, 19)
-
-    joined = left.select("number", "difficulty").join(
-        right.select("number", F.col("hash").alias("rhash")), "number"
-    )
-    unioned = left.select("number").union(right.select("number"))
-    assert isinstance(joined, GuardedDataFrame)
-    assert joined.count() == 20 and unioned.count() == 40  # both pins healthy
-
-    # expire the RIGHT pin only: the left pin is untouched, so a
-    # left-guard-only composition would return silently — both must raise
-    _expire_pins(right_store, 10, 19)
-    left.collect()  # left pin alone is still healthy
-    with pytest.raises(SnapshotExpiredError):
-        joined.collect()
-    with pytest.raises(SnapshotExpiredError):
-        unioned.count()
-    # further composition off the cross-pinned frame keeps BOTH pins
-    with pytest.raises(SnapshotExpiredError):
-        joined.filter(F.col("number") > 0).count()
-
-
-def test_guarded_na_and_stat_namespaces_propagate_guard(spark, tmp_path):
-    """The df.na / df.stat namespaces leave the DataFrame type: fill/drop/
-    replace/crosstab re-enter guarded frames, so the only remaining escape
-    hatch is SQL over a temp view (sql_over_snapshots)."""
-    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
-
-    store = _headers_store(spark, str(tmp_path / "store"))
-    base = q.StoreQueries(store).snapshot().headers_in_range(0, 19)
-
-    filled = base.na.fill({"difficulty": 0})
-    dropped = base.na.drop()
-    crossed = base.withColumn("par", F.col("number") % 2).stat.crosstab(
-        "par", "par"
-    )
-    for frame in (filled, dropped, crossed):
-        assert isinstance(frame, GuardedDataFrame), type(frame)
-    assert filled.count() == 20 and dropped.count() == 20
-    assert crossed.count() == 2
-    # scalar stat results pass through (no frame to guard)
-    assert isinstance(base.stat.corr("number", "difficulty"), float)
-
-    _expire_pins(store, 10, 19)
-    for frame in (filled, dropped, crossed):
-        with pytest.raises(SnapshotExpiredError):
-            frame.collect()
-
-
-def test_guard_surface_is_complete_over_dataframe_api():
-    """The GuardedDataFrame docstring claims EVERY public DataFrame-
-    returning method re-wraps. Pin the claim structurally: sweep the
-    concrete DataFrame class's public callables and fail on any whose
-    return annotation is a DataFrame (or list of them) that is not in a
-    guarded category — so a pyspark upgrade that adds a new method fails
-    this test instead of silently reopening the r8 silent-downgrade hole."""
-    import inspect
-
-    from eth_indexer_spark.sinks.store import GuardedDataFrame, _ConcreteDataFrame
-
-    covered = (
-        set(GuardedDataFrame._GUARDED_TRANSFORMS)
-        | set(GuardedDataFrame._GUARDED_ACTION_TRANSFORMS)
-        | {"groupBy", "groupby", "rollup", "cube"}  # GuardedGroupedData
-    )
-    # leaves the DataFrame API entirely (documented escape hatches) or is
-    # an action returning non-DataFrame data
-    escapes = {"pandas_api", "toPandas", "writeTo"}
-    unguarded = []
-    for name in dir(_ConcreteDataFrame):
-        if name.startswith("_") or name in covered or name in escapes:
-            continue
-        attr = inspect.getattr_static(_ConcreteDataFrame, name)
-        if isinstance(attr, property) or not callable(attr):
-            continue
-        ret = str(getattr(attr, "__annotations__", {}).get("return", ""))
-        if "DataFrame" not in ret:
-            continue
-        if any(s in ret for s in ("Writer", "PandasOnSpark", "PandasDataFrameLike")):
-            continue
-        unguarded.append(f"{name} -> {ret}")
-    assert not unguarded, (
-        "public DataFrame-returning methods without guard propagation "
-        f"(add to _GUARDED_TRANSFORMS or the documented escapes): {unguarded}"
-    )
-
-
-def test_extended_transforms_and_random_split_rewrap(spark, tmp_path):
-    """The long tail of DataFrame-returning methods on the guard surface
-    (replace/describe/toDF/transform/randomSplit/...) re-wraps and raises
-    once the pin expired — not just the common composition set."""
-    from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
-
-    store = _headers_store(spark, str(tmp_path / "store"))
-    pinned = q.StoreQueries(store).snapshot()
-    base = pinned.headers_in_range(0, 19)
-
-    derived = [
-        base.replace(100, 0, subset=["difficulty"]),
-        base.describe("difficulty"),
-        base.summary("count", "max"),
-        base.toDF("h", "p", "n", "d"),
-        base.transform(lambda df: df.filter(F.col("number") > 2)),
-        base.agg(F.max("number").alias("m")),
-        base.melt(
-            ids=["hash"], values=["number"], variableColumnName="k",
-            valueColumnName="v",
-        ),
-    ]
-    splits = base.randomSplit([0.5, 0.5], seed=7)
-    derived.extend(splits)
-    for frame in derived:
-        assert isinstance(frame, GuardedDataFrame), type(frame)
-    assert derived[4].count() == 17  # healthy pin: transforms still work
-
-    _expire_pins(store, 10, 19)
-    for frame in derived:
-        with pytest.raises(SnapshotExpiredError):
-            frame.collect()
-    # eager action-transforms bracket the job they run
-    with pytest.raises(SnapshotExpiredError):
-        base.localCheckpoint()
-
-
-def test_composite_guard_nests_member_guards(spark, tmp_path):
-    """_CompositeSnapshotGuard must NEST each member's guard(), not
-    reimplement it as check-yield-check: LogSnapshot's guard translates
-    mid-action FileNotFound-class failures into the named
-    SnapshotExpiredError, and a cross-snapshot composition (exactly what
-    the composite protects) must keep that translation instead of leaking
-    a raw Java stack."""
-    import os
-
-    from eth_indexer_spark.sinks.logstore import LogStore, SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import _CompositeSnapshotGuard
-
-    store = LogStore(spark, str(tmp_path / "log"))
-    store.write_blocks(
-        {
-            "block_headers": spark.createDataFrame(
-                [(f"h{n}", f"h{n-1}", n, 100 + n) for n in range(0, 10)],
-                "hash string, parent_hash string, number long, difficulty long",
-            )
-        },
-        block_range=(0, 9),
-    )
-    snap = store.snapshot()
-    snap.read("block_headers")  # register the table with the pin
-    other = store.snapshot()
-    composite = _CompositeSnapshotGuard(snap, other)
-
-    # delete a pinned file: a mid-action FileNotFound-class failure inside
-    # the composite bracket must surface as the member's NAMED error
-    meta = next(iter(snap._st.files["block_headers"].values()))
-    os.remove(store._abs(meta.path))
-    with pytest.raises(SnapshotExpiredError):
-        with composite.guard():
-            raise RuntimeError("FAILED_READ_FILE.FILE_NOT_EXIST: gone.parquet")
+        _PINNED_ACTIONS[action](frame)
 
 
 def test_local_iterator_mid_iteration_expiry_raises(spark, tmp_path):
@@ -585,68 +366,39 @@ def test_local_iterator_mid_iteration_expiry_raises(spark, tmp_path):
     expiry landing mid-iteration raises within one check window instead of
     only at exhaustion (rows already yielded were produced under the race
     with no later signal)."""
+    from eth_indexer_spark.plans.queries import GuardedDataFrame
     from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame
 
     store = _headers_store(spark, str(tmp_path / "store"), n=30)
-    pinned = q.StoreQueries(store).snapshot()
-    frame = pinned.headers_in_range(0, 29).orderBy("number")
+    frame = q.StoreQueries(store).snapshot().headers_in_range(0, 29)
     old = GuardedDataFrame._ITER_CHECK_EVERY
     GuardedDataFrame._ITER_CHECK_EVERY = 4
     try:
         it = frame.toLocalIterator()
-        seen = [next(it)["number"] for _ in range(3)]
-        assert seen == [0, 1, 2]
+        rows = [next(it) for _ in range(3)]
         _expire_pins(store, 20, 29)
         with pytest.raises(SnapshotExpiredError):
-            for _ in range(10):
-                next(it)
+            rows.extend(it)
+        # at most one check window of rows came out under the race
+        assert len(rows) <= 4
     finally:
         GuardedDataFrame._ITER_CHECK_EVERY = old
 
 
-def test_sql_over_snapshots_keeps_the_guard(spark, tmp_path):
-    """The guarded form of the SQL-over-temp-view escape hatch:
-    sql_over_snapshots registers the pinned frames as views, runs the
-    query, and re-wraps under the composite pin of every guarded input —
-    plain SQL over the same views would return an unguarded frame that
-    surfaces an expired pin as a raw Spark error or a partial answer."""
+def test_local_iterator_later_partition_expiry_raises(spark, tmp_path):
+    """toLocalIterator fetches one partition at a time: a vacuum landing
+    between two fetches makes the later one open a deleted file, and that
+    read failure surfaces as SnapshotExpiredError, not a raw Spark error."""
     from eth_indexer_spark.sinks.logstore import SnapshotExpiredError
-    from eth_indexer_spark.sinks.store import GuardedDataFrame, sql_over_snapshots
 
     store = _headers_store(spark, str(tmp_path / "store"))
-    pinned = q.StoreQueries(store).snapshot()
-    frame = pinned.headers_in_range(0, 19)
-
-    top = sql_over_snapshots(
-        spark,
-        "SELECT number, difficulty FROM h WHERE number >= 5 "
-        "ORDER BY difficulty DESC LIMIT 3",
-        h=frame,
+    store.write_blocks(
+        {"block_headers": _batch(spark, range(20, 40))["block_headers"]},
+        block_range=(20, 39),
     )
-    assert isinstance(top, GuardedDataFrame)
-    rows = top.collect()
-    assert [r["number"] for r in rows] == [19, 18, 17]
-
-    # a join of two pins through SQL carries BOTH (composite guard)
-    other = q.StoreQueries(store).snapshot().headers_in_range(0, 9)
-    joined = sql_over_snapshots(
-        spark,
-        "SELECT a.number FROM a JOIN b USING (number)",
-        a=frame,
-        b=other,
-    )
-    assert isinstance(joined, GuardedDataFrame)
-    assert joined.count() == 10
-
-    # zero guarded inputs: plain SQL result, unchanged type
-    plain = sql_over_snapshots(
-        spark, "SELECT 1 AS one", x=spark.range(1).toDF("number")
-    )
-    assert not isinstance(plain, GuardedDataFrame)
-
-    # expired pins: both SQL-derived frames raise on action
-    _expire_pins(store, 10, 19)
-    for f in (top, joined):
-        with pytest.raises(SnapshotExpiredError):
-            f.collect()
+    frame = q.StoreQueries(store).snapshot().headers_in_range(0, 39)
+    it = frame.toLocalIterator()
+    next(it)
+    _expire_pins(store, 0, 39)
+    with pytest.raises(SnapshotExpiredError):
+        list(it)

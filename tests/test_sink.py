@@ -265,7 +265,7 @@ def test_snapshot_reader_never_spans_a_batch_boundary(spark, tmp_path):
 
 def test_engine_calls_stay_inside_backend_contract():
     """Every `store.<method>(` call outside sinks/ must name a public
-    LogStore method (snapshot views add check/guard/collect): the engine
+    LogStore method (snapshot views add check/guard): the engine
     never reaches into the store's private commit-log internals
     (``_state``, ``_commit``, ``_stage_files``, ...), so those stay free to
     change without touching operators, plans, pipeline, or streaming."""
@@ -275,7 +275,7 @@ def test_engine_calls_stay_inside_backend_contract():
     import eth_indexer_spark
 
     contract = {m for m in dir(LogStore) if not m.startswith("_")}
-    allowed = contract | {"check", "guard", "collect"}
+    allowed = contract | {"check", "guard"}
     pkg = pathlib.Path(eth_indexer_spark.__file__).parent
     bad = []
     for p in pkg.rglob("*.py"):
