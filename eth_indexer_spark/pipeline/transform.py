@@ -10,20 +10,26 @@ whose semantics genuinely require block order is the cumulative carry-forward
 windowed prefix sums per key — everything else is order-free and fully
 parallel.
 
-Arithmetic follows the uint256 policy (schema.py): DECIMAL(38,0) column math
-by default, exact Python-int pandas paths where a stage may exceed 1e38
-(``exact=True``). A forced fast path (``exact=False``) is guarded: a value
-over 30 digits fails the job with :data:`FAST_PATH_OVERFLOW`, and the
-caller recomputes on the exact path — so a batch pays no probe job.
+Arithmetic follows the uint256 policy (schema.py). Every amount sum goes
+through :func:`_u256_sum` (grouped) or :func:`_u256_running_sum` (seed plus
+running sum), and the caller picks the path with a required ``exact``: the
+fast path (``exact=False``) is DECIMAL(38,0) column math guarded by
+:func:`_fits` — a value over 30 digits fails the job with
+:data:`FAST_PATH_OVERFLOW` — and the exact path (``exact=True``) is one
+grouped pandas pass over Python ints. The ingest runs the fast path and
+recomputes on the exact path only when that job fails, so a batch pays no
+probe job.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 import pandas as pd
-from pyspark.errors import SparkRuntimeException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from eth_indexer_spark.functions.hexutils import abi_uint256, topic_to_address
 from eth_indexer_spark.functions.rewards import (
@@ -44,24 +50,63 @@ _D = "decimal(38,0)"
 FAST_PATH_OVERFLOW = "uint256-fast-path-overflow"
 
 
-def raised_message(e: Exception) -> str | None:
-    """The message a ``raise_error`` put into a failed Spark job, or None
-    when ``e`` is any other failure."""
-    if isinstance(e, SparkRuntimeException) and e.getCondition() == "USER_RAISED_EXCEPTION":
-        return (e.getMessageParameters() or {}).get("errorMessage")
-    return None
-
-
 def _fits(col: str) -> Column:
     """``col`` unchanged while it has at most 30 digits; a longer value
-    fails the job with :data:`FAST_PATH_OVERFLOW` — the probe of
-    :func:`_any_over_30_digits`, evaluated inside the fast path's own job.
-    It guards a column the fast path computes from, so column pruning
-    cannot drop it."""
+    fails the job with :data:`FAST_PATH_OVERFLOW`. 30 digits leave 8 of
+    headroom in DECIMAL(38,0), so a sum of up to 10^8 guarded values cannot
+    overflow. It guards a column the fast path computes from, so column
+    pruning cannot drop it."""
     digits = F.length(F.regexp_replace(col, "-", ""))
     return F.when(
         digits > 30, F.raise_error(F.lit(f"{FAST_PATH_OVERFLOW}: a value exceeds 30 digits"))
     ).otherwise(F.col(col))
+
+
+def _with_string(df: DataFrame, cols: list[str], out: str) -> T.StructType:
+    """Schema of ``df``'s ``cols`` followed by the string column ``out``."""
+    return T.StructType([df.schema[c] for c in cols] + [T.StructField(out, T.StringType())])
+
+
+def _u256_sum(df: DataFrame, keys: list[str], col: str, out: str, exact: bool) -> DataFrame:
+    """Σ of the decimal strings in ``col`` per ``keys``: the keys plus the
+    sum as the string column ``out``. Fast path: a DECIMAL(38,0) aggregate
+    (map-side partial aggregation, no Python). Exact path: one grouped
+    pandas sum over Python ints."""
+    if not exact:
+        return df.groupBy(*keys).agg(F.sum(_fits(col).cast(_D)).cast("string").alias(out))
+
+    def _sum(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.iloc[:1][keys].assign(**{out: str(sum(map(int, pdf[col])))})
+
+    return df.groupBy(*keys).applyInPandas(_sum, _with_string(df, keys, out))
+
+
+def _u256_running_sum(
+    df: DataFrame, keys: list[str], order: str, col: str, seed: str, out: str, exact: bool
+) -> DataFrame:
+    """``seed`` plus the running Σ of ``col`` per ``keys`` in ``order``,
+    one row per input row: every other column of ``df`` plus the total as
+    the string column ``out``. ``seed`` is one value per key (NULL = 0).
+    Fast path: a DECIMAL(38,0) window prefix sum (no Python). Exact path:
+    one grouped pandas pass over Python ints."""
+    rest = [c for c in df.columns if c not in (col, seed)]
+    if not exact:
+        cum = W.partitionBy(*keys).orderBy(order).rowsBetween(
+            W.unboundedPreceding, W.currentRow
+        )
+        total = F.coalesce(_fits(seed).cast(_D), F.lit(0).cast(_D)) + F.sum(
+            _fits(col).cast(_D)
+        ).over(cum)
+        return df.select(*rest, total.cast("string").alias(out))
+
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order)
+        seeds = pdf[seed].dropna()
+        start = int(seeds.iloc[0]) if len(seeds) else 0
+        running = list(accumulate(map(int, pdf[col]), initial=start))[1:]
+        return pdf[rest].assign(**{out: [str(v) for v in running]})
+
+    return df.groupBy(*keys).applyInPandas(_run, _with_string(df, rest, out))
 
 
 # ---------------------------------------------------------------------------
@@ -220,24 +265,16 @@ def tx_fees(txs: DataFrame, receipts: DataFrame) -> DataFrame:
 
 
 def ledger_deltas(
-    events: DataFrame, fees: DataFrame | None = None, exact: bool | None = None
+    events: DataFrame, fees: DataFrame | None = None, *, exact: bool
 ) -> DataFrame:
     """Per-(token, address, block) balance delta implied by the ledger:
     Σ incoming − Σ outgoing − fees (ETH only). Reward sentinels never appear
     as debit rows (they are not accounts).
 
-    Arithmetic path is chosen per batch (uint256 policy, schema.py):
-
-    - **fast path** (the overwhelmingly common case): when no value in the
-      batch exceeds 30 digits, sums run as JVM DECIMAL(38,0) aggregation —
-      whole-stage codegen with map-side partial aggregation, no Python.
-      The 30-digit guard leaves 8 digits of headroom, so any group of up to
-      10^8 rows is provably overflow-free (real wei values are ≤ 27 digits).
-    - **exact path**: any larger value routes the whole batch through the
-      Arrow-batched grouped pandas aggregation on Python ints.
-
-    ``exact``: force a path (False = the guarded fast path, see
-    :func:`_fits`); None = detect (one cheap scan probe).
+    ``exact`` picks the arithmetic path of the uint256 policy (schema.py,
+    :func:`_u256_sum`): False is the guarded DECIMAL(38,0) aggregate, which
+    fails with :data:`FAST_PATH_OVERFLOW` on a value over 30 digits; True
+    sums Python ints.
     """
     credit = events.select(
         "token", "block_number", F.col("to").alias("address"), F.col("value").alias("signed")
@@ -260,47 +297,15 @@ def ledger_deltas(
                 F.concat(F.lit("-"), F.col("fee").cast("string")).alias("signed"),
             )
         )
-
-    if exact is None:
-        digits = F.length(F.regexp_replace("signed", "-", ""))
-        exact = parts.filter(digits > 30).limit(1).count() > 0
-
-    if not exact:
-        return (
-            parts.groupBy("token", "block_number", "address")
-            .agg(F.sum(_fits("signed").cast(_D)).cast("string").alias("delta"))
-        )
-
-    def _sum_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        total = sum(int(v) for v in pdf["signed"])
-        head = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                "token": [head["token"]],
-                "block_number": [head["block_number"]],
-                "address": [head["address"]],
-                "delta": [str(total)],
-            }
-        )
-
-    return parts.groupBy("token", "block_number", "address").applyInPandas(
-        _sum_group, "token string, block_number long, address string, delta string"
-    )
-
-
-def _any_over_30_digits(df: DataFrame, col: str) -> bool:
-    """The uint256 fast-path probe (shared with ledger_deltas): 30 digits
-    leaves 8 digits of headroom in DECIMAL(38,0), so any prefix sum of up to
-    10^8 such values is provably overflow-free."""
-    digits = F.length(F.regexp_replace(col, "-", ""))
-    return df.filter(digits > 30).limit(1).count() > 0
+    return _u256_sum(parts, ["token", "block_number", "address"], "signed", "delta", exact)
 
 
 def balance_snapshots(
     deltas: DataFrame,
     subs: DataFrame,
     seed_balances: DataFrame | None = None,
-    exact: bool | None = None,
+    *,
+    exact: bool,
     require_seed: bool = False,
 ) -> DataFrame:
     """Sparse per-(token, address, block) balance snapshots for SUBSCRIBED
@@ -309,11 +314,9 @@ def balance_snapshots(
     reference's ``accounts`` / ``erc20_balance_<token>`` rows
     (transfer_processor.go:258-313).
 
-    uint256 policy: when every delta and seed fits 30 digits (the
-    overwhelmingly common case) the running sum is a JVM window prefix sum
-    over DECIMAL(38,0) — whole-stage codegen, no Python; otherwise the exact
-    grouped-pandas path on Python ints. ``exact``: force a path (False =
-    the guarded fast path); None = probe.
+    ``exact`` picks the arithmetic path of the running sum
+    (:func:`_u256_running_sum`): False is the guarded DECIMAL(38,0) window
+    prefix sum, True the grouped pass over Python ints.
 
     ``require_seed``: a subscribed (token, address) with activity this
     batch but no seed row fails the job with ``missing-prev-balance``
@@ -350,48 +353,9 @@ def balance_snapshots(
             F.when(F.col("__seed").isNull(), F.raise_error(missing)).otherwise(F.col("__seed")),
         )
 
-    if exact is None:
-        exact = _any_over_30_digits(deltas, "delta") or (
-            seed_balances is not None and _any_over_30_digits(seed_balances, "balance")
-        )
-
-    if not exact:
-        cum = W.partitionBy("token", "address").orderBy("block_number").rowsBetween(
-            W.unboundedPreceding, W.currentRow
-        )
-        return d.select(
-            "token",
-            "block_number",
-            "address",
-            (
-                F.coalesce(_fits("__seed").cast(_D), F.lit(0).cast(_D))
-                + F.sum(_fits("delta").cast(_D)).over(cum)
-            ).cast("string").alias("balance"),
-            "group",
-        )
-
-    def _cumsum(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("block_number")
-        seed_vals = pdf["__seed"].dropna()
-        running = int(seed_vals.iloc[0]) if len(seed_vals) else 0
-        out = []
-        for _, row in pdf.iterrows():
-            running += int(row["delta"])
-            out.append(str(running))
-        return pd.DataFrame(
-            {
-                "token": pdf["token"],
-                "block_number": pdf["block_number"],
-                "address": pdf["address"],
-                "balance": out,
-                "group": pdf["group"],
-            }
-        )
-
-    return d.groupBy("token", "address").applyInPandas(
-        _cumsum,
-        "token string, block_number long, address string, balance string, group long",
-    )
+    return _u256_running_sum(
+        d, ["token", "address"], "block_number", "delta", "__seed", "balance", exact
+    ).select("token", "block_number", "address", "balance", "group")
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +369,8 @@ def total_balance_rollup(
     events: DataFrame,
     subs: DataFrame,
     prev_totals: DataFrame | None = None,
-    exact: bool | None = None,
+    *,
+    exact: bool,
 ) -> DataFrame:
     """A7 (transfer_processor.go:322-416): per (token, group, block) total =
     previous total + Σ member deltas, carried forward cumulatively; ETH rows
@@ -416,38 +381,15 @@ def total_balance_rollup(
     ``snapshots_deltas`` = ledger_deltas joined to subscribed addresses
     (token, block_number, address, delta, group).
 
-    uint256 policy: the group-delta aggregation and the carry-forward prefix
-    sum run as JVM DECIMAL(38,0) (map-side partial agg + window sum) unless
-    a delta or seed exceeds 30 digits — then the exact pandas path.
-    ``exact``: force a path (False = the guarded fast path); None = probe.
+    ``exact`` picks the arithmetic path of both the group-delta sum and
+    the carry-forward (:func:`_u256_sum`, :func:`_u256_running_sum`): False
+    is guarded DECIMAL(38,0) column math, True Python ints.
     """
     subs_b = F.broadcast(subs.select("address", "group"))
 
-    if exact is None:
-        exact = _any_over_30_digits(snapshots_deltas, "delta") or (
-            prev_totals is not None and _any_over_30_digits(prev_totals, "balance")
-        )
-
-    if not exact:
-        gdelta = (
-            snapshots_deltas.groupBy("token", "group", "block_number")
-            .agg(F.sum(_fits("delta").cast(_D)).cast("string").alias("gdelta"))
-        )
-    else:
-        gdelta = (
-            snapshots_deltas.groupBy("token", "group", "block_number")
-            .applyInPandas(
-                lambda pdf: pd.DataFrame(
-                    {
-                        "token": [pdf.iloc[0]["token"]],
-                        "group": [pdf.iloc[0]["group"]],
-                        "block_number": [pdf.iloc[0]["block_number"]],
-                        "gdelta": [str(sum(int(v) for v in pdf["delta"]))],
-                    }
-                ),
-                "token string, group long, block_number long, gdelta string",
-            )
-        )
+    gdelta = _u256_sum(
+        snapshots_deltas, ["token", "group", "block_number"], "delta", "gdelta", exact
+    )
 
     group_fees = (
         fees.join(subs_b, "address")
@@ -473,40 +415,9 @@ def total_balance_rollup(
     else:
         gdelta = gdelta.withColumn("__seed", F.lit(None).cast("string"))
 
-    if not exact:
-        cum = W.partitionBy("token", "group").orderBy("block_number").rowsBetween(
-            W.unboundedPreceding, W.currentRow
-        )
-        totals = gdelta.select(
-            "token",
-            "block_number",
-            "group",
-            (
-                F.coalesce(_fits("__seed").cast(_D), F.lit(0).cast(_D))
-                + F.sum(F.col("gdelta").cast(_D)).over(cum)
-            ).cast("string").alias("balance"),
-        )
-    else:
-        def _carry(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("block_number")
-            seed_vals = pdf["__seed"].dropna()
-            running = int(seed_vals.iloc[0]) if len(seed_vals) else 0
-            out = []
-            for _, row in pdf.iterrows():
-                running += int(row["gdelta"])
-                out.append(str(running))
-            return pd.DataFrame(
-                {
-                    "token": pdf["token"],
-                    "block_number": pdf["block_number"],
-                    "group": pdf["group"],
-                    "balance": out,
-                }
-            )
-
-        totals = gdelta.groupBy("token", "group").applyInPandas(
-            _carry, "token string, block_number long, group long, balance string"
-        )
+    totals = _u256_running_sum(
+        gdelta, ["token", "group"], "block_number", "gdelta", "__seed", "balance", exact
+    )
 
     is_eth = F.col("token") == ETH_TOKEN
     return (
@@ -526,7 +437,7 @@ def total_balance_rollup(
 
 
 def new_token_backfill(
-    balances: DataFrame, subs: DataFrame, token: str, block_number: int
+    balances: DataFrame, subs: DataFrame, token: str, block_number: int, *, exact: bool
 ) -> DataFrame:
     """A8 (store/new_erc20.go:41-175): when a token is registered at block N,
     seed ``total_balances`` for every subscription group — latest stored
@@ -535,8 +446,8 @@ def new_token_backfill(
     The reference pages through all subscriptions 1000 at a time
     (subLimit, new_erc20.go:35) because it fetches balances over RPC;
     deriving from the stored balance table it is one as-of reduction
-    (window top-1 per address) + one exact grouped sum. Exact uint256 path:
-    seeds may exceed DECIMAL(38,0)."""
+    (window top-1 per address) + one grouped sum, on the arithmetic path
+    ``exact`` picks (:func:`_u256_sum`)."""
     w = W.partitionBy("address").orderBy(F.desc("block_number"))
     latest = (
         balances.filter(
@@ -547,23 +458,12 @@ def new_token_backfill(
         .join(F.broadcast(subs.select("address")), "address", "left_semi")
     )
 
-    def _sum_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "token": [token],
-                "block_number": [block_number],
-                "group": [pdf.iloc[0]["group"]],
-                "balance": [str(sum(int(b) for b in pdf["balance"]))],
-                "tx_fee": ["0"],
-                "miner_reward": ["0"],
-                "uncles_reward": ["0"],
-            }
-        )
-
-    return latest.groupBy("group").applyInPandas(
-        _sum_group,
-        "token string, block_number long, group long, balance string, "
-        "tx_fee string, miner_reward string, uncles_reward string",
+    return _u256_sum(latest, ["group"], "balance", "balance", exact).select(
+        F.lit(token).alias("token"),
+        F.lit(block_number).cast("long").alias("block_number"),
+        "group",
+        "balance",
+        *[F.lit("0").alias(c) for c in ("tx_fee", "miner_reward", "uncles_reward")],
     )
 
 

@@ -23,8 +23,10 @@ deliberate departures:
    - the ABI decode of ERC20 values is exact in the JVM at any width
      (``hexutils.abi_uint256``), so decoding never needs Python;
    - only arithmetic on values above 30 digits (adversarial ERC20
-     supplies) takes the exact path, grouped pandas over Python int —
-     chosen per batch by a probe, or forced per stage via ``exact=True``.
+     supplies) takes the exact path, grouped pandas over Python int. The
+     caller picks the path with a required ``exact``; the ingest runs the
+     fast path, whose job fails by name on a value over 30 digits, and
+     reruns the batch on the exact path only then — no probe job.
 
 3. **One table per entity, never per token.** The reference creates
    ``erc20_balance_<addr>`` / ``erc20_transfer_<addr>`` tables at runtime

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -109,3 +110,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def raised_message(e: Exception) -> str | None:
+    """The message a ``raise_error`` put into a failed Spark job, or None
+    when ``e`` is any other failure."""
+    if isinstance(e, SparkRuntimeException) and e.getCondition() == "USER_RAISED_EXCEPTION":
+        return (e.getMessageParameters() or {}).get("errorMessage")
+    return None

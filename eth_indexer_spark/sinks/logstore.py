@@ -85,10 +85,13 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pandas as pd
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
+
+from eth_indexer_spark.session import raised_message
 
 # Unique keys per table — mirrors the reference DDL's UNIQUE indexes exactly
 # (migration/db/migrate/*.rb, SURVEY §1.4); dedup-on-key before write (M5).
@@ -143,6 +146,22 @@ EXTRA_PARTITIONS: dict[str, list[str]] = {
 REQUIRED_NON_NULL: dict[str, list[str]] = {
     "receipt_logs": ["log_index"],
 }
+# names the job failure of that check (see LogStore._prep)
+_NULL_KEY = "NULL in required column(s)"
+
+
+@contextmanager
+def _null_key_as_value_error():
+    """Turn the job failure of a ``REQUIRED_NON_NULL`` check into its
+    named ValueError; every other failure passes through."""
+    try:
+        yield
+    except SparkRuntimeException as e:
+        msg = raised_message(e)
+        if msg is None or _NULL_KEY not in msg:
+            raise
+        raise ValueError(msg) from e
+
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -462,7 +481,8 @@ class LogStore:
         leaves only vacuumable orphans — no manifest, no recovery step."""
         txid = uuid.uuid4().hex[:12]
         stage = os.path.join(self.root, _STAGING_DIR, txid, table)
-        df.write.mode("overwrite").parquet(stage)
+        with _null_key_as_value_error():
+            df.write.mode("overwrite").parquet(stage)
         dest_dir = os.path.join(self.root, _DATA_DIR, table)
         os.makedirs(dest_dir, exist_ok=True)
         block_col = BLOCK_COLUMN.get(table)
@@ -645,17 +665,18 @@ class LogStore:
     # -- mutations -----------------------------------------------------------
 
     def _prep(self, table: str, df: DataFrame) -> DataFrame:
-        cols = REQUIRED_NON_NULL.get(table)
-        if cols:
-            cond = None
-            for c in cols:
-                n = F.col(c).isNull()
-                cond = n if cond is None else (cond | n)
-            if df.filter(cond).limit(1).count() > 0:
-                raise ValueError(
-                    f"{table}: NULL in required column(s) {cols} — a null "
-                    "dedup key would silently collapse distinct rows"
-                )
+        """``df`` deduplicated on the table's key. A NULL in a
+        ``REQUIRED_NON_NULL`` column fails the staging job itself (a
+        ``raise_error``, no separate count job) that surfaces as a
+        ValueError before anything is published."""
+        cols = REQUIRED_NON_NULL.get(table, [])
+        msg = (
+            f"{table}: {_NULL_KEY} {cols} — a null dedup key would silently "
+            "collapse distinct rows"
+        )
+        for c in cols:
+            null = F.raise_error(F.lit(msg))
+            df = df.withColumn(c, F.when(F.col(c).isNull(), null).otherwise(F.col(c)))
         key = UNIQUE_KEYS.get(table)
         return df.dropDuplicates(key) if key else df
 
@@ -705,7 +726,8 @@ class LogStore:
                 lo, hi = block_range
             else:
                 col = BLOCK_COLUMN[table]
-                row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
+                with _null_key_as_value_error():
+                    row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
                 lo, hi = row["lo"], row["hi"]
             if lo is None:
                 continue

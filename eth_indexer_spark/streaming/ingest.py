@@ -60,6 +60,7 @@ from eth_indexer_spark.schema import (
     RAW_SCHEMAS,
     REORGS,
 )
+from eth_indexer_spark.session import raised_message
 from eth_indexer_spark.sinks.logstore import LogStore
 from eth_indexer_spark.streaming.reorg import ReorgDecision, check_reorg
 
@@ -69,6 +70,23 @@ MAX_BLOCKS_PER_BATCH = 50
 REORG_WINDOW = 512
 
 _HEADER_COLS = [f.name for f in BLOCK_HEADERS.fields]
+
+
+def _fast_then_exact(run):
+    """``run(exact)`` on the guarded uint256 fast path, and once more on
+    the exact path if a value overflows it (``X.FAST_PATH_OVERFLOW``).
+    Any other ``raise_error`` (a subscription guard) becomes the
+    ValueError the reference raises. ``run`` must materialize what it
+    returns, so its job fails here."""
+    for exact in (False, True):
+        try:
+            return run(exact)
+        except SparkRuntimeException as e:
+            msg = raised_message(e)
+            if msg is None:
+                raise
+            if exact or not msg.startswith(X.FAST_PATH_OVERFLOW):
+                raise ValueError(msg) from e
 
 
 class BlockIngestor:
@@ -92,13 +110,12 @@ class BlockIngestor:
         self.source = source
         self.subscriptions = subscriptions
         self.erc20 = erc20
-        # chain-state lookup seam (sources/chain.py LookupFn) for
-        # new-subscription opening balances — the DEFAULT deploy path, like
-        # the reference's batched balance RPC (client/balancer.go:43-116):
-        # O(new subs × tokens) per batch. Passing balancer=None explicitly
-        # falls back to deriving openings from the engine's own stored
-        # ledger — an O(stored history) scan per new-sub batch, acceptable
-        # only where no node RPC is reachable
+        # optional chain-state lookup seam (sources/chain.py LookupFn) for
+        # new-subscription opening balances, like the reference's batched
+        # balance RPC (client/balancer.go:43-116): O(new subs × tokens) per
+        # batch. The default, balancer=None, derives openings from the
+        # engine's own stored ledger instead — an O(stored history) scan
+        # per new-sub batch that needs no node RPC
         self.balancer = balancer
         # optional token-metadata seam (sources/chain.py MetadataFn) backing
         # register_token when the caller omits name/total_supply/decimals —
@@ -215,9 +232,11 @@ class BlockIngestor:
         dims = {"erc20": erc20}
         if self.store.exists("balances"):
             balances = self.store.read("balances")
-            backfill = X.new_token_backfill(
-                balances, self.subscriptions, address, at_block
-            ).localCheckpoint()
+            backfill = _fast_then_exact(
+                lambda exact: X.new_token_backfill(
+                    balances, self.subscriptions, address, at_block, exact=exact
+                ).localCheckpoint()
+            )
             # per-address opening rows for the token — the reference's
             # new_erc20.go inserts a balance row for every subscription page
             # (new_erc20.go:41-175, balancer-fetched); ledger-derived here:
@@ -310,7 +329,12 @@ class BlockIngestor:
     # store/transfer_processor.go:258-313) -------------------------------------
 
     def _init_new_subscriptions(
-        self, new: pd.DataFrame, batch_deltas: DataFrame, first_n: int, last_n: int
+        self,
+        new: pd.DataFrame,
+        batch_deltas: DataFrame,
+        first_n: int,
+        last_n: int,
+        exact: bool,
     ) -> DataFrame:
         """Opening balance rows of the NEW subscriptions ``new``
         (block_number == 0) at the batch head, which the caller folds into
@@ -318,14 +342,14 @@ class BlockIngestor:
         reference's per-block `insertNewSubscriptions`
         (transfer_processor.go:258-313) at batch granularity.
 
-        Opening balance: the balancer seam (chain truth over RPC at the
-        batch-head block, client/balancer.go:43-116) is the default path —
-        each request row carries ``block_number`` so the lookup has the
-        reference's at-block semantics, and the fan-out is O(new subs ×
-        tokens). Only an explicit ``balancer=None`` derives openings from
-        the engine's own ledger instead — stored transfer/fee history plus
-        this batch's deltas (O(stored history) scan; the documented
-        no-node-available fallback).
+        Opening balance: by default (``balancer=None``) derived from the
+        engine's own ledger — stored transfer/fee history plus this batch's
+        deltas, summed on the chunk's arithmetic path ``exact`` (an
+        O(stored history) scan). A plugged-in balancer seam reads chain
+        truth over RPC at the batch-head block instead
+        (client/balancer.go:43-116): each request row carries
+        ``block_number`` so the lookup has the reference's at-block
+        semantics, and the fan-out is O(new subs × tokens).
 
         Guard, evaluated inside the checkpointed plan: a new subscription
         must have NO stored balance rows below the replay point
@@ -366,31 +390,11 @@ class BlockIngestor:
                     else None
                 )
                 stored_d = X.ledger_deltas(
-                    self.store.read_range("transfers", None, below), stored_fees
+                    self.store.read_range("transfers", None, below), stored_fees, exact=exact
                 ).select("token", "address", "delta")
                 parts = parts.unionByName(stored_d)
             parts = parts.join(F.broadcast(addr_df), "address", "left_semi")
-            # uint256 policy (schema.py): JVM DECIMAL(38,0) unless any value
-            # needs the exact Python-int path
-            digits = F.length(F.regexp_replace("delta", "-", ""))
-            if parts.filter(digits > 30).limit(1).count() == 0:
-                summed = parts.groupBy("token", "address").agg(
-                    F.sum(F.col("delta").cast("decimal(38,0)")).cast("string").alias("balance")
-                )
-            else:
-                def _sum_exact(pdf: pd.DataFrame) -> pd.DataFrame:
-                    head = pdf.iloc[0]
-                    return pd.DataFrame(
-                        {
-                            "token": [head["token"]],
-                            "address": [head["address"]],
-                            "balance": [str(sum(int(v) for v in pdf["delta"]))],
-                        }
-                    )
-
-                summed = parts.groupBy("token", "address").applyInPandas(
-                    _sum_exact, "token string, address string, balance string"
-                )
+            summed = X._u256_sum(parts, ["token", "address"], "delta", "balance", exact)
             opening = (
                 reqs.join(summed, ["token", "address"], "left")
                 .withColumn("balance", F.coalesce(F.col("balance"), F.lit("0")))
@@ -478,55 +482,47 @@ class BlockIngestor:
     def _ledger(self, events, fees, subs, new, seed_bal, seed_tot, first_n, last_n):
         """Balance snapshots and group totals of one chunk, each pinned.
         The fast path and the subscription guards fail the checkpoint job
-        with a named ``raise_error`` instead of running probe jobs first:
-        a fast-path overflow recomputes the chunk on the exact path, a
-        guard becomes the ValueError the reference raises."""
+        with a named ``raise_error`` instead of running probe jobs first
+        (:func:`_fast_then_exact`)."""
         old_subs = subs.filter(F.col("block_number") > 0)
-        for exact in (False, True):
-            try:
-                # deltas feed the openings, the snapshots and the rollup
-                deltas = X.ledger_deltas(events, fees, exact=exact).localCheckpoint()
-                init_rows = (
-                    self._init_new_subscriptions(new, deltas, first_n, last_n)
-                    if len(new)
-                    else None
-                )
-                # old subs must already be tracked (missing-prev guard); a
-                # new sub's opening balance already prices in this batch
-                snapshots = X.balance_snapshots(
-                    deltas, old_subs, seed_bal, exact=exact, require_seed=True
-                )
-                subs_g = F.broadcast(old_subs.select("address", "group"))
-                snap_deltas = deltas.join(subs_g, "address")
-                if init_rows is not None:
-                    snapshots = snapshots.unionByName(init_rows)
-                    # a new member's opening wealth enters its group's total
-                    # at the stamp block (the reference's
-                    # balance-diff-from-nothing)
-                    snap_deltas = snap_deltas.unionByName(
-                        init_rows.filter(F.col("balance") != "0").select(
-                            "token",
-                            "block_number",
-                            "address",
-                            F.col("balance").alias("delta"),
-                            "group",
-                        )
+
+        def run(exact: bool):
+            # deltas feed the openings, the snapshots and the rollup
+            deltas = X.ledger_deltas(events, fees, exact=exact).localCheckpoint()
+            init_rows = (
+                self._init_new_subscriptions(new, deltas, first_n, last_n, exact)
+                if len(new)
+                else None
+            )
+            # old subs must already be tracked (missing-prev guard); a new
+            # sub's opening balance already prices in this batch
+            snapshots = X.balance_snapshots(
+                deltas, old_subs, seed_bal, exact=exact, require_seed=True
+            )
+            subs_g = F.broadcast(old_subs.select("address", "group"))
+            snap_deltas = deltas.join(subs_g, "address")
+            if init_rows is not None:
+                snapshots = snapshots.unionByName(init_rows)
+                # a new member's opening wealth enters its group's total at
+                # the stamp block (the reference's balance-diff-from-nothing)
+                snap_deltas = snap_deltas.unionByName(
+                    init_rows.filter(F.col("balance") != "0").select(
+                        "token",
+                        "block_number",
+                        "address",
+                        F.col("balance").alias("delta"),
+                        "group",
                     )
-                prev_totals = (
-                    seed_tot.select("token", "group", "balance")
-                    if seed_tot is not None
-                    else None
                 )
-                totals = X.total_balance_rollup(
-                    snap_deltas, fees, events, subs, prev_totals, exact=exact
-                )
-                return snapshots.localCheckpoint(), totals.localCheckpoint()
-            except SparkRuntimeException as e:
-                msg = X.raised_message(e)
-                if msg is None:
-                    raise
-                if exact or not msg.startswith(X.FAST_PATH_OVERFLOW):
-                    raise ValueError(msg) from e
+            prev_totals = (
+                seed_tot.select("token", "group", "balance") if seed_tot is not None else None
+            )
+            totals = X.total_balance_rollup(
+                snap_deltas, fees, events, subs, prev_totals, exact=exact
+            )
+            return snapshots.localCheckpoint(), totals.localCheckpoint()
+
+        return _fast_then_exact(run)
 
     def _ingest(self, branch: list[dict], fork: ReorgDecision | None = None) -> None:
         """Ingest one chunk of at most ``MAX_BLOCKS_PER_BATCH`` headers in

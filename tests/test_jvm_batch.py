@@ -1,6 +1,7 @@
 """The ingest batch runs in the JVM: a bootstrap batch (new subscriptions,
-ledger-derived openings), a winning fork and a read of an empty block range
-start no Python worker, and the fork runs a bounded number of Spark jobs.
+ledger-derived openings), a winning fork, a token registration and a read
+of an empty block range start no Python worker, and the bootstrap and the
+fork each run a bounded number of Spark jobs.
 
 A Python worker (``pyspark.daemon``) is a child process of the driver JVM.
 Starting it is a cold import of pandas and pyarrow that every batch would
@@ -9,8 +10,9 @@ the ABI decode is a JVM expression and driver-built frames cross as
 Arrow. The scenario runs in a SUBPROCESS with its own fresh session: the
 suite's shared session has long since started workers for other tests.
 
-The fork's job count (its own job group) is exact run to run, so a driver
-collect or probe job put back into the batch path fails this test.
+The bootstrap's and the fork's job counts (each in its own job group) are
+exact run to run, so a driver collect or probe job put back into the batch
+path fails this test.
 """
 
 from __future__ import annotations
@@ -78,18 +80,32 @@ ing = BlockIngestor(
     spark.createDataFrame(chain.world.erc20(), RAW_SCHEMAS["erc20"]),
     balancer=None,
 )
-actions = [ing.process_headers(s.incoming) for s in steps]
 sc = spark.sparkContext
-sc.setJobGroup("jvm-batch-fork", "the winning fork")
-actions.append(ing.process_headers(fork.incoming))
-sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def in_group(group, headers):
+    sc.setJobGroup(group, group)
+    try:
+        return ing.process_headers(headers)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+actions = [in_group("jvm-batch-bootstrap", steps[0].incoming)]
+actions.append(ing.process_headers(steps[1].incoming))
+actions.append(in_group("jvm-batch-fork", fork.incoming))
 assert actions == ["bootstrap", "append", "reorg"], actions
+boot_jobs = len(sc.statusTracker().getJobIdsForGroup("jvm-batch-bootstrap"))
+assert boot_jobs <= MAX_BOOTSTRAP_JOBS, (
+    f"the bootstrap ran {boot_jobs} Spark jobs (at most {MAX_BOOTSTRAP_JOBS})"
+)
 fork_jobs = len(sc.statusTracker().getJobIdsForGroup("jvm-batch-fork"))
 assert fork_jobs <= MAX_FORK_JOBS, f"the fork ran {fork_jobs} Spark jobs (at most {MAX_FORK_JOBS})"
 assert store.read_range("block_headers", 10**6, 10**6 + 5).collect() == []
 
 check_proc = os.path.isdir(f"/proc/{jvm_pid}/task")
 workers = python_workers() if check_proc else []
+assert not workers, f"the batches started Python workers: {workers}"
 
 stored = sorted(
     (r["number"], r["hash"]) for r in store.read("block_headers").select("number", "hash").collect()
@@ -112,22 +128,40 @@ got_t = latest("total_balances", ["token", "group"])
 want_t = ledger.totals_at_head()
 assert all(got_t.get(k, 0) == want_t.get(k, 0) for k in got_t.keys() | want_t.keys()), "totals differ"
 
-assert not workers, f"the batches started Python workers: {workers}"
+# re-register one of the chain's tokens at the head: its group totals are
+# backfilled from the stored balances on the fast path, in the JVM
+token = chain.world.erc20()["address"].iloc[0]
+ing.register_token(token, name="Again", total_supply="1", decimals=18)
+got_t = latest("total_balances", ["token", "group"])
+assert all(
+    got_t.get(k, 0) == want_t.get(k, 0) for k in got_t.keys() | want_t.keys() if k[0] == token
+), "re-registered token's totals differ"
+workers = python_workers() if check_proc else []
+assert not workers, f"register_token started Python workers: {workers}"
 if check_proc:
     # the probe itself sees a worker once one exists
     spark.range(1).select(F.udf(lambda x: x, "long")("id")).collect()
     assert python_workers(), "no pyspark.daemon found after a Python UDF ran"
 spark.stop()
-print("JB-OK", "proc-checked" if check_proc else "proc-skipped", "fork-jobs", fork_jobs)
+print(
+    "JB-OK", "proc-checked" if check_proc else "proc-skipped",
+    "bootstrap-jobs", boot_jobs, "fork-jobs", fork_jobs,
+)
 """
 # Spark jobs of the scenario's winning fork (one chunk: retraction, reorgs
 # row, batch and latest-state dimensions in one commit), as measured
 MAX_FORK_JOBS = 67
+# Spark jobs of the scenario's bootstrap batch (new subscriptions with
+# ledger-derived openings, one commit), as measured
+MAX_BOOTSTRAP_JOBS = 50
 
 
 def test_bootstrap_and_fork_batches_start_no_python_worker(tmp_path):
     script = tmp_path / "jvm_batch_scenario.py"
-    script.write_text(f"MAX_FORK_JOBS = {MAX_FORK_JOBS}\n" + _SCENARIO)
+    script.write_text(
+        f"MAX_FORK_JOBS = {MAX_FORK_JOBS}\nMAX_BOOTSTRAP_JOBS = {MAX_BOOTSTRAP_JOBS}\n"
+        + _SCENARIO
+    )
     env = dict(os.environ, JB_REPO=REPO, JB_STORE=str(tmp_path / "store"))
     proc = subprocess.run(
         [sys.executable, str(script)],
@@ -137,4 +171,4 @@ def test_bootstrap_and_fork_batches_start_no_python_worker(tmp_path):
         env=env,
     )
     assert proc.returncode == 0, f"stderr tail:\n{(proc.stderr or '')[-3000:]}"
-    assert "JB-OK" in proc.stdout
+    assert "JB-OK" in proc.stdout, proc.stdout

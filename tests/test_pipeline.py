@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from eth_indexer_spark.pipeline import transform as tr
 from eth_indexer_spark.schema import ETH_TOKEN
+from eth_indexer_spark.session import raised_message
 from tests.fixtures import ETH, T1, RAW_SCHEMAS, build_raw, expected_model
 
 
@@ -110,7 +111,7 @@ def test_tx_fees(raw, model):
 
 def test_ledger_deltas(raw, events, model):
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
-    deltas = tr.ledger_deltas(events, fees)
+    deltas = tr.ledger_deltas(events, fees, exact=True)
     got = {
         (r["token"], r["block_number"], r["address"]): int(r["delta"])
         for r in deltas.collect()
@@ -120,9 +121,9 @@ def test_ledger_deltas(raw, events, model):
 
 def test_ledger_deltas_fast_path_matches_exact(raw, events):
     """The DECIMAL(38,0) fast path and the exact pandas path must agree
-    wherever both are valid. Block 104 carries >1e38 values (forcing the
-    exact path on the full batch — covered by test_ledger_deltas); here the
-    small-value sub-batch is computed via both forced paths."""
+    wherever both are valid. Block 104 carries >1e38 values (the full batch
+    on the exact path is covered by test_ledger_deltas); here the
+    small-value sub-batch is computed on both paths."""
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
     small_events = events.filter(F.col("block_number") != 104)
     small_fees = fees.filter(F.col("block_number") != 104)
@@ -137,25 +138,17 @@ def test_ledger_deltas_fast_path_matches_exact(raw, events):
     slow = collect(tr.ledger_deltas(small_events, small_fees, exact=True))
     assert fast == slow and fast
 
-    # auto-detect: small batch takes the fast path (same result), big batch
-    # must not overflow-null anything
-    auto = collect(tr.ledger_deltas(small_events, small_fees))
-    assert auto == fast
-    full_auto = collect(tr.ledger_deltas(events, fees))
-    assert all(v is not None for v in full_auto.values())
-    assert any(abs(v) >= 10**39 for v in full_auto.values())
-
     # the forced fast path over >30-digit values fails by name instead of
     # overflowing, so an ingest recomputes that batch on the exact path
     with pytest.raises(SparkRuntimeException) as err:
         tr.ledger_deltas(events, fees, exact=False).collect()
-    assert tr.raised_message(err.value).startswith(tr.FAST_PATH_OVERFLOW)
+    assert raised_message(err.value).startswith(tr.FAST_PATH_OVERFLOW)
 
 
 def test_balance_snapshots(raw, events, model):
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
-    deltas = tr.ledger_deltas(events, fees)
-    snaps = tr.balance_snapshots(deltas, raw["subscriptions"], raw["seed_balances"])
+    deltas = tr.ledger_deltas(events, fees, exact=True)
+    snaps = tr.balance_snapshots(deltas, raw["subscriptions"], raw["seed_balances"], exact=True)
     got = {
         (r["token"], r["block_number"], r["address"]): (int(r["balance"]), r["group"])
         for r in snaps.collect()
@@ -196,19 +189,13 @@ def test_snapshots_and_rollup_fast_path_matches_exact(raw, events):
 
     assert roll(False) == roll(True) and roll(False)
 
-    # auto-probe: >1e38 values route the whole stage through the exact path
-    big_deltas = tr.ledger_deltas(events, fees)
-    auto = tr.balance_snapshots(big_deltas, subs, raw["seed_balances"]).collect()
-    assert all(r["balance"] is not None for r in auto)
-    assert any(abs(int(r["balance"])) >= 10**39 for r in auto)
-
 
 def test_total_balance_rollup(raw, events, model):
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
-    deltas = tr.ledger_deltas(events, fees)
+    deltas = tr.ledger_deltas(events, fees, exact=True)
     subs = raw["subscriptions"]
     sd = deltas.join(F.broadcast(subs.select("address", "group")), "address")
-    totals = tr.total_balance_rollup(sd, fees, events, subs)
+    totals = tr.total_balance_rollup(sd, fees, events, subs, exact=True)
     got = {
         (r["token"], r["block_number"], r["group"]): (
             int(r["balance"]), int(r["tx_fee"]), int(r["miner_reward"]), int(r["uncles_reward"])
@@ -225,7 +212,9 @@ def test_new_token_backfill(raw, spark):
     """A8: registering T1 at block 100 seeds per-group totals from the
     latest stored balances (SEED_BALANCES: A1@90=1e40, A2@95=1e4 in group 1;
     A3@95=50 in group 2; the A3@80 row is superseded)."""
-    totals = tr.new_token_backfill(raw["seed_balances"], raw["subscriptions"], T1, 100)
+    totals = tr.new_token_backfill(
+        raw["seed_balances"], raw["subscriptions"], T1, 100, exact=True
+    )
     got = {
         (r["token"], r["block_number"], r["group"]): int(r["balance"])
         for r in totals.collect()
@@ -233,6 +222,19 @@ def test_new_token_backfill(raw, spark):
     assert got == {(T1, 100, 1): 10**40 + 10000, (T1, 100, 2): 50}
     fees = {(r["tx_fee"], r["miner_reward"], r["uncles_reward"]) for r in totals.collect()}
     assert fees == {("0", "0", "0")}
+
+    # the fast path agrees where every seed fits 30 digits and fails by name
+    # on the 10**40 seed, so a registration reruns on the exact path
+    def backfill(seeds, exact):
+        return sorted(
+            tr.new_token_backfill(seeds, raw["subscriptions"], T1, 100, exact=exact).collect()
+        )
+
+    small_seed = raw["seed_balances"].filter(F.length("balance") <= 30)
+    assert backfill(small_seed, False) == backfill(small_seed, True)
+    with pytest.raises(SparkRuntimeException) as err:
+        backfill(raw["seed_balances"], False)
+    assert raised_message(err.value).startswith(tr.FAST_PATH_OVERFLOW)
 
 
 def test_total_difficulty(spark, headers, model):

@@ -119,9 +119,9 @@ def test_find_total_balance_asof(spark, raw, headers):
     rew = tr.reward_events(headers)
     events = eth.unionByName(rew)
     fees = tr.tx_fees(raw["transactions"], raw["transaction_receipts"])
-    deltas = tr.ledger_deltas(events, fees)
+    deltas = tr.ledger_deltas(events, fees, exact=True)
     sd = deltas.join(F.broadcast(raw["subscriptions"].select("address", "group")), "address")
-    totals = tr.total_balance_rollup(sd, fees, events, raw["subscriptions"])
+    totals = tr.total_balance_rollup(sd, fees, events, raw["subscriptions"], exact=True)
     r = q.find_total_balance(totals, 102, ETH, 1).collect()[0]
     assert r["block_number"] == 102
     r_future = q.find_total_balance(totals, 10_000, ETH, 2).collect()[0]
